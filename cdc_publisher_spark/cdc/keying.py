@@ -8,13 +8,17 @@ array string is the Kafka message key, so all changes to one row land
 in one partition (per-key total order). The message *value* is the
 input string, byte-for-byte untouched.
 
-Two implementations with identical bytes:
+Implementations with identical bytes:
 
-- :func:`derive_key` — pure Python, the property-test twin and the
-  driver-side oracle;
-- :func:`key_from_raw_json` / :func:`key_from_id_map` — Spark column
-  expressions (Python UDF; the mixed value types inside one JSON array
-  rule out built-in expressions, SURVEY.md §2.1 T3).
+- :func:`derive_key` / :func:`derive_key_from_json` — pure Python, the
+  property-test twin and the driver-side oracle;
+- :func:`key_from_raw_json_vectorized` — Spark column expression over
+  the raw DML JSON (Arrow-batched pandas UDF; the publish hot path);
+- :func:`key_from_id_map` — Spark column expression over an
+  already-parsed ``id`` map (row UDF; a CDC query uses it).
+
+Both column forms are Python UDFs: the mixed value types inside one
+JSON array rule out built-in expressions (SURVEY.md §2.1 T3).
 
 JSON formatting is pinned to compact separators and no key re-escaping
 so both sides emit identical bytes for identical input.
@@ -70,28 +74,7 @@ def derive_key_from_json(raw: str) -> str | None:
 # executor Python workers that do not have this package on their
 # sys.path (e.g. a driver session created outside the repo). Keep the
 # inline logic in lockstep with derive_key()/derive_key_from_json();
-# tests/test_cdc_keying.py asserts they agree.
-
-
-def _make_raw_udf():
-    import json as _json
-
-    def _key(raw: str | None) -> str | None:
-        if raw is None:
-            return None
-        try:
-            id_map = _json.loads(raw)["id"]
-            if not isinstance(id_map, dict) or not id_map:
-                return None
-        except (ValueError, TypeError, KeyError):
-            return None
-        flat: list[Any] = []
-        for k in sorted(id_map):
-            flat.append(k)
-            flat.append(id_map[k])
-        return _json.dumps(flat, separators=(",", ":"), ensure_ascii=False)
-
-    return F.udf(_key, returnType=StringType())
+# tests/test_cdc_kernel.py asserts they agree.
 
 
 def _make_map_udf():
@@ -110,9 +93,9 @@ def _make_map_udf():
 
 
 def _make_raw_pandas_udf():
-    """Vectorized (Arrow-batched) variant of the raw-JSON key UDF —
-    identical bytes, ~one Python call per batch instead of per row.
-    Used by the hot publish path (streaming/pipeline.py)."""
+    """Arrow-batched raw-JSON key UDF — ~one Python call per batch
+    instead of per row. Used by the hot publish path
+    (streaming/pipeline.py)."""
     import json as _json
 
     import pandas as _pd
@@ -139,7 +122,6 @@ def _make_raw_pandas_udf():
     return F.pandas_udf(_batch, returnType=StringType())
 
 
-_key_from_raw_udf = _make_raw_udf()
 _key_from_map_udf = _make_map_udf()
 _key_from_raw_pandas_udf = _make_raw_pandas_udf()
 
@@ -147,11 +129,6 @@ _key_from_raw_pandas_udf = _make_raw_pandas_udf()
 def key_from_raw_json_vectorized(raw: Column) -> Column:
     """Column: T3 key via the Arrow-batched pandas UDF (hot path)."""
     return _key_from_raw_pandas_udf(raw)
-
-
-def key_from_raw_json(raw: Column) -> Column:
-    """Column: T3 key from a raw DML JSON string column."""
-    return _key_from_raw_udf(raw)
 
 
 def key_from_id_map(id_map: Column) -> Column:

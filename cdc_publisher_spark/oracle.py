@@ -104,7 +104,11 @@ class CompareResult:
     detail: str = ""
 
 
-def compare_frames(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> CompareResult:
+def compare_frames(
+    name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, shape_only: bool = False
+) -> CompareResult:
+    """Row count, then column names, then (unless ``shape_only``) the
+    canonical row values."""
     if len(spark_pdf) != len(oracle_pdf):
         return CompareResult(name, False, len(spark_pdf), len(oracle_pdf), "row count mismatch")
     s_cols, o_cols = sorted(spark_pdf.columns), sorted(oracle_pdf.columns)
@@ -113,6 +117,8 @@ def compare_frames(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame)
             name, False, len(spark_pdf), len(oracle_pdf),
             f"column mismatch: spark={s_cols} oracle={o_cols}",
         )
+    if shape_only:
+        return CompareResult(name, True, len(spark_pdf), len(oracle_pdf), "shape only")
     s_rows, o_rows = canon_rows(spark_pdf), canon_rows(oracle_pdf)
     if s_rows != o_rows:
         diff = next(
@@ -124,8 +130,9 @@ def compare_frames(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame)
     return CompareResult(name, True, len(spark_pdf), len(oracle_pdf))
 
 
-def run_compare(spark, sf_dir: str, name: str) -> CompareResult:
-    """Run one registered query on Spark and DuckDB, compare canonically."""
+def run_compare(spark, sf_dir: str, name: str, shape_only: bool = False) -> CompareResult:
+    """Run one registered query on Spark and DuckDB, compare canonically
+    (``shape_only``: row count and columns, not values)."""
     from cdc_publisher_spark.registry import all_specs
 
     spec = all_specs()[name]
@@ -137,4 +144,4 @@ def run_compare(spark, sf_dir: str, name: str) -> CompareResult:
         odf = con.execute(spec.oracle).fetchdf()
     finally:
         con.close()
-    return compare_frames(name, sdf, odf)
+    return compare_frames(name, sdf, odf, shape_only)

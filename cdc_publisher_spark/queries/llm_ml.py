@@ -599,8 +599,13 @@ def q_k51_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-proven against the DuckDB oracle. greatest(...,1) keeps
     # single-window semantics for degenerate docs (words('') == ['']
     # -> one window of one token; split never yields an empty array
-    # for non-null text).
-    ws = docs.select("doc_id", words(F.col("text")).alias("ws"))
+    # for non-null text). NULL text has no tokens and emits no window,
+    # as in the oracle (its generate_series join yields no rows) —
+    # without the filter size(NULL) = -1 fell through greatest() into
+    # one spurious NULL-content window.
+    ws = docs.select("doc_id", words(F.col("text")).alias("ws")).filter(
+        F.col("ws").isNotNull()
+    )
     n_win = F.greatest(
         F.ceil(F.size("ws") / F.lit(PARA_WIN)).cast("int"), F.lit(1)
     )

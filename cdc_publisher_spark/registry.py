@@ -71,6 +71,8 @@ class QuerySpec:
     oracle: str | None  # DuckDB SQL; None => driver does rows-only check
     doc: str = ""
     bench: bool = False  # include in bench.py headline set
+    # "stat_floor": the result asserts a statistical floor that holds
+    # only at the scale the doc names; smaller fixtures check its shape
     tags: tuple[str, ...] = field(default=())
 
 

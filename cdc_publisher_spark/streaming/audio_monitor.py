@@ -15,29 +15,26 @@ trigger.
 
 State is ONE dir of ``(media_id, fpk, fm)`` rows — fpk the 64-bit
 digest of the clip's full 256-bit fingerprint (frame words in frame
-order), ``fm = pmod(fpk, mod)`` the Hive prune key — plus a ``pairs``
+order), ``fm = pmod(fpk, FPK_MOD)`` the Hive prune key — plus a ``pairs``
 dir of emitted ``(orig_id, dup_id)`` detections, NORMALIZED to
 ``orig_id = least(a, b)`` / ``dup_id = greatest(a, b)`` so the pair
 identity is slicing-independent (ADVICE r11: the history leg used to
 put the historical id first, which under out-of-id-order arrival
 emitted (5,3) where batch mode said (3,5)). The per-trigger probe
 reads ONLY the ``fm=`` partitions the batch's own fingerprints hash
-into (≤ min(batch-distinct-fpk, mod) dirs — the dedup index's
+into (≤ min(batch-distinct-fpk, FPK_MOD) dirs — the dedup index's
 bounded-probe contract), so per-trigger I/O follows the probe, not
 the corpus. Writes are partition-aligned (one file per touched fm
 per batch — the r11 small-files rule).
 
 The fan is a LAYOUT constant carried in the dir's ``_layout.`` marker
-(``rows-fm-1024``): r11 shipped a 64-way fan, under which any batch
-with ≥ 64 distinct fingerprints touched every ``fm=`` dir and the
-probe degenerated to a full history-state scan per trigger (VERDICT
-r11 ask #5). Fresh dirs now get a 1024-way fan; dirs written under
-the legacy 64-way scheme (marker ``rows-fm``, or marker-less with
-``fm=`` children) KEEP it — fm values baked into history dirs were
-assigned with the old modulus, so writing new batches under a
-different modulus would silently miss probes — until an explicit
-offline ``migrate_audio_layout`` rewrite, which re-derives fm and
-REPLACES the marker.
+(``rows-fm-1024``): fm values baked into history dirs were assigned
+under that modulus, so writing a batch under another one would
+silently miss probes. The writer therefore refuses a dir declaring
+any other layout before it writes anything. The 1024-way fan keeps
+the probe bounded (VERDICT r11 ask #5): a 64-way fan was touched in
+full by any batch with ≥ 64 distinct fingerprints, turning every
+probe into a full history-state scan.
 
 Completeness (pytest-pinned, the incremental_dedup theorem shape):
 every exact-dup pair {a, b} is emitted exactly once, in the trigger
@@ -60,7 +57,7 @@ dirs and the probe excludes them by construction, so a re-delivered
 trigger rewrites byte-for-byte. An EMPTY trigger returns before any
 write (ADVICE r11: a file-less batch dir would later fail schema
 inference for the whole read). Compaction rewrites verbatim keeping
-the ``fm`` partitioning; ``maintain`` recognizes both markers.
+the ``fm`` partitioning; ``maintain`` recognizes the marker.
 """
 
 from __future__ import annotations
@@ -75,52 +72,18 @@ from cdc_publisher_spark.streaming.state import (
     aligned_repartition,
     compact_state,
     in_stream_watermark,
-    inner_partition_prefixes,
-    read_layout_marker,
     read_state,
-    replace_layout_marker,
+    require_layout_marker,
     vacuum_state,
     write_layout_marker,
-    write_manifest,
 )
 
-#: Hive fan of the fingerprint-key state dir for FRESH dirs — the
-#: probe's read is bounded at min(batch-distinct-fpk, FPK_MOD)
-#: directories per trigger. A layout constant like the dedup index's
-#: BH_MOD, carried in the dir's marker: existing dirs keep their own
-#: fan (audio_state_layout) and changing it is an explicit
-#: migrate_audio_layout rewrite.
+#: Hive fan of the fingerprint-key state dir — the probe's read is
+#: bounded at min(batch-distinct-fpk, FPK_MOD) directories per trigger.
+#: A layout constant like the dedup index's BH_MOD, carried in the
+#: dir's marker name (FM_LAYOUT).
 FPK_MOD = 1024
-
-#: The r11 layout: 64-way fan under the unversioned ``rows-fm`` marker.
-LEGACY_FM_LAYOUT = "rows-fm"
-LEGACY_FPK_MOD = 64
-
-
-def audio_state_layout(
-    spark: SparkSession, state_dir: str
-) -> tuple[str, int]:
-    """(layout marker, fm modulus) the fpk-state WRITER must use for
-    this dir. fm values in history dirs were assigned under the dir's
-    own modulus, so the writer follows the dir, never the code default
-    — probing mod-64 history with mod-1024 fm values would silently
-    miss every cross-modulus match. Resolution: the ``_layout.``
-    marker (``rows-fm-<mod>``, or the legacy unversioned ``rows-fm``
-    = 64), else physical ``fm=`` children (pre-marker state only ever
-    existed at 64), else the current default for a fresh dir."""
-    marker = read_layout_marker(spark, state_dir)  # raises on conflict
-    if marker == LEGACY_FM_LAYOUT:
-        return marker, LEGACY_FPK_MOD
-    if marker is not None and marker.startswith("rows-fm-"):
-        return marker, int(marker.rsplit("-", 1)[1])
-    if marker is not None:
-        raise ValueError(
-            f"{state_dir} declares layout {marker!r}, which is not an "
-            "audio fpk-state layout — refusing to write into it"
-        )
-    if "fm" in inner_partition_prefixes(spark, state_dir):
-        return LEGACY_FM_LAYOUT, LEGACY_FPK_MOD
-    return f"rows-fm-{FPK_MOD}", FPK_MOD
+FM_LAYOUT = f"rows-fm-{FPK_MOD}"
 
 
 def audio_fpk(
@@ -145,8 +108,8 @@ def audio_fpk(
     )
 
 
-def _fm(col, mod: int) -> F.Column:
-    return F.pmod(col, F.lit(mod)).cast("int")
+def _fm(col) -> F.Column:
+    return F.pmod(col, F.lit(FPK_MOD)).cast("int")
 
 
 def audio_dup_micro_batch(
@@ -165,14 +128,14 @@ def audio_dup_micro_batch(
     if not batch_df.take(1):
         return  # a file-less batch dir would poison later schema reads
     spark = batch_df.sparkSession
-    marker, mod = audio_state_layout(spark, state_dir)
+    require_layout_marker(spark, state_dir, FM_LAYOUT)
     keyed = (
         audio_fpk(batch_df, id_col, payload_col)
-        .withColumn("fm", _fm(F.col("fpk"), mod))
+        .withColumn("fm", _fm(F.col("fpk")))
         .persist()
     )
     try:
-        # ≤ min(batch-distinct-fpk, mod) values by construction —
+        # ≤ min(batch-distinct-fpk, FPK_MOD) values by construction —
         # bounded collect
         fms = [r[0] for r in keyed.select("fm").distinct().collect()]
         hist = (
@@ -211,7 +174,7 @@ def audio_dup_micro_batch(
         aligned_repartition(keyed, "fm").write.partitionBy("fm").mode(
             "overwrite"
         ).parquet(os.path.join(state_dir, f"batch={batch_id}"))
-        write_layout_marker(spark, state_dir, marker)
+        write_layout_marker(spark, state_dir, FM_LAYOUT)
         write_layout_marker(spark, pairs_dir, "rows")
     finally:
         keyed.unpersist()
@@ -234,48 +197,9 @@ def compact_audio_state(
     upto_batch: int,
     vacuum: bool = False,
 ) -> None:
-    """Row-state compaction keeping the fm prune partitioning (and the
-    dir's own fm modulus — fm values rewrite verbatim)."""
+    """Row-state compaction keeping the fm prune partitioning (fm
+    values rewrite verbatim)."""
     compact_state(spark, state_dir, upto_batch, partition_cols=("fm",))
-    if vacuum:
-        vacuum_state(spark, state_dir)
-
-
-def migrate_audio_layout(
-    spark: SparkSession, state_dir: str, mod: int = FPK_MOD, vacuum: bool = True
-) -> None:
-    """Offline rewrite of an fpk-state dir onto a new fm modulus:
-    re-derive ``fm = pmod(fpk, mod)`` for every row, fold everything
-    into ``_compact/upto=max`` under the new fan, and REPLACE the
-    layout marker (state.replace_layout_marker). Run with the stream
-    STOPPED CLEANLY — the fold includes every on-disk batch (the
-    migrate_index_layout contract)."""
-    from cdc_publisher_spark.streaming.state import batch_dirs, compacted_upto
-
-    df = read_state(spark, state_dir)
-    if df is None:
-        return
-    upto = compacted_upto(spark, state_dir)
-    marks = [k for k, _ in batch_dirs(spark, state_dir)] + (
-        [upto] if upto is not None else []
-    )
-    m = max(marks)
-    out = df.withColumn("fm", _fm(F.col("fpk"), mod))
-    tmp = os.path.join(state_dir, "_compact", "_migrating")
-    target = os.path.join(state_dir, "_compact", f"upto={m}")
-    aligned_repartition(out, "fm").write.partitionBy("fm").mode(
-        "overwrite"
-    ).parquet(tmp)
-    from cdc_publisher_spark.streaming.state import hadoop_fs
-
-    fs, _ = hadoop_fs(spark, state_dir)
-    jvm = spark._jvm
-    jtarget = jvm.org.apache.hadoop.fs.Path(target)
-    if fs.exists(jtarget):
-        fs.delete(jtarget, True)
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), jtarget)
-    write_manifest(spark, state_dir, m)
-    replace_layout_marker(spark, state_dir, f"rows-fm-{mod}")
     if vacuum:
         vacuum_state(spark, state_dir)
 
@@ -312,14 +236,11 @@ def stream_audio_dups(
 
 
 __all__ = [
+    "FM_LAYOUT",
     "FPK_MOD",
-    "LEGACY_FM_LAYOUT",
-    "LEGACY_FPK_MOD",
     "audio_dup_micro_batch",
     "audio_fpk",
-    "audio_state_layout",
     "compact_audio_state",
-    "migrate_audio_layout",
     "read_audio_dups",
     "read_audio_fpk_state",
     "stream_audio_dups",

@@ -95,18 +95,6 @@ def _ebm(band, bh) -> F.Column:
     return F.pmod(F.xxhash64(band, bh), F.lit(EB_MOD)).cast("int")
 
 
-#: Pre-versioning marker. Dirs written before schemes were versioned
-#: carry bare ``rows-ebm`` and were only ever written by the 8x8
-#: scheme; read-side it is treated as exactly ``rows-ebm-8x8``.
-#: Write-side it is NEVER produced anymore (r14 ADVICE: mapping the
-#: code default (RH_BANDS, RH_BITS) to the bare marker meant a
-#: deployment that changed the CONSTANTS — rather than passing
-#: bands/bits — left both the old index and the new consumer at
-#: ``rows-ebm``, reproducing the silent match-nothing mismatch the
-#: marker exists to catch).
-LEGACY_EBM_MARKER = "rows-ebm"
-_LEGACY_EBM_SCHEME = (8, 8)
-
 #: Transitional marker held by ``migrate_embed_layout`` while the
 #: segment swap + manifest flip are in flight: an interrupted
 #: migration leaves it behind, so EVERY consumer scheme mismatches
@@ -121,19 +109,8 @@ def scheme_layout(bands: int, bits: int) -> str:
     scheme: ALWAYS versioned, ``rows-ebm-<bands>x<bits>`` — the
     rows-fm-1024 precedent: the layout constant rides the marker NAME,
     so probing a 12-bit index with 8-bit signatures fails loudly at
-    the next trigger instead of silently matching nothing. The bare
-    pre-versioning marker is accepted read-side only
-    (``normalize_ebm_marker``)."""
+    the next trigger instead of silently matching nothing."""
     return f"rows-ebm-{bands}x{bits}"
-
-
-def normalize_ebm_marker(marker: str | None) -> str | None:
-    """Read-side marker normalization: bare pre-versioning
-    ``rows-ebm`` means the 8x8 scheme (the only scheme that ever
-    wrote it); everything else is already versioned."""
-    if marker == LEGACY_EBM_MARKER:
-        return scheme_layout(*_LEGACY_EBM_SCHEME)
-    return marker
 
 
 def _vh(col) -> F.Column:
@@ -176,7 +153,7 @@ def embed_dup_micro_batch(
             "vecs_dir, bands=..., bits=...) with the stream stopped "
             "(it is idempotent), then restart"
         )
-    if marker is not None and normalize_ebm_marker(marker) != layout:
+    if marker is not None and marker != layout:
         raise ValueError(
             f"{idx_dir} holds a {marker!r} signature index but this "
             f"consumer signs at {layout!r} — run migrate_embed_layout"
@@ -300,14 +277,7 @@ def embed_dup_micro_batch(
                 (vecs_dir, "rows-vh"),
             ):
                 write_layout_marker(spark, d, lay)
-            if marker == LEGACY_EBM_MARKER:
-                # one-time upgrade of a pre-versioning dir (the
-                # scheme check above proved it is 8x8): REPLACE so
-                # the versioned marker never coexists with the bare
-                # one (two markers = read conflict)
-                replace_layout_marker(spark, idx_dir, layout)
-            else:
-                write_layout_marker(spark, idx_dir, layout)
+            write_layout_marker(spark, idx_dir, layout)
         finally:
             sig.unpersist()
     finally:
@@ -340,8 +310,7 @@ def migrate_embed_layout(
 ) -> int:
     """Offline rebuild of the ebm-partitioned signature index at a new
     ``(bands, bits)`` banding, from the STORED vectors (r13 VERDICT
-    ask #2 — the ``migrate_index_layout`` / ``migrate_audio_layout``
-    contract applied to the embed scheme).
+    ask #2).
 
     The vector store is the source of truth and signatures are derived
     state, so the rebuild is: read every accumulated vector
@@ -356,9 +325,9 @@ def migrate_embed_layout(
     no vector state to migrate (marker still replaced if the index dir
     exists, so a half-initialized dir can't stay mixed).
 
-    Run with the stream STOPPED CLEANLY (the migrate_index_layout
-    contract): the fold covers every on-disk batch, and the
-    delete→rename segment swap is the one non-crash-safe step.
+    Run with the stream STOPPED CLEANLY: the fold covers every on-disk
+    batch, and the delete→rename segment swap is the one non-crash-safe
+    step.
     Idempotent — re-running re-derives the same segment. Pair history
     (``pairs_dir``) is untouched: detections already emitted are
     scheme-independent facts. Superseded old-width batch dirs sit at
@@ -489,9 +458,7 @@ __all__ = [
     "EB_MOD",
     "EBM_MIGRATING_MARKER",
     "EMBED_COS_THRESHOLD",
-    "LEGACY_EBM_MARKER",
     "VEC_MOD",
-    "normalize_ebm_marker",
     "scheme_layout",
     "compact_embed_state",
     "embed_dup_micro_batch",

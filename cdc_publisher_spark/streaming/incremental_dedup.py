@@ -32,15 +32,10 @@ Hive-partitioned on the key the next trigger will prune by:
   distinct bhm values — a CONSTANT, and for small probes far fewer —
   so the index read prunes to those directories regardless of how
   many batches of history exist, and each batch write lands ≤
-  ``bh_mod`` partition-aligned files (one per touched bhm). A pre-r11
-  (band=B/bhm=M) dir KEEPS its legacy structure — the writer resolves
-  the dir's layout (``index_layout``) before every write, because
-  mixing bhm-only batch dirs into a legacy dir breaks the probe's
-  union read (conflicting partition schemes — ADVICE r11, medium);
-  ``maintain`` compacts a legacy dir in its own shape, and moving it
-  forward is the explicit offline ``migrate_index_layout`` rewrite,
-  which also REPLACES the layout marker rather than accumulating a
-  second one.
+  ``bh_mod`` partition-aligned files (one per touched bhm). The dir
+  declares this layout with the ``rows-bhm`` marker; the writer and
+  ``compact_dedup_state`` refuse a dir declaring any other layout
+  before writing anything.
 - ``corpus_dir/batch=N/dh=D/`` — accumulated documents, sub-
   partitioned by ``dh = pmod(xxhash64(doc_id), doc_mod)``. The exact
   verify re-reads text ONLY for candidate-touching docs; candidates
@@ -72,13 +67,10 @@ Bloom-positive remainder, reading ONLY the corpus ``dh=`` partitions
 those maybe-dup ids hash into. Per-trigger guard cost is therefore
 O(batch + maybe_dups × touched_dh_dirs), never O(history) — the
 q_k81 pattern (queries/llm_sketch.py) wired in as infrastructure.
-Pre-Bloom state dirs (no ``bloom_dir`` on disk) fall back to the full
-id-column anti-join AND backfill the filter from the accumulated
-corpus ids in the same trigger (one compacted-segment write off the
-id column the fallback already read — ADVICE r7): without the
-backfill, the first post-upgrade delta would make the bloom dir
-non-empty while covering only post-upgrade ids, and legacy corpus ids
-redelivered later would flag clean and skip the exact anti-join.
+The bloom dir is written beside the corpus dir from the first trigger
+on, so a missing bloom dir next to a corpus that holds OTHER batches
+means the bloom state was lost or never written — the guard raises
+instead of passing history ids as clean.
 
 foreachBatch (not a stateful operator): the per-key state primitives
 (``applyInPandasWithState``) hold state per GROUP, but dedup state is
@@ -108,15 +100,11 @@ from cdc_publisher_spark.streaming.state import (
     batch_dirs,
     compact_state,
     compacted_upto,
-    hadoop_fs,
     in_stream_watermark,
-    inner_partition_prefixes,
-    read_layout_marker,
     read_state,
-    replace_layout_marker,
+    require_layout_marker,
     vacuum_state,
     write_layout_marker,
-    write_manifest,
 )
 
 #: Sub-partition fans. bh_mod bounds the probe's index read at
@@ -138,6 +126,9 @@ DOC_MOD = 64
 #: id-column scan).
 ID_BLOOM_BITS = 1 << 20
 ID_BLOOM_HASHES = 4
+
+#: The LSH index dir's one layout: row state partitioned by bhm.
+INDEX_LAYOUT = "rows-bhm"
 
 
 def _dh(col: str | Column) -> Column:
@@ -234,7 +225,7 @@ def _guard_parts(
     sees — and ``survivors`` is ``maybe`` minus true history ids,
     checked against a corpus read pruned to the maybe ids' dh
     partitions. maybe/survivors are None when no bloom state exists
-    (fresh stream or pre-bloom dirs → caller falls back)."""
+    (``guarded_batch`` decides whether that is a fresh stream)."""
     bloom = read_state(spark, bloom_dir, exclude_batch=batch_id)
     if bloom is None:
         return batch, None, None
@@ -259,36 +250,12 @@ def _guard_parts(
     return clean, maybe, survivors
 
 
-def backfill_bloom(
-    spark: SparkSession,
-    corpus: DataFrame,
-    batch_id: int,
-    corpus_dir: str,
-    bloom_dir: str,
-    id_col: str,
-) -> None:
-    """Build the id Bloom from the accumulated corpus ids and install
-    it as a COMPACTED segment whose manifest watermark is the highest
-    committed corpus batch (ADVICE r7, high): the marker records
-    exactly which batches the filter covers, later per-batch deltas
-    land ABOVE it, and a crash between segment write and marker flip
-    just re-runs the (idempotent, overwrite-mode) backfill next
-    trigger. One id-column aggregate over a frame the caller already
-    read for its full anti-join fallback — the same cost the old
-    opt-in guard paid every trigger."""
-    upto = compacted_upto(spark, corpus_dir)
-    committed = [k for k, _ in batch_dirs(spark, corpus_dir) if k != batch_id]
-    marks = committed + ([upto] if upto is not None else [])
-    if not marks:
-        return
-    m = max(marks)
-    delta = id_bloom_delta(corpus.select(id_col), id_col).withColumn(
-        "batch", F.lit(m)
+def _has_history(spark: SparkSession, corpus_dir: str, batch_id: int) -> bool:
+    """Listing-only: does the corpus hold any batch other than this one
+    (a compact segment or another ``batch=`` dir)? No Spark job."""
+    return compacted_upto(spark, corpus_dir) is not None or any(
+        k != batch_id for k, _ in batch_dirs(spark, corpus_dir)
     )
-    delta.write.mode("overwrite").parquet(
-        os.path.join(bloom_dir, "_compact", f"upto={m}")
-    )
-    write_manifest(spark, bloom_dir, m)
 
 
 def guarded_batch(
@@ -300,119 +267,25 @@ def guarded_batch(
     id_col: str,
 ) -> DataFrame:
     """``batch`` minus ids already in the accumulated corpus, at Bloom
-    pre-screen cost (see module docstring)."""
+    pre-screen cost (see module docstring). A fresh stream (no bloom,
+    no corpus history) passes the batch through unchanged; a bloom dir
+    missing beside corpus history raises."""
     clean, maybe, survivors = _guard_parts(
         spark, batch, batch_id, corpus_dir, bloom_dir, id_col
     )
     if maybe is None:
-        # no bloom state on disk: full id-column anti-join, plus a
-        # one-time backfill so the NEXT trigger's filter covers the
-        # whole legacy corpus — without it the first post-upgrade
-        # delta would look like complete bloom state and legacy ids
-        # would silently flag clean (ADVICE r7, high)
-        seen = read_state(spark, corpus_dir, exclude_batch=batch_id)
-        if seen is None:
-            return batch
-        backfill_bloom(spark, seen, batch_id, corpus_dir, bloom_dir, id_col)
-        return batch.join(seen.select(id_col), id_col, "anti")
+        if _has_history(spark, corpus_dir, batch_id):
+            raise ValueError(
+                f"no id-Bloom state at {bloom_dir} but the corpus at "
+                f"{corpus_dir} holds earlier batches: the cross-batch "
+                "guard cannot screen this batch against that history"
+            )
+        return batch
     return clean.unionByName(survivors)
 
 
 def default_bloom_dir(corpus_dir: str) -> str:
     return os.path.join(os.path.dirname(corpus_dir.rstrip("/")), "id_bloom")
-
-
-# --------------------------------------------------------------------------
-# Index layout resolution + migration (ADVICE r11, medium)
-# --------------------------------------------------------------------------
-def index_layout(
-    spark: SparkSession, index_dir: str
-) -> tuple[str, tuple[str, ...]]:
-    """(layout marker, inner partition cols) the index WRITER must use
-    for this dir. A pre-r11 dir keeps its ``(band=, bhm=)`` structure —
-    mixing a bhm-only batch dir into it would make the next probe's
-    union read fail on conflicting partition schemes and crash-loop the
-    stream (ADVICE r11, medium) — so the writer follows the dir, never
-    the code default. Fresh dirs get the r11 bhm-only layout.
-
-    Resolution order: the ``_layout.`` marker (authoritative;
-    ``read_layout_marker`` raises a migrate-first error if a damaged
-    dir accumulated BOTH markers), else the physical structure of the
-    live batch dirs (state written before markers existed), else the
-    current default. Moving a legacy dir forward is an explicit
-    offline ``migrate_index_layout`` call, not an in-place drift."""
-    marker = read_layout_marker(spark, index_dir)  # raises on conflict
-    if marker == "rows-band-bhm":
-        return marker, ("band", "bhm")
-    if marker == "rows-bhm":
-        return marker, ("bhm",)
-    if marker is not None:
-        raise ValueError(
-            f"{index_dir} declares layout {marker!r}, which is not an LSH "
-            "index layout — refusing to write into it"
-        )
-    phys = inner_partition_prefixes(spark, index_dir)
-    if "band" in phys:
-        return "rows-band-bhm", ("band", "bhm")
-    return "rows-bhm", ("bhm",)
-
-
-def migrate_index_layout(
-    spark: SparkSession, index_dir: str, vacuum: bool = True
-) -> None:
-    """Offline rewrite of a legacy ``(band=, bhm=)`` — or a damaged
-    MIXED — index dir into the r11 bhm-only layout: every batch dir is
-    read individually (a mixed dir cannot be union-read through one
-    basePath, which is exactly the crash this migration repairs),
-    folded with any existing compact segment into ``_compact/upto=max``,
-    and the layout marker is REPLACED, not accumulated
-    (state.replace_layout_marker — ADVICE r11).
-
-    Run with the stream STOPPED CLEANLY: the fold includes every
-    on-disk batch, so an uncommitted crash-leftover batch would be
-    baked into the segment (same contract as ``maintain
-    --assume-all-committed``). Idempotent — re-running on an
-    already-bhm-only dir rewrites it verbatim."""
-    upto = compacted_upto(spark, index_dir)
-    live = batch_dirs(spark, index_dir)
-    parts: list[DataFrame] = []
-    if upto is not None:
-        parts.append(
-            spark.read.parquet(os.path.join(index_dir, "_compact", f"upto={upto}"))
-        )
-    for k, d in live:
-        parts.append(spark.read.parquet(d).withColumn("batch", F.lit(k)))
-    if not parts:
-        return
-    marks = [k for k, _ in live] + ([upto] if upto is not None else [])
-    m = max(marks)
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    cols = [c for c in df.columns if c != "bhm"] + ["bhm"]
-    # stage through an underscore temp (invisible to readers) and swap:
-    # the target segment path can be one of the INPUTS (compact-only
-    # dir, m == upto), and parquet cannot overwrite a path it is
-    # reading. The delete->rename window is the one non-crash-safe
-    # step — acceptable under the stream-stopped offline contract.
-    tmp = os.path.join(index_dir, "_compact", "_migrating")
-    target = os.path.join(index_dir, "_compact", f"upto={m}")
-    (
-        aligned_repartition(df.select(*cols), "bhm")
-        .write.partitionBy("bhm")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    fs, _ = hadoop_fs(spark, index_dir)
-    jvm = spark._jvm
-    jtarget = jvm.org.apache.hadoop.fs.Path(target)
-    if fs.exists(jtarget):
-        fs.delete(jtarget, True)
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), jtarget)
-    write_manifest(spark, index_dir, m)
-    replace_layout_marker(spark, index_dir, "rows-bhm")
-    if vacuum:
-        vacuum_state(spark, index_dir)
 
 
 def read_dedup_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -442,7 +315,7 @@ def dedup_micro_batch(
     overlap_writes: bool = True,
 ) -> None:
     """foreachBatch body: sign the batch once, probe the persisted
-    index READING ONLY the (band, bhm) partitions the probe touches,
+    index READING ONLY the bhm partitions the probe touches,
     materialize candidates, then read corpus text ONLY from the dh
     partitions holding candidate docs, verify, and overwrite this
     batch's own state partitions.
@@ -540,12 +413,9 @@ def _dedup_micro_batch_body(
 ) -> None:
     if not batch.take(1):
         return
-    # resolve the index dir's layout BEFORE any write: a pre-r11
-    # (band=, bhm=) dir keeps its legacy structure — mixing layouts
-    # inside one dir breaks the union read (ADVICE r11, medium) — and
-    # a conflicted dir fails fast here with the migrate-first error
-    # instead of crash-looping the probe
-    idx_marker, idx_cols = index_layout(spark, index_dir)
+    # refuse an index dir declared under any other layout BEFORE any
+    # write: mixing layouts inside one dir breaks the probe's union read
+    require_layout_marker(spark, index_dir, INDEX_LAYOUT)
     # shingle the batch ONCE: the same hashed shingle rows feed the
     # signature aggregation here AND the exact verify below (r14
     # VERDICT ask #4a — the verify leg previously re-shingled the
@@ -575,9 +445,7 @@ def _dedup_micro_batch_body(
         # metadata-only signal: manifest or any other batch dir present
         # (corpus is written before index each batch, so its presence
         # is the authoritative "history exists" marker)
-        history_exists = compacted_upto(spark, corpus_dir) is not None or any(
-            k != batch_id for k, _ in batch_dirs(spark, corpus_dir)
-        )
+        history_exists = _has_history(spark, corpus_dir, batch_id)
         def pairs_job() -> None:
             if history_exists:
                 history_index = read_state(
@@ -678,7 +546,7 @@ def _dedup_micro_batch_body(
                 os.path.join(bloom_dir, f"batch={batch_id}")
             )
 
-        # Index dirs partition on bhm ALONE for fresh state (r11).
+        # Index dirs partition on bhm ALONE (r11).
         # Every document populates every band by construction (band is
         # the signature slice index), so band= dirs never prune a probe
         # — the only selective key is bhm. bhm-only dirs cut the
@@ -686,12 +554,9 @@ def _dedup_micro_batch_body(
         # ≤ BH_MOD (aligned: one file per touched bhm), while a small
         # probe's read still prunes to its ≤ bands distinct bhm values;
         # band and bh stay data columns the probe join filters in-scan.
-        # A dir that already holds LEGACY (band=, bhm=) state keeps
-        # that structure (idx_cols, resolved above) until an explicit
-        # migrate_index_layout — never an in-place layout mix.
         def index_job() -> None:
-            aligned_repartition(new_buckets, *idx_cols).write.partitionBy(
-                *idx_cols
+            aligned_repartition(new_buckets, "bhm").write.partitionBy(
+                "bhm"
             ).mode("overwrite").parquet(os.path.join(index_dir, f"batch={batch_id}"))
 
         if not overlap_writes:
@@ -737,7 +602,7 @@ def _dedup_micro_batch_body(
             (pairs_dir, "rows"),
             (corpus_dir, "rows-dh"),
             (bloom_dir, "bitor-mask"),
-            (index_dir, idx_marker),
+            (index_dir, INDEX_LAYOUT),
         ):
             write_layout_marker(spark, d, layout)
     finally:
@@ -761,14 +626,9 @@ def compact_dedup_state(
     (ADVICE r6: deleting them under an unsynchronized concurrent
     reader is the one unsafe interleaving; see state.vacuum_state)."""
     bdir = bloom_dir or default_bloom_dir(corpus_dir)
+    require_layout_marker(spark, index_dir, INDEX_LAYOUT)
     compact_state(spark, corpus_dir, upto_batch, partition_cols=("dh",))
-    # the index compacts in ITS OWN layout — folding a legacy
-    # (band=, bhm=) dir into bhm-only dirs mid-stream would mix
-    # structures under the legacy marker (migration is explicit)
-    compact_state(
-        spark, index_dir, upto_batch,
-        partition_cols=index_layout(spark, index_dir)[1],
-    )
+    compact_state(spark, index_dir, upto_batch, partition_cols=("bhm",))
     compact_state(spark, pairs_dir, upto_batch)
     if batch_dirs(spark, bdir) or compacted_upto(spark, bdir) is not None:
         compact_state(

@@ -32,25 +32,22 @@ be silently sum-merged. The declared layouts:
                        partial sums, ctx_monitor).
 - ``rows``           → row state, rewritten verbatim (dedup pairs).
 - ``rows-dh``        → row state partitioned by ``dh`` (dedup corpus).
-- ``rows-ebm`` / ``rows-vh``
+- ``rows-ebm-<bands>x<bits>`` / ``rows-vh``
                      → embedding near-dup monitor: signature index
-                       cells / vector store (embed_monitor).
+                       cells (the marker names the banding scheme) /
+                       vector store (embed_monitor).
 - ``rows-bhm``       → row state partitioned by ``bhm`` (dedup LSH
-                       index since r11 — band dirs never pruned).
-- ``rows-band-bhm``  → row state partitioned by (band, bhm) (legacy
-                       pre-r11 dedup LSH index dirs).
-- ``rows-fm-1024`` / ``rows-fm``
-                     → audio-dup fpk state partitioned by ``fm``
-                       (r12 1024-way fan / legacy r11 64-way fan —
-                       the marker name carries the modulus).
+                       index).
+- ``rows-fm-1024``   → audio-dup fpk state partitioned by ``fm`` (the
+                       marker name carries the modulus).
 
-A dir with NO marker (state written by a pre-marker version) falls
-back to full-signature schema matching — each aggregate algebra
-requires its layout's complete column fingerprint, not one column —
-and anything unrecognized is SKIPPED with a note in the plan rather
-than guessed at. Discovery never descends into ``batch=N`` or
-underscore dirs; a dir qualifies as state iff it has ``batch=``
-children or a compaction manifest.
+A dir with NO marker is SKIPPED with a "no layout marker" note rather
+than guessed at. Every writer declares its marker in its first
+trigger, so a marker-less dir can only come from a crash in trigger 0
+before the marker write; its ``batch=0`` is then the newest on-disk
+batch, which the default watermark holds back anyway. Discovery never
+descends into ``batch=N`` or underscore dirs; a dir qualifies as state
+iff it has ``batch=`` children or a compaction manifest.
 
 The watermark contract (ADVICE r9, medium)
 ------------------------------------------
@@ -174,6 +171,9 @@ def _sum_ctx(columns: list[str]) -> Callable[[DataFrame], DataFrame]:
     return merge
 
 
+#: The one spec every scheme-versioned embed-index marker maps to.
+_EBM_FAMILY = "rows-ebm-<bands>x<bits>"
+
 #: Name → spec for every layout a writer may declare. Writers pass
 #: these exact names to state.write_layout_marker.
 LAYOUTS: dict[str, LayoutSpec] = {
@@ -204,25 +204,17 @@ LAYOUTS: dict[str, LayoutSpec] = {
         LayoutSpec("rows", "rows", (), frozenset(), None),
         LayoutSpec("rows-dh", "rows", ("dh",), frozenset({"dh"}), None),
         # embedding near-dup monitor (streaming/embed_monitor): the
-        # signature index's (band, bh)-cell fan and the vector store's
-        # id-hash fan
-        LayoutSpec("rows-ebm", "rows", ("ebm",), frozenset({"ebm"}), None),
+        # signature index's (band, bh)-cell fan — every versioned
+        # rows-ebm-<bands>x<bits> marker maps here — and the vector
+        # store's id-hash fan
+        LayoutSpec(_EBM_FAMILY, "rows", ("ebm",), frozenset({"ebm"}), None),
         LayoutSpec("rows-vh", "rows", ("vh",), frozenset({"vh"}), None),
-        # the dedup LSH index since r11: bhm-only dirs (band never
-        # pruned anything — every doc populates every band)
+        # the dedup LSH index: bhm-only dirs (band never pruned
+        # anything — every doc populates every band)
         LayoutSpec("rows-bhm", "rows", ("bhm",), frozenset({"bhm"}), None),
         # audio-dup monitor fingerprint keys (streaming/audio_monitor):
-        # the r12 1024-way fan carries the modulus in the marker name;
-        # the legacy unversioned marker is the r11 64-way fan. Both
-        # compact identically (verbatim rewrite keeping fm dirs — fm
-        # values were assigned under the dir's own modulus)
+        # the marker name carries the fan's modulus
         LayoutSpec("rows-fm-1024", "rows", ("fm",), frozenset({"fm"}), None),
-        LayoutSpec("rows-fm", "rows", ("fm",), frozenset({"fm"}), None),
-        # legacy pre-r11 index dirs; compacting one folds it into the
-        # same (band,bhm)-dir shape it was written with
-        LayoutSpec(
-            "rows-band-bhm", "rows", ("band", "bhm"), frozenset({"band", "bhm"}), None
-        ),
     )
 }
 
@@ -247,79 +239,27 @@ class MaintenancePlan:
         return "compact" if self.target_upto is not None else "skip"
 
 
-def _fallback_layout(columns: list[str]) -> LayoutSpec | None:
-    """Full-signature schema matching for dirs that predate layout
-    markers. Aggregate algebras require their layout's complete column
-    fingerprint (ADVICE r9: single-column presence misclassified
-    future layouts); unknown schemas return None → skip-with-note,
-    never a guessed merge."""
-    cols = set(columns)
-    if cols == {"label", "p", "s", "n", "batch"}:
-        return LAYOUTS["sum-sn"]
-    if cols == {"word", "mask", "batch"}:
-        return LAYOUTS["bitor-mask"]
-    if {"bucket", "M", "batch"} <= cols and cols <= {"source", "group", "g",
-                                                     "bucket", "M", "batch"}:
-        return LAYOUTS["max-M"]
-    if {"wh", "fb", "batch"} <= cols and cols <= {"source", "wh", "fb", "batch"}:
-        return LAYOUTS["min-fb"]
-    if {
-        "budget",
-        "n_docs",
-        "total_tokens",
-        "n_trunc_docs",
-        "trunc_lost_tokens",
-        "n_chunks",
-        "pad_tokens",
-        "batch",
-    } == cols:  # ctx economics: exact wide-sum signature
-        return LAYOUTS["sum-ctx"]
-    if {"r", "b", "cnt", "batch"} <= cols:  # count-min: variable group cols
-        return LAYOUTS["sum-cnt"]
-    if cols == {"sh", "source", "cnt", "batch"}:  # exposure, exact
-        return LAYOUTS["sum-cnt"]
-    if "dh" in cols:
-        return LAYOUTS["rows-dh"]
-    if "fm" in cols:
-        return LAYOUTS["rows-fm"]
-    if "ebm" in cols:
-        return LAYOUTS["rows-ebm"]
-    if "vh" in cols:
-        return LAYOUTS["rows-vh"]
-    if "bhm" in cols:
-        # marker-less index dirs (legacy Hive band=/bhm= and r11
-        # bhm-only read back with the same column set); fold to the
-        # r11 bhm-only layout — a correct rewrite of either
-        return LAYOUTS["rows-bhm"]
-    return None
-
-
 def classify_state_dir(
-    columns: list[str], layout: str | None = None
+    columns: list[str], layout: str | None
 ) -> tuple[str, tuple[str, ...], Callable[[DataFrame], DataFrame] | None] | None:
     """(kind, partition_cols, merge_fn) for a state dir, or None when
     the dir cannot be classified safely (skip-with-note).
 
     ``layout`` is the dir's declared ``_layout.`` marker name — the
-    authoritative path. A declared layout whose required columns are
-    absent from the actual schema is treated as unrecognized (a marker
-    pasted onto the wrong dir must not trigger the wrong merge). With
-    no marker, full-signature schema fallback applies.
+    only classification path; a dir with no marker is unrecognized. A
+    declared layout whose required columns are absent from the actual
+    schema is unrecognized too (a marker pasted onto the wrong dir
+    must not trigger the wrong merge).
 
     Scheme-versioned embed-index markers (``rows-ebm-<bands>x<bits>``,
-    written by ``embed_monitor.migrate_embed_layout`` — the rows-fm-1024
-    precedent with an open-ended scheme instead of a fixed modulus)
-    all compact identically to ``rows-ebm``: a verbatim rewrite
-    keeping the ``ebm=`` dirs, whose values were assigned under the
-    dir's own scheme."""
+    the rows-fm-1024 precedent with an open-ended scheme instead of a
+    fixed modulus) all compact identically: a verbatim rewrite keeping
+    the ``ebm=`` dirs, whose values were assigned under the dir's own
+    scheme."""
     if layout is not None and re.fullmatch(r"rows-ebm-\d+x\d+", layout):
-        layout = "rows-ebm"
+        layout = _EBM_FAMILY
     spec = LAYOUTS.get(layout) if layout is not None else None
-    if layout is not None and (spec is None or not spec.required <= set(columns)):
-        return None
-    if spec is None:
-        spec = _fallback_layout(columns)
-    if spec is None:
+    if spec is None or not spec.required <= set(columns):
         return None
     merge_fn = spec.merge_builder(columns) if spec.merge_builder else None
     return spec.kind, spec.partition_cols, merge_fn
@@ -397,15 +337,16 @@ def plan_maintenance(
     )
     plans: list[MaintenancePlan] = []
     for d in discover_state_dirs(spark, state_root):
-        conflict = None
+        marker = conflict = None
         try:
-            # a dir caught mid-upgrade (two markers, or mixed inner
-            # partition structures Spark refuses to union-read) must
-            # become a skip-with-note, not crash the whole walk —
-            # maintenance is the scheduled job that has to keep running
-            # for every OTHER dir while the bad one awaits migration
+            # a damaged dir (two markers, or mixed inner partition
+            # structures Spark refuses to union-read) must become a
+            # skip-with-note, not crash the whole walk — maintenance is
+            # the scheduled job that has to keep running for every
+            # OTHER dir while the bad one awaits repair
             cols = read_state(spark, d).columns
-            classified = classify_state_dir(cols, read_layout_marker(spark, d))
+            marker = read_layout_marker(spark, d)
+            classified = classify_state_dir(cols, marker)
         except Exception as e:  # conflicting markers / partition schemes
             classified, conflict = None, str(e).splitlines()[0][:160]
         prev = compacted_upto(spark, d)
@@ -418,7 +359,9 @@ def plan_maintenance(
             kind, pcols = "unrecognized", ()
             target = None
             note = conflict or (
-                "no layout marker and no full-signature schema match; skipped"
+                "no layout marker; skipped"
+                if marker is None
+                else f"layout marker {marker!r} does not fit the dir's schema; skipped"
             )
         else:
             kind, pcols, _ = classified

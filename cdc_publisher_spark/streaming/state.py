@@ -23,7 +23,7 @@ A *state dir* contains one subdirectory per micro-batch::
 Every write is an OVERWRITE of the writer's own ``batch=N`` dir, so
 foreachBatch's at-least-once replay is idempotent: a re-delivered
 batch rewrites its own partition byte-for-byte instead of appending
-duplicates. Inner partition columns (``band``/``bhm``/``dh`` for the
+duplicates. Inner partition columns (``bhm``/``dh`` for the
 dedup dirs) are the keys the next trigger will prune by — readers pass
 a ``part_filter`` and the scan reads O(touched cells), not O(corpus).
 
@@ -145,17 +145,18 @@ def write_layout_marker(spark: SparkSession, path: str, layout: str) -> None:
 
 
 def read_layout_marker(spark: SparkSession, path: str) -> str | None:
-    """The declared layout name for a state dir, or None when the dir
-    predates markers (schema-signature fallback applies).
+    """The declared layout name for a state dir, or None when no writer
+    has declared one yet (a fresh dir, or a crash in trigger 0 before
+    its marker write — ``maintain`` skips such a dir).
 
     MULTIPLE markers raise: a dir can only have accumulated two
-    ``_layout.`` files by having writers of different layout versions
-    write into it without a migration (the ADVICE r11 in-place-upgrade
-    hazard), and silently picking one — the old sorted()[0] behavior —
-    let the stale marker shadow the live one forever. The fix is a
-    layout migration (e.g. ``incremental_dedup.migrate_index_layout``),
-    which rewrites the data and REPLACES the marker
-    (``replace_layout_marker``) instead of adding a second one."""
+    ``_layout.`` files by having writers of different layouts write
+    into it (the ADVICE r11 in-place-upgrade hazard), and silently
+    picking one — the old sorted()[0] behavior — let the stale marker
+    shadow the live one forever. A layout migration (e.g.
+    ``embed_monitor.migrate_embed_layout``) rewrites the data and
+    REPLACES the marker (``replace_layout_marker``) instead of adding
+    a second one."""
     fs, jpath = hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return None
@@ -167,19 +168,31 @@ def read_layout_marker(spark: SparkSession, path: str) -> str | None:
     if len(names) > 1:
         raise ValueError(
             f"conflicting layout markers {names} at {path}: the dir holds "
-            "state written under two different layouts — run the layout's "
-            "migration (which rewrites the data and replaces the marker) "
-            "before reading or writing it"
+            "state written under two different layouts — rebuild or migrate "
+            "it (which rewrites the data and replaces the marker) before "
+            "reading or writing it"
         )
     return names[0] if names else None
+
+
+def require_layout_marker(spark: SparkSession, path: str, layout: str) -> None:
+    """Writer-side guard: raise unless ``path`` is undeclared (fresh) or
+    declares exactly ``layout``. Called before a writer's first write of
+    a trigger, so a dir written under another layout is refused with
+    nothing written."""
+    marker = read_layout_marker(spark, path)  # raises on conflict
+    if marker is not None and marker != layout:
+        raise ValueError(
+            f"{path} declares layout {marker!r}, not {layout!r} — "
+            "refusing to write into it"
+        )
 
 
 def replace_layout_marker(spark: SparkSession, path: str, layout: str) -> None:
     """Swap a state dir's layout declaration: remove every existing
     ``_layout.`` marker, then create ``_layout.<layout>``. For
     MIGRATIONS only — a crash between the delete and the create leaves
-    the dir marker-less, which degrades to the schema-signature
-    fallback (safe: unrecognized schemas are skipped, never merged
+    the dir marker-less, which ``maintain`` skips (safe: never merged
     wrongly), whereas the accumulate-both alternative left a stale
     marker permanently shadowing the live one (ADVICE r11)."""
     fs, jpath = hadoop_fs(spark, path)
@@ -226,30 +239,6 @@ def batch_dirs(spark: SparkSession, path: str) -> list[tuple[int, str]]:
         if st.isDirectory() and name.startswith("batch="):
             out.append((int(name.split("=", 1)[1]), st.getPath().toString()))
     return sorted(out)
-
-
-def inner_partition_prefixes(spark: SparkSession, state_dir: str) -> set[str]:
-    """Partition-column names physically present in the dir's live
-    ``batch=N`` children (falling back to the compact segments when no
-    live dirs exist) — the marker-less layout sniff the writers use to
-    keep following a legacy dir's structure (ADVICE r11)."""
-    fs, _ = hadoop_fs(spark, state_dir)
-    jvm = spark._jvm
-    roots = [d for _, d in batch_dirs(spark, state_dir)]
-    croot = jvm.org.apache.hadoop.fs.Path(os.path.join(state_dir, "_compact"))
-    if not roots and fs.exists(croot):
-        roots = [
-            st.getPath().toString()
-            for st in fs.listStatus(croot)
-            if st.getPath().getName().startswith("upto=")
-        ]
-    found: set[str] = set()
-    for r in roots:
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(r)):
-            name = st.getPath().getName()
-            if st.isDirectory() and "=" in name:
-                found.add(name.split("=", 1)[0])
-    return found
 
 
 def read_state(
@@ -443,10 +432,10 @@ __all__ = [
     "compacted_upto",
     "hadoop_fs",
     "in_stream_watermark",
-    "inner_partition_prefixes",
     "read_layout_marker",
     "read_state",
     "replace_layout_marker",
+    "require_layout_marker",
     "vacuum_state",
     "write_layout_marker",
     "write_manifest",

@@ -40,10 +40,12 @@ _SPREAD_MIN_BYTES = 128 * 1024
 
 #: Cache of scan partition counts, so repeated load() calls (every
 #: query build) don't re-derive one. Keyed by (application id, path,
-#: file size, file mtime) — ADVICE r15: the count depends on session
-#: config (maxPartitionBytes, parallelism) and the on-disk layout, so
-#: a second session in the same process, or a regenerated file at the
-#: same path, must not read a stale count.
+#: total size, newest file mtime) — the count depends on session config
+#: (maxPartitionBytes, parallelism) and the on-disk layout, so a second
+#: session in the same process, or a file rewritten under the path —
+#: for a directory table, any file in it — must not read a stale count.
+#: Cleared whenever a new application id appears, so entries of stopped
+#: sessions do not pile up.
 _SCAN_PARTS: dict[tuple, int] = {}
 
 #: Unique row key per table (where one exists) for the keyed spread.
@@ -89,17 +91,25 @@ def _spread_small_scan(spark: SparkSession, df: DataFrame, path: str, key) -> Da
     hash-stability rules (sorted collect_list, rounded/decimal-summed
     aggregates), re-verified by the full 216-query oracle sweep."""
     try:
-        size = os.path.getsize(path) if os.path.isfile(path) else sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(path) for f in fs
-        )
-        mtime = os.stat(path).st_mtime_ns
+        if os.path.isfile(path):
+            st = os.stat(path)
+            size, mtime = st.st_size, st.st_mtime_ns
+        else:
+            size, mtime = 0, 0
+            for r, _, fs in os.walk(path):
+                for f in fs:
+                    st = os.stat(os.path.join(r, f))
+                    size += st.st_size
+                    mtime = max(mtime, st.st_mtime_ns)
     except OSError:
         return df
     if size < _SPREAD_MIN_BYTES:
         return df
     target = spark.sparkContext.defaultParallelism
-    cache_key = (spark.sparkContext.applicationId, path, size, mtime)
+    app = spark.sparkContext.applicationId
+    if any(k[0] != app for k in _SCAN_PARTS):
+        _SCAN_PARTS.clear()
+    cache_key = (app, path, size, mtime)
     if cache_key not in _SCAN_PARTS:
         _SCAN_PARTS[cache_key] = df.rdd.getNumPartitions()
     if _SCAN_PARTS[cache_key] >= target:
@@ -140,15 +150,7 @@ def load(
         from pyspark.sql import functions as F
 
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # SPARK_GRAFT_SPREAD_ALL=1: measurement-only override that applies
-    # the spread to EVERY non-DIM load — the one-command form of the
-    # blanket-vs-opt-in A/B (r15 measured blanket a net loss at sf0.1;
-    # VERDICT r15 ask #9 re-runs the audit at sf1 where the break-even
-    # moves). Never set by the bench/driver; adoption decisions are
-    # committed per query via spread=True.
-    if name not in DIM_TABLES and (
-        spread or os.environ.get("SPARK_GRAFT_SPREAD_ALL")
-    ):
+    if spread and name not in DIM_TABLES:
         df = _spread_small_scan(spark, df, path, (sf_dir, name))
     return df
 

@@ -167,11 +167,11 @@ def test_retry_loop_exhausts_budget():
 
 
 def test_udf_matches_pure_python_twin(spark):
-    """The self-contained UDF closures must agree byte-for-byte with
-    derive_key/derive_key_from_json (they inline the same logic)."""
+    """The self-contained Arrow-batched key UDF must agree byte-for-byte
+    with derive_key/derive_key_from_json (it inlines the same logic)."""
     from pyspark.sql import functions as F
 
-    from cdc_publisher_spark.cdc.keying import key_from_raw_json
+    from cdc_publisher_spark.cdc.keying import key_from_raw_json_vectorized
 
     samples = [
         {"id": {"b": 2, "a": "x"}, "type": "insert", "table": "t", "data": {"c": 1},
@@ -183,7 +183,10 @@ def test_udf_matches_pure_python_twin(spark):
     ]
     raws = [json.dumps(d, separators=(",", ":"), ensure_ascii=False) for d in samples]
     df = spark.createDataFrame([(r,) for r in raws], "raw string")
-    got = [r["key"] for r in df.select(key_from_raw_json(F.col("raw")).alias("key")).collect()]
+    got = [
+        r["key"]
+        for r in df.select(key_from_raw_json_vectorized(F.col("raw")).alias("key")).collect()
+    ]
     assert got == [derive_key_from_json(r) for r in raws]
 
 
@@ -213,13 +216,10 @@ def test_latest_per_key_matches_python_reference(spark):
 
 def test_vectorized_udf_matches_scalar_udf(spark):
     """The Arrow-batched key UDF must emit byte-identical keys to the
-    scalar UDF and the pure twin, including malformed/None rows."""
+    scalar row-at-a-time key function, including malformed/None rows."""
     from pyspark.sql import functions as F
 
-    from cdc_publisher_spark.cdc.keying import (
-        key_from_raw_json,
-        key_from_raw_json_vectorized,
-    )
+    from cdc_publisher_spark.cdc.keying import key_from_raw_json_vectorized
 
     samples = [
         '{"id":{"b":2,"a":"x"},"type":"insert","table":"t","data":{"c":1},"info":{}}',
@@ -230,11 +230,10 @@ def test_vectorized_udf_matches_scalar_udf(spark):
         None,
     ]
     df = spark.createDataFrame([(r,) for r in samples], "raw string")
-    rows = df.select(
-        key_from_raw_json(F.col("raw")).alias("scalar"),
-        key_from_raw_json_vectorized(F.col("raw")).alias("vec"),
-    ).collect()
-    for r in rows:
-        assert r["scalar"] == r["vec"]
-    assert [r["vec"] for r in rows[:3]] == [derive_key_from_json(s) for s in samples[:3]]
-    assert all(r["vec"] is None for r in rows[3:])
+    got = [
+        r["vec"]
+        for r in df.select(key_from_raw_json_vectorized(F.col("raw")).alias("vec")).collect()
+    ]
+    assert got == [derive_key_from_json(s) for s in samples]
+    assert all(k is not None for k in got[:3])
+    assert all(k is None for k in got[3:])

@@ -1,13 +1,12 @@
-"""LSH-index layout upgrade guard (ADVICE r11, medium).
+"""LSH-index layout guard: one layout per state dir.
 
-A pre-r11 index dir holds ``batch=N/band=B/bhm=M`` partitions; r11
-writers produce ``batch=N/bhm=M``. Mixing the two inside one dir makes
-``read_state``'s basePath union read fail with conflicting partition
-schemes and crash-loops the stream — so the writer must FOLLOW the
-dir's existing layout, a damaged dir (both markers, mixed structures)
-must fail fast with a migrate-first error rather than write more
-damage, and ``migrate_index_layout`` must repair it and REPLACE the
-marker instead of accumulating a second one.
+An index dir holds ``batch=N/bhm=M`` partitions and declares them with
+the ``_layout.rows-bhm`` marker. A dir whose marker is anything else —
+a foreign layout, or two markers after an accumulate bug — must make
+the writer fail fast before any partial write, maintenance must skip
+it with a note, and ``replace_layout_marker`` must REPLACE the marker
+instead of accumulating a second one, so the stream resumes once the
+dir declares its own layout again.
 """
 
 from __future__ import annotations
@@ -15,21 +14,16 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
-from cdc_publisher_spark.operators.minhash import lsh_buckets, minhash_signatures
 from cdc_publisher_spark.streaming.incremental_dedup import (
-    BH_MOD,
+    INDEX_LAYOUT,
     dedup_micro_batch,
-    index_layout,
-    migrate_index_layout,
     read_dedup_state,
 )
 from cdc_publisher_spark.streaming.maintenance import plan_maintenance
 from cdc_publisher_spark.streaming.state import (
     batch_dirs,
     read_layout_marker,
-    read_state,
     replace_layout_marker,
     write_layout_marker,
 )
@@ -37,186 +31,65 @@ from cdc_publisher_spark.streaming.state import (
 BASE = " ".join(f"tok{i}" for i in range(30))
 BATCH0 = [(1, BASE), (2, "q " * 25)]
 BATCH1 = [(3, BASE + " aa")]
-BATCH2 = [(4, BASE + " bb")]
 
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def _legacy_index_write(spark, docs, index_dir: str, batch_id: int) -> None:
-    """Write one index batch dir exactly as the pre-r11 writer did:
-    (band=, bhm=) inner partitions plus the legacy marker."""
-    nb = lsh_buckets(minhash_signatures(docs, "doc_id", "text")).withColumn(
-        "bhm", F.pmod(F.col("bh"), F.lit(BH_MOD)).cast("int")
-    )
-    nb.repartition(F.col("band"), F.col("bhm")).write.partitionBy(
-        "band", "bhm"
-    ).mode("overwrite").parquet(os.path.join(index_dir, f"batch={batch_id}"))
-    write_layout_marker(spark, index_dir, "rows-band-bhm")
-
-
-def _make_legacy_state(spark, tmp_path) -> list[str]:
-    """Dedup state whose index dir is genuinely pre-r11: batch 0 is
-    written through the real micro-batch path, then its index dir is
-    rewritten in the legacy structure with the legacy marker."""
+def _state(spark, tmp_path) -> tuple[list[str], list[str]]:
+    """Dedup state after trigger 0: (corpus, index, pairs) writer args
+    and those dirs plus the id Bloom dir."""
     dirs = [str(tmp_path / d) for d in ("corpus", "idx", "pairs")]
     dedup_micro_batch(_df(spark, BATCH0), 0, *dirs)
-    # replace the bhm-only batch dir + marker with the legacy form
-    # (materialize before deleting the dir the read points at)
-    rows = (
-        spark.read.parquet(os.path.join(dirs[1], "batch=0"))
-        .select("doc_id", "band", "bh", "bhm")
-        .collect()
-    )
-    import shutil
-
-    shutil.rmtree(os.path.join(dirs[1], "batch=0"))
-    os.remove(os.path.join(dirs[1], "_layout.rows-bhm"))
-    spark.createDataFrame(
-        rows, "doc_id long, band int, bh bigint, bhm int"
-    ).repartition(F.col("band"), F.col("bhm")).write.partitionBy(
-        "band", "bhm"
-    ).parquet(os.path.join(dirs[1], "batch=0"))
-    write_layout_marker(spark, dirs[1], "rows-band-bhm")
-    return dirs
+    return dirs, dirs + [str(tmp_path / "id_bloom")]
 
 
-def _pairs(spark, pairs_dir):
-    df = read_state(spark, pairs_dir)
-    return sorted((r.d1, r.d2) for r in df.select("d1", "d2").collect())
-
-
-def _reference_pairs(spark, tmp_path, batches):
-    """The same batch sequence against fresh (current-layout) dirs."""
-    dirs = [str(tmp_path / f"ref_{d}") for d in ("corpus", "idx", "pairs")]
-    for b, rows in enumerate(batches):
-        dedup_micro_batch(_df(spark, rows), b, *dirs)
-    return _pairs(spark, dirs[2])
-
-
-def test_writer_keeps_legacy_layout(spark, tmp_path):
-    """New batches into a pre-r11 dir are written in the DIR's layout:
-    the probe keeps working, band= subdirs appear in the new batch dir,
-    the marker stays single, and the emitted pairs match a fresh-layout
-    run of the same batches."""
-    dirs = _make_legacy_state(spark, tmp_path)
-    assert index_layout(spark, dirs[1]) == ("rows-band-bhm", ("band", "bhm"))
-
-    dedup_micro_batch(_df(spark, BATCH1), 1, *dirs)
-
-    children = os.listdir(os.path.join(dirs[1], "batch=1"))
-    assert any(c.startswith("band=") for c in children), children
-    assert read_layout_marker(spark, dirs[1]) == "rows-band-bhm"
-    assert read_state(spark, dirs[1]) is not None  # union read survives
-    assert _pairs(spark, dirs[2]) == _reference_pairs(
-        spark, tmp_path, [BATCH0, BATCH1]
-    )
-
-
-def test_marker_less_legacy_dir_is_sniffed(spark, tmp_path):
-    """State written before markers existed: the physical band= dirs
-    decide the layout."""
-    idx = str(tmp_path / "idx")
-    _legacy_index_write(spark, _df(spark, BATCH0), idx, 0)
-    os.remove(os.path.join(idx, "_layout.rows-band-bhm"))
-    assert read_layout_marker(spark, idx) is None
-    assert index_layout(spark, idx) == ("rows-band-bhm", ("band", "bhm"))
+def _only_batch0(spark, all_dirs) -> bool:
+    return all([k for k, _ in batch_dirs(spark, d)] == [0] for d in all_dirs)
 
 
 def test_conflicted_dir_fails_fast_and_migrates(spark, tmp_path):
-    """The r11-damaged shape — legacy batch dir + bhm-only batch dir +
-    both markers: reads raise the migrate-first error, the writer
-    refuses before any partial write, maintenance skips with a note,
-    and migrate_index_layout repairs the dir so the stream resumes
-    with the same pair semantics."""
-    dirs = _make_legacy_state(spark, tmp_path)
-    # simulate the unguarded r11 writer's batch 1: corpus/pairs/bloom
-    # written normally, but the index batch dir lands bhm-only and the
-    # second marker accumulates on top of the live legacy batch=0
+    """Two markers on the index dir: reads raise, the writer refuses
+    before any partial batch=1 write, maintenance skips the dir with a
+    note, and replacing the marker with the index layout lets the
+    stream resume with the expected pair."""
+    dirs, all_dirs = _state(spark, tmp_path)
+    idx = dirs[1]
+    write_layout_marker(spark, idx, "rows-dh")  # accumulates a second one
+    with pytest.raises(ValueError, match="conflicting layout markers"):
+        read_layout_marker(spark, idx)
+    with pytest.raises(ValueError, match="conflicting layout markers"):
+        dedup_micro_batch(_df(spark, BATCH1), 1, *dirs)
+    assert _only_batch0(spark, all_dirs)
+    (bad,) = [p for p in plan_maintenance(spark, str(tmp_path)) if p.path.endswith("idx")]
+    assert bad.kind == "unrecognized" and "conflicting" in bad.note.lower()
+
+    replace_layout_marker(spark, idx, INDEX_LAYOUT)
+    assert read_layout_marker(spark, idx) == INDEX_LAYOUT
     dedup_micro_batch(_df(spark, BATCH1), 1, *dirs)
-    rows = (
-        spark.read.parquet(os.path.join(dirs[1], "batch=1"))
-        .select("doc_id", "band", "bh", "bhm")
-        .collect()
-    )
-    import shutil
-
-    shutil.rmtree(os.path.join(dirs[1], "batch=1"))
-    spark.createDataFrame(
-        rows, "doc_id long, band int, bh bigint, bhm int"
-    ).repartition(F.col("bhm")).write.partitionBy("bhm").parquet(
-        os.path.join(dirs[1], "batch=1")
-    )
-    write_layout_marker(spark, dirs[1], "rows-bhm")
-
-    with pytest.raises(ValueError, match="conflicting layout markers"):
-        read_layout_marker(spark, dirs[1])
-    with pytest.raises(ValueError, match="conflicting layout markers"):
-        dedup_micro_batch(_df(spark, BATCH2), 2, *dirs)
-    # no partial batch=2 landed anywhere
-    for d in dirs:
-        assert all(k != 2 for k, _ in batch_dirs(spark, d)), d
-
-    plans = plan_maintenance(spark, str(tmp_path))
-    bad = [p for p in plans if p.path.endswith("idx")]
-    assert bad and bad[0].kind == "unrecognized"
-    # the note carries whichever conflict fired first (Spark's
-    # partition-scheme error from read_state, or the marker conflict)
-    assert "conflicting" in bad[0].note.lower()
-
-    migrate_index_layout(spark, dirs[1])
-    assert read_layout_marker(spark, dirs[1]) == "rows-bhm"
-    assert index_layout(spark, dirs[1]) == ("rows-bhm", ("bhm",))
-    # repaired: the stream resumes and the cumulative pair set matches
-    # the fresh-dir reference for the full batch sequence
-    dedup_micro_batch(_df(spark, BATCH2), 2, *dirs)
-    assert _pairs(spark, dirs[2]) == _reference_pairs(
-        spark, tmp_path, [BATCH0, BATCH1, BATCH2]
-    )
-
-
-def test_migrate_compact_only_legacy_dir(spark, tmp_path):
-    """A legacy dir whose only state is a compact segment (the default
-    maintain watermark can leave exactly this): migration must stage
-    through a temp dir — the target segment path is also its input —
-    and still flip the marker."""
-    from cdc_publisher_spark.streaming.state import compact_state, compacted_upto
-
-    idx = str(tmp_path / "idx")
-    for b, rows in enumerate([BATCH0, BATCH1]):
-        _legacy_index_write(spark, _df(spark, rows), idx, b)
-    compact_state(spark, idx, 1, partition_cols=("band", "bhm"))
-    from cdc_publisher_spark.streaming.state import vacuum_state
-
-    vacuum_state(spark, idx)
-    assert compacted_upto(spark, idx) == 1 and not batch_dirs(spark, idx)
-
-    before = sorted(
-        map(tuple, read_state(spark, idx).select("doc_id", "band", "bh").collect())
-    )
-    migrate_index_layout(spark, idx)
-    assert read_layout_marker(spark, idx) == "rows-bhm"
-    after_df = read_state(spark, idx)
-    assert after_df is not None
-    after = sorted(
-        map(tuple, after_df.select("doc_id", "band", "bh").collect())
-    )
-    assert after == before
-    # physical layout really is bhm-only now
-    seg = os.path.join(idx, "_compact", "upto=1")
-    assert any(c.startswith("bhm=") for c in os.listdir(seg))
-    assert not any(c.startswith("band=") for c in os.listdir(seg))
+    assert {(r.d1, r.d2) for r in read_dedup_state(spark, dirs[2]).collect()} == {(1, 3)}
 
 
 def test_replace_layout_marker_swaps_not_accumulates(spark, tmp_path):
+    """replace_layout_marker leaves exactly one marker; a single foreign
+    marker on the index dir is refused like a conflicting pair."""
     d = str(tmp_path / "s")
     os.makedirs(d)
-    write_layout_marker(spark, d, "rows-band-bhm")
-    write_layout_marker(spark, d, "rows-bhm")  # the r11 accumulate bug
+    write_layout_marker(spark, d, "rows-dh")
+    write_layout_marker(spark, d, INDEX_LAYOUT)  # the accumulate bug
     with pytest.raises(ValueError, match="conflicting layout markers"):
         read_layout_marker(spark, d)
-    replace_layout_marker(spark, d, "rows-bhm")
-    assert read_layout_marker(spark, d) == "rows-bhm"
+    replace_layout_marker(spark, d, INDEX_LAYOUT)
+    assert read_layout_marker(spark, d) == INDEX_LAYOUT
     markers = [n for n in os.listdir(d) if n.startswith("_layout.")]
-    assert markers == ["_layout.rows-bhm"]
+    assert markers == [f"_layout.{INDEX_LAYOUT}"]
+
+    dirs, all_dirs = _state(spark, tmp_path)
+    replace_layout_marker(spark, dirs[1], "rows-dh")
+    assert [n for n in os.listdir(dirs[1]) if n.startswith("_layout.")] == [
+        "_layout.rows-dh"
+    ]
+    with pytest.raises(ValueError, match="refusing to write"):
+        dedup_micro_batch(_df(spark, BATCH1), 1, *dirs)
+    assert _only_batch0(spark, all_dirs)

@@ -246,3 +246,35 @@ def test_bpe_encode_invariants_survive_whitespace_edges(spark, tmp_path):
     r = q_k59_bpe_encode(spark, str(d)).collect()[0]
     assert r.roundtrip_ok and r.tokens_within_bounds
     assert r.n_docs == 3
+
+
+def test_paragraph_dedup_null_text_emits_no_windows(spark, tmp_path):
+    """q_k51 on a NULL-text document: no tokens, so no windows and no
+    output row — the oracle's answer (its generate_series join yields
+    no rows for a NULL token list). Before the fix size(NULL) = -1 fell
+    through greatest(..., 1) into one spurious NULL-content window."""
+    import os
+
+    import duckdb
+
+    from cdc_publisher_spark.oracle import compare_frames
+    from cdc_publisher_spark.queries.llm_ml import q_k51_paragraph_dedup
+    from cdc_publisher_spark.registry import all_specs
+
+    d = tmp_path / "nulls"
+    d.mkdir()
+    path = os.path.join(str(d), "documents.parquet")
+    spark.createDataFrame(
+        [(1, "a b c d e f g h i"), (2, None), (3, "a b c d e f g h")],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(path)
+    got = q_k51_paragraph_dedup(spark, str(d)).toPandas()
+    assert list(got["doc_id"]) == [1, 3]
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/*.parquet')")
+        want = con.execute(all_specs()["q_k51_paragraph_dedup"].oracle).fetchdf()
+    finally:
+        con.close()
+    res = compare_frames("q_k51_paragraph_dedup", got, want)
+    assert res.match, res.detail

@@ -699,66 +699,28 @@ def test_bloom_flag_position_aggregate_excludes_payload(spark):
     assert fanout and all("text#" not in line for line in fanout), plan
 
 
-def test_guard_backfills_bloom_for_pre_bloom_state_dirs(spark, tmp_path):
-    """ADVICE r7 (high): a corpus written by a pre-bloom deployment
-    must not lose the cross-batch guarantee after upgrade. The first
-    guarded trigger falls back to the full anti-join AND installs a
-    backfill segment covering all legacy ids, so the SECOND trigger's
-    bloom — which would otherwise cover only post-upgrade ids — still
-    flags redelivered legacy ids maybe and drops them."""
+def test_guard_refuses_missing_bloom_beside_corpus_history(spark, tmp_path):
+    """The bloom dir is written beside the corpus from trigger 0 on. A
+    missing bloom dir is harmless on a fresh stream (replaying trigger
+    0 passes the batch through unchanged), but beside corpus history
+    the guard raises, naming both dirs, before any write — instead of
+    passing every history id as clean."""
     import shutil
 
     from cdc_publisher_spark.streaming import incremental_dedup as inc
-    from cdc_publisher_spark.streaming.state import compacted_upto
+    from cdc_publisher_spark.streaming.state import batch_dirs
 
     dirs = [str(tmp_path / d) for d in ("corpus", "idx", "pairs")]
     bloom_dir = str(tmp_path / "id_bloom")
-    for b in range(2):
-        rows = [
-            (b * 10 + i, " ".join(f"w{b}_{i}_{j}" for j in range(30)))
-            for i in range(1, 4)
-        ]
-        inc.dedup_micro_batch(
-            spark.createDataFrame(rows, "doc_id long, text string"), b, *dirs
-        )
-    legacy_ids = {1, 2, 3, 11, 12, 13}
-    # simulate a deployment whose state predates the bloom layout
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
+    b0 = mk([(1, "w " * 30), (2, "v " * 30)])
+    inc.dedup_micro_batch(b0, 0, *dirs)
     shutil.rmtree(bloom_dir)
-
-    # first post-upgrade trigger: fallback anti-join + backfill
-    b2 = spark.createDataFrame(
-        [(100, "fresh " * 30), (2, "redelivered legacy")],
-        "doc_id long, text string",
-    )
-    inc.dedup_micro_batch(b2, 2, *dirs)
-    # the backfill is a compacted segment at the max committed batch,
-    # with this trigger's own delta landing above it
-    assert compacted_upto(spark, bloom_dir) == 1
-    assert os.path.isdir(os.path.join(bloom_dir, "batch=2"))
-    corpus = inc.read_dedup_state(spark, dirs[0])
-    assert {r.doc_id for r in corpus.select("doc_id").collect()} == legacy_ids | {100}
-
-    # second trigger: bloom state now EXISTS — this is where the
-    # regression bit (filter covering only batch-2 ids would pass
-    # legacy ids as clean). Every redelivered legacy id must flag
-    # maybe and be dropped by the pruned exact anti-join.
-    b3 = spark.createDataFrame(
-        [(1, "legacy again"), (11, "legacy again"), (200, "fresh " * 25)],
-        "doc_id long, text string",
-    )
-    clean, maybe, survivors = inc._guard_parts(
-        spark, b3, 3, dirs[0], bloom_dir, "doc_id"
-    )
-    assert maybe is not None  # the guard did NOT fall back
-    m = {r.doc_id for r in maybe.collect()}
-    s = {r.doc_id for r in survivors.collect()}
-    assert {1, 11} <= m  # no false negatives on legacy ids
-    assert s == m - legacy_ids  # survivors = maybe minus true history
-    inc.dedup_micro_batch(b3, 3, *dirs)
-    corpus = inc.read_dedup_state(spark, dirs[0])
-    got = {r.doc_id for r in corpus.select("doc_id").collect()}
-    assert got == legacy_ids | {100, 200}
-    assert corpus.count() == len(got)
+    assert inc.guarded_batch(spark, b0, 0, dirs[0], bloom_dir, "doc_id").count() == 2
+    with pytest.raises(ValueError, match="no id-Bloom state") as e:
+        inc.dedup_micro_batch(mk([(1, "again"), (3, "u " * 30)]), 1, *dirs)
+    assert dirs[0] in str(e.value) and bloom_dir in str(e.value)
+    assert all([k for k, _ in batch_dirs(spark, d)] == [0] for d in dirs)
 
 
 def test_vacuum_grace_margin_keeps_recent_superseded_dirs(spark, tmp_path):

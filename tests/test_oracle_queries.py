@@ -5,7 +5,10 @@ Two sweeps since r16 (VERDICT r15 ask #1 — the driver's default pytest
 run must finish inside its time budget):
 
 - the DEFAULT sweep runs every registered query at sf0.001 — full
-  per-query coverage, small data, fits the fast run;
+  per-query coverage, small data, fits the fast run. Queries tagged
+  ``stat_floor`` assert a statistical floor calibrated at sf0.01, which
+  a corpus this small does not reach; here they check row count and
+  columns only;
 - the sf0.01 sweep (the driver's correctness scale) is marked ``slow``
   and runs under ``SPARK_GRAFT_FULL_TESTS=1`` — the builder executes it
   at least once per round (ROUNDNOTES.md records each run).
@@ -25,7 +28,8 @@ def _names() -> list[str]:
 
 @pytest.mark.parametrize("name", _names())
 def test_query_matches_oracle_smoke(spark, sf_smoke, name):
-    res = run_compare(spark, sf_smoke, name)
+    shape_only = "stat_floor" in all_specs()[name].tags
+    res = run_compare(spark, sf_smoke, name, shape_only=shape_only)
     assert res.match, f"{name}: {res.detail} (spark={res.spark_rows}, oracle={res.oracle_rows})"
     assert res.spark_rows >= 0
 

@@ -130,3 +130,32 @@ def test_spread_rows_identical(spark):
     assert a.count() == b.count()
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
+
+
+def test_rewritten_file_in_directory_table_invalidates_cached_count(spark, tmp_path):
+    # A directory table's cache key must see a file rewritten in place
+    # at equal total size: the directory's own mtime does not move when
+    # a file inside it is rewritten, so it is the newest FILE mtime that
+    # keys the cached scan-partition count.
+    import os
+
+    sf_dir = str(tmp_path)
+    path = tables.table_path(sf_dir, "documents")
+    spark.read.parquet(tables.table_path(SF01, "documents")).coalesce(1).write.parquet(path)
+    load(spark, sf_dir, "documents", spread=True)
+    stale = [k for k in tables._SCAN_PARTS if k[1] == path]
+    assert len(stale) == 1
+    # poison the cached count: reused, it would make the spread a no-op
+    tables._SCAN_PARTS[stale[0]] = spark.sparkContext.defaultParallelism
+    (part,) = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    part = os.path.join(path, part)
+    data = open(part, "rb").read()
+    with open(part, "wb") as fh:
+        fh.write(data)
+    st = os.stat(part)
+    # same bytes, same size; only the mtime moves (pinned past the old
+    # one in case the filesystem's timestamps are coarse)
+    os.utime(part, ns=(st.st_atime_ns, stale[0][3] + 1_000_000_000))
+    plan = _plan(load(spark, sf_dir, "documents", spread=True))
+    assert "hashpartitioning(doc_id" in plan.lower(), plan
+    assert len([k for k in tables._SCAN_PARTS if k[1] == path]) == 2

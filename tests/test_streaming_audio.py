@@ -4,7 +4,7 @@ exactly once, in the trigger where the LATER clip arrives — union over
 any slicing equals the batch-mode same-fingerprint pair set), probe
 pruning to the touched fm= partitions, replay idempotence under the
 overwrite discipline, and row-state compaction with the fm prune key
-preserved (maintain recognizes the rows-fm marker)."""
+preserved (maintain recognizes the rows-fm-1024 marker)."""
 
 from __future__ import annotations
 
@@ -138,7 +138,7 @@ def test_audio_state_compaction_and_maintain(spark, tmp_path):
     assert after == before
     # the compacted segment keeps the fm prune partitioning
     assert glob.glob(f"{state}/_compact/upto=1/fm=*/*.parquet")
-    # maintain recognizes both layouts by marker and folds the rest
+    # maintain recognizes both dirs by marker and folds the rest
     from cdc_publisher_spark.streaming.maintenance import run_maintenance
 
     plans = run_maintenance(
@@ -197,82 +197,6 @@ def test_audio_empty_batch_is_a_no_op(spark, tmp_path):
         tuple(p) for p in read_audio_dups(spark, pairs).collect()
     )
     assert got == _expected_pairs(docs)
-
-
-def test_audio_legacy_64_fan_is_followed_and_migrates(spark, tmp_path):
-    """VERDICT r11 ask #5: fresh dirs get the 1024-way fm fan; a dir
-    written under the r11 64-way scheme (marker ``rows-fm``) keeps it —
-    mixing moduli would silently miss probes — until an explicit
-    migrate_audio_layout, which re-derives fm and replaces the marker."""
-    import pyspark.sql.functions as SF
-
-    from cdc_publisher_spark.streaming.audio_monitor import (
-        FPK_MOD,
-        LEGACY_FPK_MOD,
-        audio_state_layout,
-        migrate_audio_layout,
-    )
-    from cdc_publisher_spark.streaming.state import (
-        read_layout_marker,
-        write_layout_marker,
-    )
-
-    docs = _docs(spark)
-    state, pairs = str(tmp_path / "fpk"), str(tmp_path / "pairs")
-
-    # build a genuine legacy dir: batch 0 through the current writer,
-    # then rewrite its fm values under the 64-way fan + legacy marker
-    first = docs.filter(F.col("doc_id") <= 6)
-    audio_dup_micro_batch(_media(first), 0, state, pairs)
-    assert read_layout_marker(spark, state) == f"rows-fm-{FPK_MOD}"
-    rows = (
-        spark.read.parquet(f"{state}/batch=0")
-        .select("media_id", "fpk")
-        .collect()
-    )
-    import os as _os
-    import shutil
-
-    shutil.rmtree(f"{state}/batch=0")
-    _os.remove(f"{state}/_layout.rows-fm-{FPK_MOD}")
-    (
-        spark.createDataFrame(rows, "media_id long, fpk long")
-        .withColumn("fm", SF.pmod("fpk", SF.lit(LEGACY_FPK_MOD)).cast("int"))
-        .repartition(F.col("fm"))
-        .write.partitionBy("fm")
-        .parquet(f"{state}/batch=0")
-    )
-    write_layout_marker(spark, state, "rows-fm")
-    assert audio_state_layout(spark, state) == ("rows-fm", LEGACY_FPK_MOD)
-
-    # the writer follows the dir: new fm values stay under mod 64 and
-    # the cross-batch probe still matches (pair completeness holds)
-    audio_dup_micro_batch(
-        _media(docs.filter(F.col("doc_id") > 6)), 1, state, pairs
-    )
-    assert read_layout_marker(spark, state) == "rows-fm"
-    st = read_audio_fpk_state(spark, state)
-    assert st.agg(F.max("fm")).first()[0] < LEGACY_FPK_MOD
-    before_rows = sorted((r.media_id, r.fpk) for r in st.collect())
-    got = sorted(tuple(p) for p in read_audio_dups(spark, pairs).collect())
-    assert got == _expected_pairs(docs)
-
-    # explicit migration: fm re-derived under the 1024 fan, marker
-    # replaced, state rows unchanged, and the stream resumes correctly
-    migrate_audio_layout(spark, state)
-    assert read_layout_marker(spark, state) == f"rows-fm-{FPK_MOD}"
-    st2 = read_audio_fpk_state(spark, state)
-    assert sorted((r.media_id, r.fpk) for r in st2.collect()) == before_rows
-    fm_ok = st2.filter(
-        F.col("fm") != F.pmod("fpk", F.lit(FPK_MOD)).cast("int")
-    ).count()
-    assert fm_ok == 0
-    extra = spark.createDataFrame(
-        [(13, "alpha beta gamma delta")], "doc_id long, text string"
-    )  # dup of the 1/3/6 family, arriving post-migration
-    audio_dup_micro_batch(_media(extra), 2, state, pairs)
-    got = sorted(tuple(p) for p in read_audio_dups(spark, pairs).collect())
-    assert got == sorted(_expected_pairs(docs) + [(1, 13), (3, 13), (6, 13)])
 
 
 def test_audio_fpk_digest_matches_batch_query_grouping(spark):

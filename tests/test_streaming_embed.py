@@ -5,7 +5,7 @@ batch twin ``embedding_neardup_banded`` pair set (the audio-guard
 completeness contract) — plus normalized pair identity, replay
 idempotence, empty-batch no-op, partition-aligned ebm/vh layouts,
 compaction with the prune keys preserved, and maintain recognition of
-the rows-ebm / rows-vh markers."""
+the rows-ebm-<bands>x<bits> / rows-vh markers."""
 
 from __future__ import annotations
 
@@ -270,45 +270,6 @@ def test_embed_markers_are_versioned_even_at_code_defaults(spark, tmp_path):
     dirs = _dirs(tmp_path)
     embed_dup_micro_batch(vecs, 0, *dirs, threshold=THRESHOLD)
     assert read_layout_marker(spark, dirs[0]) == scheme_layout(8, 8) == "rows-ebm-8x8"
-
-
-def test_embed_legacy_bare_marker_accepted_and_upgraded(spark, tmp_path):
-    """A pre-versioning dir (bare ``rows-ebm`` marker) is an 8x8
-    index: the 8x8 consumer accepts it and upgrades the marker in
-    place; any other scheme still fails loudly."""
-    import pytest
-
-    from cdc_publisher_spark.streaming.embed_monitor import (
-        LEGACY_EBM_MARKER,
-        normalize_ebm_marker,
-    )
-    from cdc_publisher_spark.streaming.state import (
-        read_layout_marker,
-        replace_layout_marker,
-    )
-
-    assert normalize_ebm_marker(LEGACY_EBM_MARKER) == "rows-ebm-8x8"
-    assert normalize_ebm_marker("rows-ebm-8x12") == "rows-ebm-8x12"
-    assert normalize_ebm_marker(None) is None
-
-    vecs = _vectors(spark)
-    dirs = _dirs(tmp_path)
-    first = vecs.filter(F.col("vec_id") % 2 == 0)
-    second = vecs.filter(F.col("vec_id") % 2 == 1)
-    embed_dup_micro_batch(first, 0, *dirs, threshold=THRESHOLD)
-    # regress the dir to the pre-versioning marker
-    replace_layout_marker(spark, dirs[0], LEGACY_EBM_MARKER)
-
-    # a non-8x8 consumer must NOT pass the bare marker
-    with pytest.raises(ValueError, match="migrate_embed_layout"):
-        embed_dup_micro_batch(
-            second, 1, *dirs, threshold=THRESHOLD, bands=8, bits=12
-        )
-
-    # the 8x8 consumer accepts it, detections complete, marker upgraded
-    embed_dup_micro_batch(second, 1, *dirs, threshold=THRESHOLD)
-    assert _got_pairs(spark, dirs[2]) == _expected_pairs(vecs)
-    assert read_layout_marker(spark, dirs[0]) == "rows-ebm-8x8"
 
 
 def test_embed_interrupted_migration_fails_loudly(spark, tmp_path):
