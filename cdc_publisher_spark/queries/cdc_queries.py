@@ -105,7 +105,8 @@ def q_cdc_resume_token(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_cdc_key_derivation",
     family="CDC",
     doc="T3 deterministic key derivation (core.clj:13-22) through the "
-    "real UDF on a two-column primary key; the oracle formats the same "
+    "engine's key expression (cdc/keying.py, JVM built-ins only) on a "
+    "two-column primary key; the oracle formats the same "
     "sorted-flattened JSON array by string concat "
     "('l_orderkey' < 'line' in codepoint order).",
     oracle="""

@@ -1,7 +1,8 @@
 """Family J — the UDF/UDAF/UDTF surface (SURVEY.md §2.2 J).
 
 Coverage map (the rest of the family lives where it's load-bearing):
-- scalar Python UDF ............ T3 key derivation (cdc/keying.py)
+- scalar Python UDF ............ none: T3 key derivation (cdc/keying.py)
+                                  is built from JVM expressions
 - pandas_udf scalar ............ rolling fingerprint (operators/fingerprint.py)
 - pandas_udf grouped-agg ....... q_j1 (here)
 - applyInPandas grouped-map .... q_j2 (here)

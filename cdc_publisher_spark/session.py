@@ -8,6 +8,10 @@ Pins the configs the whole engine depends on (SURVEY.md §4.2):
   at 100 TB this is what keeps a static ``shuffle.partitions`` choice
   from being fatal.
 - Arrow on — every pandas_udf / applyInPandas / mapInPandas path.
+- ``spark.sql.variant.allowDuplicateKeys=true`` — a DML message with a
+  repeated key keeps the last value, as Jackson (the reference's
+  parser) does; without it ``try_parse_json`` turns the message into a
+  dead letter (cdc/envelope.py).
 
 Local testing runs one JVM (``local[N]``); on a real cluster the same
 builder is used with master/memory supplied by the deployment, so keep
@@ -45,6 +49,7 @@ ENGINE_CONFS: dict[str, str] = {
     # Keep shuffle state small on local mode; AQE coalesces upward jobs.
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.ui.enabled": "false",
+    "spark.sql.variant.allowDuplicateKeys": "true",
 }
 
 
@@ -57,6 +62,7 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.variant.allowDuplicateKeys": "true",
 }
 
 _configured_session_ids: set[int] = set()

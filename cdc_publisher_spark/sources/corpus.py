@@ -3,10 +3,11 @@ extension for the LLM-data side.
 
 Web-scale corpora arrive as JSONL (one document object per line), not
 parquet. This source reads the layout as TEXT and parses with
-``from_json`` against an EXPLICIT schema — the same envelope pattern
-as the DML pipeline (cdc/envelope.py): a line that fails to parse
-yields a NULL struct and becomes dead-letter DATA, never an exception
-and never a second scan. (Schema inference is deliberately absent: at
+``from_json`` against an EXPLICIT schema, once per line (the DML
+pipeline's discipline, cdc/envelope.py, there with VARIANT because the
+id map's value types vary): a line that fails to parse yields a NULL
+struct and becomes dead-letter DATA, never an exception and never a
+second scan. (Schema inference is deliberately absent: at
 100 TB an inference pass is a full extra read, and drifting inferred
 types break downstream queries silently. Spark's PERMISSIVE
 ``_corrupt_record`` channel is also avoided — it cannot be queried

@@ -1,7 +1,8 @@
 """Structured-streaming layer.
 
-pipeline.py            the reference's data plane: DML raw -> envelope
-                       -> key -> wire record -> routed sink (§3.3)
+pipeline.py            the reference's data plane: one projection over
+                       one scan, DML raw -> parse once -> key -> wire
+                       record (table or dead-letter topic) -> sink (§3.3)
 latest_state_stream.py A1 streaming latest-per-key (stateful)
 routes.py              D1 dynamic fan-out control loop (driver-side)
 metrics.py             M1 observability (observe + query listener)

@@ -6,6 +6,7 @@ test_generators.clj:10-23) plus the retry fixture table (FIXTURES.md §2).
 from __future__ import annotations
 
 import json
+from decimal import Decimal
 
 import pytest
 from hypothesis import given, settings
@@ -163,12 +164,12 @@ def test_retry_loop_exhausts_budget():
     assert prep_calls["n"] == 2  # prep before each retry (retry.clj:93-113)
 
 
-# --- Spark UDF == pure-Python twin ------------------------------------
+# --- Spark key column == pure-Python twin -----------------------------
 
 
 def test_udf_matches_pure_python_twin(spark):
-    """The self-contained Arrow-batched key UDF must agree byte-for-byte
-    with derive_key/derive_key_from_json (it inlines the same logic)."""
+    """The engine's key column (JVM expressions over one parse) must
+    agree byte-for-byte with derive_key/derive_key_from_json."""
     from pyspark.sql import functions as F
 
     from cdc_publisher_spark.cdc.keying import key_from_raw_json_vectorized
@@ -215,8 +216,8 @@ def test_latest_per_key_matches_python_reference(spark):
 
 
 def test_vectorized_udf_matches_scalar_udf(spark):
-    """The Arrow-batched key UDF must emit byte-identical keys to the
-    scalar row-at-a-time key function, including malformed/None rows."""
+    """The engine's key column must emit byte-identical keys to the
+    row-at-a-time twin, including malformed/None rows."""
     from pyspark.sql import functions as F
 
     from cdc_publisher_spark.cdc.keying import key_from_raw_json_vectorized
@@ -237,3 +238,103 @@ def test_vectorized_udf_matches_scalar_udf(spark):
     assert got == [derive_key_from_json(s) for s in samples]
     assert all(k is not None for k in got[:3])
     assert all(k is None for k in got[3:])
+
+
+# --- the engine's key contract, edge by edge --------------------------
+
+DEAD = "cdc-dead-letter"
+_CTRL = "".join(chr(c) for c in range(0x20))
+
+#: (raw message, expected topic, expected key); one row per contract line.
+EDGE_CORPUS = [
+    # unchanged bytes: strings, booleans, null, integers up to 38 digits
+    ('{"table":"t","id":{"b":2,"a":"x"}}', "t", '["a","x","b",2]'),
+    ('{"table":"t","id":{"s":"q\\"b\\\\s/t\\tz\\u0000d\\u007fl\\u2028"}}', "t",
+     '["s","q\\"b\\\\s/t\\tz\\u0000d\x7fl "]'),
+    (json.dumps({"table": "t", "id": {"s": _CTRL}}), "t", json.dumps(["s", _CTRL], separators=(",", ":"))),
+    ('{"table":"t","id":{"s":"\\ud83d\\ude00","t":"😀"}}', "t", '["s","😀","t","😀"]'),
+    ('{"table":"t","id":{"é":1,"a":"ü","Z":true,"ÿ":null}}', "t", '["Z",true,"a","ü","é",1,"ÿ",null]'),
+    # code-point order, also past the BMP (UTF-16 order would differ)
+    ('{"table":"t","id":{"😀":1,"\uffff":2}}', "t", '["\uffff",2,"😀",1]'),
+    ('{"table":"t","id":{"a":-12345678901234567890123456789012345678}}', "t",
+     '["a",-12345678901234567890123456789012345678]'),
+    # non-integral numbers: exact, plain, trailing fractional zeros dropped
+    ('{"table":"t","id":{"a":1.0,"b":-2.50,"c":0.00001,"d":-0.0}}', "t", '["a",1,"b",-2.5,"c",0.00001,"d",0]'),
+    ('{"table":"t","id":{"a":12345678901234567.5}}', "t", '["a",12345678901234567.5]'),
+    ('{"table":"t","id":{"a":12345678901234567.6}}', "t", '["a",12345678901234567.6]'),
+    # dead letters: values the engine cannot render exactly
+    ('{"table":"t","id":{"a":1e300}}', DEAD, None),
+    ('{"table":"t","id":{"a":123456789012345678901234567890123456789}}', DEAD, None),
+    ('{"table":"t","id":{"a":NaN}}', DEAD, None),
+    ('{"table":"t","id":{"a":{"z":1,"y":2}}}', DEAD, None),
+    ('{"table":"t","id":{"a":[1,2]}}', DEAD, None),
+    ('{"table":"t","id":{"a":"x\\ud800y"}}', DEAD, None),
+    ('{"table":"t","id":{"\\udfff":1}}', DEAD, None),
+    # an unpaired surrogate outside the id does not touch the key
+    ('{"table":"t","id":{"a":"x?"},"data":{"b":"\\udc00"}}', "t", '["a","x?"]'),
+    # duplicate keys: the last one wins
+    ('{"table":"t","id":{"a":1,"a":2}}', "t", '["a",2]'),
+    # trailing content: the first object is keyed
+    ('{"table":"t","id":{"a":1}} x', "t", '["a",1]'),
+    # single-quoted JSON, malformed JSON, a missing or empty id
+    ("{'table':'t','id':{'a':1}}", DEAD, None),
+    ("{corrupt", DEAD, None),
+    ('{"table":"t","noid":1}', DEAD, None),
+    ('{"table":"t","id":{}}', DEAD, None),
+]
+
+
+def test_engine_key_edge_corpus(spark):
+    """Every contract line, through the publish path and the twin."""
+    from cdc_publisher_spark.streaming.pipeline import split_wire
+
+    df = spark.createDataFrame([(raw,) for raw, _, _ in EDGE_CORPUS], "raw string")
+    good, dead = split_wire(df)
+    rows = good.unionByName(dead).collect()
+    got = {r["value"]: (r["topic"], r["key"]) for r in rows}
+    assert len(rows) == len(got) == len(EDGE_CORPUS)
+    for r in rows:
+        assert (r["key"] is None) == (r["topic"] == DEAD), r["value"]
+    for raw, topic, key in EDGE_CORPUS:
+        assert got[raw] == (topic, key), raw
+        assert derive_key_from_json(raw) == key, raw
+
+
+exact_id_value = st.one_of(
+    scalar_id_value,
+    st.integers(min_value=-(10**38) + 1, max_value=10**38 - 1),
+    st.builds(
+        lambda unscaled, scale: Decimal(f"{unscaled}E-{scale}"),  # exact, unlike scaleb()
+        st.integers(min_value=-(10**38) + 1, max_value=10**38 - 1),
+        st.integers(min_value=0, max_value=38),
+    ),
+)
+
+exact_id_maps = st.dictionaries(st.text(min_size=1, max_size=10), exact_id_value, min_size=1, max_size=6)
+
+
+def _json_value(v) -> str:
+    return format(v, "f") if isinstance(v, Decimal) else json.dumps(v, ensure_ascii=False)
+
+
+def test_engine_key_matches_twin_on_exact_ids(spark):
+    """Hypothesis id maps (big integers and plain decimals included),
+    all keyed in one Spark job, against derive_key_from_json."""
+    from pyspark.sql import functions as F
+
+    from cdc_publisher_spark.cdc.keying import key_from_raw_json_vectorized
+
+    raws: list[str] = []
+
+    @given(exact_id_maps)
+    @settings(max_examples=300, database=None, deadline=None)
+    def draw(id_map):
+        body = ",".join(f"{json.dumps(k, ensure_ascii=False)}:{_json_value(v)}" for k, v in id_map.items())
+        raws.append('{"table":"t","id":{' + body + "}}")
+
+    draw()
+    df = spark.createDataFrame([(r,) for r in raws], "raw string")
+    got = [r["key"] for r in df.select(key_from_raw_json_vectorized(F.col("raw")).alias("key")).collect()]
+    want = [derive_key_from_json(r) for r in raws]
+    assert None not in want
+    assert [(r, g) for r, g, w in zip(raws, got, want) if g != w] == []

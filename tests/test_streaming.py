@@ -75,6 +75,54 @@ def test_pipeline_end_to_end_with_dead_letter_and_restart(spark, workdir):
     assert spark.read.parquet(out).count() == len(good) + len(dead)
 
 
+@pytest.fixture(scope="module")
+def drained_publish(spark, tmp_path_factory):
+    """One publish stream over two input files (two triggers): the
+    query's last executed plan and its progress events."""
+    base = tmp_path_factory.mktemp("publish_once")
+    src = base / "src"
+    src.mkdir()
+    files = [[_dml(i) for i in range(7)] + ["{corrupt"], [_dml(i) for i in range(7, 12)]]
+    for n, lines in enumerate(files):
+        (src / f"f{n}.jsonl").write_text("\n".join(lines) + "\n")
+    q = run_file_to_parquet(read_dml_stream(spark, str(src), 1), str(base / "out"), str(base / "ckpt"))
+    q.processAllAvailable()
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    progress = q.recentProgress
+    q.stop()
+    return plan, progress, [len(lines) for lines in files]
+
+
+def test_publish_plan_is_one_scan_one_parse_no_python(drained_publish):
+    """The frame run_file_to_parquet writes: one file scan, one JSON
+    parse, no union, and no Python UDF."""
+    import re
+
+    plan = drained_publish[0]
+    assert plan.count("FileScan") == 1, plan
+    assert len(re.findall(r"parse_?json", plan, re.IGNORECASE)) == 1, plan
+    for node in ("Union", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+
+
+def test_publish_reads_each_message_once_per_trigger(drained_publish):
+    """numInputRows per trigger equals the trigger's message count."""
+    _, progress, per_file = drained_publish
+    assert [p["numInputRows"] for p in progress if p["numInputRows"]] == per_file
+
+
+def test_split_wire_branches_parse_once(spark):
+    """Each split_wire branch parses and keys a message once: the key
+    filters stay above the projection that computes the key."""
+    import re
+
+    raws = spark.createDataFrame([(_dml(1),), ("{corrupt",)], "raw string")
+    for branch in split_wire(raws):
+        plan = branch._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"parse_?json", plan, re.IGNORECASE)) == 1, plan
+        assert plan.count("StructsToJson") == 1, plan
+
+
 def test_stream_latest_per_key_matches_batch(spark, tmp_path):
     from cdc_publisher_spark.streaming.latest_state_stream import stream_latest_per_key
 
