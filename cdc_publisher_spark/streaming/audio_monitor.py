@@ -70,11 +70,9 @@ from pyspark.sql import functions as F
 from cdc_publisher_spark.operators.multimodal import audio_fingerprint
 from cdc_publisher_spark.streaming.state import (
     aligned_repartition,
-    compact_state,
-    in_stream_watermark,
     read_state,
     require_layout_marker,
-    vacuum_state,
+    start_state_stream,
     write_layout_marker,
 )
 
@@ -191,19 +189,6 @@ def read_audio_dups(spark: SparkSession, pairs_dir: str) -> DataFrame | None:
     return None if df is None else df.select("orig_id", "dup_id")
 
 
-def compact_audio_state(
-    spark: SparkSession,
-    state_dir: str,
-    upto_batch: int,
-    vacuum: bool = False,
-) -> None:
-    """Row-state compaction keeping the fm prune partitioning (fm
-    values rewrite verbatim)."""
-    compact_state(spark, state_dir, upto_batch, partition_cols=("fm",))
-    if vacuum:
-        vacuum_state(spark, state_dir)
-
-
 def stream_audio_dups(
     stream_df: DataFrame,
     state_dir: str,
@@ -216,22 +201,17 @@ def stream_audio_dups(
 ):
     """Start the monitor: media in, exact-dup detections out. Offsets
     commit after both writes (commit-on-success); in-stream compaction
-    folds COMMITTED batches only (state.in_stream_watermark)."""
-
-    def body(df: DataFrame, bid: int) -> None:
-        audio_dup_micro_batch(df, bid, state_dir, pairs_dir, id_col, payload_col)
-        upto = in_stream_watermark(df.sparkSession, state_dir, bid, compact_every)
-        if upto is not None:
-            compact_audio_state(df.sparkSession, state_dir, upto_batch=upto)
-            if vacuum_grace is not None:
-                for d in (state_dir, pairs_dir):
-                    vacuum_state(df.sparkSession, d, grace_batches=vacuum_grace)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    folds COMMITTED batches only (state.in_stream_watermark) of BOTH
+    dirs, anchored on the fpk ``state_dir``."""
+    return start_state_stream(
+        stream_df,
+        checkpoint_dir,
+        lambda df, bid: audio_dup_micro_batch(
+            df, bid, state_dir, pairs_dir, id_col, payload_col
+        ),
+        (state_dir, pairs_dir),
+        compact_every,
+        vacuum_grace,
     )
 
 
@@ -240,7 +220,6 @@ __all__ = [
     "FPK_MOD",
     "audio_dup_micro_batch",
     "audio_fpk",
-    "compact_audio_state",
     "read_audio_dups",
     "read_audio_fpk_state",
     "stream_audio_dups",

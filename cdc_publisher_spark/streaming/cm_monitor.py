@@ -23,10 +23,10 @@ State layout: ``state_dir/batch=N/`` parquet of (group…, r, b, cnt)
 counter DELTAS — the cells of that batch alone, ≤ groups × d × w rows
 regardless of batch size (the groupBy's map-side combine builds each
 partition's sketch before the shuffle). The read side sum-merges
-across batches. ``compact_cm_state`` pre-sums batches under the
-watermark into one segment — lossless because + is the sketch's own
-merge operator — so long-run state stays O(groups × d × w) however
-many batches ever ran.
+across batches. Compaction pre-sums batches under the watermark into
+one segment with the ``sum-cnt`` layout's fold — lossless because +
+is the sketch's own merge operator — so long-run state stays
+O(groups × d × w) however many batches ever ran.
 
 foreachBatch (not applyInPandasWithState): cell state is
 group-global and aggregate-shaped, the SURVEY §4.3 external-state
@@ -38,14 +38,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from cdc_publisher_spark.operators.cm import cm_cells, cm_merge, cm_point_estimates
+from cdc_publisher_spark.operators.cm import cm_cells, cm_point_estimates
 from cdc_publisher_spark.streaming.state import (
-    compact_state,
-    in_stream_watermark,
-    read_state,
-    vacuum_state,
+    read_merged,
+    start_state_stream,
     write_layout_marker,
 )
 
@@ -71,11 +68,9 @@ def read_cm_cells(
 ) -> DataFrame | None:
     """Sum-merged (group…, r, b, cnt) view of all deltas written so
     far; None when no state exists."""
-    df = read_state(spark, state_dir)
-    if df is None:
-        return None
-    gcols = list(group_cols or [])
-    return cm_merge(df.select(*gcols, "r", "b", "cnt"), gcols)
+    return read_merged(
+        spark, state_dir, "sum-cnt", (*(group_cols or []), "r", "b", "cnt")
+    )
 
 
 def cm_state_estimates(
@@ -91,33 +86,6 @@ def cm_state_estimates(
     if cells is None:
         return None
     return cm_point_estimates(cells, probes, value_col, group_cols)
-
-
-def compact_cm_state(
-    spark: SparkSession,
-    state_dir: str,
-    upto_batch: int,
-    group_cols: list[str] | None = None,
-    vacuum: bool = False,
-) -> None:
-    """Compact batches ≤ ``upto_batch`` into a PRE-SUMMED cell segment
-    (≤ groups × d × w rows however many batches fold in), then flip
-    the manifest. Vacuuming is opt-in (ADVICE r6 — see
-    state.vacuum_state's concurrency contract).
-
-    The merged rows keep a ``batch`` column pinned to ``upto_batch``
-    so the generic reader's replay row-filter semantics stay intact."""
-    gcols = list(group_cols or [])
-    compact_state(
-        spark,
-        state_dir,
-        upto_batch,
-        merge=lambda df: cm_merge(
-            df.select(*gcols, "r", "b", "cnt"), gcols
-        ).withColumn("batch", F.lit(upto_batch)),
-    )
-    if vacuum:
-        vacuum_state(spark, state_dir)
 
 
 def stream_cm_heavy_hitters(
@@ -141,28 +109,19 @@ def stream_cm_heavy_hitters(
     until its offsets commit, so the non-idempotent sum-merge never
     bakes an uncommitted delta into the segment and a replayed
     trigger re-counts nothing."""
-
-    def body(df: DataFrame, bid: int) -> None:
-        cm_micro_batch(df, bid, state_dir, value_col, group_cols)
-        upto = in_stream_watermark(df.sparkSession, state_dir, bid, compact_every)
-        if upto is not None:
-            compact_cm_state(spark=df.sparkSession, state_dir=state_dir,
-                             upto_batch=upto, group_cols=group_cols)
-            if vacuum_grace is not None:
-                vacuum_state(df.sparkSession, state_dir, grace_batches=vacuum_grace)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return start_state_stream(
+        stream_df,
+        checkpoint_dir,
+        lambda df, bid: cm_micro_batch(df, bid, state_dir, value_col, group_cols),
+        (state_dir,),
+        compact_every,
+        vacuum_grace,
     )
 
 
 __all__ = [
     "cm_micro_batch",
     "cm_state_estimates",
-    "compact_cm_state",
     "read_cm_cells",
     "stream_cm_heavy_hitters",
 ]

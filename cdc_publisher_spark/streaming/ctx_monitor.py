@@ -40,10 +40,9 @@ from pyspark.sql import functions as F
 
 from cdc_publisher_spark.functions.text import n_words
 from cdc_publisher_spark.streaming.state import (
-    compact_state,
-    in_stream_watermark,
-    read_state,
-    vacuum_state,
+    CTX_METRICS,
+    read_merged,
+    start_state_stream,
     write_layout_marker,
 )
 
@@ -51,16 +50,6 @@ from cdc_publisher_spark.streaming.state import (
 #: (the batch twin); tests/test_streaming_ctx.py compares the two
 #: outputs row-for-row, so a drift between the lists fails loudly.
 CTX_BUDGETS = (512, 2048, 8192, 32768)
-
-#: The summed metric columns, in output order.
-CTX_METRICS = (
-    "n_docs",
-    "total_tokens",
-    "n_trunc_docs",
-    "trunc_lost_tokens",
-    "n_chunks",
-    "pad_tokens",
-)
 
 
 def ctx_economics(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -113,36 +102,8 @@ def ctx_micro_batch(
 def read_ctx_curve(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """The merged curve — identical schema and values to the batch
     q_k99 over everything streamed so far; None when no state."""
-    df = read_state(spark, state_dir)
-    if df is None:
-        return None
-    return (
-        df.groupBy("budget")
-        .agg(*[F.sum(m).cast("long").alias(m) for m in CTX_METRICS])
-        .orderBy("budget")
-    )
-
-
-def compact_ctx_state(
-    spark: SparkSession,
-    state_dir: str,
-    upto_batch: int,
-    vacuum: bool = False,
-) -> None:
-    """Fold batches ≤ ``upto_batch`` into one pre-summed row per
-    budget — sum is the state's own merge, so the fold is lossless."""
-    compact_state(
-        spark,
-        state_dir,
-        upto_batch,
-        merge=lambda df: (
-            df.groupBy("budget")
-            .agg(*[F.sum(m).cast("long").alias(m) for m in CTX_METRICS])
-            .withColumn("batch", F.lit(upto_batch))
-        ),
-    )
-    if vacuum:
-        vacuum_state(spark, state_dir)
+    df = read_merged(spark, state_dir, "sum-ctx", ("budget", *CTX_METRICS))
+    return None if df is None else df.orderBy("budget")
 
 
 def stream_ctx_economics(
@@ -157,27 +118,19 @@ def stream_ctx_economics(
     out. Offsets commit to ``checkpoint_dir`` after each batch's write
     (commit-on-success); in-stream compaction folds COMMITTED batches
     only (state.in_stream_watermark)."""
-
-    def body(df: DataFrame, bid: int) -> None:
-        ctx_micro_batch(df, bid, state_dir, text_col)
-        upto = in_stream_watermark(df.sparkSession, state_dir, bid, compact_every)
-        if upto is not None:
-            compact_ctx_state(df.sparkSession, state_dir, upto_batch=upto)
-            if vacuum_grace is not None:
-                vacuum_state(df.sparkSession, state_dir, grace_batches=vacuum_grace)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return start_state_stream(
+        stream_df,
+        checkpoint_dir,
+        lambda df, bid: ctx_micro_batch(df, bid, state_dir, text_col),
+        (state_dir,),
+        compact_every,
+        vacuum_grace,
     )
 
 
 __all__ = [
     "CTX_BUDGETS",
     "CTX_METRICS",
-    "compact_ctx_state",
     "ctx_deltas",
     "ctx_economics",
     "ctx_micro_batch",

@@ -27,8 +27,8 @@ its own delta, and no uncommitted delta is ever folded into the
 compacted segment.
 
 The ``maintain`` CLI pass (streaming/maintenance.py) recognizes this
-layout by schema — (label, p, s, n) → sum-merge of both ``s`` and
-``n`` — so deployments need no drift-specific maintenance wiring.
+layout by its ``sum-sn`` marker — sum-merge of both ``s`` and ``n`` —
+so deployments need no drift-specific maintenance wiring.
 """
 
 from __future__ import annotations
@@ -39,10 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_publisher_spark.streaming.state import (
-    compact_state,
-    in_stream_watermark,
-    read_state,
-    vacuum_state,
+    read_merged,
+    start_state_stream,
     write_layout_marker,
 )
 
@@ -87,13 +85,7 @@ def drift_micro_batch(
 def read_centroid_sums(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Sum-merged (label, p, s, n) view of all deltas; None when no
     state exists. Exact: DECIMAL + is order-independent."""
-    df = read_state(spark, state_dir)
-    if df is None:
-        return None
-    return df.groupBy("label", "p").agg(
-        F.sum("s").cast("decimal(30,8)").alias("s"),
-        F.sum("n").cast("long").alias("n"),
-    )
+    return read_merged(spark, state_dir, "sum-sn", ("label", "p", "s", "n"))
 
 
 def drift_report(sums: DataFrame) -> DataFrame:
@@ -143,32 +135,6 @@ def read_drift_report(spark: SparkSession, state_dir: str) -> DataFrame | None:
     return None if sums is None else drift_report(sums)
 
 
-def compact_drift_state(
-    spark: SparkSession,
-    state_dir: str,
-    upto_batch: int,
-    vacuum: bool = False,
-) -> None:
-    """Compact batches ≤ ``upto_batch`` into a pre-summed (label, p)
-    segment (O(labels × 64) rows), then flip the manifest. The
-    DECIMAL sum is the state's own merge — lossless and exact."""
-    compact_state(
-        spark,
-        state_dir,
-        upto_batch,
-        merge=lambda df: (
-            df.groupBy("label", "p")
-            .agg(
-                F.sum("s").cast("decimal(30,8)").alias("s"),
-                F.sum("n").cast("long").alias("n"),
-            )
-            .withColumn("batch", F.lit(upto_batch))
-        ),
-    )
-    if vacuum:
-        vacuum_state(spark, state_dir)
-
-
 def stream_centroid_drift(
     stream_df: DataFrame,
     state_dir: str,
@@ -184,26 +150,18 @@ def stream_centroid_drift(
     streaming/pipeline.py contract). In-stream compaction folds
     COMMITTED batches only (watermark ``bid - 1``,
     state.in_stream_watermark)."""
-
-    def body(df: DataFrame, bid: int) -> None:
-        drift_micro_batch(df, bid, state_dir, label_col, vec_col)
-        upto = in_stream_watermark(df.sparkSession, state_dir, bid, compact_every)
-        if upto is not None:
-            compact_drift_state(df.sparkSession, state_dir, upto_batch=upto)
-            if vacuum_grace is not None:
-                vacuum_state(df.sparkSession, state_dir, grace_batches=vacuum_grace)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return start_state_stream(
+        stream_df,
+        checkpoint_dir,
+        lambda df, bid: drift_micro_batch(df, bid, state_dir, label_col, vec_col),
+        (state_dir,),
+        compact_every,
+        vacuum_grace,
     )
 
 
 __all__ = [
     "centroid_deltas",
-    "compact_drift_state",
     "drift_micro_batch",
     "drift_report",
     "read_centroid_sums",

@@ -64,13 +64,13 @@ from cdc_publisher_spark.operators.embed_lsh import RH_BANDS, RH_BITS, rh_band_r
 from cdc_publisher_spark.streaming.state import (
     aligned_repartition,
     batch_dirs,
-    compact_state,
+    compact_dir,
     compacted_upto,
     hadoop_fs,
-    in_stream_watermark,
     read_layout_marker,
     read_state,
     replace_layout_marker,
+    start_state_stream,
     vacuum_state,
     write_layout_marker,
     write_manifest,
@@ -402,12 +402,11 @@ def compact_embed_state(
     upto_batch: int,
     vacuum: bool = False,
 ) -> None:
-    """Compact all three dirs keeping each one's prune partitioning."""
-    compact_state(spark, idx_dir, upto_batch, partition_cols=("ebm",))
-    compact_state(spark, vecs_dir, upto_batch, partition_cols=("vh",))
-    compact_state(spark, pairs_dir, upto_batch)
-    if vacuum:
-        for d in (idx_dir, vecs_dir, pairs_dir):
+    """Compact all three dirs under their declared layouts, keeping
+    each one's prune partitioning."""
+    for d in (idx_dir, vecs_dir, pairs_dir):
+        compact_dir(spark, d, upto_batch)
+        if vacuum:
             vacuum_state(spark, d)
 
 
@@ -427,30 +426,21 @@ def stream_embedding_dups(
 ):
     """Start the monitor: vectors in, near-dup detections out. Offsets
     commit after all three writes (commit-on-success); in-stream
-    compaction folds COMMITTED batches only (state.in_stream_watermark).
-    ``bands``/``bits`` select the signature scheme — must match the
-    persisted index (``migrate_embed_layout`` moves a dir between
-    schemes; the layout marker rejects a mismatch loudly)."""
-
-    def body(df: DataFrame, bid: int) -> None:
-        embed_dup_micro_batch(
+    compaction folds COMMITTED batches only (state.in_stream_watermark)
+    of all three dirs, anchored on ``vecs_dir``. ``bands``/``bits``
+    select the signature scheme — must match the persisted index
+    (``migrate_embed_layout`` moves a dir between schemes; the layout
+    marker rejects a mismatch loudly)."""
+    return start_state_stream(
+        stream_df,
+        checkpoint_dir,
+        lambda df, bid: embed_dup_micro_batch(
             df, bid, idx_dir, vecs_dir, pairs_dir, id_col, vec_col, threshold,
             bands=bands, bits=bits,
-        )
-        upto = in_stream_watermark(df.sparkSession, vecs_dir, bid, compact_every)
-        if upto is not None:
-            compact_embed_state(
-                df.sparkSession, idx_dir, vecs_dir, pairs_dir, upto_batch=upto
-            )
-            if vacuum_grace is not None:
-                for d in (idx_dir, vecs_dir, pairs_dir):
-                    vacuum_state(df.sparkSession, d, grace_batches=vacuum_grace)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+        ),
+        (vecs_dir, idx_dir, pairs_dir),
+        compact_every,
+        vacuum_grace,
     )
 
 

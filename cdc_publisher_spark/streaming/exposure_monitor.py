@@ -53,10 +53,8 @@ from pyspark.sql import functions as F
 from cdc_publisher_spark.functions import text as TX
 from cdc_publisher_spark.queries.llm_risk import EXPOSURE_K, RARE_DF
 from cdc_publisher_spark.streaming.state import (
-    compact_state,
-    in_stream_watermark,
-    read_state,
-    vacuum_state,
+    read_merged,
+    start_state_stream,
     write_layout_marker,
 )
 
@@ -103,12 +101,7 @@ def exposure_micro_batch(
 def read_gram_counts(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Sum-merged (sh, source, cnt) view of all deltas so far; None
     when no state exists."""
-    df = read_state(spark, state_dir)
-    if df is None:
-        return None
-    return (
-        df.groupBy("sh", "source").agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
+    return read_merged(spark, state_dir, "sum-cnt", ("sh", "source", "cnt"))
 
 
 def exposure_report(counts: DataFrame) -> DataFrame:
@@ -146,31 +139,6 @@ def read_exposure_report(spark: SparkSession, state_dir: str) -> DataFrame | Non
     return None if counts is None else exposure_report(counts)
 
 
-def compact_exposure_state(
-    spark: SparkSession,
-    state_dir: str,
-    upto_batch: int,
-    vacuum: bool = False,
-) -> None:
-    """Compact batches ≤ ``upto_batch`` into a PRE-SUMMED (sh, source)
-    segment — O(distinct grams) rows however many batches fold in —
-    then flip the manifest. + is the state's own merge, so the folded
-    segment is lossless (cm_monitor precedent); the merged rows pin
-    ``batch`` to ``upto_batch`` for the reader's replay row-filter."""
-    compact_state(
-        spark,
-        state_dir,
-        upto_batch,
-        merge=lambda df: (
-            df.groupBy("sh", "source")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-            .withColumn("batch", F.lit(upto_batch))
-        ),
-    )
-    if vacuum:
-        vacuum_state(spark, state_dir)
-
-
 def stream_rare_gram_exposure(
     stream_df: DataFrame,
     state_dir: str,
@@ -193,25 +161,19 @@ def stream_rare_gram_exposure(
     live dir until its offsets commit, so the non-idempotent
     sum-merge never bakes an uncommitted delta into the segment and a
     crash-then-replay counts each document exactly once."""
-
-    def body(df: DataFrame, bid: int) -> None:
-        exposure_micro_batch(df, bid, state_dir, id_col, text_col, source_col)
-        upto = in_stream_watermark(df.sparkSession, state_dir, bid, compact_every)
-        if upto is not None:
-            compact_exposure_state(df.sparkSession, state_dir, upto_batch=upto)
-            if vacuum_grace is not None:
-                vacuum_state(df.sparkSession, state_dir, grace_batches=vacuum_grace)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return start_state_stream(
+        stream_df,
+        checkpoint_dir,
+        lambda df, bid: exposure_micro_batch(
+            df, bid, state_dir, id_col, text_col, source_col
+        ),
+        (state_dir,),
+        compact_every,
+        vacuum_grace,
     )
 
 
 __all__ = [
-    "compact_exposure_state",
     "exposure_micro_batch",
     "exposure_report",
     "gram_deltas",

@@ -27,8 +27,8 @@ register DELTAS — the registers of that batch alone, <= groups x 256
 rows regardless of batch size. The read side max-merges across
 batches. Compaction reuses the generic batch-addressed layer
 (streaming/state.py — manifest-marker flip, crash-safe); a compacted
-segment is just the merged register rows under the watermark, which
-``compact_hll_state`` pre-merges so the long-run state stays
+segment is just the register rows under the watermark pre-merged by
+the ``max-M`` layout's fold, so the long-run state stays
 O(groups x 256) no matter how many batches ever ran.
 
 foreachBatch (not applyInPandasWithState): register state is
@@ -41,18 +41,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from cdc_publisher_spark.operators.hll import hll_estimate, hll_merge, hll_registers
-
-# The generic batch-addressed state layer: manifest compaction, FS
-# helpers (streaming/state.py — shared with the dedup stream, the CM
-# monitor, and the CLI compaction subcommands).
+from cdc_publisher_spark.operators.hll import hll_estimate, hll_registers
 from cdc_publisher_spark.streaming.state import (
-    compact_state,
-    in_stream_watermark,
-    read_state,
-    vacuum_state,
+    read_merged,
+    start_state_stream,
     write_layout_marker,
 )
 
@@ -77,10 +70,7 @@ def read_hll_registers(
 ) -> DataFrame | None:
     """Merged (group, bucket, M) view of all state written so far;
     None when no state exists."""
-    df = read_state(spark, state_dir)
-    if df is None:
-        return None
-    return hll_merge(df.select(group_col, "bucket", "M"), [group_col])
+    return read_merged(spark, state_dir, "max-M", (group_col, "bucket", "M"))
 
 
 def hll_state_estimate(
@@ -92,34 +82,6 @@ def hll_state_estimate(
     if regs is None:
         return None
     return hll_estimate(regs, [group_col])
-
-
-def compact_hll_state(
-    spark: SparkSession,
-    state_dir: str,
-    upto_batch: int,
-    group_col: str = "source",
-    vacuum: bool = False,
-) -> None:
-    """Compact batches <= ``upto_batch`` into a PRE-MERGED register
-    segment (max per (group, bucket) — at most groups x 256 rows,
-    however many batches are folded in), then flip the manifest.
-    Unlike the dedup dirs, merging during compaction is lossless
-    because max() is the state's own merge operator. Vacuuming is
-    opt-in (ADVICE r6 — see state.vacuum_state's concurrency contract).
-
-    The merged rows keep a ``batch`` column pinned to ``upto_batch``
-    so the generic reader's replay row-filter semantics stay intact."""
-    compact_state(
-        spark,
-        state_dir,
-        upto_batch,
-        merge=lambda df: hll_merge(
-            df.select(group_col, "bucket", "M"), [group_col]
-        ).withColumn("batch", F.lit(upto_batch)),
-    )
-    if vacuum:
-        vacuum_state(spark, state_dir)
 
 
 def stream_hll_distinct(
@@ -143,27 +105,17 @@ def stream_hll_distinct(
     batches only (watermark ``bid - 1``, state.in_stream_watermark):
     the current batch's dir stays live until its offsets commit, so a
     crash-then-replay sees exactly the pre-batch compacted state."""
-
-    def body(df: DataFrame, bid: int) -> None:
-        hll_micro_batch(df, bid, state_dir, group_col, value_col)
-        upto = in_stream_watermark(df.sparkSession, state_dir, bid, compact_every)
-        if upto is not None:
-            compact_hll_state(spark=df.sparkSession, state_dir=state_dir,
-                              upto_batch=upto, group_col=group_col)
-            if vacuum_grace is not None:
-                vacuum_state(df.sparkSession, state_dir, grace_batches=vacuum_grace)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return start_state_stream(
+        stream_df,
+        checkpoint_dir,
+        lambda df, bid: hll_micro_batch(df, bid, state_dir, group_col, value_col),
+        (state_dir,),
+        compact_every,
+        vacuum_grace,
     )
 
 
 __all__ = [
-    "compact_hll_state",
-    "compact_state",
     "hll_micro_batch",
     "hll_state_estimate",
     "read_hll_registers",

@@ -96,13 +96,16 @@ from cdc_publisher_spark.operators.minhash import (
 )
 from cdc_publisher_spark.functions.text import shingle_rows
 from cdc_publisher_spark.streaming.state import (
+    LAYOUTS,
     aligned_repartition,
     batch_dirs,
-    compact_state,
+    compact_dir,
     compacted_upto,
-    in_stream_watermark,
+    inheriting_local_properties,
     read_state,
     require_layout_marker,
+    start_state_stream,
+    state_trigger,
     vacuum_state,
     write_layout_marker,
 )
@@ -168,10 +171,8 @@ def id_bloom_delta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(word, mask) bloom rows for ``df``'s ids: one bit_or aggregate,
     ≤ ID_BLOOM_BITS/64 rows whatever the batch size. The groupBy's
     map-side combine merges per-partition partial filters."""
-    return (
-        _bloom_positions(df.select(id_col), id_col)
-        .groupBy("word")
-        .agg(F.bit_or("mask").alias("mask"))
+    return LAYOUTS["bitor-mask"].merge(
+        _bloom_positions(df.select(id_col), id_col).select("word", "mask")
     )
 
 
@@ -229,7 +230,7 @@ def _guard_parts(
     bloom = read_state(spark, bloom_dir, exclude_batch=batch_id)
     if bloom is None:
         return batch, None, None
-    merged = bloom.groupBy("word").agg(F.bit_or("mask").alias("mask"))
+    merged = LAYOUTS["bitor-mask"].merge(bloom.select("word", "mask"))
     flagged = bloom_flag(batch, merged, id_col)
     clean = flagged.filter(~F.col("maybe")).drop("maybe")
     maybe = flagged.filter(F.col("maybe")).drop("maybe")
@@ -342,8 +343,9 @@ def dedup_micro_batch(
     (live dirs are path-filtered, the compact segment row-filtered),
     so a replayed probe sees exactly the pre-batch state.
 
-    ``compact_every=K`` runs ``compact_dedup_state`` in-stream every K
-    batches (after this batch's writes, before the checkpoint commit)
+    ``compact_every=K`` compacts all four dirs in-stream every K
+    batches (state.state_trigger, anchored on the corpus dir — after
+    this batch's writes, before the checkpoint commit)
     — the maintenance cadence state.py's concurrency contract names as
     safe: compaction is single-threaded with the writer, the stream is
     its own reader and lists dirs fresh next trigger, and the manifest
@@ -362,40 +364,37 @@ def dedup_micro_batch(
     (``read_dedup_state`` from another session); vacuuming stays
     off by default.
     """
-    spark = batch_df.sparkSession
     bdir = bloom_dir or default_bloom_dir(corpus_dir)
-    # the deduped batch feeds the guard (whose dh-collect executes
-    # eagerly) and then five downstream jobs this trigger (existence
-    # probe, signing, verify union, corpus write, bloom delta) — cache
-    # both stages so the dropDuplicates shuffle and the guard's bloom
-    # probe run once, not per consumer
-    base = batch_df.select(id_col, text_col).dropDuplicates([id_col]).persist()
-    try:
-        batch = base
-        if guard_cross_batch:
-            batch = guarded_batch(spark, base, batch_id, corpus_dir, bdir, id_col)
-        batch = batch.persist()
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        # the deduped batch feeds the guard (whose dh-collect executes
+        # eagerly) and then five downstream jobs this trigger (existence
+        # probe, signing, verify union, corpus write, bloom delta) —
+        # cache both stages so the dropDuplicates shuffle and the
+        # guard's bloom probe run once, not per consumer
+        base = batch_df.select(id_col, text_col).dropDuplicates([id_col]).persist()
         try:
-            _dedup_micro_batch_body(
-                spark, batch, batch_id, corpus_dir, index_dir, pairs_dir, bdir,
-                id_col, text_col, threshold, overlap_writes,
-            )
+            batch = base
+            if guard_cross_batch:
+                batch = guarded_batch(spark, base, batch_id, corpus_dir, bdir, id_col)
+            batch = batch.persist()
+            try:
+                _dedup_micro_batch_body(
+                    spark, batch, batch_id, corpus_dir, index_dir, pairs_dir, bdir,
+                    id_col, text_col, threshold, overlap_writes,
+                )
+            finally:
+                batch.unpersist()
         finally:
-            batch.unpersist()
-    finally:
-        base.unpersist()
+            base.unpersist()
+
     # committed batches only: the current batch's dirs stay live until
     # ITS offsets commit — see the docstring's replay analysis
-    # (ADVICE r8, medium; shared helper state.in_stream_watermark)
-    upto = in_stream_watermark(spark, corpus_dir, batch_id, compact_every)
-    if upto is not None:
-        compact_dedup_state(
-            spark, corpus_dir, index_dir, pairs_dir,
-            upto_batch=upto, bloom_dir=bdir,
-        )
-        if vacuum_grace is not None:
-            for d in (corpus_dir, index_dir, pairs_dir, bdir):
-                vacuum_state(spark, d, grace_batches=vacuum_grace)
+    # (ADVICE r8, medium; state.in_stream_watermark)
+    state_trigger(
+        write, (corpus_dir, index_dir, pairs_dir, bdir), compact_every, vacuum_grace
+    )(batch_df, batch_id)
 
 
 def _dedup_micro_batch_body(
@@ -571,23 +570,10 @@ def _dedup_micro_batch_body(
             # and offsets commit only after all four return, so the
             # replay contract is unchanged; a failure in any leg
             # re-raises here and fails the trigger. Per-thread JVM
-            # local-property clones — the monitor_suite/ InheritableThread
-            # recipe — keep UI attribution and query.stop() cancellation
+            # local-property clones (state.inheriting_local_properties)
+            # keep UI attribution and query.stop() cancellation
             # working under PYSPARK_PIN_THREAD.
-            sc = spark.sparkContext
-            try:
-                parent_props = sc._jsc.sc().getLocalProperties().clone()
-            except Exception:  # non-JVM test doubles
-                parent_props = None
-
-            def run_inheriting(job):
-                if parent_props is not None:
-                    try:
-                        sc._jsc.sc().setLocalProperties(parent_props.clone())
-                    except Exception:
-                        pass
-                return job()
-
+            run_inheriting = inheriting_local_properties(spark)
             with ThreadPoolExecutor(max_workers=3) as pool:
                 futs = [
                     pool.submit(run_inheriting, j)
@@ -627,20 +613,12 @@ def compact_dedup_state(
     reader is the one unsafe interleaving; see state.vacuum_state)."""
     bdir = bloom_dir or default_bloom_dir(corpus_dir)
     require_layout_marker(spark, index_dir, INDEX_LAYOUT)
-    compact_state(spark, corpus_dir, upto_batch, partition_cols=("dh",))
-    compact_state(spark, index_dir, upto_batch, partition_cols=("bhm",))
-    compact_state(spark, pairs_dir, upto_batch)
+    dirs = [corpus_dir, index_dir, pairs_dir]
     if batch_dirs(spark, bdir) or compacted_upto(spark, bdir) is not None:
-        compact_state(
-            spark,
-            bdir,
-            upto_batch,
-            merge=lambda df: df.groupBy("word")
-            .agg(F.bit_or("mask").alias("mask"))
-            .withColumn("batch", F.lit(upto_batch)),
-        )
-    if vacuum:
-        for d in (corpus_dir, index_dir, pairs_dir, bdir):
+        dirs.append(bdir)
+    for d in dirs:
+        compact_dir(spark, d, upto_batch)
+        if vacuum:
             vacuum_state(spark, d)
 
 
@@ -674,9 +652,10 @@ def stream_neardup_pairs(
     """
     idx = index_dir or os.path.join(os.path.dirname(corpus_dir.rstrip("/")), "lsh_index")
     bdir = bloom_dir or default_bloom_dir(corpus_dir)
-
-    def body(df: DataFrame, bid: int) -> None:
-        dedup_micro_batch(
+    return start_state_stream(
+        stream_df,
+        checkpoint_dir,
+        lambda df, bid: dedup_micro_batch(
             df,
             bid,
             corpus_dir,
@@ -689,11 +668,5 @@ def stream_neardup_pairs(
             bloom_dir=bdir,
             compact_every=compact_every,
             vacuum_grace=vacuum_grace,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+        ),
     )

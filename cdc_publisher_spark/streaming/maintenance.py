@@ -14,32 +14,9 @@ Every writer DECLARES its dir's merge algebra with an explicit
 ``_layout.<name>`` marker file (state.write_layout_marker), and
 ``maintain`` trusts the declaration — never a column-name guess, so a
 future row-state layout that happens to carry a ``cnt`` column cannot
-be silently sum-merged. The declared layouts:
-
-- ``sum-cnt``        → SUM ``cnt`` per remaining columns (count-min
-                       cells; rare-gram exposure counts). Lossless:
-                       sum is the state's own merge.
-- ``sum-sn``         → DECIMAL-sum ``s`` + long-sum ``n`` per
-                       (label, p) (centroid-drift partials).
-- ``max-M``          → max ``M`` per remaining columns (HLL
-                       registers).
-- ``bitor-mask``     → bit_or ``mask`` per ``word`` (the dedup
-                       guard's id-Bloom deltas).
-- ``min-fb``         → min ``fb`` per remaining columns (first-seen
-                       vocabulary).
-- ``sum-ctx``        → column-wise long-sum of every metric column
-                       per ``budget`` (context-length economics
-                       partial sums, ctx_monitor).
-- ``rows``           → row state, rewritten verbatim (dedup pairs).
-- ``rows-dh``        → row state partitioned by ``dh`` (dedup corpus).
-- ``rows-ebm-<bands>x<bits>`` / ``rows-vh``
-                     → embedding near-dup monitor: signature index
-                       cells (the marker names the banding scheme) /
-                       vector store (embed_monitor).
-- ``rows-bhm``       → row state partitioned by ``bhm`` (dedup LSH
-                       index).
-- ``rows-fm-1024``   → audio-dup fpk state partitioned by ``fm`` (the
-                       marker name carries the modulus).
+be silently sum-merged. The declared layouts and their folds are the
+one table ``state.LAYOUTS``; each dir compacts through
+``state.compact_dir``, the same path in-stream compaction takes.
 
 A dir with NO marker is SKIPPED with a "no layout marker" note rather
 than guessed at. Every writer declares its marker in its first
@@ -81,18 +58,16 @@ target watermark, live/superseded dir counts — and writes nothing.
 
 from __future__ import annotations
 
-import re
-from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from cdc_publisher_spark.streaming.state import (
     batch_dirs,
     checkpoint_committed_upto,
-    compact_state,
+    compact_dir,
     compacted_upto,
+    fitting_layout,
     hadoop_fs,
     read_layout_marker,
     read_state,
@@ -101,122 +76,6 @@ from cdc_publisher_spark.streaming.state import (
 
 #: Directory names never descended into during discovery.
 _SKIP_PREFIXES = ("batch=", "_")
-
-
-@dataclass(frozen=True)
-class LayoutSpec:
-    """One declared merge algebra: how ``maintain`` compacts a dir."""
-
-    name: str
-    kind: str  # display family: sum | hll | bloom | min | rows
-    partition_cols: tuple[str, ...]
-    required: frozenset  # columns the layout cannot exist without
-    # merge_builder(columns) -> compact_state-shaped fold, or None for
-    # row state (rewrite verbatim, keep inner partitioning)
-    merge_builder: Callable[[list[str]], Callable[[DataFrame], DataFrame]] | None
-
-
-def _sum_cnt(columns: list[str]) -> Callable[[DataFrame], DataFrame]:
-    gcols = [c for c in columns if c not in ("cnt", "batch")]
-
-    def merge(df: DataFrame) -> DataFrame:
-        return df.groupBy(*gcols).agg(F.sum("cnt").cast("long").alias("cnt"))
-
-    return merge
-
-
-def _sum_sn(_: list[str]) -> Callable[[DataFrame], DataFrame]:
-    def merge(df: DataFrame) -> DataFrame:
-        return df.groupBy("label", "p").agg(
-            F.sum("s").cast("decimal(30,8)").alias("s"),
-            F.sum("n").cast("long").alias("n"),
-        )
-
-    return merge
-
-
-def _max_m(columns: list[str]) -> Callable[[DataFrame], DataFrame]:
-    gcols = [c for c in columns if c not in ("M", "batch")]
-
-    def merge(df: DataFrame) -> DataFrame:
-        return df.groupBy(*gcols).agg(F.max("M").alias("M"))
-
-    return merge
-
-
-def _bitor_mask(_: list[str]) -> Callable[[DataFrame], DataFrame]:
-    def merge(df: DataFrame) -> DataFrame:
-        return df.groupBy("word").agg(F.bit_or("mask").alias("mask"))
-
-    return merge
-
-
-def _min_fb(columns: list[str]) -> Callable[[DataFrame], DataFrame]:
-    gcols = [c for c in columns if c not in ("fb", "batch")]
-
-    def merge(df: DataFrame) -> DataFrame:
-        return df.groupBy(*gcols).agg(F.min("fb").alias("fb"))
-
-    return merge
-
-
-def _sum_ctx(columns: list[str]) -> Callable[[DataFrame], DataFrame]:
-    mcols = [c for c in columns if c not in ("budget", "batch")]
-
-    def merge(df: DataFrame) -> DataFrame:
-        return df.groupBy("budget").agg(
-            *[F.sum(c).cast("long").alias(c) for c in mcols]
-        )
-
-    return merge
-
-
-#: The one spec every scheme-versioned embed-index marker maps to.
-_EBM_FAMILY = "rows-ebm-<bands>x<bits>"
-
-#: Name → spec for every layout a writer may declare. Writers pass
-#: these exact names to state.write_layout_marker.
-LAYOUTS: dict[str, LayoutSpec] = {
-    s.name: s
-    for s in (
-        LayoutSpec("sum-cnt", "sum", (), frozenset({"cnt"}), _sum_cnt),
-        LayoutSpec("sum-sn", "sum", (), frozenset({"label", "p", "s", "n"}), _sum_sn),
-        LayoutSpec("max-M", "hll", (), frozenset({"M"}), _max_m),
-        LayoutSpec("bitor-mask", "bloom", (), frozenset({"word", "mask"}), _bitor_mask),
-        LayoutSpec("min-fb", "min", (), frozenset({"fb"}), _min_fb),
-        LayoutSpec(
-            "sum-ctx",
-            "sum",
-            (),
-            frozenset(
-                {
-                    "budget",
-                    "n_docs",
-                    "total_tokens",
-                    "n_trunc_docs",
-                    "trunc_lost_tokens",
-                    "n_chunks",
-                    "pad_tokens",
-                }
-            ),
-            _sum_ctx,
-        ),
-        LayoutSpec("rows", "rows", (), frozenset(), None),
-        LayoutSpec("rows-dh", "rows", ("dh",), frozenset({"dh"}), None),
-        # embedding near-dup monitor (streaming/embed_monitor): the
-        # signature index's (band, bh)-cell fan — every versioned
-        # rows-ebm-<bands>x<bits> marker maps here — and the vector
-        # store's id-hash fan
-        LayoutSpec(_EBM_FAMILY, "rows", ("ebm",), frozenset({"ebm"}), None),
-        LayoutSpec("rows-vh", "rows", ("vh",), frozenset({"vh"}), None),
-        # the dedup LSH index: bhm-only dirs (band never pruned
-        # anything — every doc populates every band)
-        LayoutSpec("rows-bhm", "rows", ("bhm",), frozenset({"bhm"}), None),
-        # audio-dup monitor fingerprint keys (streaming/audio_monitor):
-        # the marker name carries the fan's modulus
-        LayoutSpec("rows-fm-1024", "rows", ("fm",), frozenset({"fm"}), None),
-    )
-}
 
 
 @dataclass
@@ -237,32 +96,6 @@ class MaintenancePlan:
         if self.kind == "unrecognized":
             return "skip"
         return "compact" if self.target_upto is not None else "skip"
-
-
-def classify_state_dir(
-    columns: list[str], layout: str | None
-) -> tuple[str, tuple[str, ...], Callable[[DataFrame], DataFrame] | None] | None:
-    """(kind, partition_cols, merge_fn) for a state dir, or None when
-    the dir cannot be classified safely (skip-with-note).
-
-    ``layout`` is the dir's declared ``_layout.`` marker name — the
-    only classification path; a dir with no marker is unrecognized. A
-    declared layout whose required columns are absent from the actual
-    schema is unrecognized too (a marker pasted onto the wrong dir
-    must not trigger the wrong merge).
-
-    Scheme-versioned embed-index markers (``rows-ebm-<bands>x<bits>``,
-    the rows-fm-1024 precedent with an open-ended scheme instead of a
-    fixed modulus) all compact identically: a verbatim rewrite keeping
-    the ``ebm=`` dirs, whose values were assigned under the dir's own
-    scheme."""
-    if layout is not None and re.fullmatch(r"rows-ebm-\d+x\d+", layout):
-        layout = _EBM_FAMILY
-    spec = LAYOUTS.get(layout) if layout is not None else None
-    if spec is None or not spec.required <= set(columns):
-        return None
-    merge_fn = spec.merge_builder(columns) if spec.merge_builder else None
-    return spec.kind, spec.partition_cols, merge_fn
 
 
 def discover_state_dirs(
@@ -346,16 +179,16 @@ def plan_maintenance(
             # OTHER dir while the bad one awaits repair
             cols = read_state(spark, d).columns
             marker = read_layout_marker(spark, d)
-            classified = classify_state_dir(cols, marker)
+            spec = fitting_layout(cols, marker)
         except Exception as e:  # conflicting markers / partition schemes
-            classified, conflict = None, str(e).splitlines()[0][:160]
+            spec, conflict = None, str(e).splitlines()[0][:160]
         prev = compacted_upto(spark, d)
         dirs = [k for k, _ in batch_dirs(spark, d)]
         own_max = max(dirs) if dirs else prev
         target, note = _resolve_target(
             own_max, prev, upto_batch, committed, assume_all_committed
         )
-        if classified is None:
+        if spec is None:
             kind, pcols = "unrecognized", ()
             target = None
             note = conflict or (
@@ -364,7 +197,7 @@ def plan_maintenance(
                 else f"layout marker {marker!r} does not fit the dir's schema; skipped"
             )
         else:
-            kind, pcols, _ = classified
+            kind, pcols = spec.kind, spec.partition_cols
         live = [k for k in dirs if prev is None or k > prev]
         superseded = [k for k in dirs if target is not None and k <= target] + [
             k for k in dirs if target is None and prev is not None and k <= prev
@@ -411,34 +244,15 @@ def run_maintenance(
     if dry_run:
         return plans
     for p in plans:
-        if p.kind != "unrecognized" and p.target_upto is not None:
-            merge_fn = classify_state_dir(
-                read_state(spark, p.path).columns, read_layout_marker(spark, p.path)
-            )[2]
-            merge = None
-            if merge_fn is not None:
-                target = p.target_upto
-
-                def merge(df, _fn=merge_fn, _t=target):  # noqa: E731 — compact_state shape
-                    return _fn(df).withColumn("batch", F.lit(_t))
-
-            compact_state(
-                spark,
-                p.path,
-                p.target_upto,
-                partition_cols=p.partition_cols,
-                merge=merge,
-            )
+        if p.action == "compact":
+            compact_dir(spark, p.path, p.target_upto)
         if vacuum and compacted_upto(spark, p.path) is not None:
             vacuum_state(spark, p.path, grace_batches=grace_batches)
     return plans
 
 
 __all__ = [
-    "LAYOUTS",
-    "LayoutSpec",
     "MaintenancePlan",
-    "classify_state_dir",
     "discover_state_dirs",
     "plan_maintenance",
     "run_maintenance",

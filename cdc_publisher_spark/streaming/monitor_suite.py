@@ -77,6 +77,10 @@ from cdc_publisher_spark.streaming.embed_monitor import embed_dup_micro_batch
 from cdc_publisher_spark.streaming.exposure_monitor import exposure_micro_batch
 from cdc_publisher_spark.streaming.hll_monitor import hll_micro_batch
 from cdc_publisher_spark.streaming.incremental_dedup import dedup_micro_batch
+from cdc_publisher_spark.streaming.state import (
+    inheriting_local_properties,
+    start_state_stream,
+)
 from cdc_publisher_spark.streaming.vocab_monitor import vocab_micro_batch
 
 #: state_root-relative dir of every consumer the suite drives.
@@ -244,43 +248,15 @@ def monitor_suite_batch(
             for _name, t in thunks:
                 t()
         else:
-            # With PYSPARK_PIN_THREAD (default since Spark 3.2) each
-            # Python thread pins to its own JVM thread, so plain pool
-            # threads would NOT inherit this trigger's job group /
-            # local properties — query.stop() could not cancel
-            # in-flight consumer jobs and Spark-UI attribution to the
-            # streaming query would be lost. Clone the parent thread's
-            # JVM local properties once and install them in each
-            # worker before its thunk runs — the pyspark
-            # InheritableThread recipe applied to a pool.
-            sc = batch.sparkSession.sparkContext
-            try:
-                parent_props = sc._jsc.sc().getLocalProperties().clone()
-            except Exception:  # non-JVM test doubles
-                parent_props = None
-
-            def run_inheriting(named):
-                _name, t = named
-                # Each worker gets its OWN clone: Spark mutates
-                # thread-local properties during actions (e.g.
-                # SQLExecution.withNewExecutionId sets/restores
-                # spark.sql.execution.id around every write), so a
-                # single Properties object shared across pool threads
-                # races — a sibling's restore can null the key
-                # mid-write and fail the trigger. Clone-per-thread is
-                # Spark's own InheritableThread recipe.
-                if parent_props is not None:
-                    try:
-                        sc._jsc.sc().setLocalProperties(parent_props.clone())
-                    except Exception:
-                        pass
-                return t()
-
+            # pool threads must carry this trigger's job group / local
+            # properties — state.inheriting_local_properties installs a
+            # fresh clone per worker (PYSPARK_PIN_THREAD)
+            run_inheriting = inheriting_local_properties(batch.sparkSession)
             with ThreadPoolExecutor(max_workers=workers) as pool:
                 # list() drains the iterator so every future resolves;
                 # the first consumer exception re-raises here and fails
                 # the trigger BEFORE the stream commits the offset
-                list(pool.map(run_inheriting, thunks))
+                list(pool.map(run_inheriting, [t for _name, t in thunks]))
     finally:
         batch.unpersist()
 
@@ -297,15 +273,10 @@ def stream_monitor_suite(
     mid-fan-out replays the whole trigger and each dir's overwrite
     absorbs it). Maintenance runs OUT of band: ``maintain
     --state-root <state_root> --checkpoint <checkpoint_dir>``."""
-
-    def body(df: DataFrame, bid: int) -> None:
-        monitor_suite_batch(df, bid, state_root, **kwargs)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return start_state_stream(
+        stream_df,
+        checkpoint_dir,
+        lambda df, bid: monitor_suite_batch(df, bid, state_root, **kwargs),
     )
 
 

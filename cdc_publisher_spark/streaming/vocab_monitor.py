@@ -29,7 +29,7 @@ quantity Heaps' law says grows SUB-linearly in corpus size (V ~ N^β,
 β < 1), so this is the rare monitor whose state growth slows as the
 corpus grows. Compaction pre-merges to one (source, wh, fb) row per
 type; the ``maintain`` pass (streaming/maintenance.py) recognizes the
-layout by schema.
+layout by its ``min-fb`` marker.
 """
 
 from __future__ import annotations
@@ -41,10 +41,8 @@ from pyspark.sql import functions as F
 
 from cdc_publisher_spark.functions.text import words
 from cdc_publisher_spark.streaming.state import (
-    compact_state,
-    in_stream_watermark,
-    read_state,
-    vacuum_state,
+    read_merged,
+    start_state_stream,
     write_layout_marker,
 )
 
@@ -87,10 +85,7 @@ def vocab_micro_batch(
 def read_first_seen(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Min-merged (source, wh, fb) view — each word type with the
     first batch that delivered it; None when no state exists."""
-    df = read_state(spark, state_dir)
-    if df is None:
-        return None
-    return df.groupBy("source", "wh").agg(F.min("fb").alias("fb"))
+    return read_merged(spark, state_dir, "min-fb", ("source", "wh", "fb"))
 
 
 def vocab_report(first_seen: DataFrame) -> DataFrame:
@@ -117,29 +112,6 @@ def read_vocab_report(spark: SparkSession, state_dir: str) -> DataFrame | None:
     return None if fs is None else vocab_report(fs)
 
 
-def compact_vocab_state(
-    spark: SparkSession,
-    state_dir: str,
-    upto_batch: int,
-    vacuum: bool = False,
-) -> None:
-    """Compact batches ≤ ``upto_batch`` into a min-merged first-seen
-    segment — one row per (source, wh) however many batches fold in.
-    min() is the state's own merge: lossless, idempotent."""
-    compact_state(
-        spark,
-        state_dir,
-        upto_batch,
-        merge=lambda df: (
-            df.groupBy("source", "wh")
-            .agg(F.min("fb").alias("fb"))
-            .withColumn("batch", F.lit(upto_batch))
-        ),
-    )
-    if vacuum:
-        vacuum_state(spark, state_dir)
-
-
 def stream_vocab_growth(
     stream_df: DataFrame,
     state_dir: str,
@@ -154,25 +126,17 @@ def stream_vocab_growth(
     ``checkpoint_dir`` after each batch's write (commit-on-success,
     streaming/pipeline.py contract). In-stream compaction folds
     COMMITTED batches only (state.in_stream_watermark)."""
-
-    def body(df: DataFrame, bid: int) -> None:
-        vocab_micro_batch(df, bid, state_dir, text_col, source_col)
-        upto = in_stream_watermark(df.sparkSession, state_dir, bid, compact_every)
-        if upto is not None:
-            compact_vocab_state(df.sparkSession, state_dir, upto_batch=upto)
-            if vacuum_grace is not None:
-                vacuum_state(df.sparkSession, state_dir, grace_batches=vacuum_grace)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return start_state_stream(
+        stream_df,
+        checkpoint_dir,
+        lambda df, bid: vocab_micro_batch(df, bid, state_dir, text_col, source_col),
+        (state_dir,),
+        compact_every,
+        vacuum_grace,
     )
 
 
 __all__ = [
-    "compact_vocab_state",
     "read_first_seen",
     "read_vocab_report",
     "stream_vocab_growth",

@@ -37,8 +37,7 @@ from pyspark.sql import functions as F
 from cdc_publisher_spark.streaming.state import (
     batch_dirs,
     compacted_upto,
-    in_stream_watermark,
-    vacuum_state,
+    state_trigger,
 )
 from cdc_publisher_spark.tables import load
 
@@ -56,9 +55,6 @@ class Adapter:
         raise NotImplementedError
 
     def read_rows(self, spark, state):  # canonical merged view
-        raise NotImplementedError
-
-    def compact(self, spark, state, upto):
         raise NotImplementedError
 
 
@@ -85,10 +81,6 @@ class HllAdapter(Adapter):
             for r in read_hll_registers(spark, state).collect()
         )
 
-    def compact(self, spark, state, upto):
-        from cdc_publisher_spark.streaming.hll_monitor import compact_hll_state
-
-        compact_hll_state(spark, state, upto_batch=upto)
 
 
 class CmAdapter(Adapter):
@@ -113,10 +105,6 @@ class CmAdapter(Adapter):
             map(tuple, read_cm_cells(spark, state, ["source"]).collect())
         )
 
-    def compact(self, spark, state, upto):
-        from cdc_publisher_spark.streaming.cm_monitor import compact_cm_state
-
-        compact_cm_state(spark, state, upto_batch=upto, group_cols=["source"])
 
 
 class ExposureAdapter(Adapter):
@@ -141,12 +129,6 @@ class ExposureAdapter(Adapter):
             for r in read_gram_counts(spark, state).collect()
         )
 
-    def compact(self, spark, state, upto):
-        from cdc_publisher_spark.streaming.exposure_monitor import (
-            compact_exposure_state,
-        )
-
-        compact_exposure_state(spark, state, upto_batch=upto)
 
 
 class DriftAdapter(Adapter):
@@ -169,10 +151,6 @@ class DriftAdapter(Adapter):
             for r in read_centroid_sums(spark, state).collect()
         )
 
-    def compact(self, spark, state, upto):
-        from cdc_publisher_spark.streaming.drift_monitor import compact_drift_state
-
-        compact_drift_state(spark, state, upto_batch=upto)
 
 
 class VocabAdapter(Adapter):
@@ -195,10 +173,6 @@ class VocabAdapter(Adapter):
             for r in read_first_seen(spark, state).collect()
         )
 
-    def compact(self, spark, state, upto):
-        from cdc_publisher_spark.streaming.vocab_monitor import compact_vocab_state
-
-        compact_vocab_state(spark, state, upto_batch=upto)
 
 
 class CtxAdapter(Adapter):
@@ -218,10 +192,6 @@ class CtxAdapter(Adapter):
 
         return sorted(map(tuple, read_ctx_curve(spark, state).collect()))
 
-    def compact(self, spark, state, upto):
-        from cdc_publisher_spark.streaming.ctx_monitor import compact_ctx_state
-
-        compact_ctx_state(spark, state, upto_batch=upto)
 
 
 ADAPTERS = [
@@ -235,17 +205,12 @@ ADAPTERS = [
 
 
 def _body(spark, ad, state, compact_every, vacuum_grace=0):
-    """The exact per-trigger sequence every monitor's stream wiring
-    runs: write, then committed-only in-stream compaction."""
-
-    def body(df, bid):
-        ad.write(df, bid, state)
-        upto = in_stream_watermark(spark, state, bid, compact_every)
-        if upto is not None:
-            ad.compact(spark, state, upto)
-            vacuum_state(spark, state, grace_batches=vacuum_grace)
-
-    return body
+    """The per-trigger body every monitor's stream wiring runs
+    (state.state_trigger): write, then committed-only in-stream
+    compaction and vacuum."""
+    return state_trigger(
+        lambda df, bid: ad.write(df, bid, state), (state,), compact_every, vacuum_grace
+    )
 
 
 @pytest.mark.parametrize("ad", ADAPTERS, ids=lambda a: a.name)

@@ -16,11 +16,16 @@ from cdc_publisher_spark.operators.multimodal import synth_media_from_text
 from cdc_publisher_spark.streaming.audio_monitor import (
     audio_dup_micro_batch,
     audio_fpk,
-    compact_audio_state,
     read_audio_dups,
     read_audio_fpk_state,
+    stream_audio_dups,
 )
-from cdc_publisher_spark.streaming.state import batch_dirs, compacted_upto
+from cdc_publisher_spark.streaming.state import (
+    batch_dirs,
+    compact_dir,
+    compacted_upto,
+    vacuum_state,
+)
 
 
 def _docs(spark):
@@ -129,7 +134,8 @@ def test_audio_state_compaction_and_maintain(spark, tmp_path):
     before = sorted(
         (r.media_id, r.fpk) for r in read_audio_fpk_state(spark, state).collect()
     )
-    compact_audio_state(spark, state, upto_batch=1, vacuum=True)
+    compact_dir(spark, state, 1)
+    vacuum_state(spark, state)
     assert compacted_upto(spark, state) == 1
     assert all(k > 1 for k, _ in batch_dirs(spark, state))
     after = sorted(
@@ -213,3 +219,35 @@ def test_audio_fpk_digest_matches_batch_query_grouping(spark):
         F.countDistinct("tk").alias("t"), F.countDistinct("fpk").alias("f")
     ).first()
     assert agg.f == agg.t  # distinct texts -> distinct digests here
+
+
+def test_stream_audio_dups_compacts_both_dirs(spark, tmp_path):
+    """readStream → stream_audio_dups with in-stream compaction: the
+    pairs equal the batch-mode set, and BOTH the fpk dir and the pairs
+    dir are compacted — an uncompacted pairs dir keeps one
+    ``pairs/batch=N`` dir per trigger forever."""
+    docs = _docs(spark)
+    src = str(tmp_path / "in")
+    _media(docs).withColumn(
+        "p", F.pmod("media_id", F.lit(4)).cast("int")
+    ).repartition("p").write.partitionBy("p").parquet(src)
+    state, pairs = str(tmp_path / "fpk"), str(tmp_path / "pairs")
+    stream = (
+        spark.readStream.schema("media_id long, payload binary")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(f"{src}/p=*")
+    )
+    q = stream_audio_dups(
+        stream, state, pairs, str(tmp_path / "ckpt"),
+        compact_every=2, vacuum_grace=1,
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = sorted(
+        (r.orig_id, r.dup_id) for r in read_audio_dups(spark, pairs).collect()
+    )
+    assert got == _expected_pairs(docs)
+    for d in (state, pairs):
+        assert glob.glob(f"{d}/_compacted_upto=*"), d

@@ -22,10 +22,10 @@ from cdc_publisher_spark.operators.cm import (
 from cdc_publisher_spark.streaming.cm_monitor import (
     cm_micro_batch,
     cm_state_estimates,
-    compact_cm_state,
     read_cm_cells,
     stream_cm_heavy_hitters,
 )
+from cdc_publisher_spark.streaming.state import compact_dir
 from cdc_publisher_spark.tables import load
 
 
@@ -86,13 +86,13 @@ def test_compaction_presums_and_preserves_cells(spark, tokens, tmp_path):
     for b in range(3):
         cm_micro_batch(tokens.filter(F.col("doc_id") % 3 == b), b, state)
     before = _cells_sorted(read_cm_cells(spark, state))
-    compact_cm_state(spark, state, upto_batch=1)
+    compact_dir(spark, state, 1)
     assert _cells_sorted(read_cm_cells(spark, state)) == before
     # the compact segment is PRE-SUMMED: ≤ d × w rows total
     seg = os.path.join(state, "_compact", "upto=1")
     assert spark.read.parquet(seg).count() <= CM_DEPTH * CM_WIDTH
     # idempotent re-compact at the same watermark is a no-op
-    compact_cm_state(spark, state, upto_batch=1)
+    compact_dir(spark, state, 1)
     assert _cells_sorted(read_cm_cells(spark, state)) == before
     # replay of a pre-watermark batch is invisible to readers
     cm_micro_batch(tokens.filter(F.col("doc_id") % 3 == 0), 0, state)

@@ -12,11 +12,11 @@ from pyspark.sql import functions as F
 from cdc_publisher_spark.registry import all_specs
 from cdc_publisher_spark.streaming.ctx_monitor import (
     CTX_BUDGETS,
-    compact_ctx_state,
     ctx_micro_batch,
     read_ctx_curve,
     stream_ctx_economics,
 )
+from cdc_publisher_spark.streaming.state import compact_dir, vacuum_state
 from cdc_publisher_spark.tables import load
 
 
@@ -65,7 +65,8 @@ def test_compaction_folds_to_one_row_per_budget(spark, docs, tmp_path):
     for b, s in enumerate(_slices(docs, 4)):
         ctx_micro_batch(s, b, state)
     before = _rows(read_ctx_curve(spark, state))
-    compact_ctx_state(spark, state, upto_batch=2, vacuum=True)
+    compact_dir(spark, state, 2)
+    vacuum_state(spark, state)
     assert compacted_upto(spark, state) == 2
     assert [k for k, _ in batch_dirs(spark, state)] == [3]
     seg = spark.read.parquet(f"{state}/_compact/upto=2")

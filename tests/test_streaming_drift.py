@@ -13,12 +13,12 @@ from pyspark.sql import functions as F
 
 from cdc_publisher_spark.queries.llm_risk import q_k89_label_centroid_drift
 from cdc_publisher_spark.streaming.drift_monitor import (
-    compact_drift_state,
     drift_micro_batch,
     read_centroid_sums,
     read_drift_report,
     stream_centroid_drift,
 )
+from cdc_publisher_spark.streaming.state import compact_dir, vacuum_state
 from cdc_publisher_spark.tables import load
 
 
@@ -64,7 +64,8 @@ def test_compaction_presums_losslessly_and_stays_dimension_sized(
         for r in read_centroid_sums(spark, state).collect()
     )
     before_report = _rows(read_drift_report(spark, state))
-    compact_drift_state(spark, state, upto_batch=2, vacuum=True)
+    compact_dir(spark, state, 2)
+    vacuum_state(spark, state)
     assert compacted_upto(spark, state) == 2
     assert [k for k, _ in batch_dirs(spark, state)] == [3]
     # the folded segment is ONE row per (label, p): labels x 64

@@ -12,11 +12,15 @@ from pyspark.sql import functions as F
 
 from cdc_publisher_spark.queries.llm_risk import q_k88_rare_gram_exposure
 from cdc_publisher_spark.streaming.exposure_monitor import (
-    compact_exposure_state,
     exposure_micro_batch,
     read_exposure_report,
     read_gram_counts,
     stream_rare_gram_exposure,
+)
+from cdc_publisher_spark.streaming.state import (
+    compact_dir,
+    state_trigger,
+    vacuum_state,
 )
 from cdc_publisher_spark.tables import load
 
@@ -63,7 +67,8 @@ def test_compaction_presums_losslessly(spark, docs, tmp_path):
         (r.sh, r.source, r.cnt) for r in read_gram_counts(spark, state).collect()
     )
     before_report = _report_rows(read_exposure_report(spark, state))
-    compact_exposure_state(spark, state, upto_batch=2, vacuum=True)
+    compact_dir(spark, state, 2)
+    vacuum_state(spark, state)
     assert compacted_upto(spark, state) == 2
     # superseded per-batch dirs reclaimed; batch 3 still live
     assert [k for k, _ in batch_dirs(spark, state)] == [3]
@@ -75,20 +80,15 @@ def test_compaction_presums_losslessly(spark, docs, tmp_path):
 
 
 def _in_stream_body(spark, state, compact_every, vacuum_grace):
-    """The exact per-trigger sequence stream_rare_gram_exposure wires
-    into foreachBatch, reconstructed from its public pieces so tests
-    can interleave crashes/replays between triggers."""
-    from cdc_publisher_spark.streaming.state import in_stream_watermark, vacuum_state
-
-    def body(df, bid):
-        exposure_micro_batch(df, bid, state)
-        upto = in_stream_watermark(spark, state, bid, compact_every)
-        if upto is not None:
-            compact_exposure_state(spark, state, upto_batch=upto)
-            if vacuum_grace is not None:
-                vacuum_state(spark, state, grace_batches=vacuum_grace)
-
-    return body
+    """The per-trigger body stream_rare_gram_exposure wires into
+    foreachBatch (state.state_trigger), called directly so tests can
+    interleave crashes/replays between triggers."""
+    return state_trigger(
+        lambda df, bid: exposure_micro_batch(df, bid, state),
+        (state,),
+        compact_every,
+        vacuum_grace,
+    )
 
 
 def test_multi_generation_compaction_keeps_read_cost_o_distinct_grams(

@@ -15,12 +15,12 @@ from cdc_publisher_spark.operators.hll import (
     hll_registers,
 )
 from cdc_publisher_spark.streaming.hll_monitor import (
-    compact_hll_state,
     hll_micro_batch,
     hll_state_estimate,
     read_hll_registers,
     stream_hll_distinct,
 )
+from cdc_publisher_spark.streaming.state import compact_dir
 from cdc_publisher_spark.tables import load
 
 
@@ -75,7 +75,7 @@ def test_compaction_premerges_and_preserves_registers(spark, rows, tmp_path):
     for b in range(3):
         hll_micro_batch(rows.filter(F.col("doc_id") % 3 == b), b, state)
     before = _regs_sorted(read_hll_registers(spark, state))
-    compact_hll_state(spark, state, upto_batch=1)
+    compact_dir(spark, state, 1)
     assert _regs_sorted(read_hll_registers(spark, state)) == before
     # the compact segment is PRE-MERGED: <= groups x 256 rows total
     import os
@@ -84,7 +84,7 @@ def test_compaction_premerges_and_preserves_registers(spark, rows, tmp_path):
     n_sources = rows.select("source").distinct().count()
     assert spark.read.parquet(seg).count() <= n_sources * HLL_M
     # idempotent re-compact at the same watermark is a no-op
-    compact_hll_state(spark, state, upto_batch=1)
+    compact_dir(spark, state, 1)
     assert _regs_sorted(read_hll_registers(spark, state)) == before
 
 

@@ -11,12 +11,12 @@ from pyspark.sql import functions as F
 
 from cdc_publisher_spark.functions.text import words
 from cdc_publisher_spark.streaming.vocab_monitor import (
-    compact_vocab_state,
     read_first_seen,
     read_vocab_report,
     stream_vocab_growth,
     vocab_micro_batch,
 )
+from cdc_publisher_spark.streaming.state import compact_dir, vacuum_state
 from cdc_publisher_spark.tables import load
 
 
@@ -109,7 +109,8 @@ def test_compaction_folds_to_one_row_per_type(spark, docs, tmp_path):
         vocab_micro_batch(s, b, state)
     before = _report_rows(read_vocab_report(spark, state))
     n_types = read_first_seen(spark, state).count()
-    compact_vocab_state(spark, state, upto_batch=2, vacuum=True)
+    compact_dir(spark, state, 2)
+    vacuum_state(spark, state)
     assert compacted_upto(spark, state) == 2
     assert [k for k, _ in batch_dirs(spark, state)] == [3]
     seg = spark.read.parquet(f"{state}/_compact/upto=2")
