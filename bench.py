@@ -839,7 +839,7 @@ def write_scaling(path: str = "SCALING.md") -> None:
             "density GROW with corpus size where a real corpus "
             "vocabulary (100k+ types) keeps it flat. r16 COUNTED the "
             "masses from the actual join-input histograms "
-            "(tools/count_gram_mass.py, VERDICT r15 ask #5), "
+            "(r16 count, VERDICT r15 ask #5), "
             "sf0.1 -> sf1 at 10x the data: q_k65's fingerprint-join "
             "mass 347,171 -> 35,457,430 pairs (x102/decade) because "
             "the DISTINCT fingerprint values saturate the 31-word "

@@ -13,6 +13,19 @@ Pins the configs the whole engine depends on (SURVEY.md §4.2):
   parser) does; without it ``try_parse_json`` turns the message into a
   dead letter (cdc/envelope.py).
 
+One rule depends on the master: under a local master (``local``,
+``local[N]``, ``local[*]``) ``get_session`` pins
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` above any path
+count, so every file listing runs on the driver. Spark otherwise lists
+more than 32 paths (a streaming micro-batch's files, a glob, a
+partitioned state dir's subdirs) with a job of one task per path; in one
+JVM those tasks stat the same local filesystem the driver sees, so the
+job adds only scheduling and serialization (~0.5 s per 40-file CDC
+catch-up trigger on a 4-core host). A cluster master keeps Spark's
+default, because listing HDFS or an object store from many executors
+can pay off. The conf is not in ``RUNTIME_CONFS``: a caller-owned
+session keeps its own listing policy.
+
 Local testing runs one JVM (``local[N]``); on a real cluster the same
 builder is used with master/memory supplied by the deployment, so keep
 anything cluster-specific out of here.
@@ -21,6 +34,7 @@ anything cluster-specific out of here.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -112,8 +126,12 @@ def get_session(
     cpus = default_parallelism()
     builder = SparkSession.builder.appName(app_name)
     builder = builder.config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
-    builder = builder.master(master or f"local[{cpus}]")
+    master = master or f"local[{cpus}]"
+    builder = builder.master(master)
     confs = dict(ENGINE_CONFS)
+    if re.fullmatch(r"local(\[[^\]]*\])?", master):
+        # list every path on the driver (module docstring)
+        confs["spark.sql.sources.parallelPartitionDiscovery.threshold"] = str(2**31 - 1)
     confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
     confs.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     if extra_confs:

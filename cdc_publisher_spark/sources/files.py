@@ -19,7 +19,9 @@ RAW_SCHEMA = T.StructType([T.StructField("raw", T.StringType())])
 def read_dml_batch(spark: SparkSession, path: str) -> DataFrame:
     """Batch read: one raw JSON document per line (spark.read.text —
     no schema inference; the payload stays an opaque string, exactly
-    like the reference's CLOB read)."""
+    like the reference's CLOB read). In an engine session under a local
+    master the glob's files are listed on the driver, so building the
+    frame launches no Spark job however many files match (session.py)."""
     return spark.read.text(path).select(F.col("value").alias("raw"))
 
 
@@ -56,7 +58,11 @@ def read_dml_stream(
 ) -> DataFrame:
     """Streaming read of the same layout. ``maxFilesPerTrigger`` is the
     pacing knob (the reference paces via sync-send backpressure,
-    kafka_queue_writer.clj:87; micro-batch pacing is the Spark form)."""
+    kafka_queue_writer.clj:87; micro-batch pacing is the Spark form).
+    Each micro-batch re-lists its files when it is planned; in an engine
+    session under a local master that listing runs on the driver
+    (session.py), so a ``maxFilesPerTrigger`` above 32 no longer costs a
+    listing job per trigger."""
     reader = spark.readStream.format("text")
     if max_files_per_trigger is not None:
         # pass 0/negative through: Spark rejects them loudly at stream

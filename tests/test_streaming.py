@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from cdc_publisher_spark.cdc.keying import derive_key_from_json
 from cdc_publisher_spark.cdc.latest_state import latest_per_key
-from cdc_publisher_spark.sources.files import read_dml_stream, stream_table
+from cdc_publisher_spark.sources.files import read_dml_batch, read_dml_stream, stream_table
 from cdc_publisher_spark.streaming.pipeline import run_file_to_parquet, split_wire
 from cdc_publisher_spark.streaming.routes import RouteRegistry, route_control_batch
 
@@ -121,6 +121,55 @@ def test_split_wire_branches_parse_once(spark):
         plan = branch._jdf.queryExecution().executedPlan().toString()
         assert len(re.findall(r"parse_?json", plan, re.IGNORECASE)) == 1, plan
         assert plan.count("StructsToJson") == 1, plan
+
+
+def _jobs_in_group(spark, group: str) -> int:
+    """Jobs launched under ``group``. The status store is fed by the
+    listener bus, in order, so one marker job run in the group on this
+    thread makes every earlier job of the group visible first."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "marker")
+    try:
+        sc.parallelize([0], 1).count()
+        return len(sc.statusTracker().getJobIdsForGroup(group)) - 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_publish_catchup_trigger_runs_one_job(spark, workdir):
+    """A catch-up trigger of 40 files runs one Spark job: the batch's
+    files are listed on the driver, not by a job of one task per file."""
+    src, out, ckpt = workdir
+    for i in range(40):
+        (src / f"m{i:02d}.jsonl").write_text(_dml(i) + "\n")
+    q = run_file_to_parquet(read_dml_stream(spark, str(src), 40), out, ckpt)
+    q.processAllAvailable()
+    q.stop()
+    assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]] == [40]
+    assert _jobs_in_group(spark, str(q.runId)) == 1
+
+
+def test_batch_reads_list_on_driver(spark, tmp_path):
+    """Building a batch frame over 40 files or 40 partition dirs lists
+    them on the driver: no Spark job."""
+    import uuid
+
+    dml = tmp_path / "dml"
+    dml.mkdir()
+    for i in range(40):
+        (dml / f"m{i:02d}.jsonl").write_text(_dml(i) + "\n")
+    spark.range(40).selectExpr("id", "id AS p").write.partitionBy("p").parquet(str(tmp_path / "state"))
+
+    sc = spark.sparkContext
+    for build in (
+        lambda: read_dml_batch(spark, str(dml / "*.jsonl")),
+        lambda: spark.read.schema("id bigint, p bigint").parquet(str(tmp_path / "state")),
+    ):
+        group = f"list-{uuid.uuid4()}"
+        sc.setJobGroup(group, "listing")
+        build()
+        assert _jobs_in_group(spark, group) == 0
 
 
 def test_stream_latest_per_key_matches_batch(spark, tmp_path):
