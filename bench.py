@@ -585,7 +585,7 @@ def write_monitors(path: str = "MONITORS.md") -> None:
             "WORSE than 6 (medians 43.6 vs 41.0 s — over-"
             "subscription, the r12 nested-concurrency lesson at "
             "suite level) and is rejected. **embed_dup** is the same "
-            "shape over the 256-cell ebm fan — its wall tracks "
+            "shape over its (band, bh) signature join — its wall tracks "
             "candidate mass, the measured bits tradeoff in "
             "operators/embed_lsh.py. No remaining chain has "
             "per-trigger work that grows faster than its candidate "

@@ -33,7 +33,7 @@ cosine) that k3 uses for shingles and k106 for audio.
 Scheme constants (bands, bits, scale, the "rh" salt) are LAYOUT
 constants: a persisted signature index is only probe-compatible with
 signatures from the identical scheme, so changing them is a state
-rebuild (the BH_MOD contract).
+rebuild (``streaming.embed_monitor.migrate_embed_layout``).
 """
 
 from __future__ import annotations
@@ -67,10 +67,10 @@ RH_SCALE = 1_000_000
 #: unstructured data — a deployment picks bits from its corpus size
 #: (e.g. 16+ bits at n >= 10^6); the fixture default stays 8 so the
 #: sf0.01 audit keeps non-trivial collision structure. Changing bits
-#: is a state rebuild (BH_MOD contract below) and is EXECUTABLE:
+#: is a state rebuild (module docstring) and is EXECUTABLE:
 #: ``streaming.embed_monitor.migrate_embed_layout`` re-signs the
 #: stored vectors at the new scheme offline, replaces the
-#: scheme-versioned layout marker (``rows-ebm-<bands>x<bits>``), and a
+#: scheme-versioned layout marker (``rows-rh-<bands>x<bits>``), and a
 #: stale-scheme consumer then fails loudly instead of silently
 #: matching nothing (stream==batch across a mid-stream 8→12 migration
 #: is pinned by tests/test_streaming_embed.py).
@@ -171,7 +171,7 @@ def rh_band_rows(
                 }
             )
 
-    from cdc_publisher_spark.streaming.state import aligned_repartition
+    from cdc_publisher_spark.operators.layout import aligned_repartition
 
     return aligned_repartition(
         df.select(id_col, vec_col), id_col

@@ -312,8 +312,8 @@ def probe_candidate_pairs(
     """Distinct (d1, d2) pairs (d1 < d2) whose LSH bucket collision
     touches a probe row: the candidate join of the incremental path,
     exposed so callers that manage their own state (the streaming twin)
-    can materialize candidates FIRST and prune the corpus read to the
-    candidate-touching partitions before the exact verify."""
+    can materialize candidates FIRST and semi-join the corpus read to
+    the candidate ids before the exact verify."""
     return (
         probe.alias("a")
         .join(

@@ -677,7 +677,7 @@ def synth_media_from_text(
                 }
             )
 
-    from cdc_publisher_spark.streaming.state import aligned_repartition
+    from cdc_publisher_spark.operators.layout import aligned_repartition
 
     return aligned_repartition(
         df.select(id_col, text_col), id_col

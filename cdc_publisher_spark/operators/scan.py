@@ -34,8 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Default chunk fan: within-chunk windows hold ≤ this many rows; the
-#: chunk-total table is rows/CHUNK. A layout constant (BH_MOD
-#: precedent, streaming/incremental_dedup.py).
+#: chunk-total table is rows/CHUNK. A layout constant.
 DEFAULT_CHUNK = 4096
 
 

@@ -279,7 +279,7 @@ HEAPS_LN_DP = 6
 
 #: q_k90 two-level-scan chunk size: within-chunk window partitions hold
 #: ≤ this many per-DOC rows; the chunk-offset table is corpus/CHUNK
-#: rows. A layout constant like BH_MOD (incremental_dedup.py).
+#: rows. A layout constant.
 HEAPS_CHUNK = 4096
 
 #: q_k91 generalization ladder: n_chars bucket widths from finest to

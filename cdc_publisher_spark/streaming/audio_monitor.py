@@ -13,28 +13,19 @@ Hamming > 0 stays a batch job (q_k106's banded join); the stream
 guard is the audio twin of the dedup id-Bloom: cheap, exact, per
 trigger.
 
-State is ONE dir of ``(media_id, fpk, fm)`` rows — fpk the 64-bit
-digest of the clip's full 256-bit fingerprint (frame words in frame
-order), ``fm = pmod(fpk, FPK_MOD)`` the Hive prune key — plus a ``pairs``
-dir of emitted ``(orig_id, dup_id)`` detections, NORMALIZED to
-``orig_id = least(a, b)`` / ``dup_id = greatest(a, b)`` so the pair
-identity is slicing-independent (ADVICE r11: the history leg used to
-put the historical id first, which under out-of-id-order arrival
-emitted (5,3) where batch mode said (3,5)). The per-trigger probe
-reads ONLY the ``fm=`` partitions the batch's own fingerprints hash
-into (≤ min(batch-distinct-fpk, FPK_MOD) dirs — the dedup index's
-bounded-probe contract), so per-trigger I/O follows the probe, not
-the corpus. Writes are partition-aligned (one file per touched fm
-per batch — the r11 small-files rule).
-
-The fan is a LAYOUT constant carried in the dir's ``_layout.`` marker
-(``rows-fm-1024``): fm values baked into history dirs were assigned
-under that modulus, so writing a batch under another one would
-silently miss probes. The writer therefore refuses a dir declaring
-any other layout before it writes anything. The 1024-way fan keeps
-the probe bounded (VERDICT r11 ask #5): a 64-way fan was touched in
-full by any batch with ≥ 64 distinct fingerprints, turning every
-probe into a full history-state scan.
+State is ONE dir of ``(media_id, fpk)`` rows — fpk the 64-bit digest
+of the clip's full 256-bit fingerprint (frame words in frame order) —
+plus a ``pairs`` dir of emitted ``(orig_id, dup_id)`` detections,
+NORMALIZED to ``orig_id = least(a, b)`` / ``dup_id = greatest(a, b)``
+so the pair identity is slicing-independent (ADVICE r11: the history
+leg used to put the historical id first, which under out-of-id-order
+arrival emitted (5,3) where batch mode said (3,5)). The per-trigger
+probe is a plain equi-join on ``fpk`` against the history's
+``(media_id, fpk)`` columns, and each trigger writes its fpk delta as
+one file (the state.py layout contract). The dir declares ``rows``;
+the writer refuses a dir declaring any other layout — such as the
+hash-bucketed ``rows-fm-1024`` of earlier versions — before it writes
+anything.
 
 Completeness (pytest-pinned, the incremental_dedup theorem shape):
 every exact-dup pair {a, b} is emitted exactly once, in the trigger
@@ -56,8 +47,8 @@ Replay: both writes are overwrites of this batch's own ``batch=N``
 dirs and the probe excludes them by construction, so a re-delivered
 trigger rewrites byte-for-byte. An EMPTY trigger returns before any
 write (ADVICE r11: a file-less batch dir would later fail schema
-inference for the whole read). Compaction rewrites verbatim keeping
-the ``fm`` partitioning; ``maintain`` recognizes the marker.
+inference for the whole read). Compaction rewrites verbatim;
+``maintain`` recognizes the marker.
 """
 
 from __future__ import annotations
@@ -69,20 +60,11 @@ from pyspark.sql import functions as F
 
 from cdc_publisher_spark.operators.multimodal import audio_fingerprint
 from cdc_publisher_spark.streaming.state import (
-    aligned_repartition,
     read_state,
     require_layout_marker,
     start_state_stream,
     write_layout_marker,
 )
-
-#: Hive fan of the fingerprint-key state dir — the probe's read is
-#: bounded at min(batch-distinct-fpk, FPK_MOD) directories per trigger.
-#: A layout constant like the dedup index's BH_MOD, carried in the
-#: dir's marker name (FM_LAYOUT).
-FPK_MOD = 1024
-FM_LAYOUT = f"rows-fm-{FPK_MOD}"
-
 
 def audio_fpk(
     media_df: DataFrame,
@@ -106,10 +88,6 @@ def audio_fpk(
     )
 
 
-def _fm(col) -> F.Column:
-    return F.pmod(col, F.lit(FPK_MOD)).cast("int")
-
-
 def audio_dup_micro_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -118,34 +96,18 @@ def audio_dup_micro_batch(
     id_col: str = "media_id",
     payload_col: str = "payload",
 ) -> None:
-    """foreachBatch body: fingerprint the batch once, probe the
-    accumulated fpk state reading ONLY the touched ``fm=`` partitions,
-    emit normalized (orig_id=min, dup_id=max) detections —
-    history×batch plus within-batch — and overwrite this batch's own
-    state delta. Empty triggers return before any write."""
+    """foreachBatch body: fingerprint the batch once, join it against
+    the accumulated fpk state, emit normalized (orig_id=min,
+    dup_id=max) detections — history×batch plus within-batch — and
+    overwrite this batch's own state delta. Empty triggers return
+    before any write."""
     if not batch_df.take(1):
         return  # a file-less batch dir would poison later schema reads
     spark = batch_df.sparkSession
-    require_layout_marker(spark, state_dir, FM_LAYOUT)
-    keyed = (
-        audio_fpk(batch_df, id_col, payload_col)
-        .withColumn("fm", _fm(F.col("fpk")))
-        .persist()
-    )
+    require_layout_marker(spark, state_dir, "rows")
+    keyed = audio_fpk(batch_df, id_col, payload_col).persist()
     try:
-        # ≤ min(batch-distinct-fpk, FPK_MOD) values by construction —
-        # bounded collect
-        fms = [r[0] for r in keyed.select("fm").distinct().collect()]
-        hist = (
-            read_state(
-                spark,
-                state_dir,
-                exclude_batch=batch_id,
-                part_filter=F.col("fm").isin(fms) if fms else F.lit(False),
-            )
-            if fms
-            else None
-        )
+        hist = read_state(spark, state_dir, exclude_batch=batch_id, schema=keyed.schema)
         new = keyed.select(F.col("media_id").alias("b_id"), "fpk")
         legs = []
         if hist is not None:
@@ -169,17 +131,18 @@ def audio_dup_micro_batch(
         ).distinct().write.mode("overwrite").parquet(
             os.path.join(pairs_dir, f"batch={batch_id}")
         )
-        aligned_repartition(keyed, "fm").write.partitionBy("fm").mode(
-            "overwrite"
-        ).parquet(os.path.join(state_dir, f"batch={batch_id}"))
-        write_layout_marker(spark, state_dir, FM_LAYOUT)
+        # one file: keyed is cached and the pairs write computed it
+        keyed.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(state_dir, f"batch={batch_id}")
+        )
+        write_layout_marker(spark, state_dir, "rows")
         write_layout_marker(spark, pairs_dir, "rows")
     finally:
         keyed.unpersist()
 
 
 def read_audio_fpk_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """Unified (media_id, fpk, fm) view; None when no state."""
+    """Unified (media_id, fpk) view; None when no state."""
     return read_state(spark, state_dir)
 
 
@@ -216,8 +179,6 @@ def stream_audio_dups(
 
 
 __all__ = [
-    "FM_LAYOUT",
-    "FPK_MOD",
     "audio_dup_micro_batch",
     "audio_fpk",
     "read_audio_dups",

@@ -16,19 +16,14 @@ operators/embed_lsh.py — the same rows the oracle-audited batch twin
 (q_k109) rides, so the streamed index is probe-compatible with the
 audited semantics. State rides streaming/state.py:
 
-- ``idx_dir/batch=N/ebm=M/`` — (id, band, bh) signature bucket rows,
-  Hive-partitioned by ``ebm = pmod(xxhash64(band, bh), EB_MOD)``. The
-  scheme's bands·2^bits cells hash onto EB_MOD = 256 directories, so
-  the probe reads only the dirs the batch's own signatures touch —
-  ≤ min(batch·bands, 256) per trigger however much history exists.
-  Writes are partition-aligned (one file per touched ebm per batch —
-  the r11 small-files rule).
-- ``vecs_dir/batch=N/vh=D/`` — accumulated vectors, partitioned by
-  ``vh = pmod(xxhash64(id), VEC_MOD)``. The exact cosine verify
-  re-reads vectors ONLY for candidate-touching ids: candidates
-  materialize first, their ≤ VEC_MOD distinct vh values collect
-  (bounded by the LAYOUT), and the vector read prunes to those dirs —
-  the dedup corpus-dir contract.
+- ``idx_dir/batch=N/`` — (id, band, bh) signature bucket rows, one
+  file per trigger (the state.py layout contract). The probe is a
+  plain join of the batch's signatures against the history's
+  (id, band, bh) columns on (band, bh).
+- ``vecs_dir/batch=N/`` — accumulated vectors, one file per trigger.
+  The exact cosine verify re-reads vectors ONLY for candidate ids: the
+  history vectors are semi-joined to the candidate ids before their
+  norms are computed.
 - ``pairs_dir/batch=N/`` — (i, j, cosine) detections, NORMALIZED to
   ``i = least, j = greatest`` (the audio-guard ADVICE r11 lesson:
   pair identity must be slicing-independent).
@@ -43,9 +38,13 @@ history leg filters ``a != b`` so a cross-batch re-delivery of the
 same id (an upstream id-contract violation) degrades to a no-op.
 
 Scheme constants (bands, bits, RH_SCALE — hence the signature values)
-and EB_MOD/VEC_MOD are LAYOUT constants of the persisted index:
-changing them makes history unprobeable, so a change is a state
-rebuild, exactly like BH_MOD.
+are LAYOUT constants of the persisted index: changing them makes
+history unprobeable, so a change is a state rebuild
+(``migrate_embed_layout``). The index dir declares the scheme in its
+marker, ``rows-rh-<bands>x<bits>``; the vector dir declares ``rows``.
+Each writer refuses a dir declaring any other layout — such as the
+hash-bucketed ``rows-ebm-<bands>x<bits>`` / ``rows-vh`` of earlier
+versions — before it writes anything.
 
 Replay: every write overwrites this batch's own ``batch=N`` dirs and
 the probe excludes them by construction; an EMPTY trigger returns
@@ -62,7 +61,6 @@ from pyspark.sql import functions as F
 from cdc_publisher_spark.functions.vectors import cosine_with_norms, l2_norm
 from cdc_publisher_spark.operators.embed_lsh import RH_BANDS, RH_BITS, rh_band_rows
 from cdc_publisher_spark.streaming.state import (
-    aligned_repartition,
     batch_dirs,
     compact_dir,
     compacted_upto,
@@ -70,29 +68,17 @@ from cdc_publisher_spark.streaming.state import (
     read_layout_marker,
     read_state,
     replace_layout_marker,
+    require_layout_marker,
     start_state_stream,
     vacuum_state,
     write_layout_marker,
     write_manifest,
 )
 
-#: Hive fans (layout constants — see module docstring). The scheme's
-#: bands·2^bits = 2048 possible (band, bh) cells hash 8-to-1 onto
-#: EB_MOD = 256 directories — cell-exact pruning would mean up to
-#: 2048 tiny files per batch (the small-files failure the audio
-#: guard's fan sizing balances against); at 8 cells/dir the probe
-#: still reads ≤ min(touched cells, 256) dirs per trigger.
-EB_MOD = 256
-VEC_MOD = 64
-
 #: Production default: re-upload / mirror-crawl territory. The suite
 #: and the fixture-facing tests run at the q_k21 audit threshold 0.42
 #: (random synthetic embeddings have no true near-dups).
 EMBED_COS_THRESHOLD = 0.9
-
-
-def _ebm(band, bh) -> F.Column:
-    return F.pmod(F.xxhash64(band, bh), F.lit(EB_MOD)).cast("int")
 
 
 #: Transitional marker held by ``migrate_embed_layout`` while the
@@ -101,20 +87,16 @@ def _ebm(band, bh) -> F.Column:
 #: loudly on restart (recovery: re-run the migration — it is
 #: idempotent) instead of an old-scheme consumer passing the marker
 #: check against half-migrated data (r14 ADVICE).
-EBM_MIGRATING_MARKER = "rows-ebm-migrating"
+MIGRATING_MARKER = "rows-rh-migrating"
 
 
 def scheme_layout(bands: int, bits: int) -> str:
     """The signature index's ``_layout.`` marker name for a banding
-    scheme: ALWAYS versioned, ``rows-ebm-<bands>x<bits>`` — the
-    rows-fm-1024 precedent: the layout constant rides the marker NAME,
-    so probing a 12-bit index with 8-bit signatures fails loudly at
-    the next trigger instead of silently matching nothing."""
-    return f"rows-ebm-{bands}x{bits}"
-
-
-def _vh(col) -> F.Column:
-    return F.pmod(F.xxhash64(col), F.lit(VEC_MOD)).cast("int")
+    scheme: ALWAYS versioned, ``rows-rh-<bands>x<bits>`` — the layout
+    constant rides the marker NAME, so probing a 12-bit index with
+    8-bit signatures fails loudly at the next trigger instead of
+    silently matching nothing."""
+    return f"rows-rh-{bands}x{bits}"
 
 
 def embed_dup_micro_batch(
@@ -129,11 +111,10 @@ def embed_dup_micro_batch(
     bands: int = RH_BANDS,
     bits: int = RH_BITS,
 ) -> None:
-    """foreachBatch body: sign the batch once, probe the persisted
-    signature index reading ONLY the touched ``ebm=`` cells,
-    exact-verify cosine reading ONLY the candidate ids' ``vh=`` vector
-    partitions, emit normalized (i, j, cosine) detections, and
-    overwrite this batch's own state deltas.
+    """foreachBatch body: sign the batch once, join it against the
+    persisted signature index on (band, bh), exact-verify cosine over
+    the candidate ids' vectors only, emit normalized (i, j, cosine)
+    detections, and overwrite this batch's own state deltas.
 
     ``bands``/``bits`` must match the persisted index's scheme (the
     ``scheme_layout`` marker enforces it): change the banding via
@@ -145,7 +126,7 @@ def embed_dup_micro_batch(
     spark = batch_df.sparkSession
     layout = scheme_layout(bands, bits)
     marker = read_layout_marker(spark, idx_dir)  # raises on conflict
-    if marker == EBM_MIGRATING_MARKER:
+    if marker == MIGRATING_MARKER:
         raise ValueError(
             f"{idx_dir} holds an INTERRUPTED scheme migration (marker "
             f"{marker!r}): the segment swap / manifest flip did not "
@@ -160,24 +141,14 @@ def embed_dup_micro_batch(
             "(spark, idx_dir, vecs_dir, bands=..., bits=...) with the "
             "stream stopped, then restart with the new scheme"
         )
+    require_layout_marker(spark, vecs_dir, "rows")
     base = (
         batch_df.select(id_col, vec_col).dropDuplicates([id_col]).persist()
     )
     try:
-        sig = (
-            rh_band_rows(base, id_col, vec_col, bands=bands, bits=bits)
-            .withColumn("ebm", _ebm(F.col("band"), F.col("bh")))
-            .persist()
-        )
+        sig = rh_band_rows(base, id_col, vec_col, bands=bands, bits=bits).persist()
         try:
-            # ≤ EB_MOD distinct values by construction — bounded collect
-            ebms = [r[0] for r in sig.select("ebm").distinct().collect()]
-            hist_idx = read_state(
-                spark,
-                idx_dir,
-                exclude_batch=batch_id,
-                part_filter=F.col("ebm").isin(ebms),
-            )
+            hist_idx = read_state(spark, idx_dir, exclude_batch=batch_id, schema=sig.schema)
             probe = sig.select(F.col(id_col).alias("_b"), "band", "bh")
             legs = []
             if hist_idx is not None:
@@ -203,28 +174,18 @@ def embed_dup_micro_batch(
                 .persist()
             )
             try:
-                # candidate ids' vh values: ≤ VEC_MOD distinct by
-                # construction — bounded collect
-                vhs = [
-                    r[0]
-                    for r in cand.select(F.explode(F.array("i", "j")).alias("_i"))
-                    .select(_vh("_i").alias("_v"))
-                    .distinct()
-                    .collect()
-                ]
-                hist_vecs = (
-                    read_state(
-                        spark,
-                        vecs_dir,
-                        exclude_batch=batch_id,
-                        part_filter=F.col("vh").isin(vhs) if vhs else F.lit(False),
-                    )
-                    if vhs
-                    else None
-                )
                 vecs = base
+                hist_vecs = read_state(
+                    spark, vecs_dir, exclude_batch=batch_id, schema=base.schema
+                )
                 if hist_vecs is not None:
-                    vecs = hist_vecs.select(id_col, vec_col).unionByName(base)
+                    # only candidate ids' vectors reach the norm
+                    cand_ids = cand.select(F.explode(F.array("i", "j")).alias(id_col))
+                    vecs = (
+                        hist_vecs.select(id_col, vec_col)
+                        .join(cand_ids.distinct(), id_col, "left_semi")
+                        .unionByName(base)
+                    )
                 v = vecs.select(
                     F.col(id_col).alias("_vid"),
                     F.col(vec_col).alias("_v"),
@@ -262,21 +223,16 @@ def embed_dup_micro_batch(
                 )
             finally:
                 cand.unpersist()
-            # partition-ALIGNED deltas (the r11 small-files rule),
-            # count-pinned (r14, state.aligned_repartition)
-            aligned_repartition(
-                base.withColumn("vh", _vh(F.col(id_col))), "vh"
-            ).write.partitionBy("vh").mode("overwrite").parquet(
+            # one file each: base and sig are cached and the pairs
+            # write computed them
+            base.coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(vecs_dir, f"batch={batch_id}")
             )
-            aligned_repartition(sig, "ebm").write.partitionBy("ebm").mode(
-                "overwrite"
-            ).parquet(os.path.join(idx_dir, f"batch={batch_id}"))
-            for d, lay in (
-                (pairs_dir, "rows"),
-                (vecs_dir, "rows-vh"),
-            ):
-                write_layout_marker(spark, d, lay)
+            sig.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(idx_dir, f"batch={batch_id}")
+            )
+            write_layout_marker(spark, pairs_dir, "rows")
+            write_layout_marker(spark, vecs_dir, "rows")
             write_layout_marker(spark, idx_dir, layout)
         finally:
             sig.unpersist()
@@ -308,7 +264,7 @@ def migrate_embed_layout(
     vec_col: str = "embedding",
     vacuum: bool = True,
 ) -> int:
-    """Offline rebuild of the ebm-partitioned signature index at a new
+    """Offline rebuild of the signature index at a new
     ``(bands, bits)`` banding, from the STORED vectors (r13 VERDICT
     ask #2).
 
@@ -317,8 +273,7 @@ def migrate_embed_layout(
     (``vecs_dir``, compact segment + live batches), re-sign at the new
     scheme, restore each row's original ``batch`` id by joining on the
     vector id (faithful replay-exclusion semantics), fold into
-    ``_compact/upto=max_batch`` with the same ``ebm=`` inner
-    partitioning the probes prune on, flip the manifest, and REPLACE
+    ``_compact/upto=max_batch``, flip the manifest, and REPLACE
     the layout marker with ``scheme_layout(bands, bits)`` — the marker
     is what makes a stale-scheme consumer fail loudly at its next
     trigger. Returns the new watermark batch id, or -1 when there is
@@ -361,24 +316,18 @@ def migrate_embed_layout(
             # same multiplicity the per-trigger writes produced (a
             # redelivered id sits in two batch dirs; keep both rows)
             .join(vecs.select(id_col, "batch"), id_col)
-            .withColumn("ebm", _ebm(F.col("band"), F.col("bh")))
         )
         tmp = os.path.join(idx_dir, "_compact", "_migrating")
         target = os.path.join(idx_dir, "_compact", f"upto={m}")
-        (
-            aligned_repartition(sig, "ebm")
-            .write.partitionBy("ebm")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
+        sig.write.mode("overwrite").parquet(tmp)
         # Transitional marker BEFORE the visible swap (r14 ADVICE):
         # a crash anywhere between here and the final marker leaves
-        # ``rows-ebm-migrating``, which mismatches EVERY consumer
+        # ``rows-rh-migrating``, which mismatches EVERY consumer
         # scheme loudly on restart — instead of new-scheme data under
         # the old marker, which a restarted old-scheme consumer would
         # pass and then silently detect nothing. Recovery: re-run
         # this migration (idempotent — the segment is re-derived).
-        replace_layout_marker(spark, idx_dir, EBM_MIGRATING_MARKER)
+        replace_layout_marker(spark, idx_dir, MIGRATING_MARKER)
         fs, _ = hadoop_fs(spark, idx_dir)
         jvm = spark._jvm
         jtarget = jvm.org.apache.hadoop.fs.Path(target)
@@ -402,8 +351,7 @@ def compact_embed_state(
     upto_batch: int,
     vacuum: bool = False,
 ) -> None:
-    """Compact all three dirs under their declared layouts, keeping
-    each one's prune partitioning."""
+    """Compact all three dirs under their declared layouts."""
     for d in (idx_dir, vecs_dir, pairs_dir):
         compact_dir(spark, d, upto_batch)
         if vacuum:
@@ -445,10 +393,8 @@ def stream_embedding_dups(
 
 
 __all__ = [
-    "EB_MOD",
-    "EBM_MIGRATING_MARKER",
     "EMBED_COS_THRESHOLD",
-    "VEC_MOD",
+    "MIGRATING_MARKER",
     "scheme_layout",
     "compact_embed_state",
     "embed_dup_micro_batch",

@@ -15,33 +15,23 @@ partitioning of the corpus into batches equals the full batch-mode
 q_k2 pair set: the stream is a partition of the pairs, not an
 approximation.
 
-State layout (VERDICT r5 ask #3 — per-trigger I/O must follow the
-PROBE, not the corpus) rides the batch-addressed layer in
-streaming/state.py: every write is an OVERWRITE of a ``batch=N``
-subdirectory (replay-idempotent), compaction flips a crash-safe
-manifest marker, and WITHIN each batch directory the data is
-Hive-partitioned on the key the next trigger will prune by:
+State rides the batch-addressed layer in streaming/state.py: every
+write is an OVERWRITE of a ``batch=N`` subdirectory (replay-
+idempotent), compaction flips a crash-safe manifest marker, and each
+row-state ``batch=N`` is ONE parquet file with no inner partition
+column (the state.py layout contract):
 
-- ``index_dir/batch=N/bhm=M/`` — the persisted ``lsh_buckets`` frame,
-  sub-partitioned by ``bhm = pmod(bh, bh_mod)`` ONLY (r11; band and
-  bh ride as data columns). Partitioning by band too was pure
-  overhead: every document populates every band by construction
-  (band is the signature slice index), so band= directories never
-  pruned a probe while multiplying the per-batch file count by
-  ``bands``. A micro-batch's probe touches at most ``bands × bh_mod``
-  distinct bhm values — a CONSTANT, and for small probes far fewer —
-  so the index read prunes to those directories regardless of how
-  many batches of history exist, and each batch write lands ≤
-  ``bh_mod`` partition-aligned files (one per touched bhm). The dir
-  declares this layout with the ``rows-bhm`` marker; the writer and
-  ``compact_dedup_state`` refuse a dir declaring any other layout
-  before writing anything.
-- ``corpus_dir/batch=N/dh=D/`` — accumulated documents, sub-
-  partitioned by ``dh = pmod(xxhash64(doc_id), doc_mod)``. The exact
-  verify re-reads text ONLY for candidate-touching docs; candidates
-  are materialized first, their ≤ ``doc_mod`` distinct dh values
-  collected (bounded by construction), and the corpus read prunes to
-  those directories before verify_candidates' semi-join.
+- ``index_dir/batch=N/`` — the persisted ``lsh_buckets`` frame
+  (doc_id, band, bh). The probe is a plain join of the batch's bucket
+  rows against the history's on (band, bh).
+- ``corpus_dir/batch=N/`` — accumulated (doc_id, text) rows. The
+  exact verify shingles history text ONLY for candidate docs: the
+  history rows are semi-joined to the candidate ids before
+  ``shingle_rows``.
+
+Both dirs declare the ``rows`` layout; the writer refuses a dir
+declaring any other layout — such as the hash-bucketed ``rows-bhm`` /
+``rows-dh`` of earlier versions — before it reads or writes anything.
 - ``bloom_dir/batch=N/`` — an id Bloom filter DELTA: the batch's
   doc_ids hashed into ``ID_BLOOM_BITS`` positions, packed into
   (word, mask) bigint rows by one ``bit_or`` aggregate (≤
@@ -63,10 +53,10 @@ sketch cost: the accumulated id Bloom filter — O(ID_BLOOM_BITS/8)
 bytes at ANY corpus size — is broadcast to the batch, ids it cannot
 contain (no false negatives, pytest-pinned across compaction) pass
 straight through, and the exact anti-join runs ONLY on the
-Bloom-positive remainder, reading ONLY the corpus ``dh=`` partitions
-those maybe-dup ids hash into. Per-trigger guard cost is therefore
-O(batch + maybe_dups × touched_dh_dirs), never O(history) — the
-q_k81 pattern (queries/llm_sketch.py) wired in as infrastructure.
+Bloom-positive remainder, against the history's id column alone. Per
+trigger the guard costs O(batch) for the screen plus one scan of that
+one narrow column — the q_k81 pattern (queries/llm_sketch.py) wired in
+as infrastructure.
 The bloom dir is written beside the corpus dir from the first trigger
 on, so a missing bloom dir next to a corpus that holds OTHER batches
 means the bloom state was lost or never written — the guard raises
@@ -82,9 +72,8 @@ multi-table applier (operators/cdc_apply.py).
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_publisher_spark.operators.minhash import (
@@ -97,11 +86,9 @@ from cdc_publisher_spark.operators.minhash import (
 from cdc_publisher_spark.functions.text import shingle_rows
 from cdc_publisher_spark.streaming.state import (
     LAYOUTS,
-    aligned_repartition,
     batch_dirs,
     compact_dir,
     compacted_upto,
-    inheriting_local_properties,
     read_state,
     require_layout_marker,
     start_state_stream,
@@ -110,36 +97,20 @@ from cdc_publisher_spark.streaming.state import (
     write_layout_marker,
 )
 
-#: Sub-partition fans. bh_mod bounds the probe's index read at
-#: bands × BH_MOD directories per trigger; doc_mod bounds the verify's
-#: corpus read at DOC_MOD directories. Both are layout constants — a
-#: deployment picks them once (changing them requires a compaction
-#: rewrite, exactly like changing a table's bucketing).
-BH_MOD = 64
-DOC_MOD = 64
-
 #: Id-Bloom layout constants (the cross-batch guard's pre-screen).
 #: 2^20 bits = 128 KiB broadcast; at 10^5 history ids and k=4 hashes
 #: the false-positive rate is (1 - e^(-kn/m))^k ≈ 1e-2 (ADVICE r7
 #: corrected the earlier ~2e-3 figure) — and a false positive only
-#: costs one id's membership in the (partition-pruned) exact
-#: anti-join, never a correctness error, so ~1% of fresh ids paying
-#: the join is an acceptable operating point. Like BH_MOD these are
-#: layout constants: resizing means rebuilding the bloom dir (one
-#: id-column scan).
+#: costs one id's membership in the exact anti-join, never a
+#: correctness error, so ~1% of fresh ids paying the join is an
+#: acceptable operating point. These are layout constants: resizing
+#: means rebuilding the bloom dir (one id-column scan).
 ID_BLOOM_BITS = 1 << 20
 ID_BLOOM_HASHES = 4
 
-#: The LSH index dir's one layout: row state partitioned by bhm.
-INDEX_LAYOUT = "rows-bhm"
-
-
-def _dh(col: str | Column) -> Column:
-    return F.pmod(F.xxhash64(col), F.lit(DOC_MOD)).cast("int")
-
 
 # --------------------------------------------------------------------------
-# Cross-batch id guard: Bloom pre-screen + pruned exact anti-join
+# Cross-batch id guard: Bloom pre-screen + exact anti-join
 # --------------------------------------------------------------------------
 def _bloom_positions(df: DataFrame, id_col: str) -> DataFrame:
     """One row per (input row, hash i) with the bloom word/mask the id
@@ -223,28 +194,19 @@ def _guard_parts(
     (clean, maybe, survivors) where ``clean`` ids the Bloom ruled out
     of history (NO corpus read for them), ``maybe`` is the
     Bloom-positive remainder — the ONLY rows the exact anti-join ever
-    sees — and ``survivors`` is ``maybe`` minus true history ids,
-    checked against a corpus read pruned to the maybe ids' dh
-    partitions. maybe/survivors are None when no bloom state exists
-    (``guarded_batch`` decides whether that is a fresh stream)."""
-    bloom = read_state(spark, bloom_dir, exclude_batch=batch_id)
+    sees — and ``survivors`` is ``maybe`` anti-joined against the
+    history's id column. maybe/survivors are None when no bloom state
+    exists (``guarded_batch`` decides whether that is a fresh stream)."""
+    bloom = read_state(
+        spark, bloom_dir, exclude_batch=batch_id, schema=id_bloom_delta(batch, id_col).schema
+    )
     if bloom is None:
         return batch, None, None
     merged = LAYOUTS["bitor-mask"].merge(bloom.select("word", "mask"))
     flagged = bloom_flag(batch, merged, id_col)
     clean = flagged.filter(~F.col("maybe")).drop("maybe")
     maybe = flagged.filter(F.col("maybe")).drop("maybe")
-    # ≤ DOC_MOD distinct dh values by construction — bounded collect;
-    # executing it also tells us whether any maybe rows exist at all
-    dhs = [r[0] for r in maybe.select(_dh(id_col).alias("_d")).distinct().collect()]
-    if not dhs:
-        return clean, maybe, maybe
-    seen = read_state(
-        spark,
-        corpus_dir,
-        exclude_batch=batch_id,
-        part_filter=F.col("dh").isin(dhs),
-    )
+    seen = read_state(spark, corpus_dir, exclude_batch=batch_id, schema=batch.schema)
     if seen is None:  # bloom exists but corpus vanished: nothing to dedup against
         return clean, maybe, maybe
     survivors = maybe.join(seen.select(id_col), id_col, "anti")
@@ -313,27 +275,11 @@ def dedup_micro_batch(
     bloom_dir: str | None = None,
     compact_every: int | None = None,
     vacuum_grace: int | None = None,
-    overlap_writes: bool = True,
 ) -> None:
-    """foreachBatch body: sign the batch once, probe the persisted
-    index READING ONLY the bhm partitions the probe touches,
-    materialize candidates, then read corpus text ONLY from the dh
-    partitions holding candidate docs, verify, and overwrite this
+    """foreachBatch body: sign the batch once, join its bucket rows
+    against the persisted index, materialize candidates, shingle the
+    history text of candidate docs only, verify, and overwrite this
     batch's own state partitions.
-
-    ``overlap_writes`` (default on, r16 — guide §2.6): the corpus,
-    bloom-delta and index writes depend only on the persisted batch /
-    bucket frames, not on the candidate probe or the verify, so they
-    run CONCURRENTLY with the candidate→verify→pairs leg instead of
-    serially after it — the trigger's wall was a chain of sequential
-    driver-side job barriers (MONITORS.md: 14.8 s/trigger at 500 rows
-    vs 20.2 s at 20k — fixed work, not row work). Write ORDER within a
-    trigger is not correctness-bearing: replay excludes this batch's
-    dirs everywhere (path-filtered live, row-filtered compact), and the
-    offsets only commit after EVERY write returns (a failure in any
-    leg re-raises before the checkpoint commit). ``False`` restores the
-    sequential body — the equality pin in tests runs both and compares
-    the resulting state byte-for-semantics.
 
     Idempotence under replay: every write targets ``.../batch=N`` with
     mode("overwrite"), so a re-delivered batch (crash after any subset
@@ -368,11 +314,15 @@ def dedup_micro_batch(
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # the deduped batch feeds the guard (whose dh-collect executes
-        # eagerly) and then five downstream jobs this trigger (existence
-        # probe, signing, verify union, corpus write, bloom delta) —
-        # cache both stages so the dropDuplicates shuffle and the
-        # guard's bloom probe run once, not per consumer
+        # refuse a dir declared under any other layout BEFORE any read
+        # or write: mixing layouts inside one dir breaks the union read
+        for d in (corpus_dir, index_dir):
+            require_layout_marker(spark, d, "rows")
+        # the deduped batch feeds the guard and then five downstream
+        # jobs this trigger (existence probe, signing, verify union,
+        # corpus write, bloom delta) — cache both stages so the
+        # dropDuplicates shuffle and the guard's bloom probe run once,
+        # not per consumer
         base = batch_df.select(id_col, text_col).dropDuplicates([id_col]).persist()
         try:
             batch = base
@@ -382,7 +332,7 @@ def dedup_micro_batch(
             try:
                 _dedup_micro_batch_body(
                     spark, batch, batch_id, corpus_dir, index_dir, pairs_dir, bdir,
-                    id_col, text_col, threshold, overlap_writes,
+                    id_col, text_col, threshold,
                 )
             finally:
                 batch.unpersist()
@@ -408,13 +358,9 @@ def _dedup_micro_batch_body(
     id_col: str,
     text_col: str,
     threshold: float,
-    overlap_writes: bool = True,
 ) -> None:
     if not batch.take(1):
         return
-    # refuse an index dir declared under any other layout BEFORE any
-    # write: mixing layouts inside one dir breaks the probe's union read
-    require_layout_marker(spark, index_dir, INDEX_LAYOUT)
     # shingle the batch ONCE: the same hashed shingle rows feed the
     # signature aggregation here AND the exact verify below (r14
     # VERDICT ask #4a — the verify leg previously re-shingled the
@@ -422,173 +368,73 @@ def _dedup_micro_batch_body(
     # posexplode + per-doc window, the chain's most expensive linear
     # stage)
     tok_batch = shingle_rows(batch, id_col, text_col, 3, hashed=True).persist()
-    new_buckets = lsh_buckets(minhash_signatures_from_shingles(tok_batch, id_col))
-    new_buckets = new_buckets.withColumn(
-        "bhm", F.pmod(F.col("bh"), F.lit(BH_MOD)).cast("int")
-    ).persist()
+    new_buckets = lsh_buckets(minhash_signatures_from_shingles(tok_batch, id_col)).persist()
     try:
-        # ≤ bands × BH_MOD rows by construction — the driver-side
-        # collect is bounded by the LAYOUT, not the data
-        touched = [
-            (r["band"], r["bhm"])
-            for r in new_buckets.select("band", "bhm").distinct().collect()
-        ]
-        by_band: dict[int, list[int]] = {}
-        for band, bhm in touched:
-            by_band.setdefault(band, []).append(bhm)
-        probe_pred = None
-        for band, bhms in sorted(by_band.items()):
-            leg = (F.col("band") == band) & F.col("bhm").isin(bhms)
-            probe_pred = leg if probe_pred is None else (probe_pred | leg)
-
+        probe = new_buckets.select(id_col, "band", "bh")
         # metadata-only signal: manifest or any other batch dir present
         # (corpus is written before index each batch, so its presence
         # is the authoritative "history exists" marker)
-        history_exists = _has_history(spark, corpus_dir, batch_id)
-        def pairs_job() -> None:
-            if history_exists:
-                history_index = read_state(
-                    spark, index_dir, exclude_batch=batch_id, part_filter=probe_pred
-                )
-                probe = new_buckets.select(id_col, "band", "bh")
-                if history_index is None:
-                    # index lost out-of-band: rebuild from the history docs
-                    hd = read_state(
-                        spark, corpus_dir, exclude_batch=batch_id
-                    ).select(id_col, text_col)
-                    history_index = lsh_buckets(
-                        minhash_signatures(hd, id_col, text_col)
-                    )
-                buckets = history_index.select(id_col, "band", "bh").unionByName(probe)
-                cands = probe_candidate_pairs(probe, buckets, id_col).persist()
-                try:
-                    # candidate docs' dh values: ≤ DOC_MOD distinct by
-                    # construction — bounded driver collect
-                    cand_dhs = [
-                        r[0]
-                        for r in cands.select(
-                            F.explode(F.array("d1", "d2")).alias("_i")
-                        )
-                        .select(_dh("_i").alias("_dh"))
-                        .distinct()
-                        .collect()
-                    ]
-                    history_docs = read_state(
-                        spark,
-                        corpus_dir,
-                        exclude_batch=batch_id,
-                        part_filter=F.col("dh").isin(cand_dhs)
-                        if cand_dhs
-                        else F.lit(False),
-                    )
-                    # history docs must be shingled from stored text (only
-                    # the candidate-touching dh partitions were read); the
-                    # batch side reuses tok_batch verbatim
-                    tok = shingle_rows(
-                        history_docs.select(id_col, text_col),
-                        id_col,
-                        text_col,
-                        3,
-                        hashed=True,
-                    ).unionByName(tok_batch)
-                    pairs = verify_candidates_from_shingles(
-                        tok, cands, id_col, threshold
-                    )
-                    pairs.write.mode("overwrite").parquet(
-                        os.path.join(pairs_dir, f"batch={batch_id}")
-                    )
-                finally:
-                    cands.unpersist()
-            else:
-                # first trigger: no history to probe — within-batch pairs
-                # only. Reuse the ALREADY-SIGNED bucket rows (new_buckets,
-                # persisted above for the index write) as both probe and
-                # bucket side instead of re-shingling + re-signing the
-                # batch through incremental_near_duplicates (r14: the
-                # per-consumer breakdown showed the duplicate sign pass
-                # costing ~2-3 s of the first trigger at 8k rows);
-                # identical semantics — probe_candidate_pairs(probe,
-                # probe) is exactly the distinct within-batch pair set.
-                probe = new_buckets.select(id_col, "band", "bh")
-                pairs = verify_candidates_from_shingles(
-                    tok_batch,
-                    probe_candidate_pairs(probe, probe, id_col),
-                    id_col,
-                    threshold,
-                )
-                pairs.write.mode("overwrite").parquet(
-                    os.path.join(pairs_dir, f"batch={batch_id}")
-                )
-
-        # Partition-ALIGNED writes (r11): repartition on the Hive key
-        # before partitionBy, so each dh= dir gets exactly one file per
-        # batch instead of one per (input-partition, dh) pair — without
-        # this a P-partition batch writes up to P×DOC_MOD tiny files
-        # per trigger and the next trigger's pruned probe pays a
-        # listing+task per file (measured 3-8x trigger latency at
-        # local[32]; at 100 TB it is the classic small-files failure).
-        # The hash-shuffle on dh costs one exchange of the batch — rows
-        # of one dh land in one task, so file count == touched dh dirs.
-        def corpus_job() -> None:
-            aligned_repartition(
-                batch.withColumn("dh", _dh(id_col)), "dh"
-            ).write.partitionBy(
-                "dh"
-            ).mode("overwrite").parquet(os.path.join(corpus_dir, f"batch={batch_id}"))
-
-        # bloom delta rides beside the corpus write: any batch whose
-        # offsets commit has both (replay rewrites both), so the filter
-        # covers exactly the committed corpus ids — the guard's
-        # no-false-negative invariant
-        def bloom_job() -> None:
-            id_bloom_delta(batch, id_col).write.mode("overwrite").parquet(
-                os.path.join(bloom_dir, f"batch={batch_id}")
+        if _has_history(spark, corpus_dir, batch_id):
+            history_docs = read_state(
+                spark, corpus_dir, exclude_batch=batch_id, schema=batch.schema
+            ).select(id_col, text_col)
+            history_index = read_state(
+                spark, index_dir, exclude_batch=batch_id, schema=new_buckets.schema
             )
-
-        # Index dirs partition on bhm ALONE (r11).
-        # Every document populates every band by construction (band is
-        # the signature slice index), so band= dirs never prune a probe
-        # — the only selective key is bhm. bhm-only dirs cut the
-        # per-batch file count from ~bands × BH_MOD populated cells to
-        # ≤ BH_MOD (aligned: one file per touched bhm), while a small
-        # probe's read still prunes to its ≤ bands distinct bhm values;
-        # band and bh stay data columns the probe join filters in-scan.
-        def index_job() -> None:
-            aligned_repartition(new_buckets, "bhm").write.partitionBy(
-                "bhm"
-            ).mode("overwrite").parquet(os.path.join(index_dir, f"batch={batch_id}"))
-
-        if not overlap_writes:
-            pairs_job(); corpus_job(); bloom_job(); index_job()
+            if history_index is None:
+                # index lost out-of-band: rebuild from the history docs
+                history_index = lsh_buckets(
+                    minhash_signatures(history_docs, id_col, text_col)
+                )
+            buckets = history_index.select(id_col, "band", "bh").unionByName(probe)
+            cands = probe_candidate_pairs(probe, buckets, id_col).persist()
+            cand_ids = cands.select(F.explode(F.array("d1", "d2")).alias(id_col))
+            # history docs are shingled from stored text, candidate docs
+            # only; the batch side reuses tok_batch verbatim
+            tok = shingle_rows(
+                history_docs.join(cand_ids.distinct(), id_col, "left_semi"),
+                id_col,
+                text_col,
+                3,
+                hashed=True,
+            ).unionByName(tok_batch)
         else:
-            # guide §2.6 — the three state writes are independent of
-            # the candidate→verify→pairs leg (they read only persisted
-            # frames); submit them from a small pool so their jobs
-            # back-fill the executor while the verify leg's driver-side
-            # barriers (bounded collects, state listings) leave it
-            # idle. Every write targets this batch's OWN batch=N dir
-            # and offsets commit only after all four return, so the
-            # replay contract is unchanged; a failure in any leg
-            # re-raises here and fails the trigger. Per-thread JVM
-            # local-property clones (state.inheriting_local_properties)
-            # keep UI attribution and query.stop() cancellation
-            # working under PYSPARK_PIN_THREAD.
-            run_inheriting = inheriting_local_properties(spark)
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                futs = [
-                    pool.submit(run_inheriting, j)
-                    for j in (corpus_job, bloom_job, index_job)
-                ]
-                pairs_job()
-                for f in futs:
-                    f.result()
+            # first trigger: no history to probe — within-batch pairs
+            # only. Reuse the ALREADY-SIGNED bucket rows as both probe
+            # and bucket side instead of re-shingling + re-signing the
+            # batch through incremental_near_duplicates (r14: the
+            # duplicate sign pass cost ~2-3 s of the first trigger at
+            # 8k rows); probe_candidate_pairs(probe, probe) is exactly
+            # the distinct within-batch pair set.
+            cands = probe_candidate_pairs(probe, probe, id_col).persist()
+            tok = tok_batch
+        try:
+            verify_candidates_from_shingles(tok, cands, id_col, threshold).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(pairs_dir, f"batch={batch_id}"))
+        finally:
+            cands.unpersist()
+        # one file each: batch and new_buckets are cached and the pairs
+        # write computed them. The bloom delta rides beside the corpus
+        # write: any batch whose offsets commit has both (replay
+        # rewrites both), so the filter covers exactly the committed
+        # corpus ids — the guard's no-false-negative invariant
+        batch.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(corpus_dir, f"batch={batch_id}")
+        )
+        id_bloom_delta(batch, id_col).write.mode("overwrite").parquet(
+            os.path.join(bloom_dir, f"batch={batch_id}")
+        )
+        new_buckets.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(index_dir, f"batch={batch_id}")
+        )
         # declare each dir's merge algebra for the generic `maintain`
         # pass (explicit markers, not schema guessing — ADVICE r9)
         for d, layout in (
             (pairs_dir, "rows"),
-            (corpus_dir, "rows-dh"),
+            (corpus_dir, "rows"),
             (bloom_dir, "bitor-mask"),
-            (index_dir, INDEX_LAYOUT),
+            (index_dir, "rows"),
         ):
             write_layout_marker(spark, d, layout)
     finally:
@@ -605,14 +451,12 @@ def compact_dedup_state(
     vacuum: bool = False,
     bloom_dir: str | None = None,
 ) -> None:
-    """Compact all four dedup state dirs to ``upto_batch``, keeping
-    each dir's prune key as its inner partitioning; the bloom dir
-    pre-merges to one (word, mask) row set (bit_or is the filter's own
+    """Compact all four dedup state dirs to ``upto_batch``; the bloom
+    dir pre-merges to one (word, mask) row set (bit_or is the filter's own
     merge operator — lossless). Vacuuming superseded dirs is opt-in
     (ADVICE r6: deleting them under an unsynchronized concurrent
     reader is the one unsafe interleaving; see state.vacuum_state)."""
     bdir = bloom_dir or default_bloom_dir(corpus_dir)
-    require_layout_marker(spark, index_dir, INDEX_LAYOUT)
     dirs = [corpus_dir, index_dir, pairs_dir]
     if batch_dirs(spark, bdir) or compacted_upto(spark, bdir) is not None:
         dirs.append(bdir)

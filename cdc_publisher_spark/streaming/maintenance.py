@@ -84,7 +84,6 @@ class MaintenancePlan:
 
     path: str
     kind: str  # sum | hll | bloom | min | rows | unrecognized
-    partition_cols: tuple[str, ...]
     current_upto: int | None
     target_upto: int | None  # None == nothing to do
     live_batches: int  # batch dirs above the current watermark
@@ -172,7 +171,7 @@ def plan_maintenance(
     for d in discover_state_dirs(spark, state_root):
         marker = conflict = None
         try:
-            # a damaged dir (two markers, or mixed inner partition
+            # a damaged dir (two markers, or mixed partition
             # structures Spark refuses to union-read) must become a
             # skip-with-note, not crash the whole walk — maintenance is
             # the scheduled job that has to keep running for every
@@ -189,7 +188,7 @@ def plan_maintenance(
             own_max, prev, upto_batch, committed, assume_all_committed
         )
         if spec is None:
-            kind, pcols = "unrecognized", ()
+            kind = "unrecognized"
             target = None
             note = conflict or (
                 "no layout marker; skipped"
@@ -197,7 +196,7 @@ def plan_maintenance(
                 else f"layout marker {marker!r} does not fit the dir's schema; skipped"
             )
         else:
-            kind, pcols = spec.kind, spec.partition_cols
+            kind = spec.kind
         live = [k for k in dirs if prev is None or k > prev]
         superseded = [k for k in dirs if target is not None and k <= target] + [
             k for k in dirs if target is None and prev is not None and k <= prev
@@ -206,7 +205,6 @@ def plan_maintenance(
             MaintenancePlan(
                 path=d,
                 kind=kind,
-                partition_cols=pcols,
                 current_upto=prev,
                 target_upto=target,
                 live_batches=len(live),

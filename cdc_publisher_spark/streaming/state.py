@@ -18,28 +18,32 @@ was promoted out of ``incremental_dedup`` (VERDICT r6 ask #2) so the
 contract is explicit and the consumers can evolve independently.
 
 Every layout a writer may declare lives in ONE table, ``LAYOUTS``:
-its marker name, prune partition columns, required columns, display
-kind and merge fold. Readers, in-stream compaction (``compact_dir``
-via ``state_trigger``) and ``maintain`` all take the layout from it.
+its marker name, required columns, display kind and merge fold.
+Readers, in-stream compaction (``compact_dir`` via ``state_trigger``)
+and ``maintain`` all take the layout from it.
 
 The layout contract
 -------------------
 A *state dir* contains one subdirectory per micro-batch::
 
-    state_dir/batch=N/[inner partition dirs...]
+    state_dir/batch=N/part-*.parquet
 
 Every write is an OVERWRITE of the writer's own ``batch=N`` dir, so
 foreachBatch's at-least-once replay is idempotent: a re-delivered
 batch rewrites its own partition byte-for-byte instead of appending
-duplicates. Inner partition columns (``bhm``/``dh`` for the
-dedup dirs) are the keys the next trigger will prune by — readers pass
-a ``part_filter`` and the scan reads O(touched cells), not O(corpus).
+duplicates. Row state is written as ONE file per ``batch=N`` with no
+inner partition column — one delta file per state dir per version,
+the Structured Streaming paper's shape — and a probe is a plain join
+against the history, reading only the columns it needs. Hash-bucket
+subdirectories pruned nothing once a trigger held more than ~10 rows
+(their bucket values already cover most of the fan) while multiplying
+the file count by the fan.
 
 Compaction rewrites batches ≤ a watermark into
-``state_dir/_compact/upto=N`` (same inner partitioning, optionally
-pre-merged) and flips a ``_compacted_upto=N`` manifest MARKER file —
-the value lives in the file NAME, not its content, so a marker is
-valid the instant its create() is visible. The flip creates the new
+``state_dir/_compact/upto=N`` (optionally pre-merged) and flips a
+``_compacted_upto=N`` manifest MARKER file — the value lives in the
+file NAME, not its content, so a marker is valid the instant its
+create() is visible. The flip creates the new
 marker first (two markers for an instant — max wins, which is the
 new, fully-written segment) and removes older markers afterwards; a
 crash anywhere leaves at least one valid marker covering a
@@ -72,6 +76,7 @@ from typing import TypeVar
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 MANIFEST_PREFIX = "_compacted_upto="
 LAYOUT_PREFIX = "_layout."
@@ -81,12 +86,11 @@ T = TypeVar("T")
 
 @dataclass(frozen=True)
 class LayoutSpec:
-    """One declared state layout: how its dir is pruned, validated,
-    displayed and merged."""
+    """One declared state layout: how its dir is validated, displayed
+    and merged."""
 
     name: str  # the ``_layout.<name>`` marker writers declare
     kind: str  # display family: sum | hll | bloom | min | rows
-    partition_cols: tuple[str, ...]  # inner prune partitioning
     required: frozenset  # columns the layout cannot exist without
     # the state's own merge fold, or None for row state (rewritten
     # verbatim); compact_state pins the folded rows' ``batch``
@@ -121,7 +125,7 @@ CTX_METRICS = (
 )
 
 #: The one spec every scheme-versioned embed-index marker maps to.
-_EBM_FAMILY = "rows-ebm-<bands>x<bits>"
+_RH_FAMILY = "rows-rh-<bands>x<bits>"
 
 #: Name → spec for every layout a writer may declare. Writers pass
 #: these exact names to ``write_layout_marker``:
@@ -136,16 +140,12 @@ _EBM_FAMILY = "rows-ebm-<bands>x<bits>"
 #: - ``min-fb``      → min ``fb`` (first-seen vocabulary).
 #: - ``sum-ctx``     → long-sum of every ``CTX_METRICS`` column per
 #:                     ``budget`` (context-length economics).
-#: - ``rows``        → row state, rewritten verbatim (dedup, audio and
-#:                     embed pairs).
-#: - ``rows-dh``     → row state partitioned by ``dh`` (dedup corpus).
-#: - ``rows-bhm``    → row state partitioned by ``bhm`` (dedup LSH
-#:                     index).
-#: - ``rows-ebm-<bands>x<bits>`` / ``rows-vh`` → embedding near-dup
-#:                     monitor: signature index cells (the marker names
-#:                     the banding scheme) / vector store.
-#: - ``rows-fm-1024`` → audio-dup fpk state partitioned by ``fm`` (the
-#:                     marker name carries the modulus).
+#: - ``rows``        → row state, rewritten verbatim (dedup corpus,
+#:                     index and pairs; audio fpk and pairs; embed
+#:                     vectors and pairs).
+#: - ``rows-rh-<bands>x<bits>`` → the embedding near-dup monitor's
+#:                     signature index (the marker names the banding
+#:                     scheme), rewritten verbatim.
 #:
 #: Every fold is the state's own merge operator, so folding is
 #: lossless; it groups by every column except its value columns and
@@ -153,32 +153,26 @@ _EBM_FAMILY = "rows-ebm-<bands>x<bits>"
 LAYOUTS: dict[str, LayoutSpec] = {
     s.name: s
     for s in (
-        LayoutSpec("sum-cnt", "sum", (), frozenset({"cnt"}), _fold(cnt=_long_sum)),
+        LayoutSpec("sum-cnt", "sum", frozenset({"cnt"}), _fold(cnt=_long_sum)),
         LayoutSpec(
             "sum-sn",
             "sum",
-            (),
             frozenset({"label", "p", "s", "n"}),
             _fold(s=lambda c: F.sum(c).cast("decimal(30,8)"), n=_long_sum),
         ),
-        LayoutSpec("max-M", "hll", (), frozenset({"M"}), _fold(M=F.max)),
+        LayoutSpec("max-M", "hll", frozenset({"M"}), _fold(M=F.max)),
         LayoutSpec(
-            "bitor-mask", "bloom", (), frozenset({"word", "mask"}), _fold(mask=F.bit_or)
+            "bitor-mask", "bloom", frozenset({"word", "mask"}), _fold(mask=F.bit_or)
         ),
-        LayoutSpec("min-fb", "min", (), frozenset({"fb"}), _fold(fb=F.min)),
+        LayoutSpec("min-fb", "min", frozenset({"fb"}), _fold(fb=F.min)),
         LayoutSpec(
             "sum-ctx",
             "sum",
-            (),
             frozenset({"budget", *CTX_METRICS}),
             _fold(**{m: _long_sum for m in CTX_METRICS}),
         ),
-        LayoutSpec("rows", "rows", (), frozenset(), None),
-        LayoutSpec("rows-dh", "rows", ("dh",), frozenset({"dh"}), None),
-        LayoutSpec("rows-bhm", "rows", ("bhm",), frozenset({"bhm"}), None),
-        LayoutSpec(_EBM_FAMILY, "rows", ("ebm",), frozenset({"ebm"}), None),
-        LayoutSpec("rows-vh", "rows", ("vh",), frozenset({"vh"}), None),
-        LayoutSpec("rows-fm-1024", "rows", ("fm",), frozenset({"fm"}), None),
+        LayoutSpec("rows", "rows", frozenset(), None),
+        LayoutSpec(_RH_FAMILY, "rows", frozenset({"band", "bh"}), None),
     )
 }
 
@@ -189,36 +183,14 @@ def fitting_layout(columns: Sequence[str], marker: str | None) -> LayoutSpec | N
     an unknown one, or one whose required columns the schema lacks (a
     marker pasted onto the wrong dir must not trigger the wrong merge).
 
-    Scheme-versioned embed-index markers (``rows-ebm-<bands>x<bits>``)
-    all compact identically: a verbatim rewrite keeping the ``ebm=``
-    dirs, whose values were assigned under the dir's own scheme."""
-    if marker is not None and re.fullmatch(r"rows-ebm-\d+x\d+", marker):
-        marker = _EBM_FAMILY
+    Scheme-versioned embed-index markers (``rows-rh-<bands>x<bits>``)
+    all compact identically: a verbatim rewrite."""
+    if marker is not None and re.fullmatch(r"rows-rh-\d+x\d+", marker):
+        marker = _RH_FAMILY
     spec = LAYOUTS.get(marker) if marker is not None else None
     if spec is None or not spec.required <= set(columns):
         return None
     return spec
-
-
-def aligned_repartition(df: DataFrame, *cols) -> DataFrame:
-    """Hash-repartition on ``cols`` with the partition COUNT pinned to
-    ``spark.sql.shuffle.partitions`` — the shuffle every
-    partition-aligned state write must ride.
-
-    An unpinned ``df.repartition(col)`` is an AQE-replannable shuffle:
-    measured in r14 (the per-consumer monitor breakdown), AQE expanded
-    the audio monitor's 1024-dir fan write into ~one task per distinct
-    value, 14-18 s per 8k-row trigger vs 2.5-3.3 s with the count
-    pinned at 32 (interleaved ×3). Pinning keeps the
-    one-file-per-partition-dir invariant — each value still hashes to
-    exactly one task — at a bounded task count, and the same rule
-    holds on a real cluster: the aligned write wants ~cores tasks,
-    never ~distinct-values tasks."""
-    try:
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # 'auto' or unset — fall back to cluster width
-        n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *[F.col(c) if isinstance(c, str) else c for c in cols])
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -379,36 +351,40 @@ def read_state(
     spark: SparkSession,
     path: str,
     exclude_batch: int | None = None,
-    part_filter: Column | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame | None:
     """Read a batch-addressed state dir: the compacted segment (if the
     manifest names one) unioned with the live ``batch=N`` dirs above
     the compaction watermark. ``exclude_batch`` drops the current
     batch everywhere (path-level for live dirs — no read at all — and
     row-level for the compact segment, covering replay-after-compact).
-    ``part_filter`` is a predicate on inner partition columns: on the
-    live read it prunes DIRECTORIES via partition pruning, which is
-    the whole point of the layout. None == state absent."""
+    ``schema`` is the state's columns without ``batch`` (a writer
+    passes the schema of the frame it writes; ``batch int`` is added
+    here): with it, building the frame runs no Spark job; without it,
+    Spark reads parquet footers in one job to infer the schema.
+    None == state absent."""
     upto = compacted_upto(spark, path)
     live = [
         d
         for (k, d) in batch_dirs(spark, path)
         if (upto is None or k > upto) and k != exclude_batch
     ]
+    if schema is not None:
+        schema = StructType([*schema.fields, StructField("batch", IntegerType())])
+
+    def reader():
+        return spark.read if schema is None else spark.read.schema(schema)
+
     parts: list[DataFrame] = []
     if upto is not None:
-        parts.append(
-            spark.read.parquet(os.path.join(path, "_compact", f"upto={upto}"))
-        )
+        parts.append(reader().parquet(os.path.join(path, "_compact", f"upto={upto}")))
     if live:
-        parts.append(spark.read.option("basePath", path).parquet(*live))
+        parts.append(reader().option("basePath", path).parquet(*live))
     if not parts:
         return None
     df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
     if exclude_batch is not None:
         df = df.filter(F.col("batch") != exclude_batch)
-    if part_filter is not None:
-        df = df.filter(part_filter)
     return df
 
 
@@ -464,12 +440,10 @@ def compact_state(
     spark: SparkSession,
     state_dir: str,
     upto_batch: int,
-    partition_cols: tuple[str, ...] = (),
     merge: Callable[[DataFrame], DataFrame] | None = None,
 ) -> None:
     """Rewrite batches ≤ ``upto_batch`` (plus any previous compact
-    segment) into ``_compact/upto=N`` with the same inner
-    partitioning, then flip the manifest marker.
+    segment) into ``_compact/upto=N``, then flip the manifest marker.
 
     ``merge`` optionally pre-aggregates the folded rows (a layout's
     ``LayoutSpec.merge``) — lossless when it is the state's own merge
@@ -497,17 +471,9 @@ def compact_state(
     df = df.filter(F.col("batch") <= upto_batch)
     if merge is not None:
         df = merge(df).withColumn("batch", F.lit(upto_batch))
-    target = os.path.join(state_dir, "_compact", f"upto={upto_batch}")
-    if partition_cols:
-        # partition-aligned write (r11, same rationale as the dedup
-        # per-batch writes): one file per partition value in the
-        # compacted segment, not one per (task, value) pair —
-        # count-pinned (r14, aligned_repartition docstring)
-        df = aligned_repartition(df, *partition_cols)
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(target)
+    df.write.mode("overwrite").parquet(
+        os.path.join(state_dir, "_compact", f"upto={upto_batch}")
+    )
     write_manifest(spark, state_dir, upto_batch)
 
 
@@ -515,7 +481,7 @@ def compact_dir(spark: SparkSession, state_dir: str, upto_batch: int) -> None:
     """Compact one state dir to ``upto_batch`` under its DECLARED
     layout: read the state once, read the dir's ``_layout.`` marker,
     check the layout's required columns, then ``compact_state`` with
-    the spec's partition columns and merge. Raises on two markers
+    the spec's merge. Raises on two markers
     (``read_layout_marker``), on no state, and on a marker that is
     missing, unknown or does not fit the schema — a dir is never
     compacted under a guessed merge. ``maintain`` plans first and
@@ -530,7 +496,7 @@ def compact_dir(spark: SparkSession, state_dir: str, upto_batch: int) -> None:
             f"{state_dir}: layout marker {marker!r} is missing, unknown or "
             "does not fit the dir's schema — refusing to compact it"
         )
-    compact_state(spark, state_dir, upto_batch, spec.partition_cols, spec.merge)
+    compact_state(spark, state_dir, upto_batch, spec.merge)
 
 
 def vacuum_state(
@@ -681,7 +647,6 @@ __all__ = [
     "LAYOUT_PREFIX",
     "LayoutSpec",
     "MANIFEST_PREFIX",
-    "aligned_repartition",
     "batch_dirs",
     "checkpoint_committed_upto",
     "compact_dir",

@@ -1,7 +1,7 @@
 """LSH-index layout guard: one layout per state dir.
 
-An index dir holds ``batch=N/bhm=M`` partitions and declares them with
-the ``_layout.rows-bhm`` marker. A dir whose marker is anything else —
+An index dir holds one parquet file per ``batch=N`` and declares it
+with the ``_layout.rows`` marker. A dir whose marker is anything else —
 a foreign layout, or two markers after an accumulate bug — must make
 the writer fail fast before any partial write, maintenance must skip
 it with a note, and ``replace_layout_marker`` must REPLACE the marker
@@ -16,7 +16,6 @@ import os
 import pytest
 
 from cdc_publisher_spark.streaming.incremental_dedup import (
-    INDEX_LAYOUT,
     dedup_micro_batch,
     read_dedup_state,
 )
@@ -28,6 +27,7 @@ from cdc_publisher_spark.streaming.state import (
     write_layout_marker,
 )
 
+INDEX_LAYOUT = "rows"
 BASE = " ".join(f"tok{i}" for i in range(30))
 BATCH0 = [(1, BASE), (2, "q " * 25)]
 BATCH1 = [(3, BASE + " aa")]

@@ -379,58 +379,46 @@ def test_dedup_micro_batch_replay_is_idempotent(spark, tmp_path):
     assert idx.count() == 3 * 16  # one bucket row set per doc, no dups
 
 
-def test_dedup_probe_index_read_prunes_to_touched_buckets(spark, tmp_path):
-    """VERDICT r5 ask #3 done-criterion: a micro-batch's index read
-    touches only the partition directories its probe hashes into —
-    the scanned file count equals the files under the matching
-    directories and is a fraction of the total index, no matter how
-    many history batches exist. Since r11 the prune key is ``bhm``
-    alone (band= dirs never pruned — every doc populates every band),
-    so 'touched' means the probe's distinct bhm values: ≤ bands per
-    probe doc, here ~16 of BH_MOD=64 dirs for a one-doc probe."""
+def test_dedup_probe_reads_one_file_per_history_batch(spark, tmp_path):
+    """Each index ``batch=N`` is one parquet file with no inner
+    partition dirs, so after 5 triggers the probe's history read scans
+    exactly one file per history batch — and the streamed pair set
+    equals the one-shot run over the same documents (a near-dup family
+    spread over all 5 batches keeps it non-vacuous)."""
     import glob
 
     from pyspark.sql import functions as F
 
-    from cdc_publisher_spark.operators.minhash import (
-        lsh_buckets,
-        minhash_signatures,
-    )
+    from cdc_publisher_spark.operators.minhash import lsh_buckets, minhash_signatures
     from cdc_publisher_spark.plans import scan_file_counts
     from cdc_publisher_spark.streaming import incremental_dedup as inc
     from cdc_publisher_spark.streaming.state import read_state
 
+    family = " ".join(f"fam{j}" for j in range(30))
+    rows = [
+        (b * 100 + i, f"{family} x{b}" if i == 0 else " ".join(f"w{b}_{i}_{j}" for j in range(30)))
+        for b in range(5)
+        for i in range(8)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
     dirs = [str(tmp_path / d) for d in ("corpus", "idx", "pairs")]
     for b in range(5):
-        rows = [
-            (b * 100 + i, " ".join(f"w{b}_{i}_{j}" for j in range(30)))
-            for i in range(8)
-        ]
-        bdf = spark.createDataFrame(rows, "doc_id long, text string")
-        inc.dedup_micro_batch(bdf, b, *dirs)
+        inc.dedup_micro_batch(docs.filter(F.floor(F.col("doc_id") / 100) == b), b, *dirs)
 
-    probe_doc = spark.createDataFrame(
-        [(999, " ".join(f"p{j}" for j in range(30)))], "doc_id long, text string"
-    )
-    buckets = lsh_buckets(minhash_signatures(probe_doc)).withColumn(
-        "bhm", F.pmod(F.col("bh"), F.lit(inc.BH_MOD)).cast("int")
-    )
-    touched = {(r.band, r.bhm) for r in buckets.select("band", "bhm").distinct().collect()}
-    pred = None
-    for band, bhm in sorted(touched):
-        leg = (F.col("band") == band) & (F.col("bhm") == bhm)
-        pred = leg if pred is None else (pred | leg)
+    for b in range(5):
+        files = glob.glob(f"{dirs[1]}/batch={b}/*.parquet")
+        dirs_in = [f for f in glob.glob(f"{dirs[1]}/batch={b}/*") if os.path.isdir(f)]
+        assert len(files) == 1 and not dirs_in, (files, dirs_in)
+    schema = lsh_buckets(minhash_signatures(docs)).schema
+    assert scan_file_counts(read_state(spark, dirs[1], schema=schema)) == [5]
 
-    pruned = read_state(spark, dirs[1], part_filter=pred)
-    scanned = sum(scan_file_counts(pruned))
-    touched_bhms = {m for _, m in touched}
-    matching = sum(
-        len(glob.glob(f"{dirs[1]}/batch=*/bhm={m}/*.parquet"))
-        for m in touched_bhms
-    )
-    total = len(glob.glob(f"{dirs[1]}/batch=*/bhm=*/*.parquet"))
-    assert scanned == matching, (scanned, matching)
-    assert scanned < total / 2, (scanned, total, len(touched_bhms))
+    def pairs(d):
+        return sorted(map(tuple, inc.read_dedup_state(spark, d).select("d1", "d2", "jaccard").collect()))
+
+    twin = [str(tmp_path / "twin" / d) for d in ("corpus", "idx", "pairs")]
+    inc.dedup_micro_batch(docs, 0, *twin)
+    got = pairs(dirs[2])
+    assert got == pairs(twin[2]) and len(got) == 10, got
 
 
 def test_dedup_state_compaction_preserves_pairs_and_vacuums(spark, tmp_path):
@@ -559,7 +547,7 @@ def test_dedup_compact_rerun_after_partial_crash_converges(spark, tmp_path):
     }
 
     # simulated crash: only the corpus dir compacted + flipped
-    compact_state(spark, dirs[0], upto_batch=1, partition_cols=("dh",))
+    compact_state(spark, dirs[0], upto_batch=1)
     assert _compacted_upto(spark, dirs[0]) == 1
     assert _compacted_upto(spark, dirs[1]) is None
 

@@ -1,7 +1,5 @@
 """Round-16 optimization pins.
 
-- dedup trigger write-overlap (incremental_dedup.overlap_writes):
-  state equality vs the sequential body, two triggers deep;
 - minhash one-shingle-pass verify: q_k3's plan must contain exactly
   ONE documents scan under the shingle subtrees (exchange reuse), with
   output already pinned by the oracle sweep.
@@ -9,49 +7,7 @@
 
 from __future__ import annotations
 
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from cdc_publisher_spark.streaming.incremental_dedup import dedup_micro_batch
-from cdc_publisher_spark.streaming.state import read_state
 from cdc_publisher_spark.tables import load
-
-
-def _rows(spark, d, cols):
-    df = read_state(spark, d)
-    assert df is not None, d
-    return sorted(map(tuple, df.select(*cols).collect()))
-
-
-@pytest.mark.parametrize("guard", [True, False])
-def test_overlapped_writes_state_equals_sequential(spark, sf_smoke, tmp_path, guard):
-    docs = load(spark, sf_smoke, "documents").select("doc_id", "text")
-    t0 = docs.filter(F.col("doc_id") < 250)
-    t1 = docs.filter(F.col("doc_id") >= 250)
-    roots = {}
-    for tag, overlap in (("seq", False), ("ovl", True)):
-        root = str(tmp_path / tag)
-        dirs = {k: os.path.join(root, k) for k in ("corpus", "idx", "pairs", "bloom")}
-        for bid, df in ((0, t0), (1, t1)):
-            dedup_micro_batch(
-                df, bid, dirs["corpus"], dirs["idx"], dirs["pairs"],
-                bloom_dir=dirs["bloom"], overlap_writes=overlap,
-                guard_cross_batch=guard,
-            )
-        roots[tag] = dirs
-    for name, cols in (
-        ("pairs", ["d1", "d2", "jaccard", "batch"]),
-        ("corpus", ["doc_id", "dh", "batch"]),
-        ("idx", ["doc_id", "band", "bh", "bhm", "batch"]),
-        ("bloom", ["word", "mask", "batch"]),
-    ):
-        a = _rows(spark, roots["seq"][name], cols)
-        b = _rows(spark, roots["ovl"][name], cols)
-        assert a == b, f"{name}: overlap and sequential state diverge"
-    # non-vacuous: the second trigger found cross-batch work to do
-    assert _rows(spark, roots["seq"]["pairs"], ["d1", "d2"]), "no pairs at all"
 
 
 def test_minhash_near_duplicates_shingles_once(spark, sf_smoke, monkeypatch):

@@ -1,14 +1,15 @@
 """Audio-dup monitor (streaming/audio_monitor.py): the eighth state
 consumer. Pins the completeness theorem (every exact-dup pair emitted
 exactly once, in the trigger where the LATER clip arrives — union over
-any slicing equals the batch-mode same-fingerprint pair set), probe
-pruning to the touched fm= partitions, replay idempotence under the
-overwrite discipline, and row-state compaction with the fm prune key
-preserved (maintain recognizes the rows-fm-1024 marker)."""
+any slicing equals the batch-mode same-fingerprint pair set), one
+state file per trigger, replay idempotence under the overwrite
+discipline, and row-state compaction (maintain recognizes the ``rows``
+marker)."""
 
 from __future__ import annotations
 
 import glob
+import os
 
 from pyspark.sql import functions as F
 
@@ -113,15 +114,11 @@ def test_audio_dup_replay_and_probe_pruning(spark, tmp_path):
         sorted(map(tuple, read_audio_fpk_state(spark, state).collect()))
         == before_state
     )
-    # partition-aligned fm layout on disk: every state file sits under
-    # an fm= dir, one file per touched fm per batch
-    files = glob.glob(f"{state}/batch=*/fm=*/*.parquet")
-    assert files, "state must be Hive-partitioned by fm"
-    per_dir = {}
-    for f in files:
-        d = f.rsplit("/", 1)[0]
-        per_dir[d] = per_dir.get(d, 0) + 1
-    assert all(v == 1 for v in per_dir.values()), per_dir
+    # one parquet file per batch dir, no inner partition dirs
+    for k, _ in batch_dirs(spark, state):
+        files = glob.glob(f"{state}/batch={k}/*.parquet")
+        dirs_in = [f for f in glob.glob(f"{state}/batch={k}/*") if os.path.isdir(f)]
+        assert len(files) == 1 and not dirs_in, (files, dirs_in)
 
 
 def test_audio_state_compaction_and_maintain(spark, tmp_path):
@@ -142,8 +139,9 @@ def test_audio_state_compaction_and_maintain(spark, tmp_path):
         (r.media_id, r.fpk) for r in read_audio_fpk_state(spark, state).collect()
     )
     assert after == before
-    # the compacted segment keeps the fm prune partitioning
-    assert glob.glob(f"{state}/_compact/upto=1/fm=*/*.parquet")
+    # the compacted segment holds plain files, no inner partition dirs
+    assert glob.glob(f"{state}/_compact/upto=1/*.parquet")
+    assert not glob.glob(f"{state}/_compact/upto=1/*=*")
     # maintain recognizes both dirs by marker and folds the rest
     from cdc_publisher_spark.streaming.maintenance import run_maintenance
 

@@ -3,13 +3,14 @@ the ninth state consumer (VERDICT r11 ask #4). Pins the completeness
 theorem — the union of per-batch emissions over ANY slicing equals the
 batch twin ``embedding_neardup_banded`` pair set (the audio-guard
 completeness contract) — plus normalized pair identity, replay
-idempotence, empty-batch no-op, partition-aligned ebm/vh layouts,
-compaction with the prune keys preserved, and maintain recognition of
-the rows-ebm-<bands>x<bits> / rows-vh markers."""
+idempotence, empty-batch no-op, one index and one vector file per
+trigger, compaction, and maintain recognition of the
+rows-rh-<bands>x<bits> / rows markers."""
 
 from __future__ import annotations
 
 import glob
+import os
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -90,7 +91,7 @@ def test_embed_dup_replay_and_layouts(spark, tmp_path):
         embed_dup_micro_batch(s, b, *dirs, threshold=THRESHOLD)
     before_pairs = _got_pairs(spark, dirs[2])
     before_vecs = sorted(
-        (r.vec_id, r.vh) for r in read_embed_vec_state(spark, dirs[1]).collect()
+        (r.vec_id, r.batch) for r in read_embed_vec_state(spark, dirs[1]).collect()
     )
     # replay the LAST trigger — the reachable crash shape: a batch
     # only re-delivers when its offsets never committed, so no later
@@ -101,21 +102,17 @@ def test_embed_dup_replay_and_layouts(spark, tmp_path):
     assert _got_pairs(spark, dirs[2]) == before_pairs
     assert (
         sorted(
-            (r.vec_id, r.vh)
+            (r.vec_id, r.batch)
             for r in read_embed_vec_state(spark, dirs[1]).collect()
         )
         == before_vecs
     )
-    # partition-aligned layouts: every file under its prune dir, one
-    # file per touched partition per batch (the r11 small-files rule)
-    for root, key in ((dirs[0], "ebm"), (dirs[1], "vh")):
-        files = glob.glob(f"{root}/batch=*/{key}=*/*.parquet")
-        assert files, (root, key)
-        per_dir = {}
-        for f in files:
-            d = f.rsplit("/", 1)[0]
-            per_dir[d] = per_dir.get(d, 0) + 1
-        assert all(v == 1 for v in per_dir.values()), per_dir
+    # one parquet file per batch dir, no inner partition dirs
+    for root in dirs[:2]:
+        for k, _ in batch_dirs(spark, root):
+            files = glob.glob(f"{root}/batch={k}/*.parquet")
+            dirs_in = [f for f in glob.glob(f"{root}/batch={k}/*") if os.path.isdir(f)]
+            assert len(files) == 1 and not dirs_in, (files, dirs_in)
 
 
 def test_embed_bits_migration_mid_stream(spark, tmp_path):
@@ -150,7 +147,7 @@ def test_embed_bits_migration_mid_stream(spark, tmp_path):
 
     m = migrate_embed_layout(spark, dirs[0], dirs[1], bands=8, bits=12)
     assert m == 0  # the watermark is the last ingested batch
-    assert read_layout_marker(spark, dirs[0]) == scheme_layout(8, 12) == "rows-ebm-8x12"
+    assert read_layout_marker(spark, dirs[0]) == scheme_layout(8, 12) == "rows-rh-8x12"
     idx = read_embed_index(spark, dirs[0])
     # rebuilt signatures: every stored vector re-signed, original batch
     # ids preserved, and genuinely 12-bit (some bucket value needs >8 bits)
@@ -216,9 +213,10 @@ def test_embed_compaction_and_maintain(spark, tmp_path):
         for r in read_embed_index(spark, dirs[0]).collect()
     )
     assert after == before
-    # prune partitioning survives compaction
-    assert glob.glob(f"{dirs[0]}/_compact/upto=1/ebm=*/*.parquet")
-    assert glob.glob(f"{dirs[1]}/_compact/upto=1/vh=*/*.parquet")
+    # the compacted segments hold plain files, no inner partition dirs
+    for d in dirs[:2]:
+        assert glob.glob(f"{d}/_compact/upto=1/*.parquet")
+        assert not glob.glob(f"{d}/_compact/upto=1/*=*")
     # maintain recognizes the markers and folds the rest
     from cdc_publisher_spark.streaming.maintenance import run_maintenance
 
@@ -260,7 +258,7 @@ def test_embed_stream_wiring_end_to_end(spark, tmp_path):
 
 def test_embed_markers_are_versioned_even_at_code_defaults(spark, tmp_path):
     """r14 ADVICE: the code-default scheme must write the VERSIONED
-    marker — mapping (RH_BANDS, RH_BITS) to bare ``rows-ebm`` meant a
+    marker — mapping (RH_BANDS, RH_BITS) to a bare marker meant a
     deployment that changed the constants left both sides at the same
     marker name, reproducing the silent match-nothing mismatch."""
     from cdc_publisher_spark.streaming.embed_monitor import scheme_layout
@@ -269,13 +267,13 @@ def test_embed_markers_are_versioned_even_at_code_defaults(spark, tmp_path):
     vecs = _vectors(spark)
     dirs = _dirs(tmp_path)
     embed_dup_micro_batch(vecs, 0, *dirs, threshold=THRESHOLD)
-    assert read_layout_marker(spark, dirs[0]) == scheme_layout(8, 8) == "rows-ebm-8x8"
+    assert read_layout_marker(spark, dirs[0]) == scheme_layout(8, 8) == "rows-rh-8x8"
 
 
 def test_embed_interrupted_migration_fails_loudly(spark, tmp_path):
     """r14 ADVICE: the transitional marker is written BEFORE the
     segment swap / manifest flip, so a crash in that window leaves
-    ``rows-ebm-migrating`` — which mismatches EVERY consumer scheme on
+    ``rows-rh-migrating`` — which mismatches EVERY consumer scheme on
     restart — instead of new-scheme data under the old marker (which a
     restarted old-scheme consumer would pass and silently detect
     nothing). Re-running the migration recovers."""
@@ -301,7 +299,7 @@ def test_embed_interrupted_migration_fails_loudly(spark, tmp_path):
     finally:
         em.write_manifest = real
 
-    assert read_layout_marker(spark, dirs[0]) == em.EBM_MIGRATING_MARKER
+    assert read_layout_marker(spark, dirs[0]) == em.MIGRATING_MARKER
     # BOTH the old-scheme and new-scheme consumer refuse the dir
     for bands, bits in ((8, 8), (8, 12)):
         with pytest.raises(ValueError, match="INTERRUPTED"):
@@ -312,6 +310,6 @@ def test_embed_interrupted_migration_fails_loudly(spark, tmp_path):
     # new scheme — detections equal the batch twin
     m = em.migrate_embed_layout(spark, dirs[0], dirs[1], bands=8, bits=12)
     assert m == 0
-    assert read_layout_marker(spark, dirs[0]) == "rows-ebm-8x12"
+    assert read_layout_marker(spark, dirs[0]) == "rows-rh-8x12"
     embed_dup_micro_batch(second, 1, *dirs, threshold=THRESHOLD, bands=8, bits=12)
     assert _got_pairs(spark, dirs[2]) == _expected_pairs(vecs)
