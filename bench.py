@@ -240,8 +240,8 @@ def _bench_streaming(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from cdc_publisher_spark.sources.files import read_dml_stream
-    from cdc_publisher_spark.streaming.metrics import CdcMetricsListener, with_wire_metrics
-    from cdc_publisher_spark.streaming.pipeline import split_wire
+    from cdc_publisher_spark.streaming.metrics import CdcMetricsListener
+    from cdc_publisher_spark.streaming.pipeline import run_file_to_parquet
     from cdc_publisher_spark.tables import load
 
     wd = tempfile.mkdtemp(prefix="cdc_bench_")
@@ -270,15 +270,10 @@ def _bench_streaming(spark, sf_dir: str):
         # warm-up pass — cold start skews sf0.1 timings by ~2x here)
         warm_src = os.path.join(wd, "warm_src")
         dml.limit(2_000).coalesce(1).write.mode("overwrite").text(warm_src)
-        wg, wdead = split_wire(read_dml_stream(spark, warm_src))
-        wq = (
-            wg.unionByName(wdead)
-            .writeStream.format("parquet")
-            .option("path", os.path.join(wd, "warm_out"))
-            .option("checkpointLocation", os.path.join(wd, "warm_ckpt"))
-            .partitionBy("topic")
-            .outputMode("append")
-            .start()
+        wq = run_file_to_parquet(
+            read_dml_stream(spark, warm_src),
+            os.path.join(wd, "warm_out"),
+            os.path.join(wd, "warm_ckpt"),
         )
         wq.processAllAvailable()
         wq.stop()
@@ -286,27 +281,21 @@ def _bench_streaming(spark, sf_dir: str):
         listener = CdcMetricsListener()
         spark.streams.addListener(listener)
         t0 = time.perf_counter()
-        good, dead = split_wire(read_dml_stream(spark, src))
-        wire = with_wire_metrics(good.unionByName(dead))
-        q = (
-            wire.writeStream.format("parquet")
-            .option("path", os.path.join(wd, "out"))
-            .option("checkpointLocation", os.path.join(wd, "ckpt"))
-            .partitionBy("topic")
-            .outputMode("append")
-            .queryName("cdc_bench_pipeline")
-            .start()
+        q = run_file_to_parquet(
+            read_dml_stream(spark, src), os.path.join(wd, "out"), os.path.join(wd, "ckpt")
         )
         q.processAllAvailable()
         q.stop()
         elapsed = time.perf_counter() - t0
+        # the listener keys an unnamed query by its id
+        qid = str(q.id)
         for _ in range(50):  # progress events deliver async
-            if listener.totals.get("cdc_bench_pipeline"):
+            if listener.totals.get(qid):
                 break
             time.sleep(0.1)
         spark.streams.removeListener(listener)
-        totals = listener.totals.get("cdc_bench_pipeline", {})
-        latest = listener.latest.get("cdc_bench_pipeline", {})
+        totals = listener.totals.get(qid, {})
+        latest = listener.latest.get(qid, {})
         metrics = {
             "dequeue_count": totals.get("dequeue_count"),
             "enqueue_count": totals.get("enqueue_count"),

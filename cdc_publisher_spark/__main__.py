@@ -29,7 +29,7 @@ is the engine's equivalent surface, thin wrappers over the library:
            --assume-all-committed] [--vacuum [--grace N]] [--dry-run]
                             one scheduled-job maintenance pass: discover
                             every batch-addressed state dir under the
-                            root (dedup corpus/index/pairs/bloom, HLL,
+                            root (dedup corpus/index/pairs, HLL,
                             count-min, exposure, centroid-drift,
                             vocabulary — recognized by each dir's
                             _layout. marker) and compact each with its

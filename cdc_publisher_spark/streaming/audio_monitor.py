@@ -10,8 +10,8 @@ incoming clips carry a fingerprint the corpus has ALREADY ingested
 under another id (re-uploads, mirror crawls, renamed assets — the
 dominant media-dup mode a crawl actually sees). Near-dup mining at
 Hamming > 0 stays a batch job (q_k106's banded join); the stream
-guard is the audio twin of the dedup id-Bloom: cheap, exact, per
-trigger.
+guard is the audio twin of the dedup cross-batch id guard: cheap,
+exact, per trigger.
 
 State is ONE dir of ``(media_id, fpk)`` rows — fpk the 64-bit digest
 of the clip's full 256-bit fingerprint (frame words in frame order) —

@@ -33,8 +33,8 @@ is O(distinct grams), not O(batches x grams).
 
 Cross-batch doc redelivery (the same doc_id in two DIFFERENT batch
 ids) would double its grams' counts — that is the incremental dedup
-guard's territory (streaming/incremental_dedup.py id Bloom); run this
-monitor downstream of it, the same contract q_k79's pipeline
+guard's territory (streaming/incremental_dedup.py id anti-join); run
+this monitor downstream of it, the same contract q_k79's pipeline
 documents.
 
 Batch/stream equivalence: the report computed from merged state

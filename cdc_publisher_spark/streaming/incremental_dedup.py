@@ -28,39 +28,27 @@ column (the state.py layout contract):
   exact verify shingles history text ONLY for candidate docs: the
   history rows are semi-joined to the candidate ids before
   ``shingle_rows``.
-
-Both dirs declare the ``rows`` layout; the writer refuses a dir
-declaring any other layout — such as the hash-bucketed ``rows-bhm`` /
-``rows-dh`` of earlier versions — before it reads or writes anything.
-- ``bloom_dir/batch=N/`` — an id Bloom filter DELTA: the batch's
-  doc_ids hashed into ``ID_BLOOM_BITS`` positions, packed into
-  (word, mask) bigint rows by one ``bit_or`` aggregate (≤
-  ``ID_BLOOM_BITS/64`` rows per batch however large the batch). The
-  read side bit_or-merges across batches — OR is idempotent, so the
-  filter is also replay-proof beyond the overwrite. This is the
-  cross-batch guard's pre-screen (below).
 - ``pairs_dir/batch=N/`` — (d1, d2, jaccard) rows, one dir per batch.
 
-Input contract and the cross-batch guard (VERDICT r6 ask #1 — now
-DEFAULT-ON): ``doc_id`` values must be unique ACROSS batches — the
-source is expected to deliver each document once (modulo replays of
-the same batch, which the batch-addressed overwrite absorbs).
-Duplicates WITHIN a batch are dropped here (cheap dropDuplicates);
-cross-batch redelivery of the same doc_id under a different batch id
-would accumulate duplicate doc rows and corrupt downstream shingling.
-``guard_cross_batch=True`` (the default) enforces the contract at
-sketch cost: the accumulated id Bloom filter — O(ID_BLOOM_BITS/8)
-bytes at ANY corpus size — is broadcast to the batch, ids it cannot
-contain (no false negatives, pytest-pinned across compaction) pass
-straight through, and the exact anti-join runs ONLY on the
-Bloom-positive remainder, against the history's id column alone. Per
-trigger the guard costs O(batch) for the screen plus one scan of that
-one narrow column — the q_k81 pattern (queries/llm_sketch.py) wired in
-as infrastructure.
-The bloom dir is written beside the corpus dir from the first trigger
-on, so a missing bloom dir next to a corpus that holds OTHER batches
-means the bloom state was lost or never written — the guard raises
-instead of passing history ids as clean.
+The corpus and index dirs declare the ``rows`` layout; the writer
+refuses a dir declaring any other layout — such as the hash-bucketed
+``rows-bhm`` / ``rows-dh`` of earlier versions — before it reads or
+writes anything.
+
+Input contract and the cross-batch guard (always on): ``doc_id``
+values must be unique ACROSS batches — the source is expected to
+deliver each document once (modulo replays of the same batch, which
+the batch-addressed overwrite absorbs). Duplicates WITHIN a batch are
+dropped here (cheap dropDuplicates); cross-batch redelivery of the
+same doc_id under a different batch id would accumulate duplicate doc
+rows and corrupt downstream shingling. The guard enforces the
+contract with one exact anti-join against the history id column: the
+corpus dir already is the set of seen ids, so there is no second
+state to keep in sync with it. The join reads the history through
+``read_state(..., exclude_batch=batch_id)`` like every other probe, so
+a replayed trigger sees exactly the pre-batch history, and it runs
+only when the corpus holds another batch. A NULL id never matches an
+equi-join key, so a NULL-id row passes the guard.
 
 foreachBatch (not a stateful operator): the per-key state primitives
 (``applyInPandasWithState``) hold state per GROUP, but dedup state is
@@ -85,7 +73,6 @@ from cdc_publisher_spark.operators.minhash import (
 )
 from cdc_publisher_spark.functions.text import shingle_rows
 from cdc_publisher_spark.streaming.state import (
-    LAYOUTS,
     batch_dirs,
     compact_dir,
     compacted_upto,
@@ -97,121 +84,6 @@ from cdc_publisher_spark.streaming.state import (
     write_layout_marker,
 )
 
-#: Id-Bloom layout constants (the cross-batch guard's pre-screen).
-#: 2^20 bits = 128 KiB broadcast; at 10^5 history ids and k=4 hashes
-#: the false-positive rate is (1 - e^(-kn/m))^k ≈ 1e-2 (ADVICE r7
-#: corrected the earlier ~2e-3 figure) — and a false positive only
-#: costs one id's membership in the exact anti-join, never a
-#: correctness error, so ~1% of fresh ids paying the join is an
-#: acceptable operating point. These are layout constants: resizing
-#: means rebuilding the bloom dir (one id-column scan).
-ID_BLOOM_BITS = 1 << 20
-ID_BLOOM_HASHES = 4
-
-
-# --------------------------------------------------------------------------
-# Cross-batch id guard: Bloom pre-screen + exact anti-join
-# --------------------------------------------------------------------------
-def _bloom_positions(df: DataFrame, id_col: str) -> DataFrame:
-    """One row per (input row, hash i) with the bloom word/mask the id
-    hashes into. xxhash64 with a per-hash salt keeps everything
-    JVM-side — no md5 string round-trip on the guard path."""
-    spark = df.sparkSession
-    hashes = F.broadcast(spark.range(ID_BLOOM_HASHES).select(F.col("id").alias("_h")))
-    pos = F.pmod(
-        F.xxhash64(
-            F.concat(F.lit("idb"), F.col("_h").cast("string"), F.col(id_col).cast("string"))
-        ),
-        F.lit(ID_BLOOM_BITS),
-    )
-    cols = df.columns
-    return (
-        df.crossJoin(hashes)
-        .withColumn("_pos", pos)
-        .select(
-            *cols,
-            (F.col("_pos") / 64).cast("int").alias("word"),
-            # shiftleft's bit-count arg must be a literal in the Python
-            # API; the SQL form accepts a column (same note as q_k81)
-            F.expr("shiftleft(cast(1 as bigint), cast(_pos % 64 as int))").alias("mask"),
-        )
-    )
-
-
-def id_bloom_delta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(word, mask) bloom rows for ``df``'s ids: one bit_or aggregate,
-    ≤ ID_BLOOM_BITS/64 rows whatever the batch size. The groupBy's
-    map-side combine merges per-partition partial filters."""
-    return LAYOUTS["bitor-mask"].merge(
-        _bloom_positions(df.select(id_col), id_col).select("word", "mask")
-    )
-
-
-def bloom_flag(batch: DataFrame, bloom: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """``batch`` plus a ``maybe`` column: True iff ALL of the id's
-    bloom positions are set in ``bloom`` (broadcast) — i.e. the filter
-    cannot rule the id out. False ⇒ definitely not in history (the
-    no-false-negative direction, which is the correctness-bearing one).
-
-    The position fan-out and flag aggregate run over the ID COLUMN
-    ONLY (ADVICE r7): the 4-hash crossJoin and its groupBy exchange
-    carry 4x the batch's ids, never 4x its document payloads; the flag
-    joins back to the full batch on ``id_col`` afterwards — a key the
-    caller's dropDuplicates already partitioned the batch by.
-
-    NULL ids: an equi-join never matches a NULL key, so the join back
-    is a LEFT join with ``maybe`` coalesced to False — a NULL-id row
-    passes through flagged definitely-new (the Bloom cannot attest
-    membership of an id that doesn't compare equal to anything,
-    including itself), preserving the pre-r8 groupBy-form behavior of
-    carrying such rows as clean instead of silently dropping them
-    (ADVICE r8 low)."""
-    flagged_ids = (
-        _bloom_positions(batch.select(id_col), id_col)
-        .join(F.broadcast(bloom.withColumnRenamed("mask", "_bmask")), "word", "left")
-        .groupBy(id_col)
-        .agg(
-            F.bool_and(
-                F.col("_bmask").isNotNull()
-                & (F.col("_bmask").bitwiseAND(F.col("mask")) != 0)
-            ).alias("maybe")
-        )
-    )
-    return batch.join(flagged_ids, id_col, "left").withColumn(
-        "maybe", F.coalesce(F.col("maybe"), F.lit(False))
-    )
-
-
-def _guard_parts(
-    spark: SparkSession,
-    batch: DataFrame,
-    batch_id: int,
-    corpus_dir: str,
-    bloom_dir: str,
-    id_col: str,
-) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
-    """The guard's three-way split, exposed for the contract tests:
-    (clean, maybe, survivors) where ``clean`` ids the Bloom ruled out
-    of history (NO corpus read for them), ``maybe`` is the
-    Bloom-positive remainder — the ONLY rows the exact anti-join ever
-    sees — and ``survivors`` is ``maybe`` anti-joined against the
-    history's id column. maybe/survivors are None when no bloom state
-    exists (``guarded_batch`` decides whether that is a fresh stream)."""
-    bloom = read_state(
-        spark, bloom_dir, exclude_batch=batch_id, schema=id_bloom_delta(batch, id_col).schema
-    )
-    if bloom is None:
-        return batch, None, None
-    merged = LAYOUTS["bitor-mask"].merge(bloom.select("word", "mask"))
-    flagged = bloom_flag(batch, merged, id_col)
-    clean = flagged.filter(~F.col("maybe")).drop("maybe")
-    maybe = flagged.filter(F.col("maybe")).drop("maybe")
-    seen = read_state(spark, corpus_dir, exclude_batch=batch_id, schema=batch.schema)
-    if seen is None:  # bloom exists but corpus vanished: nothing to dedup against
-        return clean, maybe, maybe
-    survivors = maybe.join(seen.select(id_col), id_col, "anti")
-    return clean, maybe, survivors
-
 
 def _has_history(spark: SparkSession, corpus_dir: str, batch_id: int) -> bool:
     """Listing-only: does the corpus hold any batch other than this one
@@ -221,39 +93,9 @@ def _has_history(spark: SparkSession, corpus_dir: str, batch_id: int) -> bool:
     )
 
 
-def guarded_batch(
-    spark: SparkSession,
-    batch: DataFrame,
-    batch_id: int,
-    corpus_dir: str,
-    bloom_dir: str,
-    id_col: str,
-) -> DataFrame:
-    """``batch`` minus ids already in the accumulated corpus, at Bloom
-    pre-screen cost (see module docstring). A fresh stream (no bloom,
-    no corpus history) passes the batch through unchanged; a bloom dir
-    missing beside corpus history raises."""
-    clean, maybe, survivors = _guard_parts(
-        spark, batch, batch_id, corpus_dir, bloom_dir, id_col
-    )
-    if maybe is None:
-        if _has_history(spark, corpus_dir, batch_id):
-            raise ValueError(
-                f"no id-Bloom state at {bloom_dir} but the corpus at "
-                f"{corpus_dir} holds earlier batches: the cross-batch "
-                "guard cannot screen this batch against that history"
-            )
-        return batch
-    return clean.unionByName(survivors)
-
-
-def default_bloom_dir(corpus_dir: str) -> str:
-    return os.path.join(os.path.dirname(corpus_dir.rstrip("/")), "id_bloom")
-
-
 def read_dedup_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Public unified view of a dedup state dir (corpus / index /
-    pairs / bloom): compacted segment + live batch dirs. Downstream
+    pairs): compacted segment + live batch dirs. Downstream
     consumers must use this instead of ``spark.read.parquet(state_dir)``
     once compaction runs — underscore-prefixed compact dirs are
     invisible to plain partition discovery BY DESIGN (that is what
@@ -271,8 +113,6 @@ def dedup_micro_batch(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    guard_cross_batch: bool = True,
-    bloom_dir: str | None = None,
     compact_every: int | None = None,
     vacuum_grace: int | None = None,
 ) -> None:
@@ -289,28 +129,23 @@ def dedup_micro_batch(
     (live dirs are path-filtered, the compact segment row-filtered),
     so a replayed probe sees exactly the pre-batch state.
 
-    ``compact_every=K`` compacts all four dirs in-stream every K
+    ``compact_every=K`` compacts all three dirs in-stream every K
     batches (state.state_trigger, anchored on the corpus dir — after
     this batch's writes, before the checkpoint commit)
     — the maintenance cadence state.py's concurrency contract names as
     safe: compaction is single-threaded with the writer, the stream is
     its own reader and lists dirs fresh next trigger, and the manifest
     flip is crash-safe. The watermark is ``batch_id - 1`` — COMMITTED
-    batches only, the current batch's dirs stay live (ADVICE r8,
-    medium): folding the not-yet-checkpointed batch would pin the
-    merged bloom rows to ``batch=batch_id``, and a crashed-then-
-    replayed trigger's ``exclude_batch=batch_id`` row-filter would
-    erase the ENTIRE merged id history — every replayed id would flag
-    clean and the cross-batch guard would silently no-op for that
-    trigger. With the committed-only watermark a replay sees the
-    compacted history (pinned ≤ batch_id-1, never excluded) plus its
-    own live dirs path-excluded — exactly the pre-batch state. With
-    ``vacuum_grace=N`` each compaction also vacuums superseded dirs
-    keeping an N-batch margin for any EXTERNAL unsynchronized reader
-    (``read_dedup_state`` from another session); vacuuming stays
-    off by default.
+    batches only, the current batch's dirs stay live until its offsets
+    commit (state.in_stream_watermark). A crashed-then-replayed trigger
+    therefore sees the compacted history (pinned ≤ batch_id-1, never
+    excluded) plus its own live dirs path-excluded — exactly the
+    pre-batch state, so the guard's anti-join still drops every
+    redelivered history id. With ``vacuum_grace=N`` each compaction
+    also vacuums superseded dirs keeping an N-batch margin for any
+    EXTERNAL unsynchronized reader (``read_dedup_state`` from another
+    session); vacuuming stays off by default.
     """
-    bdir = bloom_dir or default_bloom_dir(corpus_dir)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -318,32 +153,34 @@ def dedup_micro_batch(
         # or write: mixing layouts inside one dir breaks the union read
         for d in (corpus_dir, index_dir):
             require_layout_marker(spark, d, "rows")
-        # the deduped batch feeds the guard and then five downstream
-        # jobs this trigger (existence probe, signing, verify union,
-        # corpus write, bloom delta) — cache both stages so the
-        # dropDuplicates shuffle and the guard's bloom probe run once,
-        # not per consumer
-        base = batch_df.select(id_col, text_col).dropDuplicates([id_col]).persist()
+        batch = batch_df.select(id_col, text_col).dropDuplicates([id_col])
+        # metadata-only signal: manifest or any other batch dir present
+        # (corpus is written before index each batch, so its presence
+        # is the authoritative "history exists" marker)
+        has_history = _has_history(spark, corpus_dir, batch_id)
+        if has_history:
+            # the cross-batch guard: drop ids the history already holds
+            seen = read_state(
+                spark, corpus_dir, exclude_batch=batch_id, schema=batch.schema
+            )
+            batch = batch.join(seen.select(id_col), id_col, "left_anti")
+        # the guarded batch feeds three jobs this trigger (existence
+        # probe, shingling, corpus write): cache it once so the
+        # dropDuplicates shuffle and the guard join run once
+        batch = batch.persist()
         try:
-            batch = base
-            if guard_cross_batch:
-                batch = guarded_batch(spark, base, batch_id, corpus_dir, bdir, id_col)
-            batch = batch.persist()
-            try:
-                _dedup_micro_batch_body(
-                    spark, batch, batch_id, corpus_dir, index_dir, pairs_dir, bdir,
-                    id_col, text_col, threshold,
-                )
-            finally:
-                batch.unpersist()
+            _dedup_micro_batch_body(
+                spark, batch, batch_id, has_history, corpus_dir, index_dir,
+                pairs_dir, id_col, text_col, threshold,
+            )
         finally:
-            base.unpersist()
+            batch.unpersist()
 
     # committed batches only: the current batch's dirs stay live until
     # ITS offsets commit — see the docstring's replay analysis
-    # (ADVICE r8, medium; state.in_stream_watermark)
+    # (state.in_stream_watermark)
     state_trigger(
-        write, (corpus_dir, index_dir, pairs_dir, bdir), compact_every, vacuum_grace
+        write, (corpus_dir, index_dir, pairs_dir), compact_every, vacuum_grace
     )(batch_df, batch_id)
 
 
@@ -351,10 +188,10 @@ def _dedup_micro_batch_body(
     spark: SparkSession,
     batch: DataFrame,
     batch_id: int,
+    has_history: bool,
     corpus_dir: str,
     index_dir: str,
     pairs_dir: str,
-    bloom_dir: str,
     id_col: str,
     text_col: str,
     threshold: float,
@@ -371,10 +208,7 @@ def _dedup_micro_batch_body(
     new_buckets = lsh_buckets(minhash_signatures_from_shingles(tok_batch, id_col)).persist()
     try:
         probe = new_buckets.select(id_col, "band", "bh")
-        # metadata-only signal: manifest or any other batch dir present
-        # (corpus is written before index each batch, so its presence
-        # is the authoritative "history exists" marker)
-        if _has_history(spark, corpus_dir, batch_id):
+        if has_history:
             history_docs = read_state(
                 spark, corpus_dir, exclude_batch=batch_id, schema=batch.schema
             ).select(id_col, text_col)
@@ -415,28 +249,17 @@ def _dedup_micro_batch_body(
         finally:
             cands.unpersist()
         # one file each: batch and new_buckets are cached and the pairs
-        # write computed them. The bloom delta rides beside the corpus
-        # write: any batch whose offsets commit has both (replay
-        # rewrites both), so the filter covers exactly the committed
-        # corpus ids — the guard's no-false-negative invariant
+        # write computed them
         batch.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(corpus_dir, f"batch={batch_id}")
-        )
-        id_bloom_delta(batch, id_col).write.mode("overwrite").parquet(
-            os.path.join(bloom_dir, f"batch={batch_id}")
         )
         new_buckets.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(index_dir, f"batch={batch_id}")
         )
         # declare each dir's merge algebra for the generic `maintain`
         # pass (explicit markers, not schema guessing — ADVICE r9)
-        for d, layout in (
-            (pairs_dir, "rows"),
-            (corpus_dir, "rows"),
-            (bloom_dir, "bitor-mask"),
-            (index_dir, "rows"),
-        ):
-            write_layout_marker(spark, d, layout)
+        for d in (pairs_dir, corpus_dir, index_dir):
+            write_layout_marker(spark, d, "rows")
     finally:
         new_buckets.unpersist()
         tok_batch.unpersist()
@@ -449,18 +272,12 @@ def compact_dedup_state(
     pairs_dir: str,
     upto_batch: int,
     vacuum: bool = False,
-    bloom_dir: str | None = None,
 ) -> None:
-    """Compact all four dedup state dirs to ``upto_batch``; the bloom
-    dir pre-merges to one (word, mask) row set (bit_or is the filter's own
-    merge operator — lossless). Vacuuming superseded dirs is opt-in
-    (ADVICE r6: deleting them under an unsynchronized concurrent
-    reader is the one unsafe interleaving; see state.vacuum_state)."""
-    bdir = bloom_dir or default_bloom_dir(corpus_dir)
-    dirs = [corpus_dir, index_dir, pairs_dir]
-    if batch_dirs(spark, bdir) or compacted_upto(spark, bdir) is not None:
-        dirs.append(bdir)
-    for d in dirs:
+    """Compact the three dedup state dirs to ``upto_batch``. Vacuuming
+    superseded dirs is opt-in (ADVICE r6: deleting them under an
+    unsynchronized concurrent reader is the one unsafe interleaving;
+    see state.vacuum_state)."""
+    for d in (corpus_dir, index_dir, pairs_dir):
         compact_dir(spark, d, upto_batch)
         if vacuum:
             vacuum_state(spark, d)
@@ -475,8 +292,6 @@ def stream_neardup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    guard_cross_batch: bool = True,
-    bloom_dir: str | None = None,
     compact_every: int | None = None,
     vacuum_grace: int | None = None,
 ):
@@ -484,18 +299,16 @@ def stream_neardup_pairs(
 
     Returns the StreamingQuery. Offsets commit to ``checkpoint_dir``
     after each batch's writes — the commit-on-success contract the CDC
-    pipeline uses (streaming/pipeline.py). ``index_dir`` / ``bloom_dir``
-    default to siblings of ``corpus_dir``. ``doc_id`` must be unique
-    across batches (see module docstring); the default-on
-    ``guard_cross_batch`` enforces that at Bloom-pre-screen cost per
-    trigger — O(batch), never O(history). ``compact_every=K`` turns on
-    in-stream state compaction every K batches (optionally vacuuming
-    with a ``vacuum_grace`` margin) so a long-running stream's batch
-    dirs stay bounded without external maintenance — see
-    ``dedup_micro_batch``.
+    pipeline uses (streaming/pipeline.py). ``index_dir`` defaults to a
+    sibling of ``corpus_dir``. ``doc_id`` must be unique across
+    batches (see module docstring); the cross-batch guard enforces
+    that with one anti-join against the history id column per
+    trigger. ``compact_every=K`` turns on in-stream state compaction
+    every K batches (optionally vacuuming with a ``vacuum_grace``
+    margin) so a long-running stream's batch dirs stay bounded without
+    external maintenance — see ``dedup_micro_batch``.
     """
     idx = index_dir or os.path.join(os.path.dirname(corpus_dir.rstrip("/")), "lsh_index")
-    bdir = bloom_dir or default_bloom_dir(corpus_dir)
     return start_state_stream(
         stream_df,
         checkpoint_dir,
@@ -508,8 +321,6 @@ def stream_neardup_pairs(
             id_col,
             text_col,
             threshold,
-            guard_cross_batch=guard_cross_batch,
-            bloom_dir=bdir,
             compact_every=compact_every,
             vacuum_grace=vacuum_grace,
         ),

@@ -32,7 +32,7 @@ Compaction must fold COMMITTED batches only — and the filesystem
 alone cannot prove the newest ``batch=N`` dir committed: a crash
 between a foreachBatch write and its checkpoint commit leaves that
 dir on disk UNcommitted, and merge-style compaction pins merged rows
-(notably the dedup id-Bloom history) to the watermark batch id, so
+(sum, max and min folds alike) to the watermark batch id, so
 folding it would let the restarted stream's replayed trigger
 (``exclude_batch=N``) drop the entire merged history. Hence:
 
@@ -83,7 +83,7 @@ class MaintenancePlan:
     """What ``maintain`` would do to one state dir."""
 
     path: str
-    kind: str  # sum | hll | bloom | min | rows | unrecognized
+    kind: str  # sum | hll | min | rows | unrecognized
     current_upto: int | None
     target_upto: int | None  # None == nothing to do
     live_batches: int  # batch dirs above the current watermark

@@ -11,7 +11,7 @@ near-dup monitor (r12) — under a single ``foreachBatch`` against one
 state root::
 
     state_root/
-      dedup/{corpus,idx,pairs,id_bloom}   incremental_dedup
+      dedup/{corpus,idx,pairs}            incremental_dedup
       hll/                                per-source distinct words
       cm/                                 per-source word heavy hitters
       exposure/                           rare-gram exposure
@@ -88,7 +88,6 @@ SUITE_DIRS = {
     "dedup_corpus": "dedup/corpus",
     "dedup_index": "dedup/idx",
     "dedup_pairs": "dedup/pairs",
-    "dedup_bloom": "dedup/id_bloom",
     "hll": "hll",
     "cm": "cm",
     "exposure": "exposure",

@@ -90,7 +90,7 @@ class LayoutSpec:
     and merged."""
 
     name: str  # the ``_layout.<name>`` marker writers declare
-    kind: str  # display family: sum | hll | bloom | min | rows
+    kind: str  # display family: sum | hll | min | rows
     required: frozenset  # columns the layout cannot exist without
     # the state's own merge fold, or None for row state (rewritten
     # verbatim); compact_state pins the folded rows' ``batch``
@@ -135,8 +135,6 @@ _RH_FAMILY = "rows-rh-<bands>x<bits>"
 #: - ``sum-sn``      → DECIMAL-sum ``s`` + long-sum ``n`` per (label, p)
 #:                     (centroid-drift partials).
 #: - ``max-M``       → max ``M`` (HLL registers).
-#: - ``bitor-mask``  → bit_or ``mask`` per ``word`` (the dedup guard's
-#:                     id-Bloom deltas).
 #: - ``min-fb``      → min ``fb`` (first-seen vocabulary).
 #: - ``sum-ctx``     → long-sum of every ``CTX_METRICS`` column per
 #:                     ``budget`` (context-length economics).
@@ -161,9 +159,6 @@ LAYOUTS: dict[str, LayoutSpec] = {
             _fold(s=lambda c: F.sum(c).cast("decimal(30,8)"), n=_long_sum),
         ),
         LayoutSpec("max-M", "hll", frozenset({"M"}), _fold(M=F.max)),
-        LayoutSpec(
-            "bitor-mask", "bloom", frozenset({"word", "mask"}), _fold(mask=F.bit_or)
-        ),
         LayoutSpec("min-fb", "min", frozenset({"fb"}), _fold(fb=F.min)),
         LayoutSpec(
             "sum-ctx",
@@ -411,10 +406,11 @@ def in_stream_watermark(
     not-yet-checkpointed batch (ADVICE r8, medium): a merge-style
     compaction pins folded rows to the watermark batch id, so folding
     the in-flight batch would (a) let a replayed trigger's
-    ``exclude_batch`` row-filter erase the whole merged history
-    (the dedup guard's bloom), and (b) bake a batch into the segment
-    before its offsets commit, making the segment's contents depend on
-    a replay recomputing bit-identical deltas. With the committed-only
+    ``exclude_batch`` row-filter erase the whole merged history of
+    every merge-folded layout (sums, HLL registers, first-seen
+    batches), and (b) bake a batch into the segment before its offsets
+    commit, making the segment's contents depend on a replay
+    recomputing bit-identical deltas. With the committed-only
     watermark the current batch's dirs stay live until ITS checkpoint
     commits, and the next compaction trigger folds it.
 

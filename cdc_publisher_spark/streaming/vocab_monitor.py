@@ -10,8 +10,8 @@ repeating itself, visible while the ingest is still running.
 
 Sixth consumer of the shared batch-addressed state layer
 (streaming/state.py), and the one that completes the layer's merge-
-algebra family: sum (count-min, exposure), max (HLL), bit_or (id
-Bloom), DECIMAL-sum (centroid drift), and now MIN — state rows are
+algebra family: sum (count-min, exposure), max (HLL), DECIMAL-sum
+(centroid drift), and now MIN — state rows are
 ``(source, wh, fb)`` where ``wh`` is the xxhash64 of the word (8-byte
 shuffle keys; word text never rides a shuffle — the exposure monitor's
 hashing precedent) and ``fb`` the batch id, min-merged to the FIRST

@@ -86,8 +86,7 @@ def test_cli_maintain_compacts_dedup_state(spark, tmp_path, capsys):
     """maintain over a dedup state root (the surface that replaced the
     removed `compact` alias, VERDICT r11 ask #3): batch dirs at/below
     the watermark fold into the compact segment with the unified pair
-    set unchanged, and the auto-created id-Bloom sibling is discovered
-    and compacted in the same pass (the alias used to miss it)."""
+    set unchanged, and all three dedup dirs compact in the same pass."""
     from cdc_publisher_spark.streaming.incremental_dedup import (
         dedup_micro_batch,
         read_dedup_state,
@@ -108,11 +107,10 @@ def test_cli_maintain_compacts_dedup_state(spark, tmp_path, capsys):
         "--vacuum",
     ]) == 0
     out = capsys.readouterr().out
-    # all four dedup dirs discovered — including the id_bloom sibling
-    # dedup_micro_batch created implicitly
-    assert out.count("compact\t") == 4, out
-    assert "id_bloom" in out
-    assert compacted_upto(spark, str(tmp_path / "id_bloom")) == 1
+    # the three dedup dirs discovered; the guard keeps no other state
+    assert out.count("compact\t") == 3, out
+    assert "id_bloom" not in out
+    assert all(compacted_upto(spark, d) == 1 for d in dirs)
     assert all(k > 1 for k, _ in batch_dirs(spark, dirs[2]))
     after = sorted(map(tuple, read_dedup_state(spark, dirs[2]).collect()))
     assert after == before
@@ -158,10 +156,10 @@ def test_cli_compact_aliases_removed():
 
 def test_cli_maintain_covers_all_four_layouts(spark, tmp_path, capsys):
     """maintain subcommand (VERDICT r8 ask #6): ONE pass over a state
-    root discovers every batch-addressed dir — the dedup quad, HLL
-    registers, count-min cells, exposure gram counts — classifies each
-    by its declared _layout. marker, compacts with the layout's own
-    merge, and vacuums.
+    root discovers every batch-addressed dir — the dedup trio, HLL
+    registers, count-min cells, exposure gram counts, first-seen
+    vocabulary — classifies each by its declared _layout. marker,
+    compacts with the layout's own merge, and vacuums.
     --dry-run prints the identical plan and writes nothing; a re-run
     is an idempotent all-skip."""
     from pyspark.sql import functions as F
@@ -180,6 +178,10 @@ def test_cli_maintain_covers_all_four_layouts(spark, tmp_path, capsys):
         read_dedup_state,
     )
     from cdc_publisher_spark.streaming.state import batch_dirs, compacted_upto
+    from cdc_publisher_spark.streaming.vocab_monitor import (
+        read_first_seen,
+        vocab_micro_batch,
+    )
 
     root = tmp_path / "state"
     ddirs = [str(root / "dedup" / d) for d in ("corpus", "idx", "pairs")]
@@ -192,7 +194,7 @@ def test_cli_maintain_covers_all_four_layouts(spark, tmp_path, capsys):
         [("srcA", f"v{i}") for i in range(30)] + [("srcB", f"w{i}") for i in range(20)],
         "source string, s string",
     )
-    hll, cm, exp = (str(root / d) for d in ("hll", "cm", "exposure"))
+    hll, cm, exp, voc = (str(root / d) for d in ("hll", "cm", "exposure", "vocab"))
     docs = spark.createDataFrame(
         [(i, f"d{i} " * 8, f"src{i % 2}") for i in range(6)],
         "doc_id long, text string, source string",
@@ -202,8 +204,9 @@ def test_cli_maintain_covers_all_four_layouts(spark, tmp_path, capsys):
         hll_micro_batch(vals.filter(half), b, hll)
         cm_micro_batch(vals.filter(half), b, cm, value_col="s", group_cols=["source"])
         exposure_micro_batch(docs.filter(F.col("doc_id") % 2 == b), b, exp)
+        vocab_micro_batch(docs.filter(F.col("doc_id") % 2 == b), b, voc)
 
-    all_dirs = ddirs + [str(root / "dedup" / "id_bloom"), hll, cm, exp]
+    all_dirs = ddirs + [hll, cm, exp, voc]
     before = {
         "pairs": sorted(map(tuple, read_dedup_state(spark, ddirs[2]).collect())),
         "corpus_ids": sorted(
@@ -214,6 +217,7 @@ def test_cli_maintain_covers_all_four_layouts(spark, tmp_path, capsys):
         ),
         "cm": sorted(map(tuple, read_cm_cells(spark, cm, ["source"]).collect())),
         "exp": sorted(map(tuple, read_exposure_report(spark, exp).collect())),
+        "vocab": sorted(map(tuple, read_first_seen(spark, voc).collect())),
     }
 
     # dry run: full plan over all seven dirs, zero writes; the default
@@ -224,7 +228,7 @@ def test_cli_maintain_covers_all_four_layouts(spark, tmp_path, capsys):
     assert out.count("compact\t") == 7, out
     assert "None -> 0" in out and "-> 1" not in out
     assert "held back as uncommitted" in out
-    for kind in ("sum", "hll", "bloom", "rows"):
+    for kind in ("sum", "hll", "min", "rows"):
         assert f"\t{kind}\t" in out, (kind, out)
     assert "dry run" in out
     for d in all_dirs:
@@ -250,6 +254,7 @@ def test_cli_maintain_covers_all_four_layouts(spark, tmp_path, capsys):
         ),
         "cm": sorted(map(tuple, read_cm_cells(spark, cm, ["source"]).collect())),
         "exp": sorted(map(tuple, read_exposure_report(spark, exp).collect())),
+        "vocab": sorted(map(tuple, read_first_seen(spark, voc).collect())),
     }
     assert after == before
 

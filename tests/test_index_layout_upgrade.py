@@ -37,16 +37,15 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def _state(spark, tmp_path) -> tuple[list[str], list[str]]:
-    """Dedup state after trigger 0: (corpus, index, pairs) writer args
-    and those dirs plus the id Bloom dir."""
+def _state(spark, tmp_path) -> list[str]:
+    """Dedup state after trigger 0: the (corpus, index, pairs) dirs."""
     dirs = [str(tmp_path / d) for d in ("corpus", "idx", "pairs")]
     dedup_micro_batch(_df(spark, BATCH0), 0, *dirs)
-    return dirs, dirs + [str(tmp_path / "id_bloom")]
+    return dirs
 
 
-def _only_batch0(spark, all_dirs) -> bool:
-    return all([k for k, _ in batch_dirs(spark, d)] == [0] for d in all_dirs)
+def _only_batch0(spark, dirs) -> bool:
+    return all([k for k, _ in batch_dirs(spark, d)] == [0] for d in dirs)
 
 
 def test_conflicted_dir_fails_fast_and_migrates(spark, tmp_path):
@@ -54,14 +53,14 @@ def test_conflicted_dir_fails_fast_and_migrates(spark, tmp_path):
     before any partial batch=1 write, maintenance skips the dir with a
     note, and replacing the marker with the index layout lets the
     stream resume with the expected pair."""
-    dirs, all_dirs = _state(spark, tmp_path)
+    dirs = _state(spark, tmp_path)
     idx = dirs[1]
     write_layout_marker(spark, idx, "rows-dh")  # accumulates a second one
     with pytest.raises(ValueError, match="conflicting layout markers"):
         read_layout_marker(spark, idx)
     with pytest.raises(ValueError, match="conflicting layout markers"):
         dedup_micro_batch(_df(spark, BATCH1), 1, *dirs)
-    assert _only_batch0(spark, all_dirs)
+    assert _only_batch0(spark, dirs)
     (bad,) = [p for p in plan_maintenance(spark, str(tmp_path)) if p.path.endswith("idx")]
     assert bad.kind == "unrecognized" and "conflicting" in bad.note.lower()
 
@@ -85,11 +84,11 @@ def test_replace_layout_marker_swaps_not_accumulates(spark, tmp_path):
     markers = [n for n in os.listdir(d) if n.startswith("_layout.")]
     assert markers == [f"_layout.{INDEX_LAYOUT}"]
 
-    dirs, all_dirs = _state(spark, tmp_path)
+    dirs = _state(spark, tmp_path)
     replace_layout_marker(spark, dirs[1], "rows-dh")
     assert [n for n in os.listdir(dirs[1]) if n.startswith("_layout.")] == [
         "_layout.rows-dh"
     ]
     with pytest.raises(ValueError, match="refusing to write"):
         dedup_micro_batch(_df(spark, BATCH1), 1, *dirs)
-    assert _only_batch0(spark, all_dirs)
+    assert _only_batch0(spark, dirs)

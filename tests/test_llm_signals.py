@@ -494,7 +494,7 @@ def test_dedup_state_compaction_preserves_pairs_and_vacuums(spark, tmp_path):
 
 
 def test_dedup_cross_batch_guard_drops_redelivered_ids(spark, tmp_path):
-    """guard_cross_batch=True: a doc_id re-delivered under a DIFFERENT
+    """The cross-batch guard: a doc_id re-delivered under a DIFFERENT
     batch id (at-least-once across batch boundaries) is anti-joined
     away instead of accumulating a duplicate corpus row."""
     from cdc_publisher_spark.streaming.incremental_dedup import (
@@ -505,12 +505,12 @@ def test_dedup_cross_batch_guard_drops_redelivered_ids(spark, tmp_path):
     base = " ".join(f"tok{i}" for i in range(30))
     dirs = [str(tmp_path / d) for d in ("corpus", "idx", "pairs")]
     b0 = spark.createDataFrame([(1, base), (2, "q " * 25)], "doc_id long, text string")
-    dedup_micro_batch(b0, 0, *dirs, guard_cross_batch=True)
+    dedup_micro_batch(b0, 0, *dirs)
     # batch 5 re-delivers doc 1 (same payload, new batch id) + a new doc
     b5 = spark.createDataFrame(
         [(1, base), (7, base + " aa")], "doc_id long, text string"
     )
-    dedup_micro_batch(b5, 5, *dirs, guard_cross_batch=True)
+    dedup_micro_batch(b5, 5, *dirs)
     corpus = read_dedup_state(spark, dirs[0])
     assert corpus.count() == 3
     assert corpus.select("doc_id").distinct().count() == 3
@@ -588,127 +588,45 @@ def test_cross_batch_guard_is_default_on(spark, tmp_path):
     assert corpus.select("doc_id").distinct().count() == 3
     pairs = {(r.d1, r.d2) for r in read_dedup_state(spark, dirs[2]).collect()}
     assert pairs == {(1, 7)}
-    # and the bloom state dir accumulated one delta per batch
-    bloom = str(tmp_path / "id_bloom")
-    assert os.path.isdir(os.path.join(bloom, "batch=0"))
-    assert os.path.isdir(os.path.join(bloom, "batch=5"))
+    # the corpus dir is the guard's only state: no sibling dir appears
+    assert sorted(os.listdir(tmp_path)) == ["corpus", "idx", "pairs"]
 
 
 def test_guard_exact_antijoin_sees_only_bloom_positive_remainder(spark, tmp_path):
-    """VERDICT r6 ask #1 done-criterion: the guard's three-way split —
-    ids the Bloom rules out bypass the exact anti-join entirely, the
-    Bloom-positive remainder is the ONLY exact-join input, and the
-    no-false-negative property (every true history id flags maybe)
-    holds both before and after bloom compaction."""
-    from pyspark.sql import functions as F
-
+    """The guard is one exact anti-join against the history id column:
+    end to end through ``dedup_micro_batch``, redelivered history ids
+    are dropped (their first-delivered text stays) and fresh ids are
+    kept, both before and after ``compact_dedup_state`` folds the
+    history into its compact segment."""
     from cdc_publisher_spark.streaming import incremental_dedup as inc
+    from cdc_publisher_spark.streaming.state import compacted_upto
 
     dirs = [str(tmp_path / d) for d in ("corpus", "idx", "pairs")]
-    bloom_dir = str(tmp_path / "id_bloom")
+    text = lambda b, i: " ".join(f"w{b}_{i}_{j}" for j in range(30))
     for b in range(2):
-        rows = [
-            (b * 10 + i, " ".join(f"w{b}_{i}_{j}" for j in range(30)))
-            for i in range(1, 6)
-        ]
+        rows = [(b * 10 + i, text(b, i)) for i in range(1, 6)]
         inc.dedup_micro_batch(
             spark.createDataFrame(rows, "doc_id long, text string"), b, *dirs
         )
-    history_ids = set(range(1, 6)) | set(range(11, 16))
+    history = {b * 10 + i: text(b, i) for b in range(2) for i in range(1, 6)}
 
-    def split(batch_id: int, redelivered: set[int], fresh: set[int]):
+    def trigger(batch_id: int, redelivered: set[int], fresh: set[int]) -> None:
         batch = spark.createDataFrame(
-            [(i, f"text {i}") for i in sorted(redelivered | fresh)],
+            [(i, text(batch_id, i)) for i in sorted(redelivered | fresh)],
             "doc_id long, text string",
         )
-        clean, maybe, survivors = inc._guard_parts(
-            spark, batch, batch_id, dirs[0], bloom_dir, "doc_id"
-        )
-        assert maybe is not None  # bloom state exists
-        c = {r.doc_id for r in clean.collect()}
-        m = {r.doc_id for r in maybe.collect()}
-        s = {r.doc_id for r in survivors.collect()}
-        # clean/maybe partition the batch
-        assert c | m == redelivered | fresh and not (c & m)
-        # no false negatives: every redelivered history id is maybe
-        assert redelivered <= m, (redelivered, m)
-        # clean ids never reach the exact anti-join (its input is maybe)
-        assert not (c & history_ids)
-        # survivors = maybe minus true history
-        assert s == m - history_ids
-        return c, m, s
+        inc.dedup_micro_batch(batch, batch_id, *dirs)
+        for i in fresh:
+            history[i] = text(batch_id, i)
+        rows = inc.read_dedup_state(spark, dirs[0]).collect()
+        assert len(rows) == len(history)
+        assert {r.doc_id: r.text for r in rows} == history
 
-    redelivered, fresh = {3, 12}, {100, 101, 102, 103}
-    c1, m1, _ = split(9, redelivered, fresh)
-    # the pre-screen did real work: most fresh ids bypassed the join
-    assert len(m1 - redelivered) < len(fresh)
-
-    # compact (bloom pre-merges via bit_or) — property must survive
-    inc.compact_dedup_state(spark, *dirs, upto_batch=1, bloom_dir=bloom_dir)
-    from cdc_publisher_spark.streaming.state import compacted_upto
-
-    assert compacted_upto(spark, bloom_dir) == 1
-    split(10, redelivered, fresh)
-
-    # end-to-end: the guarded micro-batch adds only the fresh ids
-    batch = spark.createDataFrame(
-        [(i, " ".join(f"f{i}_{j}" for j in range(30))) for i in sorted(redelivered | fresh)],
-        "doc_id long, text string",
-    )
-    inc.dedup_micro_batch(batch, 11, *dirs)
-    corpus = inc.read_dedup_state(spark, dirs[0])
-    got = {r.doc_id for r in corpus.select("doc_id").collect()}
-    assert got == history_ids | fresh
-    assert corpus.count() == len(got)
-
-
-def test_bloom_flag_position_aggregate_excludes_payload(spark):
-    """ADVICE r7 (medium): the guard's 4-hash position fan-out and its
-    flag aggregate must carry ids only — the document payload joins
-    back AFTER, so no exchange in the bloom screen ever shuffles 4x
-    the batch's text bytes."""
-    from cdc_publisher_spark.plans import plan_string
-    from cdc_publisher_spark.streaming.incremental_dedup import bloom_flag
-
-    batch = spark.createDataFrame(
-        [(1, "some document payload")], "doc_id long, text string"
-    )
-    bloom = spark.createDataFrame([(0, 1)], "word int, mask bigint")
-    plan = plan_string(bloom_flag(batch, bloom), "simple")
-    lines = plan.splitlines()
-    # bool_and over booleans compiles to min() in the physical plan
-    agg_idx = [i for i, line in enumerate(lines) if "HashAggregate" in line]
-    assert agg_idx, plan  # the flag aggregate exists
-    assert all("text#" not in lines[i] for i in agg_idx), plan
-    # and everything BELOW the aggregate's exchange (the 4-hash
-    # fan-out side) is id-only — text appears solely above the final
-    # join-back
-    fanout = [line for line in lines if "xxhash64(concat(idb" in line]
-    assert fanout and all("text#" not in line for line in fanout), plan
-
-
-def test_guard_refuses_missing_bloom_beside_corpus_history(spark, tmp_path):
-    """The bloom dir is written beside the corpus from trigger 0 on. A
-    missing bloom dir is harmless on a fresh stream (replaying trigger
-    0 passes the batch through unchanged), but beside corpus history
-    the guard raises, naming both dirs, before any write — instead of
-    passing every history id as clean."""
-    import shutil
-
-    from cdc_publisher_spark.streaming import incremental_dedup as inc
-    from cdc_publisher_spark.streaming.state import batch_dirs
-
-    dirs = [str(tmp_path / d) for d in ("corpus", "idx", "pairs")]
-    bloom_dir = str(tmp_path / "id_bloom")
-    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    b0 = mk([(1, "w " * 30), (2, "v " * 30)])
-    inc.dedup_micro_batch(b0, 0, *dirs)
-    shutil.rmtree(bloom_dir)
-    assert inc.guarded_batch(spark, b0, 0, dirs[0], bloom_dir, "doc_id").count() == 2
-    with pytest.raises(ValueError, match="no id-Bloom state") as e:
-        inc.dedup_micro_batch(mk([(1, "again"), (3, "u " * 30)]), 1, *dirs)
-    assert dirs[0] in str(e.value) and bloom_dir in str(e.value)
-    assert all([k for k, _ in batch_dirs(spark, d)] == [0] for d in dirs)
+    trigger(9, {3, 12}, {100, 101, 102, 103})
+    inc.compact_dedup_state(spark, *dirs, upto_batch=9)
+    assert compacted_upto(spark, dirs[0]) == 9
+    # against the compact segment: batch 9's fresh ids are history now
+    trigger(10, {3, 12, 101}, {200, 201})
 
 
 def test_vacuum_grace_margin_keeps_recent_superseded_dirs(spark, tmp_path):
@@ -779,20 +697,18 @@ def test_in_stream_compaction_bounds_dedup_state(spark, tmp_path):
 def test_replay_after_in_stream_compact_keeps_guard_live(spark, tmp_path):
     """ADVICE r8 (medium): a crash BETWEEN an in-stream compaction and
     the checkpoint commit replays the trigger against the compacted
-    state. Because the merged bloom segment pins its rows to the
-    compaction watermark, a watermark equal to the replayed batch id
-    would be erased wholesale by the reader's ``exclude_batch``
-    row-filter — every id would flag clean and the cross-batch guard
-    would silently no-op. The committed-only watermark (batch_id - 1)
-    must keep the guard live: after the compaction that batch B's
-    trigger ran, ``_guard_parts`` for a REPLAY of batch B still flags
-    every pre-B history id maybe, and the replayed micro-batch leaves
-    state identical to the crash-free run."""
+    state. A watermark equal to the replayed batch id would fold the
+    in-flight batch into the compact segment, where the reader's
+    ``exclude_batch`` row-filter is the only thing between the replay
+    and its own rows. The committed-only watermark (batch_id - 1) must
+    keep the guard live: after the compaction that batch B's trigger
+    ran, the corpus history a REPLAY of batch B anti-joins against
+    still holds every pre-B history id, and the replayed micro-batch
+    leaves state identical to the crash-free run."""
     from cdc_publisher_spark.streaming import incremental_dedup as inc
-    from cdc_publisher_spark.streaming.state import compacted_upto
+    from cdc_publisher_spark.streaming.state import compacted_upto, read_state
 
     dirs = [str(tmp_path / d) for d in ("corpus", "idx", "pairs")]
-    bloom_dir = inc.default_bloom_dir(dirs[0])
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
     history = [
         (b, [(b * 10 + i, " ".join(f"w{b}_{i}_{j}" for j in range(30)))
@@ -807,18 +723,17 @@ def test_replay_after_in_stream_compact_keeps_guard_live(spark, tmp_path):
     # then "crash" before the checkpoint commit
     b2 = [(100, "fresh " * 30), (101, "fresh2 " * 30)]
     inc.dedup_micro_batch(mk(b2), 2, *dirs, compact_every=3)
-    assert compacted_upto(spark, bloom_dir) == 1  # committed-only watermark
+    assert compacted_upto(spark, dirs[0]) == 1  # committed-only watermark
 
-    # the replay's guard view: every history id must still flag maybe
+    # the replay's guard view: the history it anti-joins against
     redelivered = mk([(1, "legacy again"), (11, "legacy again")] + b2)
-    clean, maybe, survivors = inc._guard_parts(
-        spark, redelivered, 2, dirs[0], bloom_dir, "doc_id"
-    )
-    assert maybe is not None, "guard fell back — bloom read came back empty"
-    m = {r.doc_id for r in maybe.collect()}
-    assert {1, 11} <= m, (m, "merged bloom history erased by exclude_batch")
-    s = {r.doc_id for r in survivors.collect()}
-    assert s == m - history_ids
+    seen = read_state(
+        spark, dirs[0], exclude_batch=2, schema=redelivered.schema
+    ).select("doc_id")
+    m = {r.doc_id for r in seen.collect()}
+    assert m == history_ids, (m, "compacted history erased by exclude_batch")
+    s = {r.doc_id for r in redelivered.join(seen, "doc_id", "left_anti").collect()}
+    assert s == {100, 101}
 
     # full replayed trigger (same df, same batch id): state converges to
     # exactly the crash-free outcome, duplicates guarded out
@@ -828,30 +743,21 @@ def test_replay_after_in_stream_compact_keeps_guard_live(spark, tmp_path):
     assert got == sorted(history_ids | {100, 101})
     # idempotent: the second compaction attempt at the same watermark
     # was a no-op, not an error
-    assert compacted_upto(spark, bloom_dir) == 1
+    assert compacted_upto(spark, dirs[0]) == 1
 
 
 def test_bloom_flag_null_id_passes_through_clean(spark, tmp_path):
-    """ADVICE r8 (low): the id-only bloom screen joins flags back on
-    the id column; a NULL id never matches an equi-join key, so the
-    join-back must be a left join with ``maybe`` defaulted False — the
-    NULL-id row passes through as definitely-new instead of silently
-    vanishing from the batch (and hence from corpus/pairs output)."""
+    """ADVICE r8 (low): a NULL id never matches an equi-join key, so
+    the guard's anti-join keeps a NULL-id row — it passes through as
+    new instead of silently vanishing from the batch (and hence from
+    corpus/pairs output)."""
     from cdc_publisher_spark.streaming import incremental_dedup as inc
 
-    bloom = inc.id_bloom_delta(
-        spark.createDataFrame([(7, "x")], "doc_id long, text string")
-    )
     batch = spark.createDataFrame(
         [(7, "seen before"), (None, "null id doc"), (9, "fresh")],
         "doc_id long, text string",
     )
-    flagged = inc.bloom_flag(batch, bloom)
-    rows = {r.doc_id: r.maybe for r in flagged.collect()}
-    assert len(rows) == 3 and None in rows, rows
-    assert rows[None] is False  # carried as clean, not dropped
-    assert rows[7] is True  # the screen still catches the true member
-    # and end-to-end: a guarded micro-batch keeps the NULL-id document
+    # end-to-end: a guarded micro-batch keeps the NULL-id document
     dirs = [str(tmp_path / d) for d in ("corpus", "idx", "pairs")]
     inc.dedup_micro_batch(
         spark.createDataFrame([(1, "w " * 30)], "doc_id long, text string"),

@@ -169,7 +169,7 @@ def test_marker_on_mismatched_schema_is_not_trusted(spark, tmp_path):
     spark.createDataFrame([(1, 0)], "k long, batch int").write.mode(
         "overwrite"
     ).parquet(f"{state}/batch=0")
-    write_layout_marker(spark, state, "bitor-mask")  # needs word+mask
+    write_layout_marker(spark, state, "max-M")  # needs M
     plans = run_maintenance(spark, str(root), assume_all_committed=True)
     assert [(p.kind, p.action) for p in plans] == [("unrecognized", "skip")]
 

@@ -97,13 +97,13 @@ def test_suite_stream_with_live_maintenance_equals_batch(
         plans = run_maintenance(
             spark, root, checkpoint_dir=ckpt, vacuum=True, grace_batches=1
         )
-        # dedup quad + hll/cm/exposure/drift/vocab/ctx + audio fpk/pairs
+        # dedup trio + hll/cm/exposure/drift/vocab/ctx + audio fpk/pairs
         # + embed idx/vecs/pairs
-        assert len(plans) == 15
+        assert len(plans) == 14
         assert all(p.kind != "unrecognized" for p in plans), [
             (p.path, p.kind) for p in plans
         ]
-        for name in ("dedup_bloom", "hll", "cm", "exposure", "drift",
+        for name in ("dedup_corpus", "hll", "cm", "exposure", "drift",
                      "vocab", "ctx", "audio_fpk", "embed_idx"):
             assert compacted_upto(spark, suite_dir(root, name)) == committed, name
         # the stream keeps running across the maintenance pass
