@@ -20,8 +20,10 @@ Pipeline, all DataFrame ops:
    vector shuffled exactly once. ``n_lists`` scales with the corpus
    (TARGET_LIST_ROWS) so per-cluster work stays constant as data
    grows.
-3. Transitive closure via ``connected_components`` (hash-to-min), so a
-   chain a~b~c collapses to ONE keeper even when cos(a,c) < threshold.
+3. Transitive closure via ``neardup_clusters`` (a numpy label pass
+   after one Arrow collect up to ``components.LOCAL_EDGES`` pairs, the
+   distributed hash-to-min loop above), so a chain a~b~c collapses to
+   ONE keeper even when cos(a,c) < threshold.
 4. Keeper = min vec_id per component (deterministic; SemDeDup's
    "keep one representative per duplicate group").
 

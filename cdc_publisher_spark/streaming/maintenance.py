@@ -67,6 +67,7 @@ from cdc_publisher_spark.streaming.state import (
     checkpoint_committed_upto,
     compact_dir,
     compacted_upto,
+    declared_layout,
     fitting_layout,
     hadoop_fs,
     read_layout_marker,
@@ -190,11 +191,14 @@ def plan_maintenance(
         if spec is None:
             kind = "unrecognized"
             target = None
-            note = conflict or (
-                "no layout marker; skipped"
-                if marker is None
-                else f"layout marker {marker!r} does not fit the dir's schema; skipped"
-            )
+            if conflict:
+                note = conflict
+            elif marker is None:
+                note = "no layout marker; skipped"
+            elif declared_layout(marker) is None:
+                note = f"layout marker {marker!r} is unknown to this version; skipped"
+            else:
+                note = f"layout marker {marker!r} does not fit the dir's schema; skipped"
         else:
             kind = spec.kind
         live = [k for k in dirs if prev is None or k > prev]

@@ -172,17 +172,23 @@ LAYOUTS: dict[str, LayoutSpec] = {
 }
 
 
-def fitting_layout(columns: Sequence[str], marker: str | None) -> LayoutSpec | None:
-    """The spec a dir declaring ``marker`` with ``columns`` compacts
-    under, or None when the dir cannot be classified safely: no marker,
-    an unknown one, or one whose required columns the schema lacks (a
-    marker pasted onto the wrong dir must not trigger the wrong merge).
+def declared_layout(marker: str | None) -> LayoutSpec | None:
+    """The ``LAYOUTS`` entry ``marker`` names; None for no marker or
+    one this version does not know.
 
     Scheme-versioned embed-index markers (``rows-rh-<bands>x<bits>``)
     all compact identically: a verbatim rewrite."""
     if marker is not None and re.fullmatch(r"rows-rh-\d+x\d+", marker):
         marker = _RH_FAMILY
-    spec = LAYOUTS.get(marker) if marker is not None else None
+    return LAYOUTS.get(marker) if marker is not None else None
+
+
+def fitting_layout(columns: Sequence[str], marker: str | None) -> LayoutSpec | None:
+    """The spec a dir declaring ``marker`` with ``columns`` compacts
+    under, or None when the dir cannot be classified safely: no marker,
+    an unknown one, or one whose required columns the schema lacks (a
+    marker pasted onto the wrong dir must not trigger the wrong merge)."""
+    spec = declared_layout(marker)
     if spec is None or not spec.required <= set(columns):
         return None
     return spec
@@ -648,6 +654,7 @@ __all__ = [
     "compact_dir",
     "compact_state",
     "compacted_upto",
+    "declared_layout",
     "fitting_layout",
     "hadoop_fs",
     "in_stream_watermark",

@@ -174,6 +174,32 @@ def test_marker_on_mismatched_schema_is_not_trusted(spark, tmp_path):
     assert [(p.kind, p.action) for p in plans] == [("unrecognized", "skip")]
 
 
+def test_skip_note_tells_unknown_marker_from_schema_mismatch(spark, tmp_path):
+    """A known marker on a schema that lacks its required columns is
+    reported as a schema mismatch; a marker no ``LAYOUTS`` entry names
+    (an earlier version's, say) is reported as unknown."""
+    root = tmp_path / "root"
+    for name, marker in (("mislabelled", "sum-sn"), ("retired", "bitor-mask")):
+        spark.createDataFrame([(1, 0)], "k long, batch int").write.mode(
+            "overwrite"
+        ).parquet(str(root / name / "batch=0"))
+        write_layout_marker(spark, str(root / name), marker)
+    plans = plan_maintenance(spark, str(root), assume_all_committed=True)
+    notes = {p.path.rsplit("/", 1)[-1]: (p.kind, p.action, p.note) for p in plans}
+    assert notes == {
+        "mislabelled": (
+            "unrecognized",
+            "skip",
+            "layout marker 'sum-sn' does not fit the dir's schema; skipped",
+        ),
+        "retired": (
+            "unrecognized",
+            "skip",
+            "layout marker 'bitor-mask' is unknown to this version; skipped",
+        ),
+    }
+
+
 def test_explicit_upto_batch_is_capped_at_own_max(spark, tmp_path):
     root = tmp_path / "root"
     state = str(root / "vocab")

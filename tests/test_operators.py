@@ -8,6 +8,8 @@ from __future__ import annotations
 import ctypes
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from cdc_publisher_spark.operators import multimodal
@@ -450,6 +452,128 @@ def test_connected_components_converges_on_chains(spark):
     rev = spark.createDataFrame([(b, a) for a, b in edges], "src BIGINT, dst BIGINT")
     got_rev = {r["id"]: r["cluster_id"] for r in connected_components(rev).collect()}
     assert got_rev == got
+
+
+#: A negative bound sends every edge frame, the empty one too, past the
+#: local probe to the distributed hash-to-min loop.
+_DISTRIBUTED = -1
+
+
+def _closure(spark, edges, bound=None):
+    """{(id, cluster_id)} and {(doc_id, cluster_id, csize)} over
+    ``edges`` with ``LOCAL_EDGES`` set to ``bound`` (None: the default)."""
+    from cdc_publisher_spark.operators import components
+
+    df = spark.createDataFrame(edges, "src BIGINT, dst BIGINT")
+    with pytest.MonkeyPatch.context() as mp:
+        if bound is not None:
+            mp.setattr(components, "LOCAL_EDGES", bound)
+        cc = components.connected_components(df)
+        nd = components.neardup_clusters(df, left="src", right="dst")
+        return set(map(tuple, cc.collect())), set(map(tuple, nd.collect()))
+
+
+@pytest.mark.parametrize("bound", [None, _DISTRIBUTED], ids=["local", "distributed"])
+def test_components_drop_edges_with_a_null_endpoint(spark, bound):
+    """An edge with a NULL side joins nothing: it adds no NULL node and
+    no phantom singleton for its other side."""
+    cc, nd = _closure(spark, [(1, 2), (2, None), (None, 3), (5, 5)], bound)
+    assert cc == {(1, 1), (2, 1), (5, 5)}
+    assert nd == {(1, 1, 2), (2, 1, 2), (5, 5, 1)}
+
+
+@pytest.mark.parametrize("bound", [None, _DISTRIBUTED], ids=["local", "distributed"])
+def test_components_of_no_edges_is_empty_with_schema(spark, bound):
+    from cdc_publisher_spark.operators import components
+
+    df = spark.createDataFrame([], "src INT, dst INT")
+    with pytest.MonkeyPatch.context() as mp:
+        if bound is not None:
+            mp.setattr(components, "LOCAL_EDGES", bound)
+        cc = components.connected_components(df)
+        nd = components.neardup_clusters(df, left="src", right="dst")
+        assert cc.collect() == [] and nd.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in cc.schema] == [
+        ("id", "int"), ("cluster_id", "int")
+    ]
+    assert [(f.name, f.dataType.simpleString()) for f in nd.schema] == [
+        ("doc_id", "int"), ("cluster_id", "int"), ("csize", "bigint")
+    ]
+
+
+_node = st.one_of(
+    st.integers(-40, 40),
+    st.integers(2**62 - 8, 2**62 + 8),
+    st.integers(-(2**62) - 8, -(2**62) + 8),
+)
+
+
+@st.composite
+def _pair_graphs(draw):
+    """Chains, cliques, stars and disjoint pairs over a shared id pool
+    (so shapes may merge), plus duplicate and reversed edges and
+    self-loops, in a drawn order."""
+    edges: list[tuple[int, int]] = []
+    for _ in range(draw(st.integers(1, 4))):
+        shape = draw(st.sampled_from(["chain", "clique", "star", "pair"]))
+        nodes = draw(st.lists(_node, min_size=2, max_size=6, unique=True))
+        if shape == "chain":
+            edges += list(zip(nodes, nodes[1:]))
+        elif shape == "clique":
+            edges += [(a, b) for i, a in enumerate(nodes) for b in nodes[i + 1 :]]
+        elif shape == "star":
+            edges += [(nodes[0], x) for x in nodes[1:]]
+        else:
+            edges.append((nodes[0], nodes[1]))
+    edges += draw(st.lists(st.sampled_from(edges), max_size=3))
+    edges += [(b, a) for a, b in draw(st.lists(st.sampled_from(edges), max_size=3))]
+    edges += [(x, x) for x in draw(st.lists(_node, max_size=2))]
+    return draw(st.permutations(edges))
+
+
+@settings(max_examples=8, deadline=None)
+@given(edges=_pair_graphs())
+def test_components_local_path_twins_distributed_loop(spark, edges):
+    """The driver-side closure and the distributed hash-to-min loop give
+    identical labels and cluster sizes, and both match union-find."""
+    local = _closure(spark, edges)
+    assert local == _closure(spark, edges, _DISTRIBUTED)
+    cc, nd = local
+    assert {i for i, c in cc if i != c} == _union_find_drops(edges)
+    assert {(d, c) for d, c, _ in nd} == cc
+    sizes = {c: sum(1 for _, k in cc if k == c) for _, c in cc}
+    assert all(n == sizes[c] for _, c, n in nd)
+
+
+def _jobs_in_group(spark, group: str) -> int:
+    """Jobs launched under ``group``; one marker job on this thread
+    makes every earlier job of the group visible first."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "marker")
+    sc.parallelize([0], 1).count()
+    return len(sc.statusTracker().getJobIdsForGroup(group)) - 1
+
+
+def test_neardup_clusters_runs_only_the_probe_job(spark):
+    """Below ``LOCAL_EDGES`` the closure is one Arrow collect: building
+    the frame runs exactly one job, and the built frame runs none until
+    it is consumed."""
+    import uuid
+
+    from cdc_publisher_spark.operators.components import neardup_clusters
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8), (8, 9)], "d1 BIGINT, d2 BIGINT")
+    sc = spark.sparkContext
+    build, idle = f"cc-build-{uuid.uuid4()}", f"cc-idle-{uuid.uuid4()}"
+    sc.setJobGroup(build, "closure")
+    out = neardup_clusters(pairs)
+    assert _jobs_in_group(spark, build) == 1
+    sc.setJobGroup(idle, "built")
+    assert out.columns == ["doc_id", "cluster_id", "csize"]
+    assert _jobs_in_group(spark, idle) == 0
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 1, 3), (2, 1, 3), (3, 1, 3), (7, 7, 3), (8, 7, 3), (9, 7, 3)
+    ]
 
 
 def test_cosine_pairs_lsh_recall(spark, sf_oracle):

@@ -694,8 +694,9 @@ JOIN_AUDIT_ALLOWLIST: dict[str, str] = {
 def test_no_unbounded_content_keyed_self_joins(spark, sf_smoke, monkeypatch):
     """Fourth tripwire shape (VERDICT r9 ask #1): sweep every
     registered query — final frame PLUS every persisted / checkpointed
-    intermediate (the k22/k92 pair graphs live behind an eager
-    localCheckpoint) — for row-multiplying equi-joins of a corpus
+    / Arrow-collected intermediate (the k22/k92 pair graphs reach the
+    driver through the components closure's toPandas probe) — for
+    row-multiplying equi-joins of a corpus
     table to itself on content keys. A hot shingle with document
     frequency f contributes f² rows, so any NEW query with this shape
     must either bound the key (df-cap, banding, fitted k) or declare
@@ -732,6 +733,16 @@ def test_no_unbounded_content_keyed_self_joins(spark, sf_smoke, monkeypatch):
                     return _real(self, *a, **k)
 
                 monkeypatch.setattr(cls, m, capturing)
+        # Arrow collects to the driver (the components closure's
+        # bounded probe) end the intermediate's plan the same way:
+        # capture the collected frame, still run the real collect
+        real_to_pandas = cls.toPandas
+
+        def capturing_to_pandas(self, *a, _real=real_to_pandas, **k):
+            captured.append(self)
+            return _real(self, *a, **k)
+
+        monkeypatch.setattr(cls, "toPandas", capturing_to_pandas)
 
     offenders: dict[str, str] = {}
     allowlisted_hits: set[str] = set()

@@ -66,7 +66,7 @@ def test_earlier_bloom_dir_is_ignored_and_skipped_by_maintain(
     """Earlier versions kept the guard's id Bloom filter in
     ``dedup/id_bloom`` under a ``bitor-mask`` marker. The writer never
     reads or writes that dir; ``maintain`` skips it with its
-    unrecognized-marker note and compacts the three dedup dirs."""
+    unknown-marker note and compacts the three dedup dirs."""
     root = tmp_path / "state"
     bloom = str(root / "dedup" / "id_bloom")
     spark.createDataFrame([(0, 1)], "word int, mask bigint").write.parquet(
@@ -96,7 +96,7 @@ def test_earlier_bloom_dir_is_ignored_and_skipped_by_maintain(
     assert out.count("compact\trows\t") == 3, out
     (skip,) = [line for line in out.splitlines() if "id_bloom" in line]
     assert skip.startswith("skip\tunrecognized\t"), skip
-    assert "layout marker 'bitor-mask'" in skip, skip
+    assert "layout marker 'bitor-mask' is unknown to this version; skipped" in skip, skip
     assert all(compacted_upto(spark, d) == 1 for d in dirs)
     assert compacted_upto(spark, bloom) is None
     assert [k for k, _ in batch_dirs(spark, bloom)] == [0]
