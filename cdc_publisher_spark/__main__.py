@@ -253,6 +253,13 @@ def cmd_maintain(args) -> int:
     return 0
 
 
+def _non_negative_int(text: str) -> int:
+    n = int(text)
+    if n < 0:
+        raise argparse.ArgumentTypeError(f"must be >= 0, got {n}")
+    return n
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="python -m cdc_publisher_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -315,7 +322,7 @@ def main(argv: list[str] | None = None) -> int:
         type=int,
         default=None,
         help="concurrent consumer chains per trigger (default "
-        "SUITE_PARALLELISM=4; 1 = strictly sequential fan-out)",
+        "SUITE_PARALLELISM=6; 1 = strictly sequential fan-out)",
     )
     sp.set_defaults(fn=cmd_monitors)
 
@@ -357,7 +364,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     sp.add_argument(
         "--grace",
-        type=int,
+        type=_non_negative_int,
         default=0,
         help="with --vacuum: keep the newest N superseded batch dirs for "
         "unsynchronized external readers",

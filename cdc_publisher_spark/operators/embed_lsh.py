@@ -43,6 +43,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cdc_publisher_spark.operators.multimodal import _ship_module_by_value
+
 #: Quantization scale: six decimal digits of the embedding survive
 #: into the integer projection — far below any meaningful cosine
 #: structure, far above float noise.
@@ -88,20 +90,6 @@ def rh_sign(bit: int, j: int) -> int:
     return 1 if int(d[:2], 16) % 2 == 0 else -1
 
 
-def _ship_module_by_value() -> None:
-    """Pickle this module's functions BY VALUE into executor closures
-    (the operators/multimodal.py convention — driver-contract sessions'
-    executors cannot import the engine package)."""
-    import sys
-
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
-
-
 def sign_matrix(n_bits: int, dim: int):
     """The ±1 matrix as numpy int64 (n_bits × dim) — rh_sign baked
     once, shared by every Arrow batch."""
@@ -138,7 +126,7 @@ def rh_band_rows(
     the oracle replays it bit-for-bit. Hash-repartitions on the id
     first (the synth_media_from_text rule: Python passes want an even
     spread, not the source's file-driven partitioning)."""
-    _ship_module_by_value()
+    _ship_module_by_value(__name__)
     n_bits = bands * bits
 
     def batches(it):

@@ -202,17 +202,17 @@ def _decoder() -> Decoder:
 DECODED_FIELDS = "media_id long, media_type string, n_bytes long, sha256 string, width int, height int, n_channels int, mean_luma double"
 
 
-def _ship_module_by_value() -> None:
-    """Make this module's functions pickle BY VALUE into executor
-    closures (cloudpickle default is by-reference for importable
-    modules, which breaks driver-contract sessions whose executors
-    cannot import the engine package)."""
+def _ship_module_by_value(module: str) -> None:
+    """Make the functions of the imported module named ``module``
+    pickle BY VALUE into executor closures (cloudpickle default is
+    by-reference for importable modules, which breaks driver-contract
+    sessions whose executors cannot import the engine package)."""
     import sys
 
     try:
         from pyspark import cloudpickle
 
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
+        cloudpickle.register_pickle_by_value(sys.modules[module])
     except Exception:
         pass  # older cloudpickle: local-mode tests still work
 
@@ -223,7 +223,7 @@ def decode_media(df: DataFrame, batch_wise: bool = True) -> DataFrame:
     The closure captures the registered decoder by value; Arrow moves
     payload batches, Python touches each blob once.
     """
-    _ship_module_by_value()
+    _ship_module_by_value(__name__)
     decoder = _decoder()
 
     def batches(it: Iterator) -> Iterator:
@@ -332,7 +332,7 @@ def resize_media(df: DataFrame, width: int, height: int) -> DataFrame:
     dependency-free builtin_resizer, other formats need a registered
     codec (the test container has none — SURVEY north-star seam).
     """
-    _ship_module_by_value()
+    _ship_module_by_value(__name__)
     resizer = _RESIZER if _RESIZER is not None else builtin_resizer
 
     def batches(it: Iterator) -> Iterator:
@@ -409,7 +409,7 @@ def image_dhash(df: DataFrame) -> DataFrame:
     dhash). Arrow moves the binary batches; each blob is decoded once.
     At 100 TB this is the canonical image-near-dup signature pass —
     the 8-byte dhash is what shuffles, never the pixels."""
-    _ship_module_by_value()
+    _ship_module_by_value(__name__)
 
     def batches(it: Iterator) -> Iterator:
         import pandas as pd
@@ -582,7 +582,7 @@ def audio_fingerprint(df: DataFrame) -> DataFrame:
     (media_id, frame, subfp) — AUDIO_FP_FRAMES rows per clip. The
     canonical audio-near-dup signature pass at 100 TB: waveforms stay
     inside the Arrow batch; three longs per frame shuffle."""
-    _ship_module_by_value()
+    _ship_module_by_value(__name__)
 
     def batches(it: Iterator) -> Iterator:
         import pandas as pd
@@ -664,7 +664,7 @@ def synth_media_from_text(
     pass runs serial on one core (measured 9.4 s -> ~1 s at sf0.1).
     The same rule at 100 TB: CPU-bound media passes want an even
     hash spread, not the source's file-size-driven partitioning."""
-    _ship_module_by_value()
+    _ship_module_by_value(__name__)
 
     def batches(it: Iterator) -> Iterator:
         import pandas as pd
@@ -698,7 +698,7 @@ def decode_media_tolerant(df: DataFrame, batch_wise: bool = True) -> DataFrame:
     mislabeled, and one bad byte string must cost one quarantined row,
     not a stage retry storm. Filter ``ok`` downstream; route ``NOT
     ok`` rows to the quarantine sink with their err reason."""
-    _ship_module_by_value()
+    _ship_module_by_value(__name__)
     decoder = _decoder()
 
     def batches(it: Iterator) -> Iterator:

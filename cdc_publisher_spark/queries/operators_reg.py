@@ -338,7 +338,7 @@ def q_k55_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
 
-    MM._ship_module_by_value()
+    MM._ship_module_by_value(MM.__name__)
 
     def synth(it: Iterator) -> Iterator:
         import pandas as pd

@@ -62,7 +62,6 @@ from cdc_publisher_spark.operators.multimodal import audio_fingerprint
 from cdc_publisher_spark.streaming.state import (
     read_state,
     require_layout_marker,
-    start_state_stream,
     write_layout_marker,
 )
 
@@ -152,36 +151,9 @@ def read_audio_dups(spark: SparkSession, pairs_dir: str) -> DataFrame | None:
     return None if df is None else df.select("orig_id", "dup_id")
 
 
-def stream_audio_dups(
-    stream_df: DataFrame,
-    state_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    compact_every: int | None = None,
-    vacuum_grace: int | None = None,
-):
-    """Start the monitor: media in, exact-dup detections out. Offsets
-    commit after both writes (commit-on-success); in-stream compaction
-    folds COMMITTED batches only (state.in_stream_watermark) of BOTH
-    dirs, anchored on the fpk ``state_dir``."""
-    return start_state_stream(
-        stream_df,
-        checkpoint_dir,
-        lambda df, bid: audio_dup_micro_batch(
-            df, bid, state_dir, pairs_dir, id_col, payload_col
-        ),
-        (state_dir, pairs_dir),
-        compact_every,
-        vacuum_grace,
-    )
-
-
 __all__ = [
     "audio_dup_micro_batch",
     "audio_fpk",
     "read_audio_dups",
     "read_audio_fpk_state",
-    "stream_audio_dups",
 ]

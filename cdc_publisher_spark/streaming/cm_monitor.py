@@ -23,10 +23,11 @@ State layout: ``state_dir/batch=N/`` parquet of (group…, r, b, cnt)
 counter DELTAS — the cells of that batch alone, ≤ groups × d × w rows
 regardless of batch size (the groupBy's map-side combine builds each
 partition's sketch before the shuffle). The read side sum-merges
-across batches. Compaction pre-sums batches under the watermark into
-one segment with the ``sum-cnt`` layout's fold — lossless because +
-is the sketch's own merge operator — so long-run state stays
-O(groups × d × w) however many batches ever ran.
+across batches. The ``maintain`` pass (streaming/maintenance.py)
+pre-sums batches under the committed watermark into one segment with
+the ``sum-cnt`` layout's fold — lossless because + is the sketch's
+own merge operator — so long-run state stays O(groups × d × w)
+however many batches ever ran.
 
 foreachBatch (not applyInPandasWithState): cell state is
 group-global and aggregate-shaped, the SURVEY §4.3 external-state
@@ -42,7 +43,6 @@ from pyspark.sql import DataFrame, SparkSession
 from cdc_publisher_spark.operators.cm import cm_cells, cm_point_estimates
 from cdc_publisher_spark.streaming.state import (
     read_merged,
-    start_state_stream,
     write_layout_marker,
 )
 
@@ -88,40 +88,8 @@ def cm_state_estimates(
     return cm_point_estimates(cells, probes, value_col, group_cols)
 
 
-def stream_cm_heavy_hitters(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    value_col: str = "g",
-    group_cols: list[str] | None = None,
-    compact_every: int | None = None,
-    vacuum_grace: int | None = None,
-):
-    """Start the monitor: (group…, value) rows in, counter-cell state
-    out. Returns the StreamingQuery; offsets commit to
-    ``checkpoint_dir`` after each batch's write (commit-on-success,
-    streaming/pipeline.py contract). ``compact_every=K`` pre-SUMS the
-    cell state in-stream every K batches (the compacted segment stays
-    ≤ groups x d x w rows however long the stream runs), optionally
-    vacuuming with a ``vacuum_grace`` margin. In-stream compaction
-    folds COMMITTED batches only (watermark ``bid - 1``,
-    state.in_stream_watermark): the current batch's dir stays live
-    until its offsets commit, so the non-idempotent sum-merge never
-    bakes an uncommitted delta into the segment and a replayed
-    trigger re-counts nothing."""
-    return start_state_stream(
-        stream_df,
-        checkpoint_dir,
-        lambda df, bid: cm_micro_batch(df, bid, state_dir, value_col, group_cols),
-        (state_dir,),
-        compact_every,
-        vacuum_grace,
-    )
-
-
 __all__ = [
     "cm_micro_batch",
     "cm_state_estimates",
     "read_cm_cells",
-    "stream_cm_heavy_hitters",
 ]

@@ -24,7 +24,9 @@ consumer in the layer, and the read cost of the live curve is a
 Sum is not idempotent, so this monitor leans on the layer's two
 replay guards exactly like count-min/exposure: per-batch OVERWRITE
 deltas (a redelivered trigger rewrites ``batch=N`` byte-for-byte) and
-the committed-only in-stream watermark (state.in_stream_watermark).
+the committed-only watermark ``maintain`` folds to (streaming/
+maintenance.py — read from the stream's commits log, so no
+uncommitted delta is ever folded).
 The contract battery in tests/test_state_consumer_contract.py runs
 this consumer through compaction generations, vacuum, and both replay
 shapes; tests/test_streaming_ctx.py pins stream==batch as an exact
@@ -42,7 +44,6 @@ from cdc_publisher_spark.functions.text import n_words
 from cdc_publisher_spark.streaming.state import (
     CTX_METRICS,
     read_merged,
-    start_state_stream,
     write_layout_marker,
 )
 
@@ -106,28 +107,6 @@ def read_ctx_curve(spark: SparkSession, state_dir: str) -> DataFrame | None:
     return None if df is None else df.orderBy("budget")
 
 
-def stream_ctx_economics(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    compact_every: int | None = None,
-    vacuum_grace: int | None = None,
-):
-    """Start the monitor: documents in, per-budget economics state
-    out. Offsets commit to ``checkpoint_dir`` after each batch's write
-    (commit-on-success); in-stream compaction folds COMMITTED batches
-    only (state.in_stream_watermark)."""
-    return start_state_stream(
-        stream_df,
-        checkpoint_dir,
-        lambda df, bid: ctx_micro_batch(df, bid, state_dir, text_col),
-        (state_dir,),
-        compact_every,
-        vacuum_grace,
-    )
-
-
 __all__ = [
     "CTX_BUDGETS",
     "CTX_METRICS",
@@ -135,5 +114,4 @@ __all__ = [
     "ctx_economics",
     "ctx_micro_batch",
     "read_ctx_curve",
-    "stream_ctx_economics",
 ]

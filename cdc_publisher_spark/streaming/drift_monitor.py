@@ -21,10 +21,10 @@ compaction — the smallest state of the five consumers; the monitor
 exists not for state size but for read cadence: the drift report
 (per-label centroid cosine to the global centroid) stays answerable
 at any moment without rescanning corpus embeddings. Replay safety is
-the layer's overwrite discipline plus the committed-only in-stream
-watermark (state.in_stream_watermark): a redelivered batch rewrites
-its own delta, and no uncommitted delta is ever folded into the
-compacted segment.
+the layer's overwrite discipline plus the committed-only watermark
+``maintain`` folds to (streaming/maintenance.py): a redelivered batch
+rewrites its own delta, and no uncommitted delta is ever folded into
+the compacted segment.
 
 The ``maintain`` CLI pass (streaming/maintenance.py) recognizes this
 layout by its ``sum-sn`` marker — sum-merge of both ``s`` and ``n`` —
@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 
 from cdc_publisher_spark.streaming.state import (
     read_merged,
-    start_state_stream,
     write_layout_marker,
 )
 
@@ -135,36 +134,10 @@ def read_drift_report(spark: SparkSession, state_dir: str) -> DataFrame | None:
     return None if sums is None else drift_report(sums)
 
 
-def stream_centroid_drift(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    compact_every: int | None = None,
-    vacuum_grace: int | None = None,
-):
-    """Start the monitor: labeled embedding rows in, partial-sum state
-    out. Returns the StreamingQuery; offsets commit to
-    ``checkpoint_dir`` after each batch's write (commit-on-success,
-    streaming/pipeline.py contract). In-stream compaction folds
-    COMMITTED batches only (watermark ``bid - 1``,
-    state.in_stream_watermark)."""
-    return start_state_stream(
-        stream_df,
-        checkpoint_dir,
-        lambda df, bid: drift_micro_batch(df, bid, state_dir, label_col, vec_col),
-        (state_dir,),
-        compact_every,
-        vacuum_grace,
-    )
-
-
 __all__ = [
     "centroid_deltas",
     "drift_micro_batch",
     "drift_report",
     "read_centroid_sums",
     "read_drift_report",
-    "stream_centroid_drift",
 ]

@@ -49,6 +49,8 @@ versions — before it writes anything.
 Replay: every write overwrites this batch's own ``batch=N`` dirs and
 the probe excludes them by construction; an EMPTY trigger returns
 before any write (the audio-guard ADVICE r11 fix, applied from birth).
+The three dirs are compacted out of band by ``maintain``
+(streaming/maintenance.py), which reads their markers.
 """
 
 from __future__ import annotations
@@ -62,14 +64,12 @@ from cdc_publisher_spark.functions.vectors import cosine_with_norms, l2_norm
 from cdc_publisher_spark.operators.embed_lsh import RH_BANDS, RH_BITS, rh_band_rows
 from cdc_publisher_spark.streaming.state import (
     batch_dirs,
-    compact_dir,
     compacted_upto,
     hadoop_fs,
     read_layout_marker,
     read_state,
     replace_layout_marker,
     require_layout_marker,
-    start_state_stream,
     vacuum_state,
     write_layout_marker,
     write_manifest,
@@ -343,64 +343,13 @@ def migrate_embed_layout(
         vecs.unpersist()
 
 
-def compact_embed_state(
-    spark: SparkSession,
-    idx_dir: str,
-    vecs_dir: str,
-    pairs_dir: str,
-    upto_batch: int,
-    vacuum: bool = False,
-) -> None:
-    """Compact all three dirs under their declared layouts."""
-    for d in (idx_dir, vecs_dir, pairs_dir):
-        compact_dir(spark, d, upto_batch)
-        if vacuum:
-            vacuum_state(spark, d)
-
-
-def stream_embedding_dups(
-    stream_df: DataFrame,
-    idx_dir: str,
-    vecs_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = EMBED_COS_THRESHOLD,
-    compact_every: int | None = None,
-    vacuum_grace: int | None = None,
-    bands: int = RH_BANDS,
-    bits: int = RH_BITS,
-):
-    """Start the monitor: vectors in, near-dup detections out. Offsets
-    commit after all three writes (commit-on-success); in-stream
-    compaction folds COMMITTED batches only (state.in_stream_watermark)
-    of all three dirs, anchored on ``vecs_dir``. ``bands``/``bits``
-    select the signature scheme — must match the persisted index
-    (``migrate_embed_layout`` moves a dir between schemes; the layout
-    marker rejects a mismatch loudly)."""
-    return start_state_stream(
-        stream_df,
-        checkpoint_dir,
-        lambda df, bid: embed_dup_micro_batch(
-            df, bid, idx_dir, vecs_dir, pairs_dir, id_col, vec_col, threshold,
-            bands=bands, bits=bits,
-        ),
-        (vecs_dir, idx_dir, pairs_dir),
-        compact_every,
-        vacuum_grace,
-    )
-
-
 __all__ = [
     "EMBED_COS_THRESHOLD",
     "MIGRATING_MARKER",
     "scheme_layout",
-    "compact_embed_state",
     "embed_dup_micro_batch",
     "migrate_embed_layout",
     "read_embed_index",
     "read_embed_pairs",
     "read_embed_vec_state",
-    "stream_embedding_dups",
 ]

@@ -27,9 +27,10 @@ overwrite discipline: a redelivered batch OVERWRITES its own
 Unlike the count-min monitor the key space is UNBOUNDED (distinct
 grams, corpus-scale) — which is exactly what the layer's
 parquet-per-batch layout is for: state lives on storage partitioned
-by gram hash at read time, never in executor memory, and compaction
-pre-sums batch deltas into one segment so a long stream's read cost
-is O(distinct grams), not O(batches x grams).
+by gram hash at read time, never in executor memory, and the
+``maintain`` pass (streaming/maintenance.py) pre-sums batch deltas
+into one segment so a long stream's read cost is O(distinct grams),
+not O(batches x grams).
 
 Cross-batch doc redelivery (the same doc_id in two DIFFERENT batch
 ids) would double its grams' counts — that is the incremental dedup
@@ -54,7 +55,6 @@ from cdc_publisher_spark.functions import text as TX
 from cdc_publisher_spark.queries.llm_risk import EXPOSURE_K, RARE_DF
 from cdc_publisher_spark.streaming.state import (
     read_merged,
-    start_state_stream,
     write_layout_marker,
 )
 
@@ -139,45 +139,10 @@ def read_exposure_report(spark: SparkSession, state_dir: str) -> DataFrame | Non
     return None if counts is None else exposure_report(counts)
 
 
-def stream_rare_gram_exposure(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    compact_every: int | None = None,
-    vacuum_grace: int | None = None,
-):
-    """Start the monitor: documents in, gram-count state out. Returns
-    the StreamingQuery; offsets commit to ``checkpoint_dir`` after
-    each batch's write (commit-on-success, streaming/pipeline.py
-    contract). ``compact_every=K`` pre-sums the gram state in-stream
-    every K batches (the compacted segment stays O(distinct grams)
-    however long the stream runs), optionally vacuuming superseded
-    dirs with a ``vacuum_grace`` margin for external readers. In-stream
-    compaction folds COMMITTED batches only (watermark ``bid - 1``,
-    state.in_stream_watermark): the current batch's delta stays a
-    live dir until its offsets commit, so the non-idempotent
-    sum-merge never bakes an uncommitted delta into the segment and a
-    crash-then-replay counts each document exactly once."""
-    return start_state_stream(
-        stream_df,
-        checkpoint_dir,
-        lambda df, bid: exposure_micro_batch(
-            df, bid, state_dir, id_col, text_col, source_col
-        ),
-        (state_dir,),
-        compact_every,
-        vacuum_grace,
-    )
-
-
 __all__ = [
     "exposure_micro_batch",
     "exposure_report",
     "gram_deltas",
     "read_exposure_report",
     "read_gram_counts",
-    "stream_rare_gram_exposure",
 ]

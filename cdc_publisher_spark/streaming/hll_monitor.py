@@ -25,8 +25,9 @@ hard (streaming/incremental_dedup.py): the register merge is
 State layout: ``state_dir/batch=N/`` parquet of (group, bucket, M)
 register DELTAS — the registers of that batch alone, <= groups x 256
 rows regardless of batch size. The read side max-merges across
-batches. Compaction reuses the generic batch-addressed layer
-(streaming/state.py — manifest-marker flip, crash-safe); a compacted
+batches. The ``maintain`` pass (streaming/maintenance.py) compacts
+it through the generic batch-addressed layer (streaming/state.py —
+manifest-marker flip, crash-safe); a compacted
 segment is just the register rows under the watermark pre-merged by
 the ``max-M`` layout's fold, so the long-run state stays
 O(groups x 256) no matter how many batches ever ran.
@@ -45,7 +46,6 @@ from pyspark.sql import DataFrame, SparkSession
 from cdc_publisher_spark.operators.hll import hll_estimate, hll_registers
 from cdc_publisher_spark.streaming.state import (
     read_merged,
-    start_state_stream,
     write_layout_marker,
 )
 
@@ -84,40 +84,8 @@ def hll_state_estimate(
     return hll_estimate(regs, [group_col])
 
 
-def stream_hll_distinct(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    group_col: str = "source",
-    value_col: str = "s",
-    compact_every: int | None = None,
-    vacuum_grace: int | None = None,
-):
-    """Start the monitor: (group, value) rows in, register state out.
-    Returns the StreamingQuery; offsets commit to ``checkpoint_dir``
-    after each batch's write (commit-on-success, streaming/pipeline.py
-    contract). ``compact_every=K`` pre-merges the register state
-    in-stream every K batches (max() is the state's own merge — the
-    compacted segment is ≤ groups x 256 rows however long the stream
-    runs), optionally vacuuming superseded dirs with a
-    ``vacuum_grace`` margin for external readers. Runs after the
-    batch's write, before the checkpoint commit, folding COMMITTED
-    batches only (watermark ``bid - 1``, state.in_stream_watermark):
-    the current batch's dir stays live until its offsets commit, so a
-    crash-then-replay sees exactly the pre-batch compacted state."""
-    return start_state_stream(
-        stream_df,
-        checkpoint_dir,
-        lambda df, bid: hll_micro_batch(df, bid, state_dir, group_col, value_col),
-        (state_dir,),
-        compact_every,
-        vacuum_grace,
-    )
-
-
 __all__ = [
     "hll_micro_batch",
     "hll_state_estimate",
     "read_hll_registers",
-    "stream_hll_distinct",
 ]

@@ -17,7 +17,8 @@ approximation.
 
 State rides the batch-addressed layer in streaming/state.py: every
 write is an OVERWRITE of a ``batch=N`` subdirectory (replay-
-idempotent), compaction flips a crash-safe manifest marker, and each
+idempotent), ``maintain`` (streaming/maintenance.py) compacts out of
+band behind a crash-safe manifest marker, and each
 row-state ``batch=N`` is ONE parquet file with no inner partition
 column (the state.py layout contract):
 
@@ -74,13 +75,9 @@ from cdc_publisher_spark.operators.minhash import (
 from cdc_publisher_spark.functions.text import shingle_rows
 from cdc_publisher_spark.streaming.state import (
     batch_dirs,
-    compact_dir,
     compacted_upto,
     read_state,
     require_layout_marker,
-    start_state_stream,
-    state_trigger,
-    vacuum_state,
     write_layout_marker,
 )
 
@@ -113,8 +110,6 @@ def dedup_micro_batch(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    compact_every: int | None = None,
-    vacuum_grace: int | None = None,
 ) -> None:
     """foreachBatch body: sign the batch once, join its bucket rows
     against the persisted index, materialize candidates, shingle the
@@ -127,61 +122,39 @@ def dedup_micro_batch(
     partitions and the state never accumulates duplicates. The probe
     excludes this batch's partitions from history by construction
     (live dirs are path-filtered, the compact segment row-filtered),
-    so a replayed probe sees exactly the pre-batch state.
-
-    ``compact_every=K`` compacts all three dirs in-stream every K
-    batches (state.state_trigger, anchored on the corpus dir — after
-    this batch's writes, before the checkpoint commit)
-    — the maintenance cadence state.py's concurrency contract names as
-    safe: compaction is single-threaded with the writer, the stream is
-    its own reader and lists dirs fresh next trigger, and the manifest
-    flip is crash-safe. The watermark is ``batch_id - 1`` — COMMITTED
-    batches only, the current batch's dirs stay live until its offsets
-    commit (state.in_stream_watermark). A crashed-then-replayed trigger
-    therefore sees the compacted history (pinned ≤ batch_id-1, never
-    excluded) plus its own live dirs path-excluded — exactly the
-    pre-batch state, so the guard's anti-join still drops every
-    redelivered history id. With ``vacuum_grace=N`` each compaction
-    also vacuums superseded dirs keeping an N-batch margin for any
-    EXTERNAL unsynchronized reader (``read_dedup_state`` from another
-    session); vacuuming stays off by default.
+    so a replayed probe sees exactly the pre-batch state — also after
+    ``maintain`` folded the committed batches below it, so the guard's
+    anti-join still drops every redelivered history id. The three
+    dirs are compacted out of band by ``maintain``
+    (streaming/maintenance.py), never from inside the trigger.
     """
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # refuse a dir declared under any other layout BEFORE any read
-        # or write: mixing layouts inside one dir breaks the union read
-        for d in (corpus_dir, index_dir):
-            require_layout_marker(spark, d, "rows")
-        batch = batch_df.select(id_col, text_col).dropDuplicates([id_col])
-        # metadata-only signal: manifest or any other batch dir present
-        # (corpus is written before index each batch, so its presence
-        # is the authoritative "history exists" marker)
-        has_history = _has_history(spark, corpus_dir, batch_id)
-        if has_history:
-            # the cross-batch guard: drop ids the history already holds
-            seen = read_state(
-                spark, corpus_dir, exclude_batch=batch_id, schema=batch.schema
-            )
-            batch = batch.join(seen.select(id_col), id_col, "left_anti")
-        # the guarded batch feeds three jobs this trigger (existence
-        # probe, shingling, corpus write): cache it once so the
-        # dropDuplicates shuffle and the guard join run once
-        batch = batch.persist()
-        try:
-            _dedup_micro_batch_body(
-                spark, batch, batch_id, has_history, corpus_dir, index_dir,
-                pairs_dir, id_col, text_col, threshold,
-            )
-        finally:
-            batch.unpersist()
-
-    # committed batches only: the current batch's dirs stay live until
-    # ITS offsets commit — see the docstring's replay analysis
-    # (state.in_stream_watermark)
-    state_trigger(
-        write, (corpus_dir, index_dir, pairs_dir), compact_every, vacuum_grace
-    )(batch_df, batch_id)
+    spark = batch_df.sparkSession
+    # refuse a dir declared under any other layout BEFORE any read
+    # or write: mixing layouts inside one dir breaks the union read
+    for d in (corpus_dir, index_dir):
+        require_layout_marker(spark, d, "rows")
+    batch = batch_df.select(id_col, text_col).dropDuplicates([id_col])
+    # metadata-only signal: manifest or any other batch dir present
+    # (corpus is written before index each batch, so its presence
+    # is the authoritative "history exists" marker)
+    has_history = _has_history(spark, corpus_dir, batch_id)
+    if has_history:
+        # the cross-batch guard: drop ids the history already holds
+        seen = read_state(
+            spark, corpus_dir, exclude_batch=batch_id, schema=batch.schema
+        )
+        batch = batch.join(seen.select(id_col), id_col, "left_anti")
+    # the guarded batch feeds three jobs this trigger (existence
+    # probe, shingling, corpus write): cache it once so the
+    # dropDuplicates shuffle and the guard join run once
+    batch = batch.persist()
+    try:
+        _dedup_micro_batch_body(
+            spark, batch, batch_id, has_history, corpus_dir, index_dir,
+            pairs_dir, id_col, text_col, threshold,
+        )
+    finally:
+        batch.unpersist()
 
 
 def _dedup_micro_batch_body(
@@ -263,65 +236,3 @@ def _dedup_micro_batch_body(
     finally:
         new_buckets.unpersist()
         tok_batch.unpersist()
-
-
-def compact_dedup_state(
-    spark: SparkSession,
-    corpus_dir: str,
-    index_dir: str,
-    pairs_dir: str,
-    upto_batch: int,
-    vacuum: bool = False,
-) -> None:
-    """Compact the three dedup state dirs to ``upto_batch``. Vacuuming
-    superseded dirs is opt-in (ADVICE r6: deleting them under an
-    unsynchronized concurrent reader is the one unsafe interleaving;
-    see state.vacuum_state)."""
-    for d in (corpus_dir, index_dir, pairs_dir):
-        compact_dir(spark, d, upto_batch)
-        if vacuum:
-            vacuum_state(spark, d)
-
-
-def stream_neardup_pairs(
-    stream_df: DataFrame,
-    corpus_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    index_dir: str | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    compact_every: int | None = None,
-    vacuum_grace: int | None = None,
-):
-    """Start the streaming dedup: documents in, near-dup pairs out.
-
-    Returns the StreamingQuery. Offsets commit to ``checkpoint_dir``
-    after each batch's writes — the commit-on-success contract the CDC
-    pipeline uses (streaming/pipeline.py). ``index_dir`` defaults to a
-    sibling of ``corpus_dir``. ``doc_id`` must be unique across
-    batches (see module docstring); the cross-batch guard enforces
-    that with one anti-join against the history id column per
-    trigger. ``compact_every=K`` turns on in-stream state compaction
-    every K batches (optionally vacuuming with a ``vacuum_grace``
-    margin) so a long-running stream's batch dirs stay bounded without
-    external maintenance — see ``dedup_micro_batch``.
-    """
-    idx = index_dir or os.path.join(os.path.dirname(corpus_dir.rstrip("/")), "lsh_index")
-    return start_state_stream(
-        stream_df,
-        checkpoint_dir,
-        lambda df, bid: dedup_micro_batch(
-            df,
-            bid,
-            corpus_dir,
-            idx,
-            pairs_dir,
-            id_col,
-            text_col,
-            threshold,
-            compact_every=compact_every,
-            vacuum_grace=vacuum_grace,
-        ),
-    )

@@ -28,9 +28,10 @@ run. The trigger persists the batch once (the consumers would
 otherwise re-run the source scan) and derives the shared word frame
 once for HLL + CM. The audio guard runs over clips synthesized
 deterministically from the text column
-(operators/multimodal.synth_media_from_text — the sandbox ships no
-audio corpus); a deployment with real media swaps in its payload
-column via streaming/audio_monitor.stream_audio_dups directly. The
+(operators/multimodal.synth_media_from_text — no audio corpus ships
+with the fixtures); a deployment with real media runs
+streaming/audio_monitor.audio_dup_micro_batch over its own payload
+column. The
 embedding monitor runs at the q_k21 audit threshold (the synthetic
 embeddings are random — a production deployment passes its own
 ``embed_threshold``).

@@ -12,15 +12,20 @@ cannot express. Its nine consumers: the incremental LSH dedup
 (streaming/vocab_monitor.py), the context-length economics monitor
 (streaming/ctx_monitor.py), the audio exact-dup guard
 (streaming/audio_monitor.py) and the embedding near-dup monitor
-(streaming/embed_monitor.py). The ``maintain`` CLI subcommand
-(streaming/maintenance.py) compacts their dirs offline. It
-was promoted out of ``incremental_dedup`` (VERDICT r6 ask #2) so the
-contract is explicit and the consumers can evolve independently.
+(streaming/embed_monitor.py). It was promoted out of
+``incremental_dedup`` (VERDICT r6 ask #2) so the contract is explicit
+and the consumers can evolve independently.
 
 Every layout a writer may declare lives in ONE table, ``LAYOUTS``:
 its marker name, required columns, display kind and merge fold.
-Readers, in-stream compaction (``compact_dir`` via ``state_trigger``)
-and ``maintain`` all take the layout from it.
+Readers and compaction (``compact_dir``) take the layout from it.
+
+One scheduler decides when a dir is folded: the ``maintain`` pass
+(streaming/maintenance.run_maintenance, CLI ``maintain``). Against a
+live stream it reads the committed watermark from the stream's
+``commits/`` log (``checkpoint_committed_upto``) and runs between
+triggers; a stream's foreachBatch body only writes its own
+``batch=N`` deltas (``start_state_stream``).
 
 The layout contract
 -------------------
@@ -55,10 +60,10 @@ applier (operators/cdc_apply.py SnapshotApplier).
 ``vacuum_state`` deletes superseded per-batch dirs and old compact
 segments. It is safe against the WRITER at any time, but an
 unsynchronized CONCURRENT reader that listed dirs against the
-pre-flip manifest can hit deleted paths mid-job — so compaction
-defaults to ``vacuum=False`` everywhere (ADVICE r6) and vacuuming is
-an explicit maintenance action, optionally with a ``grace_batches``
-margin so an in-flight reader's view survives the sweep. Superseded
+pre-flip manifest can hit deleted paths mid-job — so ``maintain``
+defaults to ``vacuum=False`` (ADVICE r6) and vacuuming is an explicit
+maintenance action, optionally with a ``grace_batches`` margin so an
+in-flight reader's view survives the sweep. Superseded
 dirs are only garbage: deferral costs disk, not correctness.
 
 All filesystem access goes through the JVM Hadoop FileSystem API, so
@@ -398,46 +403,6 @@ def read_merged(
     return None if df is None else LAYOUTS[layout].merge(df.select(*columns))
 
 
-def in_stream_watermark(
-    spark: SparkSession,
-    state_dir: str,
-    batch_id: int,
-    compact_every: int | None,
-) -> int | None:
-    """The watermark an IN-STREAM compaction (from inside the very
-    foreachBatch trigger that just wrote ``batch=batch_id``) may fold
-    to, or None when this trigger shouldn't compact.
-
-    Committed batches only — ``batch_id - 1`` — never the current,
-    not-yet-checkpointed batch (ADVICE r8, medium): a merge-style
-    compaction pins folded rows to the watermark batch id, so folding
-    the in-flight batch would (a) let a replayed trigger's
-    ``exclude_batch`` row-filter erase the whole merged history of
-    every merge-folded layout (sums, HLL registers, first-seen
-    batches), and (b) bake a batch into the segment before its offsets
-    commit, making the segment's contents depend on a replay
-    recomputing bit-identical deltas. With the committed-only
-    watermark the current batch's dirs stay live until ITS checkpoint
-    commits, and the next compaction trigger folds it.
-
-    Returns None when this isn't a compaction trigger
-    (``(batch_id + 1) % compact_every != 0``), when nothing committed
-    exists below the current batch, or when the manifest already
-    covers the target (a replayed compaction trigger — idempotent
-    skip, not an error)."""
-    if not compact_every or (batch_id + 1) % compact_every != 0:
-        return None
-    upto = batch_id - 1
-    prev = compacted_upto(spark, state_dir)
-    if prev is not None and prev >= upto:
-        return None
-    if prev is None and not any(
-        k < batch_id for k, _ in batch_dirs(spark, state_dir)
-    ):
-        return None
-    return upto
-
-
 def compact_state(
     spark: SparkSession,
     state_dir: str,
@@ -508,20 +473,21 @@ def vacuum_state(
     superseded ``_compact/upto=M`` segments. Returns the number of
     directories removed.
 
-    ``grace_batches`` keeps the newest N superseded batch dirs (and
-    all but the last N superseded compact segments' worth of safety —
-    segments follow the same margin counted from the watermark down),
-    so a reader that listed dirs just before the manifest flip can
-    still finish its scan; run a later vacuum to reclaim them.
+    ``grace_batches`` keeps the newest N superseded batch dirs and the
+    newest N superseded compact segments (all of them when fewer than
+    N exist), so a reader that listed dirs just before the manifest
+    flip can still finish its scan; run a later vacuum to reclaim
+    them. A negative margin raises.
 
     Concurrency contract: crash-safe against the WRITER at any time,
     but an unsynchronized CONCURRENT reader — a micro-batch that
     listed state dirs against the pre-flip manifest and hasn't
     executed its scan yet — can hit deleted paths mid-job. Run
-    vacuuming from the stream's own maintenance cadence (between
-    triggers), with the stream stopped, or leave a ``grace_batches``
-    margin; superseded dirs are only garbage, so deferral costs disk,
-    not correctness."""
+    vacuuming between triggers (``maintain --checkpoint``), with the
+    stream stopped, or leave a ``grace_batches`` margin; superseded
+    dirs are only garbage, so deferral costs disk, not correctness."""
+    if grace_batches < 0:
+        raise ValueError(f"grace_batches must be >= 0, got {grace_batches}")
     upto = compacted_upto(spark, state_dir)
     if upto is None:
         return 0
@@ -529,7 +495,7 @@ def vacuum_state(
     jvm = spark._jvm
     removed = 0
     superseded = [(k, d) for k, d in batch_dirs(spark, state_dir) if k <= upto]
-    keep = {k for k, _ in superseded[len(superseded) - grace_batches:]} if grace_batches else set()
+    keep = {k for k, _ in superseded[-grace_batches:]} if grace_batches else set()
     for k, d in superseded:
         if k not in keep:
             fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
@@ -542,7 +508,7 @@ def vacuum_state(
             if st.getPath().getName().startswith("upto=")
         )
         old = [s for s in segs if s < upto]
-        keep_segs = set(old[len(old) - grace_batches:]) if grace_batches else set()
+        keep_segs = set(old[-grace_batches:]) if grace_batches else set()
         for s in old:
             if s not in keep_segs:
                 fs.delete(
@@ -555,57 +521,19 @@ def vacuum_state(
     return removed
 
 
-
-def state_trigger(
-    write: Callable[[DataFrame, int], None],
-    dirs: Sequence[str] = (),
-    compact_every: int | None = None,
-    vacuum_grace: int | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """The foreachBatch body every batch-addressed state stream runs:
-    ``write(df, batch_id)``, then — on a compaction trigger — fold
-    every dir in ``dirs`` to the committed-only watermark of the
-    ANCHOR dir ``dirs[0]`` (``in_stream_watermark``) with
-    ``compact_dir``, then, with ``vacuum_grace`` set, vacuum each dir
-    keeping that margin for external readers. Runs after the batch's
-    writes and before the checkpoint commit, so a crash-then-replay
-    sees exactly the pre-batch compacted state."""
-
-    def body(df: DataFrame, batch_id: int) -> None:
-        write(df, batch_id)
-        spark = df.sparkSession
-        upto = (
-            in_stream_watermark(spark, dirs[0], batch_id, compact_every)
-            if dirs
-            else None
-        )
-        if upto is None:
-            return
-        for d in dirs:
-            compact_dir(spark, d, upto)
-        if vacuum_grace is not None:
-            for d in dirs:
-                vacuum_state(spark, d, grace_batches=vacuum_grace)
-
-    return body
-
-
 def start_state_stream(
     stream_df: DataFrame,
     checkpoint_dir: str,
     write: Callable[[DataFrame, int], None],
-    dirs: Sequence[str] = (),
-    compact_every: int | None = None,
-    vacuum_grace: int | None = None,
 ):
-    """Start ``stream_df`` with ``state_trigger(write, dirs, ...)`` as
-    its foreachBatch body; offsets commit to ``checkpoint_dir`` after
-    each trigger's body returns (commit-on-success,
-    streaming/pipeline.py contract). Returns the StreamingQuery."""
+    """Start ``stream_df`` with ``write`` as its foreachBatch body;
+    offsets commit to ``checkpoint_dir`` after each trigger's body
+    returns (commit-on-success, streaming/pipeline.py contract).
+    Compaction runs out of band: ``maintain --checkpoint
+    <checkpoint_dir>`` (streaming/maintenance.py) folds the batches
+    the commits log names. Returns the StreamingQuery."""
     return (
-        stream_df.writeStream.foreachBatch(
-            state_trigger(write, dirs, compact_every, vacuum_grace)
-        )
+        stream_df.writeStream.foreachBatch(write)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
         .start()
@@ -657,7 +585,6 @@ __all__ = [
     "declared_layout",
     "fitting_layout",
     "hadoop_fs",
-    "in_stream_watermark",
     "inheriting_local_properties",
     "read_layout_marker",
     "read_merged",
@@ -665,7 +592,6 @@ __all__ = [
     "replace_layout_marker",
     "require_layout_marker",
     "start_state_stream",
-    "state_trigger",
     "vacuum_state",
     "write_layout_marker",
     "write_manifest",

@@ -42,7 +42,6 @@ from pyspark.sql import functions as F
 from cdc_publisher_spark.functions.text import words
 from cdc_publisher_spark.streaming.state import (
     read_merged,
-    start_state_stream,
     write_layout_marker,
 )
 
@@ -112,34 +111,9 @@ def read_vocab_report(spark: SparkSession, state_dir: str) -> DataFrame | None:
     return None if fs is None else vocab_report(fs)
 
 
-def stream_vocab_growth(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    source_col: str = "source",
-    compact_every: int | None = None,
-    vacuum_grace: int | None = None,
-):
-    """Start the monitor: documents in, first-seen vocabulary state
-    out. Returns the StreamingQuery; offsets commit to
-    ``checkpoint_dir`` after each batch's write (commit-on-success,
-    streaming/pipeline.py contract). In-stream compaction folds
-    COMMITTED batches only (state.in_stream_watermark)."""
-    return start_state_stream(
-        stream_df,
-        checkpoint_dir,
-        lambda df, bid: vocab_micro_batch(df, bid, state_dir, text_col, source_col),
-        (state_dir,),
-        compact_every,
-        vacuum_grace,
-    )
-
-
 __all__ = [
     "read_first_seen",
     "read_vocab_report",
-    "stream_vocab_growth",
     "vocab_deltas",
     "vocab_micro_batch",
     "vocab_report",

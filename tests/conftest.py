@@ -75,3 +75,47 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture()
+def drain_maintain_drain(spark, tmp_path):
+    """``run(frame, write, state_root, files=4)``: stream ``frame``
+    through the foreachBatch body ``write``, one file per trigger, in
+    two drains with one ``maintain`` pass between them — the watermark
+    read from the stream's commits log, vacuum with a grace margin of
+    1 — while the query stays live. Returns the checkpoint dir."""
+    import glob
+
+    from cdc_publisher_spark.streaming.maintenance import run_maintenance
+    from cdc_publisher_spark.streaming.state import start_state_stream
+
+    def run(frame, write, state_root, files=4):
+        work = tmp_path / "stream"
+        staged, src, ckpt = (str(work / d) for d in ("staged", "in", "ckpt"))
+        frame.repartition(files).write.parquet(staged)
+        parts = sorted(glob.glob(f"{staged}/part-*.parquet"))
+        os.makedirs(src)
+
+        def publish(paths):
+            for p in paths:
+                os.rename(p, os.path.join(src, os.path.basename(p)))
+
+        publish(parts[: len(parts) // 2])
+        stream = (
+            spark.readStream.schema(frame.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        q = start_state_stream(stream, ckpt, write)
+        try:
+            q.processAllAvailable()
+            run_maintenance(
+                spark, state_root, checkpoint_dir=ckpt, vacuum=True, grace_batches=1
+            )
+            publish(parts[len(parts) // 2 :])
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return ckpt
+
+    return run

@@ -136,6 +136,10 @@ def test_cli_maintain_compacts_hll_state(spark, tmp_path, capsys):
     for b in range(2):
         hll_micro_batch(rows.filter(F.crc32("s") % 2 == b), b, state)
     before = sorted((r.source, r.bucket, r.M) for r in read_hll_registers(spark, state).collect())
+    # a negative vacuum margin is refused before anything is folded
+    with pytest.raises(SystemExit) as e:
+        main(["maintain", "--state-root", state, "--vacuum", "--grace", "-1"])
+    assert e.value.code == 2
     assert main(["maintain", "--state-root", state, "--upto-batch", "1"]) == 0
     out = capsys.readouterr().out
     assert out.count("compact\thll\t") == 1, out

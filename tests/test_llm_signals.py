@@ -221,7 +221,8 @@ def test_stream_neardup_union_equals_batch(spark, tmp_path):
     import json as _json
 
     from cdc_publisher_spark.operators.minhash import minhash_near_duplicates
-    from cdc_publisher_spark.streaming.incremental_dedup import stream_neardup_pairs
+    from cdc_publisher_spark.streaming.incremental_dedup import dedup_micro_batch
+    from cdc_publisher_spark.streaming.state import start_state_stream
 
     base = " ".join(f"tok{i}" for i in range(30))
     other = " ".join(f"oth{i}" for i in range(30))
@@ -242,9 +243,12 @@ def test_stream_neardup_union_equals_batch(spark, tmp_path):
         .json(str(src))
     )
     corpus_dir = str(tmp_path / "corpus")
+    index_dir = str(tmp_path / "lsh_index")
     pairs_dir = str(tmp_path / "pairs")
-    q = stream_neardup_pairs(
-        stream, corpus_dir, pairs_dir, str(tmp_path / "ckpt")
+    q = start_state_stream(
+        stream,
+        str(tmp_path / "ckpt"),
+        lambda df, bid: dedup_micro_batch(df, bid, corpus_dir, index_dir, pairs_dir),
     )
     try:
         q.processAllAvailable()
@@ -272,7 +276,8 @@ def test_stream_neardup_resumes_from_checkpoint(spark, tmp_path):
     import json as _json
 
     from cdc_publisher_spark.operators.minhash import minhash_near_duplicates
-    from cdc_publisher_spark.streaming.incremental_dedup import stream_neardup_pairs
+    from cdc_publisher_spark.streaming.incremental_dedup import dedup_micro_batch
+    from cdc_publisher_spark.streaming.state import start_state_stream
 
     base = " ".join(f"tok{i}" for i in range(30))
     first = [(1, base), (2, " ".join(f"o{i}" for i in range(30)))]
@@ -289,12 +294,11 @@ def test_stream_neardup_resumes_from_checkpoint(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .json(str(src))
         )
-        q = stream_neardup_pairs(
+        dirs = [str(tmp_path / d) for d in ("corpus", "idx", "pairs")]
+        q = start_state_stream(
             stream,
-            str(tmp_path / "corpus"),
-            str(tmp_path / "pairs"),
             str(tmp_path / "ckpt"),
-            index_dir=str(tmp_path / "idx"),
+            lambda df, bid: dedup_micro_batch(df, bid, *dirs),
         )
         try:
             q.processAllAvailable()
@@ -428,10 +432,10 @@ def test_dedup_state_compaction_preserves_pairs_and_vacuums(spark, tmp_path):
     a replayed pre-watermark batch is invisible to readers."""
     from cdc_publisher_spark.operators.minhash import minhash_near_duplicates
     from cdc_publisher_spark.streaming.incremental_dedup import (
-        compact_dedup_state,
         dedup_micro_batch,
         read_dedup_state,
     )
+    from cdc_publisher_spark.streaming.maintenance import run_maintenance
     from cdc_publisher_spark.streaming.state import batch_dirs, vacuum_state
 
     base = " ".join(f"tok{i}" for i in range(30))
@@ -452,7 +456,7 @@ def test_dedup_state_compaction_preserves_pairs_and_vacuums(spark, tmp_path):
 
     # vacuum is opt-in (ADVICE r6): without it the superseded batch
     # dirs survive; an explicit vacuum deletes them
-    compact_dedup_state(spark, *dirs, upto_batch=2)
+    run_maintenance(spark, str(tmp_path), upto_batch=2)
     assert any(k <= 2 for k, _ in batch_dirs(spark, dirs[0]))  # kept by default
     for d in dirs:
         assert vacuum_state(spark, d) > 0, d
@@ -486,7 +490,7 @@ def test_dedup_state_compaction_preserves_pairs_and_vacuums(spark, tmp_path):
     assert got == want
 
     # compaction is idempotent and can advance
-    compact_dedup_state(spark, *dirs, upto_batch=4)
+    run_maintenance(spark, str(tmp_path), upto_batch=4)
     final = {
         (r.d1, r.d2): r.jaccard for r in read_dedup_state(spark, dirs[2]).collect()
     }
@@ -519,16 +523,16 @@ def test_dedup_cross_batch_guard_drops_redelivered_ids(spark, tmp_path):
 
 
 def test_dedup_compact_rerun_after_partial_crash_converges(spark, tmp_path):
-    """Crash-recovery: compact_dedup_state dies after compacting only
+    """Crash-recovery: a ``maintain`` pass dies after compacting only
     the corpus dir (index/pairs still uncompacted). A re-run at the
     SAME watermark must skip the already-flipped dir (re-writing it
     would read from the path being overwritten) and finish the rest;
     the unified views never change."""
     from cdc_publisher_spark.streaming.incremental_dedup import (
-        compact_dedup_state,
         dedup_micro_batch,
         read_dedup_state,
     )
+    from cdc_publisher_spark.streaming.maintenance import run_maintenance
     from cdc_publisher_spark.streaming.state import (
         compact_state,
         compacted_upto as _compacted_upto,
@@ -552,13 +556,13 @@ def test_dedup_compact_rerun_after_partial_crash_converges(spark, tmp_path):
     assert _compacted_upto(spark, dirs[1]) is None
 
     # recovery re-run at the same watermark: must not raise
-    compact_dedup_state(spark, *dirs, upto_batch=1)
+    run_maintenance(spark, str(tmp_path), upto_batch=1)
     for d in dirs:
         assert _compacted_upto(spark, d) == 1
         assert sorted(map(tuple, read_dedup_state(spark, d).collect())) == before[d]
 
     # manifest markers are monotonic: advancing leaves exactly one
-    compact_dedup_state(spark, *dirs, upto_batch=2)
+    run_maintenance(spark, str(tmp_path), upto_batch=2)
     import glob
 
     for d in dirs:
@@ -596,9 +600,10 @@ def test_guard_exact_antijoin_sees_only_bloom_positive_remainder(spark, tmp_path
     """The guard is one exact anti-join against the history id column:
     end to end through ``dedup_micro_batch``, redelivered history ids
     are dropped (their first-delivered text stays) and fresh ids are
-    kept, both before and after ``compact_dedup_state`` folds the
-    history into its compact segment."""
+    kept, both before and after ``maintain`` folds the history into
+    its compact segment."""
     from cdc_publisher_spark.streaming import incremental_dedup as inc
+    from cdc_publisher_spark.streaming.maintenance import run_maintenance
     from cdc_publisher_spark.streaming.state import compacted_upto
 
     dirs = [str(tmp_path / d) for d in ("corpus", "idx", "pairs")]
@@ -623,7 +628,7 @@ def test_guard_exact_antijoin_sees_only_bloom_positive_remainder(spark, tmp_path
         assert {r.doc_id: r.text for r in rows} == history
 
     trigger(9, {3, 12}, {100, 101, 102, 103})
-    inc.compact_dedup_state(spark, *dirs, upto_batch=9)
+    run_maintenance(spark, str(tmp_path), upto_batch=9)
     assert compacted_upto(spark, dirs[0]) == 9
     # against the compact segment: batch 9's fresh ids are history now
     trigger(10, {3, 12, 101}, {200, 201})
@@ -647,6 +652,11 @@ def test_vacuum_grace_margin_keeps_recent_superseded_dirs(spark, tmp_path):
         ).write.mode("overwrite").parquet(os.path.join(state, f"batch={b}"))
     before = sorted(r.v for r in read_state(spark, state).collect())
     compact_state(spark, state, upto_batch=2)
+    # a margin wider than the 3 superseded dirs keeps all of them
+    assert vacuum_state(spark, state, grace_batches=4) == 0
+    assert [k for k, _ in batch_dirs(spark, state)] == [0, 1, 2, 3]
+    with pytest.raises(ValueError):
+        vacuum_state(spark, state, grace_batches=-1)
     removed = vacuum_state(spark, state, grace_batches=1)
     assert removed == 2  # batches 0,1 gone; batch 2 kept as grace
     assert [k for k, _ in batch_dirs(spark, state)] == [2, 3]
@@ -657,11 +667,12 @@ def test_vacuum_grace_margin_keeps_recent_superseded_dirs(spark, tmp_path):
 
 
 def test_in_stream_compaction_bounds_dedup_state(spark, tmp_path):
-    """compact_every=K folds the four dedup state dirs in-stream every
-    K batches: results stay identical to an uncompacted twin run, the
-    manifest advances, and vacuum_grace prunes superseded batch dirs
+    """``maintain`` between every second trigger folds the three dedup
+    state dirs: results stay identical to an uncompacted twin run, the
+    manifest advances, and a grace margin prunes superseded batch dirs
     while keeping the margin."""
     from cdc_publisher_spark.streaming import incremental_dedup as inc
+    from cdc_publisher_spark.streaming.maintenance import run_maintenance
     from cdc_publisher_spark.streaming.state import batch_dirs, compacted_upto
 
     base = " ".join(f"tok{i}" for i in range(30))
@@ -676,7 +687,12 @@ def test_in_stream_compaction_bounds_dedup_state(spark, tmp_path):
     for b, rows in enumerate(batches):
         df = spark.createDataFrame(rows, "doc_id long, text string")
         inc.dedup_micro_batch(df, b, *plain)
-        inc.dedup_micro_batch(df, b, *auto, compact_every=2, vacuum_grace=1)
+        inc.dedup_micro_batch(df, b, *auto)
+        if b % 2 == 1:
+            run_maintenance(
+                spark, str(tmp_path / "a"), upto_batch=b - 1, vacuum=True,
+                grace_batches=1,
+            )
 
     for dp, da in zip(plain, auto):
         want = sorted(map(tuple, inc.read_dedup_state(spark, dp).collect()))
@@ -695,8 +711,8 @@ def test_in_stream_compaction_bounds_dedup_state(spark, tmp_path):
 
 
 def test_replay_after_in_stream_compact_keeps_guard_live(spark, tmp_path):
-    """ADVICE r8 (medium): a crash BETWEEN an in-stream compaction and
-    the checkpoint commit replays the trigger against the compacted
+    """ADVICE r8 (medium): a crash BETWEEN a ``maintain`` pass and the
+    checkpoint commit replays the trigger against the compacted
     state. A watermark equal to the replayed batch id would fold the
     in-flight batch into the compact segment, where the reader's
     ``exclude_batch`` row-filter is the only thing between the replay
@@ -706,23 +722,31 @@ def test_replay_after_in_stream_compact_keeps_guard_live(spark, tmp_path):
     still holds every pre-B history id, and the replayed micro-batch
     leaves state identical to the crash-free run."""
     from cdc_publisher_spark.streaming import incremental_dedup as inc
+    from cdc_publisher_spark.streaming.maintenance import run_maintenance
     from cdc_publisher_spark.streaming.state import compacted_upto, read_state
 
     dirs = [str(tmp_path / d) for d in ("corpus", "idx", "pairs")]
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
+
+    def trigger(df, b):
+        # every third trigger, maintain folds the committed batches
+        inc.dedup_micro_batch(df, b, *dirs)
+        if (b + 1) % 3 == 0:
+            run_maintenance(spark, str(tmp_path), upto_batch=b - 1)
+
     history = [
         (b, [(b * 10 + i, " ".join(f"w{b}_{i}_{j}" for j in range(30)))
              for i in range(1, 4)])
         for b in range(2)
     ]
     for b, rows in history:
-        inc.dedup_micro_batch(mk(rows), b, *dirs, compact_every=3)
+        trigger(mk(rows), b)
     history_ids = {i for _, rows in history for i, _ in rows}
 
-    # batch 2's trigger: writes + in-stream compaction fire (2+1 % 3 == 0),
+    # batch 2's trigger: writes + maintain fire ((2+1) % 3 == 0),
     # then "crash" before the checkpoint commit
     b2 = [(100, "fresh " * 30), (101, "fresh2 " * 30)]
-    inc.dedup_micro_batch(mk(b2), 2, *dirs, compact_every=3)
+    trigger(mk(b2), 2)
     assert compacted_upto(spark, dirs[0]) == 1  # committed-only watermark
 
     # the replay's guard view: the history it anti-joins against
@@ -737,7 +761,7 @@ def test_replay_after_in_stream_compact_keeps_guard_live(spark, tmp_path):
 
     # full replayed trigger (same df, same batch id): state converges to
     # exactly the crash-free outcome, duplicates guarded out
-    inc.dedup_micro_batch(redelivered, 2, *dirs, compact_every=3)
+    trigger(redelivered, 2)
     corpus = inc.read_dedup_state(spark, dirs[0])
     got = sorted(r.doc_id for r in corpus.select("doc_id").collect())
     assert got == sorted(history_ids | {100, 101})

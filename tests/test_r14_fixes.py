@@ -4,10 +4,7 @@
    exact-duplicate vectors (SUM(ok)=0) must yield id_estimate NULL in
    BOTH engines (Spark 0/0 was already NULL; DuckDB IEEE division gave
    NaN before the CASE guard).
-2. monitor-suite workers each get their OWN java.util.Properties
-   clone (one shared instance races with Spark's per-action
-   set/restore of spark.sql.execution.id).
-3. minhash.estimated_jaccard size guard — the exported all-pairs
+2. minhash.estimated_jaccard size guard — the exported all-pairs
    diagnostic refuses corpus-sized inputs instead of planning an
    O(n²) crossJoin.
 """
@@ -73,73 +70,6 @@ def test_k120_all_degenerate_label_is_null_duckdb(spark, tmp_path):
     assert got[0][3] is None, got[0]           # NULL, not NaN
     assert got[1][3] is not None and not math.isnan(got[1][3])
     assert got[1][3] > 0
-
-
-def test_suite_workers_get_distinct_property_clones(spark, tmp_path, monkeypatch):
-    """r13 ADVICE #1: the fan-out must install a FRESH Properties
-    clone per worker invocation — a single shared instance is mutated
-    concurrently by Spark's set/restore of spark.sql.execution.id
-    around every action, so a sibling's restore can null the key
-    mid-write. Asserted via JVM identity: every consumer thunk sees a
-    different Properties object, none of them the parent's."""
-    from cdc_publisher_spark.streaming import monitor_suite as ms
-
-    sc = spark.sparkContext
-    jvm = spark._jvm
-    parent_ident = jvm.System.identityHashCode(sc._jsc.sc().getLocalProperties())
-    idents = {}
-
-    def recorder(name):
-        def f(*a, **k):
-            idents[name] = jvm.System.identityHashCode(
-                sc._jsc.sc().getLocalProperties()
-            )
-        return f
-
-    consumers = (
-        "dedup_micro_batch", "audio_dup_micro_batch", "hll_micro_batch",
-        "cm_micro_batch", "exposure_micro_batch", "vocab_micro_batch",
-        "ctx_micro_batch",
-    )
-    for fn in consumers:
-        monkeypatch.setattr(ms, fn, recorder(fn))
-    batch = spark.createDataFrame(
-        [(1, "alpha beta gamma", "s0"), (2, "delta eps zeta", "s1")],
-        "doc_id long, text string, source string",
-    )
-    ms.monitor_suite_batch(batch, 0, str(tmp_path / "state"))
-    assert set(idents) == set(consumers)
-    vals = list(idents.values())
-    assert len(set(vals)) == len(vals), idents   # pairwise distinct clones
-    assert parent_ident not in vals              # nobody got the original
-
-
-def test_suite_batch_collects_per_consumer_timings(spark, tmp_path, monkeypatch):
-    """r13 VERDICT ask #1 plumbing: `timings` collects one wall-clock
-    sample per consumer per trigger, keyed by the chain's name."""
-    from cdc_publisher_spark.streaming import monitor_suite as ms
-
-    consumers = {
-        "dedup_micro_batch": "dedup_lsh",
-        "audio_dup_micro_batch": "audio_dup",
-        "hll_micro_batch": "hll",
-        "cm_micro_batch": "cm",
-        "exposure_micro_batch": "exposure",
-        "vocab_micro_batch": "vocab",
-        "ctx_micro_batch": "ctx",
-    }
-    for fn in consumers:
-        monkeypatch.setattr(ms, fn, lambda *a, **k: None)
-    batch = spark.createDataFrame(
-        [(1, "alpha beta gamma", "s0"), (2, "delta eps zeta", "s1")],
-        "doc_id long, text string, source string",
-    )
-    timings: dict = {}
-    ms.monitor_suite_batch(batch, 0, str(tmp_path / "state"), timings=timings)
-    ms.monitor_suite_batch(batch, 1, str(tmp_path / "state"), timings=timings)
-    assert set(timings) == set(consumers.values())
-    assert all(len(v) == 2 for v in timings.values()), timings
-    assert all(s >= 0 for v in timings.values() for s in v)
 
 
 def test_estimated_jaccard_size_guard(spark):

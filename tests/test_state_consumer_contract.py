@@ -5,8 +5,8 @@ whatever its merge algebra (max — HLL; sum — count-min, exposure;
 DECIMAL-sum — centroid drift; min — vocabulary; column-wise sum —
 context-length economics):
 
-1. in-stream compaction every K batches leaves reads IDENTICAL to an
-   uncompacted twin run;
+1. ``maintain`` folding the committed batches every K triggers
+   leaves reads IDENTICAL to an uncompacted twin run;
 2. after multiple compaction generations WITH vacuum, on-disk state is
    exactly one pre-merged segment (one row per state key) plus the
    uncompacted live tail;
@@ -34,11 +34,8 @@ import glob
 import pytest
 from pyspark.sql import functions as F
 
-from cdc_publisher_spark.streaming.state import (
-    batch_dirs,
-    compacted_upto,
-    state_trigger,
-)
+from cdc_publisher_spark.streaming.maintenance import run_maintenance
+from cdc_publisher_spark.streaming.state import batch_dirs, compacted_upto
 from cdc_publisher_spark.tables import load
 
 
@@ -204,13 +201,18 @@ ADAPTERS = [
 ]
 
 
-def _body(spark, ad, state, compact_every, vacuum_grace=0):
-    """The per-trigger body every monitor's stream wiring runs
-    (state.state_trigger): write, then committed-only in-stream
-    compaction and vacuum."""
-    return state_trigger(
-        lambda df, bid: ad.write(df, bid, state), (state,), compact_every, vacuum_grace
-    )
+def _body(spark, ad, state):
+    """One trigger of a monitor's stream followed, on every second
+    trigger, by the ``maintain`` pass a deployment schedules between
+    triggers: fold the committed batches (watermark ``bid - 1`` — the
+    current trigger has not committed yet) and vacuum."""
+
+    def body(df, bid):
+        ad.write(df, bid, state)
+        if bid % 2 == 1:
+            run_maintenance(spark, state, upto_batch=bid - 1, vacuum=True)
+
+    return body
 
 
 @pytest.mark.parametrize("ad", ADAPTERS, ids=lambda a: a.name)
@@ -219,7 +221,7 @@ def test_state_consumer_contract(spark, sf_smoke, tmp_path, ad):
     slices = ad.batches(spark, sf_smoke, n)
     plain = str(tmp_path / "plain")
     auto = str(tmp_path / "auto")
-    body = _body(spark, ad, auto, compact_every=2)
+    body = _body(spark, ad, auto)
 
     for b, s in enumerate(slices[:3]):
         ad.write(s, b, plain)

@@ -19,7 +19,6 @@ from cdc_publisher_spark.streaming.audio_monitor import (
     audio_fpk,
     read_audio_dups,
     read_audio_fpk_state,
-    stream_audio_dups,
 )
 from cdc_publisher_spark.streaming.state import (
     batch_dirs,
@@ -219,30 +218,21 @@ def test_audio_fpk_digest_matches_batch_query_grouping(spark):
     assert agg.f == agg.t  # distinct texts -> distinct digests here
 
 
-def test_stream_audio_dups_compacts_both_dirs(spark, tmp_path):
-    """readStream → stream_audio_dups with in-stream compaction: the
-    pairs equal the batch-mode set, and BOTH the fpk dir and the pairs
-    dir are compacted — an uncompacted pairs dir keeps one
-    ``pairs/batch=N`` dir per trigger forever."""
+def test_stream_audio_dups_compacts_both_dirs(
+    spark, tmp_path, drain_maintain_drain
+):
+    """readStream → audio_dup_micro_batch with ``maintain`` between two
+    drains: the pairs equal the batch-mode set, and BOTH the fpk dir
+    and the pairs dir are compacted — an uncompacted pairs dir keeps
+    one ``pairs/batch=N`` dir per trigger forever."""
     docs = _docs(spark)
-    src = str(tmp_path / "in")
-    _media(docs).withColumn(
-        "p", F.pmod("media_id", F.lit(4)).cast("int")
-    ).repartition("p").write.partitionBy("p").parquet(src)
-    state, pairs = str(tmp_path / "fpk"), str(tmp_path / "pairs")
-    stream = (
-        spark.readStream.schema("media_id long, payload binary")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{src}/p=*")
+    root = tmp_path / "audio"
+    state, pairs = str(root / "fpk"), str(root / "pairs")
+    drain_maintain_drain(
+        _media(docs),
+        lambda df, bid: audio_dup_micro_batch(df, bid, state, pairs),
+        str(root),
     )
-    q = stream_audio_dups(
-        stream, state, pairs, str(tmp_path / "ckpt"),
-        compact_every=2, vacuum_grace=1,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = sorted(
         (r.orig_id, r.dup_id) for r in read_audio_dups(spark, pairs).collect()
     )

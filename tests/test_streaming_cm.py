@@ -23,9 +23,8 @@ from cdc_publisher_spark.streaming.cm_monitor import (
     cm_micro_batch,
     cm_state_estimates,
     read_cm_cells,
-    stream_cm_heavy_hitters,
 )
-from cdc_publisher_spark.streaming.state import compact_dir
+from cdc_publisher_spark.streaming.state import compact_dir, start_state_stream
 from cdc_publisher_spark.tables import load
 
 
@@ -138,7 +137,9 @@ def test_stream_wiring_end_to_end(spark, tokens, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    q = stream_cm_heavy_hitters(stream, state, ckpt)
+    q = start_state_stream(
+        stream, ckpt, lambda df, bid: cm_micro_batch(df, bid, state)
+    )
     try:
         q.processAllAvailable()
     finally:
@@ -164,27 +165,19 @@ def test_cli_maintain_compacts_cm(spark, tokens, tmp_path, capsys):
     assert _cells_sorted(read_cm_cells(spark, state)) == before
 
 
-def test_in_stream_compaction_keeps_cells(spark, tokens, tmp_path):
-    """compact_every pre-sums cell state from inside the stream's own
-    foreachBatch cadence: counts stay exact (no double-count across
-    the compaction boundary) and the manifest advances without any
-    external maintenance call."""
+def test_in_stream_compaction_keeps_cells(
+    spark, tokens, tmp_path, drain_maintain_drain
+):
+    """``maintain`` pre-sums cell state between two drains of a live
+    stream (watermark from its commits log): counts stay exact (no
+    double-count across the compaction boundary) and the manifest
+    advances."""
     from cdc_publisher_spark.streaming.state import compacted_upto
 
-    src_dir = str(tmp_path / "in")
-    tokens.select("g").repartition(4).write.parquet(src_dir)
     state = str(tmp_path / "cm")
-    ckpt = str(tmp_path / "ckpt")
-    stream = (
-        spark.readStream.schema("g string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+    drain_maintain_drain(
+        tokens.select("g"), lambda df, bid: cm_micro_batch(df, bid, state), state
     )
-    q = stream_cm_heavy_hitters(stream, state, ckpt, compact_every=2, vacuum_grace=1)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     assert compacted_upto(spark, state) is not None
     merged = read_cm_cells(spark, state)
     expected = cm_cells(tokens)

@@ -14,7 +14,6 @@ from cdc_publisher_spark.streaming.ctx_monitor import (
     CTX_BUDGETS,
     ctx_micro_batch,
     read_ctx_curve,
-    stream_ctx_economics,
 )
 from cdc_publisher_spark.streaming.state import compact_dir, vacuum_state
 from cdc_publisher_spark.tables import load
@@ -74,24 +73,17 @@ def test_compaction_folds_to_one_row_per_budget(spark, docs, tmp_path):
     assert _rows(read_ctx_curve(spark, state)) == before
 
 
-def test_stream_wiring_and_maintain_recognize_layout(spark, docs, sf_smoke, tmp_path):
+def test_stream_wiring_and_maintain_recognize_layout(
+    spark, docs, sf_smoke, tmp_path, drain_maintain_drain
+):
     from cdc_publisher_spark.streaming.maintenance import run_maintenance
     from cdc_publisher_spark.streaming.state import compacted_upto
 
-    src = str(tmp_path / "in")
-    docs.repartition(4).write.parquet(src)
     root = tmp_path / "root"
-    state, ckpt = str(root / "ctx"), str(tmp_path / "ckpt")
-    stream = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    state = str(root / "ctx")
+    drain_maintain_drain(
+        docs, lambda df, bid: ctx_micro_batch(df, bid, state), str(root)
     )
-    q = stream_ctx_economics(stream, state, ckpt, compact_every=2, vacuum_grace=1)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     assert compacted_upto(spark, state) is not None
     want = _rows(all_specs()["q_k99_context_length_efficiency"].spark(spark, sf_smoke))
     assert _rows(read_ctx_curve(spark, state)) == want

@@ -16,7 +16,6 @@ from cdc_publisher_spark.streaming.drift_monitor import (
     drift_micro_batch,
     read_centroid_sums,
     read_drift_report,
-    stream_centroid_drift,
 )
 from cdc_publisher_spark.streaming.state import compact_dir, vacuum_state
 from cdc_publisher_spark.tables import load
@@ -80,23 +79,14 @@ def test_compaction_presums_losslessly_and_stays_dimension_sized(
 
 
 def test_stream_wiring_end_to_end_with_in_stream_compaction(
-    spark, vecs, sf_smoke, tmp_path
+    spark, vecs, sf_smoke, tmp_path, drain_maintain_drain
 ):
     from cdc_publisher_spark.streaming.state import compacted_upto
 
-    src = str(tmp_path / "in")
-    vecs.repartition(4).write.parquet(src)
-    state, ckpt = str(tmp_path / "drift"), str(tmp_path / "ckpt")
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>, label int")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    state = str(tmp_path / "drift")
+    drain_maintain_drain(
+        vecs, lambda df, bid: drift_micro_batch(df, bid, state), state
     )
-    q = stream_centroid_drift(stream, state, ckpt, compact_every=2, vacuum_grace=1)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     assert compacted_upto(spark, state) is not None
     got = read_drift_report(spark, state)
     want = q_k89_label_centroid_drift(spark, sf_smoke)

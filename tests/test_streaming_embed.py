@@ -17,13 +17,12 @@ from pyspark.sql import functions as F
 
 from cdc_publisher_spark.operators.embed_lsh import embedding_neardup_banded
 from cdc_publisher_spark.streaming.embed_monitor import (
-    compact_embed_state,
     embed_dup_micro_batch,
     read_embed_index,
     read_embed_pairs,
     read_embed_vec_state,
-    stream_embedding_dups,
 )
+from cdc_publisher_spark.streaming.maintenance import run_maintenance
 from cdc_publisher_spark.streaming.state import batch_dirs, compacted_upto
 
 THRESHOLD = 0.9
@@ -205,7 +204,7 @@ def test_embed_compaction_and_maintain(spark, tmp_path):
         (r.vec_id, r.band, r.bh)
         for r in read_embed_index(spark, dirs[0]).collect()
     )
-    compact_embed_state(spark, *dirs, upto_batch=1, vacuum=True)
+    run_maintenance(spark, str(tmp_path), upto_batch=1, vacuum=True)
     assert compacted_upto(spark, dirs[0]) == 1
     assert all(k > 1 for k, _ in batch_dirs(spark, dirs[0]))
     after = sorted(
@@ -218,8 +217,6 @@ def test_embed_compaction_and_maintain(spark, tmp_path):
         assert glob.glob(f"{d}/_compact/upto=1/*.parquet")
         assert not glob.glob(f"{d}/_compact/upto=1/*=*")
     # maintain recognizes the markers and folds the rest
-    from cdc_publisher_spark.streaming.maintenance import run_maintenance
-
     plans = run_maintenance(
         spark, str(tmp_path), assume_all_committed=True, vacuum=True
     )
@@ -229,29 +226,18 @@ def test_embed_compaction_and_maintain(spark, tmp_path):
     assert _got_pairs(spark, dirs[2]) == _expected_pairs(vecs)
 
 
-def test_embed_stream_wiring_end_to_end(spark, tmp_path):
-    """readStream → stream_embedding_dups with in-stream compaction:
-    the merged detections equal the batch twin and the manifest
-    advances without external maintenance."""
+def test_embed_stream_wiring_end_to_end(spark, tmp_path, drain_maintain_drain):
+    """readStream → embed_dup_micro_batch with ``maintain`` between two
+    drains (watermark from the stream's commits log): the merged
+    detections equal the batch twin and the manifest advances."""
     vecs = _vectors(spark)
-    src = str(tmp_path / "in")
-    vecs.withColumn("p", F.pmod("vec_id", F.lit(4)).cast("int")).repartition(
-        "p"
-    ).write.partitionBy("p").parquet(src)
-    dirs = _dirs(tmp_path)
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{src}/p=*")
+    root = tmp_path / "embed"
+    dirs = _dirs(root)
+    drain_maintain_drain(
+        vecs,
+        lambda df, bid: embed_dup_micro_batch(df, bid, *dirs, threshold=THRESHOLD),
+        str(root),
     )
-    q = stream_embedding_dups(
-        stream, *dirs, str(tmp_path / "ckpt"),
-        threshold=THRESHOLD, compact_every=2, vacuum_grace=1,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     assert _got_pairs(spark, dirs[2]) == _expected_pairs(vecs)
     assert compacted_upto(spark, dirs[1]) is not None
 

@@ -3,7 +3,8 @@ the report off accumulated state must equal q_k88 on the union of all
 delivered documents column-for-column (stream == batch), a replayed
 batch must NOT double document frequencies (sum-merge is not
 idempotent — the state layer's overwrite discipline is load-bearing),
-and compaction — external or in-stream — must pre-sum losslessly."""
+and ``maintain`` compaction — between triggers or after the stream —
+must pre-sum losslessly."""
 
 from __future__ import annotations
 
@@ -15,13 +16,9 @@ from cdc_publisher_spark.streaming.exposure_monitor import (
     exposure_micro_batch,
     read_exposure_report,
     read_gram_counts,
-    stream_rare_gram_exposure,
 )
-from cdc_publisher_spark.streaming.state import (
-    compact_dir,
-    state_trigger,
-    vacuum_state,
-)
+from cdc_publisher_spark.streaming.maintenance import run_maintenance
+from cdc_publisher_spark.streaming.state import compact_dir, vacuum_state
 from cdc_publisher_spark.tables import load
 
 
@@ -79,23 +76,25 @@ def test_compaction_presums_losslessly(spark, docs, tmp_path):
     assert _report_rows(read_exposure_report(spark, state)) == before_report
 
 
-def _in_stream_body(spark, state, compact_every, vacuum_grace):
-    """The per-trigger body stream_rare_gram_exposure wires into
-    foreachBatch (state.state_trigger), called directly so tests can
-    interleave crashes/replays between triggers."""
-    return state_trigger(
-        lambda df, bid: exposure_micro_batch(df, bid, state),
-        (state,),
-        compact_every,
-        vacuum_grace,
-    )
+def _in_stream_body(spark, state):
+    """One trigger of the exposure stream followed, on every second
+    trigger, by the ``maintain`` pass scheduled between triggers
+    (committed watermark ``bid - 1``, vacuum), called directly so
+    tests can interleave crashes/replays between triggers."""
+
+    def body(df, bid):
+        exposure_micro_batch(df, bid, state)
+        if bid % 2 == 1:
+            run_maintenance(spark, state, upto_batch=bid - 1, vacuum=True)
+
+    return body
 
 
 def test_multi_generation_compaction_keeps_read_cost_o_distinct_grams(
     spark, docs, sf_smoke, tmp_path
 ):
-    """VERDICT r8 ask #5 (part 1): run well past compact_every so the
-    segment is rewritten across MULTIPLE generations with vacuum, and
+    """VERDICT r8 ask #5 (part 1): run well past the maintenance
+    cadence so the segment is rewritten across MULTIPLE generations with vacuum, and
     pin that the read side stays O(distinct grams): exactly one
     compact segment survives, the segment holds ONE pre-summed row per
     (gram, source) — not one per (batch, gram) — and only the
@@ -110,7 +109,7 @@ def test_multi_generation_compaction_keeps_read_cost_o_distinct_grams(
     )
 
     state = str(tmp_path / "exp")
-    body = _in_stream_body(spark, state, compact_every=2, vacuum_grace=0)
+    body = _in_stream_body(spark, state)
     n_batches = 8
     for b in range(n_batches):
         body(docs.filter(F.col("doc_id") % n_batches == b), b)
@@ -143,15 +142,15 @@ def test_replayed_batch_between_compaction_generations_counts_once(
     shapes: (a) a batch replayed BETWEEN two generations (its delta
     dir overwritten, later folded exactly once), and (b) the
     compacting trigger itself replayed AFTER its compaction ran but
-    before the checkpoint commit (the in-stream watermark skips the
+    before the checkpoint commit (``maintain`` skips the
     already-covered target instead of double-folding). Both runs must
     equal a crash-free twin and batch q_k88."""
     from cdc_publisher_spark.streaming.state import compacted_upto
 
     state = str(tmp_path / "exp")
     twin = str(tmp_path / "twin")
-    body = _in_stream_body(spark, state, compact_every=2, vacuum_grace=0)
-    tbody = _in_stream_body(spark, twin, compact_every=2, vacuum_grace=0)
+    body = _in_stream_body(spark, state)
+    tbody = _in_stream_body(spark, twin)
     parts = [docs.filter(F.col("doc_id") % 4 == b) for b in range(4)]
     for b in (0, 1, 2):
         body(parts[b], b)
@@ -175,26 +174,14 @@ def test_replayed_batch_between_compaction_generations_counts_once(
 
 
 def test_stream_wiring_end_to_end_with_in_stream_compaction(
-    spark, docs, sf_smoke, tmp_path
+    spark, docs, sf_smoke, tmp_path, drain_maintain_drain
 ):
     from cdc_publisher_spark.streaming.state import compacted_upto
 
-    src_dir = str(tmp_path / "in")
-    docs.repartition(4).write.parquet(src_dir)
     state = str(tmp_path / "exp")
-    ckpt = str(tmp_path / "ckpt")
-    stream = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+    drain_maintain_drain(
+        docs, lambda df, bid: exposure_micro_batch(df, bid, state), state
     )
-    q = stream_rare_gram_exposure(
-        stream, state, ckpt, compact_every=2, vacuum_grace=1
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     assert compacted_upto(spark, state) is not None
     got = read_exposure_report(spark, state)
     want = q_k88_rare_gram_exposure(spark, sf_smoke)

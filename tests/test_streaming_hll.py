@@ -18,9 +18,8 @@ from cdc_publisher_spark.streaming.hll_monitor import (
     hll_micro_batch,
     hll_state_estimate,
     read_hll_registers,
-    stream_hll_distinct,
 )
-from cdc_publisher_spark.streaming.state import compact_dir
+from cdc_publisher_spark.streaming.state import compact_dir, start_state_stream
 from cdc_publisher_spark.tables import load
 
 
@@ -114,7 +113,9 @@ def test_stream_wiring_end_to_end(spark, rows, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    q = stream_hll_distinct(stream, state, ckpt)
+    q = start_state_stream(
+        stream, ckpt, lambda df, bid: hll_micro_batch(df, bid, state)
+    )
     try:
         q.processAllAvailable()
     finally:
@@ -124,26 +125,20 @@ def test_stream_wiring_end_to_end(spark, rows, tmp_path):
     assert _regs_sorted(merged) == _regs_sorted(expected)
 
 
-def test_in_stream_compaction_keeps_registers(spark, rows, tmp_path):
-    """compact_every pre-merges register state from inside the stream's
-    own foreachBatch cadence; the merged view is unchanged and the
-    manifest advances without any external maintenance call."""
+def test_in_stream_compaction_keeps_registers(
+    spark, rows, tmp_path, drain_maintain_drain
+):
+    """``maintain`` pre-merges register state between two drains of a
+    live stream (watermark from its commits log); the merged view is
+    unchanged and the manifest advances."""
     from cdc_publisher_spark.streaming.state import compacted_upto
 
-    src_dir = str(tmp_path / "in")
-    rows.select("source", "s").repartition(4).write.parquet(src_dir)
     state = str(tmp_path / "hll")
-    ckpt = str(tmp_path / "ckpt")
-    stream = (
-        spark.readStream.schema("source string, s string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+    drain_maintain_drain(
+        rows.select("source", "s"),
+        lambda df, bid: hll_micro_batch(df, bid, state),
+        state,
     )
-    q = stream_hll_distinct(stream, state, ckpt, compact_every=2, vacuum_grace=1)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     assert compacted_upto(spark, state) is not None
     merged = read_hll_registers(spark, state)
     expected = hll_registers(rows, ["source"])

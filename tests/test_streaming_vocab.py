@@ -13,7 +13,6 @@ from cdc_publisher_spark.functions.text import words
 from cdc_publisher_spark.streaming.vocab_monitor import (
     read_first_seen,
     read_vocab_report,
-    stream_vocab_growth,
     vocab_micro_batch,
 )
 from cdc_publisher_spark.streaming.state import compact_dir, vacuum_state
@@ -119,24 +118,17 @@ def test_compaction_folds_to_one_row_per_type(spark, docs, tmp_path):
     assert _report_rows(read_vocab_report(spark, state)) == before
 
 
-def test_stream_wiring_and_maintain_recognize_layout(spark, docs, tmp_path):
+def test_stream_wiring_and_maintain_recognize_layout(
+    spark, docs, tmp_path, drain_maintain_drain
+):
     from cdc_publisher_spark.streaming.maintenance import run_maintenance
     from cdc_publisher_spark.streaming.state import compacted_upto
 
-    src = str(tmp_path / "in")
-    docs.repartition(4).write.parquet(src)
     root = tmp_path / "root"
-    state, ckpt = str(root / "vocab"), str(tmp_path / "ckpt")
-    stream = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    state = str(root / "vocab")
+    drain_maintain_drain(
+        docs, lambda df, bid: vocab_micro_batch(df, bid, state), str(root)
     )
-    q = stream_vocab_growth(stream, state, ckpt, compact_every=2, vacuum_grace=1)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     assert compacted_upto(spark, state) is not None
     before = _report_rows(read_vocab_report(spark, state))
     plans = run_maintenance(spark, str(root), vacuum=True)
